@@ -9,7 +9,7 @@ the driver, and results come back as a Run/Check tree compatible with the
 reference's result model (reference: datacontract/model/run.py).
 
 Beyond the reference, the engine adds referential-integrity checks,
-distribution-drift checks (PSI / KS via t-digest sketches), per-partition
+distribution-drift checks (PSI, exact KS), per-partition
 verdicts with checkpoint/resume, and a library of large-scale training-data
 operators (dedup, similarity search, text stats) under
 ``datacontract_cli_spark.operators``.

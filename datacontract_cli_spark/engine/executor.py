@@ -3,14 +3,15 @@
 Execution model (Spark-first, scale-aware):
 
 - **One batched aggregation per model.** Every ROW_COUNT / MISSING_COUNT /
-  INVALID_COUNT / FRESHNESS / RETENTION metric of a model compiles into a
-  named aggregate expression and they all run as a single ``df.agg(*exprs)``
-  job (the reference batches the count metrics the same way:
-  datacontract/engines/ibis/ibis_check_execute.py:254-327; we additionally
-  fold freshness/retention MAX/MIN into the same pass). Catalyst executes it
-  as one partial+final hash aggregate: the raw data is scanned once, only
-  one scalar row crosses to the driver, and column pruning means the scan
-  reads only referenced columns.
+  INVALID_COUNT / FRESHNESS / RETENTION / QUANTILE / QUANTILE_DRIFT_KS
+  metric of a model compiles into named aggregate expressions and they all
+  run as a single ``df.agg(*exprs)`` job (the reference batches the count
+  metrics the same way: datacontract/engines/ibis/ibis_check_execute.py:
+  254-327; we additionally fold freshness/retention MAX/MIN, percentiles
+  and the KS count-ifs of ``drift.ks_aggregates`` into the same pass).
+  Catalyst executes it as one partial+final hash aggregate: the raw data is
+  scanned once, only one scalar row crosses to the driver, and column
+  pruning means the scan reads only referenced columns.
 
 - **Schema checks never scan data** — they walk ``df.schema``.
 
@@ -31,9 +32,10 @@ import datetime as dt
 import json
 import logging
 import math
+from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
@@ -54,6 +56,7 @@ from datacontract_cli_spark.engine.predicates import (
 )
 from datacontract_cli_spark.model.contract import DataContract, SchemaObject, Server
 from datacontract_cli_spark.model.run import Check, ResultEnum, Run
+from datacontract_cli_spark.operators import drift
 
 logger = logging.getLogger(__name__)
 
@@ -68,9 +71,38 @@ _AGG_METRICS = (
     MetricType.FRESHNESS,
     MetricType.RETENTION,
     MetricType.QUANTILE,
+    MetricType.QUANTILE_DRIFT_KS,
 )
 
 _ROW_COUNT_ALIAS = "__dc_row_count__"
+
+
+@dataclass
+class _AggBatch:
+    """One model's flat aggregate, compiled. ``aggs`` run as one ``df.agg``
+    and ``values`` project each check's result column (alias) out of that
+    one row — a KS check reads several count-ifs. ``parts`` keeps each
+    check's own (aggs, value), so a failed batch is retried check by
+    check."""
+    aggs: List[Column] = field(default_factory=lambda: [
+        F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)])
+    values: List[Column] = field(default_factory=lambda: [
+        F.col(_ROW_COUNT_ALIAS)])
+    parts: Dict[str, Tuple[List[Column], Column]] = field(default_factory=dict)
+    evaluators: List[Tuple[CheckSpec, str]] = field(default_factory=list)
+    constant_zero: List[CheckSpec] = field(default_factory=list)
+    sample_conds: Dict[str, Any] = field(default_factory=dict)
+
+    def add(self, spec: CheckSpec, alias: str, aggs: List[Column],
+            value: Optional[Column] = None) -> None:
+        value = (F.col(alias) if value is None else value).alias(alias)
+        self.aggs.extend(aggs)
+        self.values.append(value)
+        self.parts[alias] = (aggs, value)
+        self.evaluators.append((spec, alias))
+
+    def frame(self, df: DataFrame) -> DataFrame:
+        return df.agg(*self.aggs).select(*self.values)
 
 
 def _fail_result(spec: CheckSpec) -> ResultEnum:
@@ -576,31 +608,23 @@ class SparkContractEngine:
         dup_specs = [s for s in scan_specs if s.metric is MetricType.DUPLICATE_COUNT]
         sql_specs = [s for s in scan_specs if s.metric is MetricType.CUSTOM_SQL]
         ri_specs = [s for s in scan_specs if s.metric is MetricType.REFERENTIAL_INTEGRITY]
-        drift_specs = [s for s in scan_specs if s.metric in
-                       (MetricType.FREQ_DRIFT_PSI, MetricType.QUANTILE_DRIFT_KS)]
+        psi_specs = [s for s in scan_specs
+                     if s.metric is MetricType.FREQ_DRIFT_PSI]
         run_specs = [s for s in scan_specs
                      if s.metric is MetricType.MAX_RUN_LENGTH]
         other = [s for s in scan_specs
                  if s not in agg_specs and s not in dup_specs and s not in sql_specs
-                 and s not in ri_specs and s not in drift_specs
+                 and s not in ri_specs and s not in psi_specs
                  and s not in run_specs]
         for spec in other:
             run.set_result(spec.key, ResultEnum.warning, f"Unsupported metric {spec.metric}")
 
-        # quantile metrics cannot ride the merged groupBy refold (a global
-        # percentile is not a fold of per-group percentiles) — they always
-        # run in the flat agg batch
-        mergeable = [s for s in agg_specs
-                     if s.metric is not MetricType.QUANTILE]
-        quantile_specs = [s for s in agg_specs
-                          if s.metric is MetricType.QUANTILE]
-        if mergeable and dup_specs:
+        if agg_specs and dup_specs:
             # run the batched aggregation and the duplicate check as two
             # overlapped jobs sharing nothing but the (cheap, pruned) scan:
             # see _run_agg_with_duplicates for why metric columns must NOT
             # ride the uniqueness exchange
-            self._run_agg_with_duplicates(run, model, mergeable, dup_specs, df, obj)
-            self._run_agg_batch(run, model, quantile_specs, df, obj)
+            self._run_agg_with_duplicates(run, model, agg_specs, dup_specs, df, obj)
         else:
             self._run_agg_batch(run, model, agg_specs, df, obj)
             for spec in dup_specs:
@@ -609,32 +633,22 @@ class SparkContractEngine:
             self._check_custom_sql(run, spec)
         for spec in ri_specs:
             self._check_referential_integrity(run, spec, df, tables)
-        for spec in drift_specs:
-            self._check_drift(run, spec, df)
+        for spec in psi_specs:
+            self._check_psi(run, spec, df)
         for spec in run_specs:
             self._check_max_run(run, spec, df)
 
     # ------------------------------------------------------------------
     # the batched aggregation
     # ------------------------------------------------------------------
-    def _build_agg_exprs(self, run: Run, model: str, specs: List[CheckSpec],
-                         df: DataFrame):
-        """Compile the agg-able specs into one expression batch. Returns
-        (exprs, expr_by_alias, evaluators, constant_zero, sample_conds)."""
-        exprs = [F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)]
-        expr_by_alias: Dict[str, Any] = {}  # alias -> agg expr (error-isolation retry path)
-        evaluators: List[Tuple[CheckSpec, str]] = []  # (spec, result column alias)
-        constant_zero: List[CheckSpec] = []
-        sample_conds: Dict[str, Any] = {}
-
-        def _add(expr, alias: str) -> None:
-            exprs.append(expr)
-            expr_by_alias[alias] = expr
-
+    def _build_agg_batch(self, run: Run, model: str, specs: List[CheckSpec],
+                         df: DataFrame) -> _AggBatch:
+        """Compile the agg-able specs into one flat aggregate."""
+        batch = _AggBatch()
         for i, spec in enumerate(specs):
             alias = f"__dc_m{i}__"
             if spec.metric is MetricType.ROW_COUNT:
-                evaluators.append((spec, _ROW_COUNT_ALIAS))
+                batch.evaluators.append((spec, _ROW_COUNT_ALIAS))
                 continue
             column = resolve_column(df, spec.field) if spec.field else None
             if spec.field and column is None:
@@ -643,34 +657,38 @@ class SparkContractEngine:
                 continue
             if spec.metric is MetricType.MISSING_COUNT:
                 cond = missing_condition(df, column, spec)
-                _add(count_if(cond, alias), alias)
-                evaluators.append((spec, alias))
-                sample_conds[spec.key] = (column, cond)
+                batch.add(spec, alias, [count_if(cond, alias)])
+                batch.sample_conds[spec.key] = (column, cond)
             elif spec.metric is MetricType.INVALID_COUNT:
                 cond = invalid_condition(df, column, spec)
                 if cond is None:
-                    constant_zero.append(spec)  # no constraints ⇒ 0 without querying
+                    batch.constant_zero.append(spec)  # no constraints ⇒ 0 without querying
                 else:
-                    _add(count_if(cond, alias), alias)
-                    evaluators.append((spec, alias))
-                    sample_conds[spec.key] = (column, cond)
+                    batch.add(spec, alias, [count_if(cond, alias)])
+                    batch.sample_conds[spec.key] = (column, cond)
             elif spec.metric is MetricType.FRESHNESS:
-                _add(F.max(F.col(_q(column))).alias(alias), alias)
-                evaluators.append((spec, alias))
+                batch.add(spec, alias, [F.max(F.col(_q(column))).alias(alias)])
             elif spec.metric is MetricType.RETENTION:
-                _add(F.min(F.col(_q(column))).alias(alias), alias)
-                evaluators.append((spec, alias))
+                batch.add(spec, alias, [F.min(F.col(_q(column))).alias(alias)])
             elif spec.metric is MetricType.QUANTILE:
                 q = float(spec.quantile if spec.quantile is not None else 0.5)
-                # approx (t-digest-style sketch, fixed memory) is the 100 TB
-                # default; arguments.exact=true opts into the exact
-                # interpolated percentile (buffers the column per group)
+                # approx (fixed-memory sketch) is the 100 TB default;
+                # arguments.exact=true opts into the exact interpolated
+                # percentile (buffers the column per group)
                 expr = (F.percentile(F.col(_q(column)), F.lit(q))
                         if spec.quantile_exact
                         else F.percentile_approx(F.col(_q(column)), q, 10000))
-                _add(expr.alias(alias), alias)
-                evaluators.append((spec, alias))
-        return exprs, expr_by_alias, evaluators, constant_zero, sample_conds
+                batch.add(spec, alias, [expr.alias(alias)])
+            elif spec.metric is MetricType.QUANTILE_DRIFT_KS:
+                try:
+                    aggs, ks = drift.ks_aggregates(F.col(_q(column)),
+                                                   spec.baseline, alias)
+                except ValueError as e:
+                    run.set_result(spec.key, ResultEnum.error,
+                                   f"Invalid quantileDriftKs baseline: {e}")
+                    continue
+                batch.add(spec, alias, aggs, F.round(ks, 6))
+        return batch
 
     def _run_agg_with_duplicates(self, run: Run, model: str,
                                  agg_specs: List[CheckSpec],
@@ -696,8 +714,7 @@ class SparkContractEngine:
                 self._check_duplicates(run, spec, df, obj)
             return
 
-        exprs, expr_by_alias, evaluators, constant_zero, sample_conds = \
-            self._build_agg_exprs(run, model, agg_specs, df)
+        batch = self._build_agg_batch(run, model, agg_specs, df)
         dup_alias = "__dc_dup__"
         kind_alias = "__dc_kind__"
         skey_alias = "__dc_skey__"
@@ -745,7 +762,7 @@ class SparkContractEngine:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=2) as pool:
-                agg_future = pool.submit(lambda: df.agg(*exprs).collect())
+                agg_future = pool.submit(batch.frame(df).collect)
                 dup_future = pool.submit(combined.collect)
                 collected = dup_future.result()
                 row = agg_future.result()[0].asDict()
@@ -764,8 +781,7 @@ class SparkContractEngine:
                     run.set_result(spec.key, ResultEnum.error,
                                    f"Duplicate check failed: {dup_err}")
             return
-        self._evaluate_agg_row(run, row, evaluators, constant_zero,
-                               sample_conds, df, obj)
+        self._evaluate_agg_row(run, row, batch, df, obj)
         self._evaluate(run, lead, int(row[dup_alias]), None)
         check = run.check(lead.key)
         if (self.include_failed_samples and check is not None
@@ -789,59 +805,60 @@ class SparkContractEngine:
                        df: DataFrame, obj: Optional[SchemaObject]) -> None:
         if not specs:
             return
-        exprs, expr_by_alias, evaluators, constant_zero, sample_conds = \
-            self._build_agg_exprs(run, model, specs, df)
+        batch = self._build_agg_batch(run, model, specs, df)
 
         try:
-            row = df.agg(*exprs).collect()[0].asDict()
+            row = batch.frame(df).collect()[0].asDict()
         except Exception as batch_err:  # noqa: BLE001
             # One bad constraint (e.g. an invalid regex raising inside rlike at
             # execution time) must not abort the whole run: the reference
             # catches aggregation errors and fails only the affected checks
-            # (ibis_check_execute.py:294-318). Retry each metric individually
-            # so healthy checks in the batch still evaluate.
+            # (ibis_check_execute.py:294-318). Retry each check individually
+            # — all of its aggregates together — so healthy checks in the
+            # batch still evaluate.
             logger.warning("batched aggregation failed, isolating per-check: %s", batch_err)
             row = {}
             try:
-                row[_ROW_COUNT_ALIAS] = df.agg(exprs[0]).collect()[0][0]
+                row[_ROW_COUNT_ALIAS] = df.agg(batch.aggs[0]).collect()[0][0]
             except Exception as e:  # noqa: BLE001
-                for spec, _ in evaluators:
+                for spec, _ in batch.evaluators:
                     run.set_result(spec.key, ResultEnum.error, f"Aggregation failed: {e}")
-                for spec in constant_zero:
+                for spec in batch.constant_zero:
                     run.set_result(spec.key, ResultEnum.error, f"Aggregation failed: {e}")
                 return
-            for spec, alias in list(evaluators):
+            for spec, alias in list(batch.evaluators):
                 if alias == _ROW_COUNT_ALIAS:
                     continue
+                aggs, value = batch.parts[alias]
                 try:
-                    row[alias] = df.agg(expr_by_alias[alias]).collect()[0][0]
+                    row[alias] = df.agg(*aggs).select(value).collect()[0][0]
                 except Exception as e:  # noqa: BLE001
                     run.set_result(spec.key, ResultEnum.error, f"Check aggregation failed: {e}")
-                    evaluators.remove((spec, alias))
-                    sample_conds.pop(spec.key, None)
-        self._evaluate_agg_row(run, row, evaluators, constant_zero,
-                               sample_conds, df, obj)
+                    batch.evaluators.remove((spec, alias))
+                    batch.sample_conds.pop(spec.key, None)
+        self._evaluate_agg_row(run, row, batch, df, obj)
 
     def _evaluate_agg_row(self, run: Run, row: Dict[str, Any],
-                          evaluators: List[Tuple[CheckSpec, str]],
-                          constant_zero: List[CheckSpec],
-                          sample_conds: Dict[str, Any],
-                          df: DataFrame, obj: Optional[SchemaObject]) -> None:
+                          batch: _AggBatch, df: DataFrame,
+                          obj: Optional[SchemaObject]) -> None:
         row_count = int(row[_ROW_COUNT_ALIAS])
+        sample_conds = batch.sample_conds
 
-        for spec in constant_zero:
+        for spec in batch.constant_zero:
             self._evaluate(run, spec, 0, row_count)
 
         failed_sample_keys = []
-        for spec, alias in evaluators:
+        for spec, alias in batch.evaluators:
             value = row[alias]
             if spec.metric in (MetricType.FRESHNESS, MetricType.RETENTION):
                 self._evaluate_timestamp_sla(run, spec, value)
                 continue
-            if spec.metric is MetricType.QUANTILE:
+            if spec.metric in (MetricType.QUANTILE, MetricType.QUANTILE_DRIFT_KS):
+                label = ("quantile" if spec.metric is MetricType.QUANTILE
+                         else "ks_statistic")
                 self._evaluate(run, spec,
                                float(value) if value is not None else None,
-                               None, metric_label="quantile")
+                               None, metric_label=label)
                 continue
             value = int(value) if value is not None else None
             self._evaluate(run, spec, value, row_count)
@@ -1048,24 +1065,18 @@ class SparkContractEngine:
             return
         self._evaluate(run, spec, int(value), None, metric_label="orphan_count")
 
-    def _check_drift(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
+    def _check_psi(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         column = resolve_column(df, spec.field)
         if column is None:
             run.set_result(spec.key, _fail_result(spec),
                            f"Column '{spec.field}' not found in model {spec.model}")
             return
-        from datacontract_cli_spark.operators import drift
         try:
-            if spec.metric is MetricType.FREQ_DRIFT_PSI:
-                value = drift.psi(df, column, spec.baseline)
-                label = "psi"
-            else:
-                value = drift.ks_statistic(df, column, spec.baseline)
-                label = "ks_statistic"
+            value = drift.psi(df, column, spec.baseline)
         except Exception as e:
             run.set_result(spec.key, ResultEnum.error, f"Drift check failed: {e}")
             return
-        self._evaluate(run, spec, round(float(value), 6), None, metric_label=label)
+        self._evaluate(run, spec, round(float(value), 6), None, metric_label="psi")
 
     def _check_max_run(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         """maxRunLength: longest run of consecutive identical action values

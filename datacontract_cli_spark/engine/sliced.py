@@ -19,11 +19,11 @@ slices as on three. Threshold evaluation matches
 ``checks.spec.Threshold.passes`` for numeric thresholds (``passes(None)``
 = False). Drift checks ride the same shuffle: freqDriftPsi baselines
 expand to per-category count-ifs (novel mass folded into one bucket —
-see ``_psi_value``) and quantileDriftKs ``cdf`` baselines to per-point
-count-ifs, so per-slice drift verdicts cost zero extra passes. Checks
-whose thresholds aren't expressible as Column math (timestamp SLAs,
-custom SQL, t-digest ``quantiles`` KS baselines) are skipped — run the
-engine for those.
+see ``_psi_value``) and quantileDriftKs baselines (``cdf`` and
+``quantiles``) to the per-point count-ifs of ``drift.ks_aggregates``, so
+per-slice drift verdicts cost zero extra passes. Checks whose thresholds
+aren't expressible as Column math (timestamp SLAs, custom SQL) are
+skipped — run the engine for those.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from datacontract_cli_spark.engine.predicates import (
     resolve_column,
 )
 from datacontract_cli_spark.model.contract import DataContract
+from datacontract_cli_spark.operators import drift
 
 _SLICEABLE = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
               MetricType.INVALID_COUNT, MetricType.QUANTILE,
@@ -74,15 +75,6 @@ def _psi_value(prefix: str, baseline: dict, n: Column) -> Column:
     novel = F.greatest(F.try_divide(n - total_known, n), eps)
     out = out + (novel - eps) * F.log(novel / eps)
     return out
-
-
-def _ks_value(prefix: str, points: list, n: Column) -> Column:
-    """Per-slice KS-at-points over the ``{prefix}le{j}`` aggregates —
-    the ks_by_group formulation inlined into the shared slice groupBy."""
-    terms = [F.abs(F.try_divide(F.col(f"{prefix}le{j}"), n)
-                   - F.lit(float(p)))
-             for j, (_x, p) in enumerate(points)]
-    return terms[0] if len(terms) == 1 else F.greatest(*terms)
 
 
 def _threshold_condition(t: Threshold, value: Column) -> Optional[Column]:
@@ -166,17 +158,14 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
                                6)))
             continue
         if spec.metric is MetricType.QUANTILE_DRIFT_KS:
-            points = (spec.baseline or {}).get("cdf")
-            if not points:      # t-digest 'quantiles' baselines are not
-                continue        # agg-able — run the engine for those
-            exprs.append(F.count(F.col(_q(column))).alias(f"{alias}n"))
-            for j, (x, _p) in enumerate(points):
-                exprs.append(F.sum(
-                    F.when(F.col(_q(column)) <= F.lit(float(x)), 1)
-                     .otherwise(0)).alias(f"{alias}le{j}"))
-            verdicts.append(
-                (spec, F.round(_ks_value(alias, points, F.col(f"{alias}n")),
-                               6)))
+            try:
+                aggs, ks = drift.ks_aggregates(F.col(_q(column)),
+                                               spec.baseline, alias)
+            except ValueError:  # malformed baseline
+                verdicts.append((spec, None))
+                continue
+            exprs.extend(aggs)
+            verdicts.append((spec, F.round(ks, 6)))
             continue
         if spec.metric is MetricType.MISSING_COUNT:
             expr = count_if(missing_condition(df, column, spec), alias)
@@ -199,7 +188,7 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
 
     rows = []
     for spec, alias in verdicts:
-        if alias is None:  # missing column: failed verdict, null metric
+        if alias is None:  # missing column or bad baseline: failed, null metric
             rows.append(F.struct(
                 F.lit(spec.key).alias("check_key"),
                 F.lit(None).cast("double").alias("metric_value"),

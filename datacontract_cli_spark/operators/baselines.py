@@ -8,7 +8,10 @@ plugs them back into contract quality rules as ``arguments.baseline``.
 Baseline kinds:
 - categorical frequency vector (for freqDriftPsi)
 - numeric CDF points at fixed probes (for quantileDriftKs "cdf")
-- t-digest quantile map (for quantileDriftKs "quantiles" — the sketch path)
+
+quantileDriftKs also reads a ``quantiles`` map {p: x} written by hand or by
+older versions of this module; ``drift.ks_aggregates`` evaluates both kinds
+exactly.
 """
 
 from __future__ import annotations
@@ -20,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators import drift
-from datacontract_cli_spark.operators.tdigest import sketch_column
 
 DEFAULT_QUANTILES = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
 
@@ -59,21 +61,13 @@ def cdf_baseline(df: DataFrame, column: str,
     return {"cdf": [[x, float(row[f"c{i}"]) / n] for i, x in enumerate(pts)]}
 
 
-def tdigest_baseline(df: DataFrame, column: str,
-                     probs: Sequence[float] = DEFAULT_QUANTILES) -> Dict[str, Any]:
-    d = sketch_column(df, column)
-    return {"quantiles": {str(p): d.quantile(p) for p in probs}}
-
-
 def compute_baselines(df: DataFrame, categorical: Sequence[str] = (),
-                      numeric: Sequence[str] = (),
-                      use_tdigest: bool = False) -> Dict[str, Dict[str, Any]]:
+                      numeric: Sequence[str] = ()) -> Dict[str, Dict[str, Any]]:
     out: Dict[str, Dict[str, Any]] = {}
     for c in categorical:
         out[c] = {"kind": "categorical", "baseline": categorical_baseline(df, c)}
     for c in numeric:
-        b = tdigest_baseline(df, c) if use_tdigest else cdf_baseline(df, c)
-        out[c] = {"kind": "numeric", "baseline": b}
+        out[c] = {"kind": "numeric", "baseline": cdf_baseline(df, c)}
     return out
 
 

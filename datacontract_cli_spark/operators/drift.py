@@ -8,21 +8,24 @@ Beyond-reference operators mandated by the north rule (SURVEY.md §2.9):
   hash aggregate whose shuffle payload is one row per category) against a
   baseline {category: expected_fraction}.
 
-- **KS statistic** compares the observed distribution against a baseline CDF.
-  Two paths: ``baseline={"cdf": [[x, p], ...]}`` evaluates the empirical CDF
-  at the baseline's x-points in a single batched aggregation (exact, one
-  scan); ``baseline={"quantiles": {...}, "use_tdigest": true}`` sketches the
-  column with per-partition t-digests (operators/tdigest.py) and compares
-  CDFs at the baseline quantile values — the 100 TB path when the baseline
-  has many evaluation points.
+- **KS statistic** compares the observed distribution against a baseline
+  at the baseline's k points, exactly, with count-ifs that fold into any
+  aggregate (``ks_aggregates``): the engine runs them inside each model's
+  one flat aggregate, ``engine/sliced.py`` inside its slice groupBy.
+  ``baseline={"cdf": [[x, p], ...]}`` scores ``|F(x) - p|``;
+  ``baseline={"quantiles": {p: x}}`` scores p's distance to the interval
+  ``[F(x-), F(x)]`` — 0 when x is a p-quantile of the data (so a constant
+  or tie-heavy column never drifts against its own quantiles), and
+  ``|F(x) - p|`` on continuous data. Other baseline keys (the retired
+  ``use_tdigest``) are ignored.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Any, Dict, List
+from typing import Any, Dict, List, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _EPS = 1e-6
@@ -198,26 +201,54 @@ def chi2_df(df: DataFrame, column: str, baseline: Dict[Any, float],
         (F.count(F.lit(1)) - 1).alias("df_degrees"))
 
 
+def ks_aggregates(column: Column, baseline: Dict[str, Any],
+                  prefix: str) -> Tuple[List[Column], Column]:
+    """Exact KS of ``column`` against ``baseline`` as (aggregates,
+    statistic). The aggregates are ``count(column)`` and, per baseline
+    point x, ``count_if(column <= x)`` — plus ``count_if(column < x)`` for a
+    ``quantiles`` baseline — aliased ``{prefix}…``; they fold into any
+    ``agg``/``groupBy().agg``. The statistic is Column math over those
+    aliases, to project on the aggregated row: NULL when the column has no
+    non-null value (unknown drift, never zero). A malformed baseline raises
+    ValueError."""
+    try:
+        if "cdf" in baseline:
+            tie_aware, pairs = False, [(x, p) for x, p in baseline["cdf"]]
+        else:
+            tie_aware = True
+            pairs = [(x, p) for p, x in baseline["quantiles"].items()]
+        points = [(float(x), float(p)) for x, p in pairs]
+    except (AttributeError, KeyError, TypeError, ValueError) as e:
+        raise ValueError("KS baseline needs 'cdf': [[x, p], ...] or "
+                         f"'quantiles': {{p: x}}, got {baseline!r}") from e
+    if not points:
+        raise ValueError("KS baseline has no points")
+    n_alias = f"{prefix}n"
+    aggs = [F.count(column).alias(n_alias)]
+    n = F.col(n_alias)
+    terms = []
+    for i, (x, p) in enumerate(points):
+        aggs.append(F.count_if(column <= F.lit(x)).alias(f"{prefix}le{i}"))
+        hi = F.try_divide(F.col(f"{prefix}le{i}"), n)
+        if tie_aware:
+            aggs.append(F.count_if(column < F.lit(x)).alias(f"{prefix}lt{i}"))
+            lo = F.try_divide(F.col(f"{prefix}lt{i}"), n)
+            terms.append(F.greatest(lo - F.lit(p), F.lit(p) - hi, F.lit(0.0)))
+        else:
+            terms.append(F.abs(hi - F.lit(p)))
+    worst = terms[0] if len(terms) == 1 else F.greatest(*terms)
+    return aggs, F.when(n > 0, worst)
+
+
 def ks_df(df: DataFrame, column: str, points: List[List[float]],
           digits: int = 6) -> DataFrame:
     """Exact KS-at-points as a one-row DataFrame with zero driver
     round-trips (same declarative rationale as :func:`psi_df`): all the
     count-ifs fuse into ONE scan's aggregate, and the max-deviation fold
-    happens in the same plan via ``greatest`` — nothing is collected and
-    no local relation ships to the JVM."""
-    col = F.col(column)
-    aggs = [F.count(col).alias("__n__")]
-    for i, (x, _p) in enumerate(points):
-        aggs.append(F.sum(F.when(col <= F.lit(x), 1).otherwise(0))
-                    .alias(f"__le_{i}__"))
-    row = df.agg(*aggs)
-    # try_divide, like ks_by_group: an empty/all-null column (n=0) must
-    # yield ks NULL, not an ANSI divide-by-zero error
-    terms = [F.abs(F.try_divide(F.col(f"__le_{i}__"), F.col("__n__"))
-                   - F.lit(float(p)))
-             for i, (_x, p) in enumerate(points)]
-    ks = terms[0] if len(terms) == 1 else F.greatest(*terms)
-    return row.select(F.round(ks, digits).alias("ks"))
+    happens in the same plan — nothing is collected and no local relation
+    ships to the JVM. An empty/all-null column yields ks NULL."""
+    aggs, ks = ks_aggregates(F.col(column), {"cdf": points}, "__ks_")
+    return df.agg(*aggs).select(F.round(ks, digits).alias("ks"))
 
 
 def ks_by_group(df: DataFrame, group_col: str, column: str,
@@ -234,75 +265,18 @@ def ks_by_group(df: DataFrame, group_col: str, column: str,
     projection on the tiny grouped frame. NULL group keys form their own
     row (they usually ARE the defect); groups with zero non-null values
     yield ks NULL rather than a spurious 0."""
-    col = F.col(column)
-    aggs = [F.count(col).alias("n")]
-    for i, (x, _p) in enumerate(points):
-        aggs.append(F.sum(F.when(col <= F.lit(x), 1).otherwise(0))
-                    .alias(f"__le_{i}__"))
-    g = df.groupBy(group_col).agg(*aggs)
-    # try_divide: an empty group (n=0) must yield ks NULL, not an ANSI
-    # divide-by-zero error
-    terms = [F.abs(F.try_divide(F.col(f"__le_{i}__"), F.col("n"))
-                   - F.lit(float(p)))
-             for i, (_x, p) in enumerate(points)]
-    ks = terms[0] if len(terms) == 1 else F.greatest(*terms)
-    return g.select(group_col, "n", F.round(ks, digits).alias("ks"))
+    aggs, ks = ks_aggregates(F.col(column), {"cdf": points}, "__ks_")
+    return df.groupBy(group_col).agg(*aggs).select(
+        group_col, F.col("__ks_n").alias("n"),
+        F.round(ks, digits).alias("ks"))
 
 
 def ks_statistic(df: DataFrame, column: str, baseline: Dict[str, Any]) -> float:
-    if "cdf" in baseline:
-        points: List[List[float]] = baseline["cdf"]
-        return _ks_exact_at_points(df, column, points)
-    if "quantiles" in baseline:
-        from datacontract_cli_spark.operators.tdigest import sketch_column
-
-        digest = sketch_column(df, column)
-        if digest.means.size == 0:
-            # empty/all-null column: NaN (threshold.passes(None/NaN) is
-            # False, so the gate FAILS honestly), matching the exact-CDF
-            # lane — max(0.0, nan) would have reported zero drift
-            return float("nan")
-        worst = 0.0
-        for q_str, x in baseline["quantiles"].items():
-            p = float(q_str)
-            worst = max(worst, abs(digest.cdf(float(x)) - p))
-        return worst
-    raise ValueError("KS baseline needs 'cdf': [[x, p], ...] or 'quantiles': {q: x}")
-
-
-def _ks_exact_at_points(df: DataFrame, column: str, points: List[List[float]]) -> float:
-    """max_i |F̂(x_i) − p_i| with F̂ evaluated for every x_i in ONE aggregation
-    pass (all the count-ifs fuse into a single scan)."""
-    col = F.col(column)
-    exprs = [F.count(col).alias("__n__")]
-    for i, (x, _p) in enumerate(points):
-        exprs.append(F.sum(F.when(col <= F.lit(x), 1).otherwise(0)).alias(f"__le_{i}__"))
-    row = df.agg(*exprs).collect()[0]
-    n = row["__n__"]
-    if not n:
-        return float("nan")
-    worst = 0.0
-    for i, (_x, p) in enumerate(points):
-        worst = max(worst, abs(row[f"__le_{i}__"] / n - float(p)))
-    return worst
-
-
-def ks_two_sample(df1: DataFrame, col1: str, df2: DataFrame, col2: str,
-                  compression: float = 200.0) -> float:
-    """Two-sample KS via t-digest sketches of both sides (each side one
-    distributed sketch pass; comparison on the driver over the union of
-    centroid locations)."""
-    from datacontract_cli_spark.operators.tdigest import sketch_column
-
-    d1 = sketch_column(df1, col1, compression)
-    d2 = sketch_column(df2, col2, compression)
-    if d1.means.size == 0 or d2.means.size == 0:
-        return float("nan")  # an empty side is not 'identical'
-    xs = sorted(set(d1.means.tolist()) | set(d2.means.tolist()))
-    worst = 0.0
-    for x in xs:
-        worst = max(worst, abs(d1.cdf(x) - d2.cdf(x)))
-    return worst
+    """KS of ``column`` against ``baseline`` (see :func:`ks_aggregates`) in
+    one aggregation job; NaN for an empty/all-null column."""
+    aggs, ks = ks_aggregates(F.col(column), baseline, "__ks_")
+    value = df.agg(*aggs).select(ks).first()[0]
+    return float("nan") if value is None else float(value)
 
 
 def chi2_pvalue(chi2: float, df_degrees: int) -> float:

@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators import baselines
@@ -32,12 +33,19 @@ def test_baseline_roundtrip_and_drift(spark, tmp_path):
     assert stats2["text_len"] > 0.3
 
 
-def test_tdigest_baseline_kind(spark):
+def test_tdigest_baseline_kind(spark, tmp_path):
+    """A persisted quantiles baseline — the kind the retired t-digest
+    option wrote — still loads and evaluates, exactly."""
     ref = spark.range(0, 20_000).select((F.col("id") % 500).cast("double").alias("v"))
-    b = baselines.compute_baselines(ref, numeric=["v"], use_tdigest=True)
-    assert "quantiles" in b["v"]["baseline"]
-    stats = baselines.drift_against_baselines(ref, b)
-    assert stats["v"] < 0.05
+    path = str(tmp_path / "quantiles.json")
+    baselines.save_baselines({"v": {"kind": "numeric", "baseline": {
+        "quantiles": {"0.01": 4.0, "0.5": 249.0, "0.99": 494.0}}}}, path)
+    loaded = baselines.load_baselines(path)
+    assert baselines.drift_against_baselines(ref, loaded)["v"] == 0.0
+    shifted = ref.select((F.col("v") + 100).alias("v"))
+    # F(249) = 0.3 vs 0.5 is the worst point
+    assert baselines.drift_against_baselines(shifted, loaded)["v"] == \
+        pytest.approx(0.2, abs=1e-12)
 
 
 def test_partition_pruning_on_date_partitioned_layout(spark, tmp_path):

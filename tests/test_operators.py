@@ -1,4 +1,4 @@
-"""Unit tests for the operator library: drift, t-digest, dedup, similarity,
+"""Unit tests for the operator library: drift, dedup, similarity,
 textstats, refintegrity."""
 
 import math
@@ -8,46 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators import dedup, drift, refintegrity, similarity, textstats
-from datacontract_cli_spark.operators.tdigest import TDigest, sketch_column
-
-
-# --- t-digest ---------------------------------------------------------------
-
-def test_tdigest_quantiles_accuracy():
-    rng = np.random.default_rng(7)
-    values = rng.normal(100, 15, 50_000)
-    d = TDigest.of(values)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        exact = float(np.quantile(values, q))
-        approx = d.quantile(q)
-        assert abs(approx - exact) < 1.0, (q, exact, approx)
-
-
-def test_tdigest_merge_equals_whole():
-    rng = np.random.default_rng(11)
-    a, b = rng.exponential(10, 20_000), rng.exponential(10, 20_000)
-    merged = TDigest.of(a).merge(TDigest.of(b))
-    whole = TDigest.of(np.concatenate([a, b]))
-    for q in (0.1, 0.5, 0.9):
-        assert abs(merged.quantile(q) - whole.quantile(q)) < 0.5
-
-
-def test_tdigest_cdf_monotone_and_bounded():
-    d = TDigest.of(np.arange(1000, dtype=float))
-    xs = [0, 100, 500, 900, 999]
-    cdfs = [d.cdf(x) for x in xs]
-    assert all(0.0 <= c <= 1.0 for c in cdfs)
-    assert cdfs == sorted(cdfs)
-    assert abs(d.cdf(500) - 0.5) < 0.02
-
-
-def test_sketch_column_distributed(spark):
-    df = spark.range(0, 100_000).select(
-        (F.col("id") % 1000).cast("double").alias("v")
-    ).repartition(8)
-    d = sketch_column(df, "v")
-    assert abs(d.quantile(0.5) - 499.5) < 15
-    assert d.total_weight == 100_000
 
 
 # --- drift -------------------------------------------------------------------
@@ -203,10 +163,17 @@ def test_ks_exact_points(spark):
 
 
 def test_ks_tdigest_path(spark):
+    """A quantiles baseline that still carries the retired ``use_tdigest``
+    key runs on the exact path: the key is ignored."""
     df = spark.range(0, 10_000).select(F.col("id").cast("double").alias("v"))
-    ks = drift.ks_statistic(df, "v", {
-        "quantiles": {"0.25": 2499.0, "0.5": 4999.0, "0.75": 7499.0}})
-    assert ks < 0.05
+    quantiles = {"0.25": 2499.0, "0.5": 4999.0, "0.75": 7499.0}
+    ks = drift.ks_statistic(df, "v", {"quantiles": quantiles,
+                                      "use_tdigest": True})
+    assert ks == 0.0 == drift.ks_statistic(df, "v", {"quantiles": quantiles})
+    # off-quantile points: |F(x) - p| exactly (F(999) = 0.1 vs 0.25)
+    assert drift.ks_statistic(df, "v", {"quantiles": {"0.25": 999.0},
+                                        "use_tdigest": True}) == \
+        pytest.approx(0.15, abs=1e-12)
 
 
 # --- dedup --------------------------------------------------------------------

@@ -314,7 +314,6 @@ def test_drift_empty_and_degenerate_inputs(spark):
     import math
 
     from datacontract_cli_spark.operators import drift
-    from datacontract_cli_spark.operators.tdigest import TDigest
 
     empty = spark.createDataFrame([], "v double")
     # quantiles lane: nan, not max(0.0, nan) == 0.0
@@ -323,17 +322,13 @@ def test_drift_empty_and_degenerate_inputs(spark):
     # declarative ks_df: NULL, not ANSI divide-by-zero
     row = drift.ks_df(empty, "v", [[10.0, 0.5]]).first()
     assert row["ks"] is None
-    # two-sample with one empty side: nan, not 'identical'
-    full = spark.createDataFrame([(1.0,), (2.0,)], "v double")
-    assert math.isnan(drift.ks_two_sample(full, "v", empty, "v"))
 
-    # degenerate single-value digest: F(v) = 1 at its only value
-    import numpy as np
-    d = TDigest.of(np.array([5.0, 5.0, 5.0]))
-    assert d.cdf(5.0) == 1.0
+    # constant column against its own quantiles: zero drift at every p
     const = spark.createDataFrame([(5.0,)] * 10, "v double")
     assert drift.ks_statistic(const, "v",
                               {"quantiles": {"1.0": 5.0}}) == 0.0
+    assert drift.ks_statistic(
+        const, "v", {"quantiles": {"0.1": 5.0, "0.5": 5.0}}) == 0.0
 
     # chi2 with a forbidden category (q=0): observed occurrences produce
     # a HUGE statistic instead of a dropped term / ANSI crash
@@ -347,5 +342,6 @@ def test_drift_empty_and_degenerate_inputs(spark):
 
     # empty declarative baseline: clear ValueError
     import pytest as _pytest
+    full = spark.createDataFrame([(1.0,), (2.0,)], "v double")
     with _pytest.raises(ValueError, match="at least one category"):
         drift.psi_df(full, "v", {})

@@ -103,7 +103,18 @@ schema:
             arguments:
               baseline:
                 cdf: [[10.0, 0.5], [30.0, 0.9]]
+      - name: n_words
+        logicalType: number
+        quality:
+          - type: library
+            metric: quantileDriftKs
+            mustBeLessThan: 0.2
+            arguments:
+              baseline:
+                quantiles: {"0.25": 2.0, "0.5": 4.0, "0.9": 8.0}
 """
+
+_WORD_QUANTILES = {"0.25": 2.0, "0.5": 4.0, "0.9": 8.0}
 
 
 def test_sliced_drift_checks_match_scalar_lane(spark):
@@ -112,13 +123,16 @@ def test_sliced_drift_checks_match_scalar_lane(spark):
     from datacontract_cli_spark.operators import drift
 
     rows = []
-    # slice a: balanced roles, lengths 0..19 -> on-baseline
+    # slice a: balanced roles, lengths 0..19, word counts 0..9 twice
+    # (tie-heavy, on the quantiles baseline) -> on-baseline
     for i in range(20):
-        rows.append(("a", "user" if i % 2 == 0 else "assistant", float(i)))
-    # slice b: all assistant (psi drifts), lengths 40..59 (ks drifts)
+        rows.append(("a", "user" if i % 2 == 0 else "assistant", float(i),
+                     float(i % 10)))
+    # slice b: all assistant (psi drifts), lengths 40..59 and word counts
+    # 6..9 (ks drifts)
     for i in range(20):
-        rows.append(("b", "assistant", float(40 + i)))
-    df = spark.createDataFrame(rows, ["src", "role", "n_chars"])
+        rows.append(("b", "assistant", float(40 + i), float(6 + i % 4)))
+    df = spark.createDataFrame(rows, ["src", "role", "n_chars", "n_words"])
 
     out = sliced_validation(df, load_contract_str(_DRIFT_CONTRACT),
                             "transcripts", ["src"])
@@ -131,12 +145,19 @@ def test_sliced_drift_checks_match_scalar_lane(spark):
                               {"user": 0.5, "assistant": 0.5}), 6)
         ks = round(drift.ks_statistic(
             sl, "n_chars", {"cdf": [[10.0, 0.5], [30.0, 0.9]]}), 6)
+        ksq = round(drift.ks_statistic(
+            sl, "n_words", {"quantiles": _WORD_QUANTILES}), 6)
         v_psi, p_psi = got[(s, "transcripts__role__freq_drift_psi")]
         v_ks, p_ks = got[(s, "transcripts__n_chars__quantile_drift_ks")]
+        v_ksq, p_ksq = got[(s, "transcripts__n_words__quantile_drift_ks")]
         assert v_psi == pytest.approx(psi, abs=1e-6), s
         assert v_ks == pytest.approx(ks, abs=1e-6), s
+        assert v_ksq == pytest.approx(ksq, abs=1e-6), s
         assert p_psi is (psi < 0.25) and p_ks is (ks < 0.2)
+        assert p_ksq is (ksq < 0.2)
     # sanity on direction: a passes both, b fails both
     assert got[("a", "transcripts__role__freq_drift_psi")][1] is True
     assert got[("b", "transcripts__role__freq_drift_psi")][1] is False
     assert got[("b", "transcripts__n_chars__quantile_drift_ks")][1] is False
+    assert got[("a", "transcripts__n_words__quantile_drift_ks")] == (0.0, True)
+    assert got[("b", "transcripts__n_words__quantile_drift_ks")][1] is False

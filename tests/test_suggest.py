@@ -139,13 +139,13 @@ def test_cdf_baseline_records_empirical_cdf_on_point_masses(spark):
     # probability must be the empirical CDF so self-KS is exactly 0
     from pyspark.sql import functions as F
     from datacontract_cli_spark.operators.baselines import cdf_baseline
-    from datacontract_cli_spark.operators.drift import _ks_exact_at_points
+    from datacontract_cli_spark.operators.drift import ks_statistic
     df = spark.createDataFrame(
         [(0.0,)] * 40 + [(float(i),) for i in range(1, 61)], "value double")
     base = cdf_baseline(df, "value", round_to=6)
     by_x = dict((x, p) for x, p in base["cdf"])
     assert by_x[0.0] == pytest.approx(0.4, abs=1e-9)
-    assert _ks_exact_at_points(df, "value", base["cdf"]) == pytest.approx(
+    assert ks_statistic(df, "value", base) == pytest.approx(
         0.0, abs=1e-9)
 
 
@@ -153,10 +153,10 @@ def test_cdf_baseline_rounding_cannot_shift_below_point_mass(spark):
     # a repeated fine-precision value: rounding the probe must happen
     # BEFORE the empirical pass, so the stored p matches the stored probe
     from datacontract_cli_spark.operators.baselines import cdf_baseline
-    from datacontract_cli_spark.operators.drift import _ks_exact_at_points
+    from datacontract_cli_spark.operators.drift import ks_statistic
     v = 0.3333333333
     df = spark.createDataFrame(
         [(v,)] * 30 + [(1.0 + i / 100.0,) for i in range(70)], "value double")
     base = cdf_baseline(df, "value", round_to=6)
-    assert _ks_exact_at_points(df, "value", base["cdf"]) == pytest.approx(
+    assert ks_statistic(df, "value", base) == pytest.approx(
         0.0, abs=1e-9)
