@@ -412,18 +412,13 @@ def _q_lm_quality_score(spark, sf):
 def _q_benchmark_contamination(spark, sf):
     """Decontamination: corpus docs sharing a 5-word-gram with a benchmark
     set (docs 0-9) — broadcast semi-join, corpus shuffles (doc_id, gram)
-    pairs only."""
-    import os
-
+    pairs only. Raw gram strings (hash_grams=False), the reference lane,
+    so the DuckDB oracle reproduces the join keys."""
     from datacontract_cli_spark.operators.contamination import contamination_stats
     docs = _t(spark, sf, "documents")
     bench = docs.filter(F.col("doc_id") < 10)
     corpus = docs.filter(F.col("doc_id") >= 10)
-    # production lane compresses join keys to xxhash64 (8-byte longs instead
-    # of gram strings); the gate leaves it off so the DuckDB oracle can
-    # reproduce the join keys — same env policy as the LSH kernel families.
-    hash_grams = os.environ.get("DCSPARK_CONTAM_HASH_GRAMS", "") == "1"
-    return contamination_stats(corpus, bench, n=5, hash_grams=hash_grams)
+    return contamination_stats(corpus, bench, n=5, hash_grams=False)
 
 
 def _q_streaming_counts(spark, sf):
@@ -562,14 +557,12 @@ def _q_bpe_token_stats(spark, sf):
 
 def _q_winnow_dups(spark, sf):
     """Winnowing-fingerprint candidate pairs (MOSS): shared k-gram
-    fingerprints via inverted-index join; md5 hash family so the DuckDB
-    oracle reproduces the exact pair set."""
-    import os
+    fingerprints via inverted-index join; md5 hash family (the reference
+    lane) so the DuckDB oracle reproduces the exact pair set."""
     docs = _t(spark, sf, "documents")
-    family = os.environ.get("DCSPARK_WINNOW_FAMILY", "md5")
     return (
         dedup.winnow_shared_pairs(docs, "doc_id", k=8, window=4, min_shared=30,
-                                  max_doc_freq=50, hash_family=family)
+                                  max_doc_freq=50, hash_family="md5")
         .select("id_a", "id_b", F.col("n_shared").cast("long").alias("n_shared"))
         .orderBy("id_a", "id_b")
     )
@@ -604,14 +597,13 @@ def _q_cosine_topk(spark, sf):
 
 
 def _q_minhash_near_dups(spark, sf):
-    import os
     docs = _t(spark, sf, "documents")
-    # md5 kernel: the shared hash family — banded-LSH candidates + signature
-    # agreement are reproduced bit-for-bit by the DuckDB oracle (same one
-    # md5 per shingle + 64 affine permutations + 16x4 banding)
-    kernel = os.environ.get("DCSPARK_MINHASH_KERNEL", "md5")
+    # md5 kernel (the reference lane): the shared hash family — banded-LSH
+    # candidates + signature agreement are reproduced bit-for-bit by the
+    # DuckDB oracle (same one md5 per shingle + 64 affine permutations +
+    # 16x4 banding)
     return (
-        dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8, kernel=kernel)
+        dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8, kernel="md5")
         .select("id_a", "id_b",
                 F.round("est_jaccard", 4).alias("est_jaccard"))
         .orderBy("id_a", "id_b")
@@ -625,13 +617,12 @@ def _q_ngram_jaccard_dups(spark, sf):
 
 
 def _q_simhash_near_dups(spark, sf):
-    import os
     docs = _t(spark, sf, "documents")
-    # md5 hash family: the oracle brute-forces hamming over all pairs, which
-    # ALSO proves the pigeonhole word-blocking is exhaustive for hamming<=3
-    family = os.environ.get("DCSPARK_SIMHASH_FAMILY", "md5")
+    # md5 hash family (the reference lane): the oracle brute-forces hamming
+    # over all pairs, which ALSO proves the pigeonhole word-blocking is
+    # exhaustive for hamming<=3
     return dedup.simhash_near_duplicates(
-        docs, "doc_id", max_hamming=3, hash_family=family
+        docs, "doc_id", max_hamming=3, hash_family="md5"
     ).select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
 
@@ -656,6 +647,26 @@ def _q_embedding_near_dups(spark, sf):
     ).select("n_exact", "n_found", (F.col("n_exact") - F.col("n_found")).alias("n_missed"))
 
 
+def _q_minhash_near_dups_recall(spark, sf):
+    """MinHash LSH RECALL on the arrow lane (the library default) against
+    the exact 3-shingle Jaccard >= 0.8 pair set: the oracle asserts
+    n_missed == 0, i.e. banded LSH at this threshold loses no pair the
+    exact inverted-index scan finds."""
+    docs = _t(spark, sf, "documents")
+    exact = dedup.ngram_jaccard(docs, "doc_id", n=3, threshold=0.8) \
+        .select("id_a", "id_b")
+    lsh = dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8,
+                                        kernel="arrow")
+    found = exact.join(lsh.select("id_a", "id_b"), ["id_a", "id_b"],
+                       "left_semi")
+    n_exact, n_found = exact.count(), found.count()
+    lsh.unpersist()
+    return spark.createDataFrame(
+        [(n_exact, n_found)], "n_exact bigint, n_found bigint"
+    ).select("n_exact", "n_found",
+             (F.col("n_exact") - F.col("n_found")).alias("n_missed"))
+
+
 def _q_semantic_dedup(spark, sf):
     """SemDeDup survivors over embeddings + planted duplicate groups.
 
@@ -678,12 +689,9 @@ def _q_semantic_dedup(spark, sf):
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.transform("embedding", lambda x: x * F.lit(0.5)).alias("embedding"))
     corpus = emb.unionByName(dup_neg).unionByName(dup_pos)
-    # survivors are kernel-independent: identical-direction vectors
-    # co-bucket under both kernels (sign(v·p) is scale-invariant), and no
-    # natural pair reaches 0.99
-    import os
-    kernel = os.environ.get("DCSPARK_EMB_LSH_KERNEL", "expr")
-    out = similarity.semantic_dedup(corpus, threshold=0.99, kernel=kernel)
+    # identical-direction vectors co-bucket (sign(v·p) is scale-invariant),
+    # and no natural pair reaches 0.99
+    out = similarity.semantic_dedup(corpus, threshold=0.99)
     return out.select("vec_id").orderBy("vec_id")
 
 
@@ -1013,19 +1021,16 @@ def _q_props_json_stats(spark, sf):
 def _q_dsir_weights(spark, sf):
     """DSIR importance ranking (Xie et al. 2023): top-20 documents most
     like the lang='en' target under hashed unigram LMs; md5 bucket family
-    so the oracle reproduces bucket ids (production: xxhash64)."""
-    import os
-
+    so the oracle reproduces bucket ids."""
     from datacontract_cli_spark.operators.dsir import dsir_importance
 
     docs = _t(spark, sf, "documents")
     # arrow kernel: identical md5 buckets and integer counts computed
     # narrowly per document (oracle-verified at 3 SFs) — no token explode,
     # no wide (id, bucket) shuffle
-    kernel = os.environ.get("DCSPARK_DSIR_KERNEL", "arrow")
     return dsir_importance(docs, F.col("lang") == "en",
                            n_buckets=4096, smoothing=0.5, top_k=20,
-                           kernel=kernel)
+                           kernel="arrow")
 
 
 def _q_turn_contiguity(spark, sf):
@@ -1096,13 +1101,10 @@ def _q_quality_classifier(spark, sf):
     from datacontract_cli_spark.operators.classifier import quality_scores
 
     docs = _t(spark, sf, "documents")
-    import os
-
     # arrow kernel: same md5 buckets, same fold order, same HALF_UP
     # rounding — bit-identical scores (oracle-verified at 3 SFs), with the
     # md5 work memoized per distinct word per task instead of per token
-    kernel = os.environ.get("DCSPARK_CLASSIFIER_KERNEL", "arrow")
-    s = quality_scores(docs, n_buckets=4096, seed=0, kernel=kernel)
+    s = quality_scores(docs, n_buckets=4096, seed=0, kernel="arrow")
     # n_tokens: size() is INT; DuckDB len() is BIGINT — align the type
     # family for the driver's type-sensitive hash
     return (s.withColumn("n_tokens", F.col("n_tokens").cast("long"))
@@ -1214,20 +1216,16 @@ def _q_line_dedup(spark, sf):
 def _q_contamination_fraction(spark, sf):
     """Per-doc eval-overlap FRACTION (the PaLM-style decontamination
     report): corpus docs >= 10 against the doc<10 benchmark, fraction of
-    each doc's distinct 5-grams found in the eval set. Production lane
-    compresses join keys to xxhash64 (DCSPARK_CONTAM_HASH_GRAMS=1); the
-    gate keeps raw grams so DuckDB reproduces the join keys."""
-    import os
-
+    each doc's distinct 5-grams found in the eval set. Raw gram strings
+    (hash_grams=False), the reference lane, so DuckDB reproduces the join
+    keys."""
     from datacontract_cli_spark.operators.contamination import (
         contamination_fraction,
     )
     docs = _t(spark, sf, "documents")
     bench = docs.filter(F.col("doc_id") < 10)
     corpus = docs.filter(F.col("doc_id") >= 10)
-    hash_grams = os.environ.get("DCSPARK_CONTAM_HASH_GRAMS", "") == "1"
-    return (contamination_fraction(corpus, bench, n=5,
-                                   hash_grams=hash_grams)
+    return (contamination_fraction(corpus, bench, n=5, hash_grams=False)
             .orderBy("doc_id"))
 
 
@@ -1837,6 +1835,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "unpivot_part": _q_unpivot_part,
         "embedding_pairs_exact": _q_embedding_pairs_exact,
         "histogram_totalprice": _q_histogram_totalprice,
+        # appended past the window: the local oracle gate checks it at
+        # three SFs
+        "minhash_near_dups_recall": _q_minhash_near_dups_recall,
     }
 
 
@@ -2916,6 +2917,21 @@ def oracle_sql() -> dict[str, str]:
             "SELECT count(*)::BIGINT AS n_exact, count(*)::BIGINT AS n_found, "
             "0::BIGINT AS n_missed FROM e a JOIN e b ON a.vec_id < b.vec_id "
             "WHERE list_cosine_similarity(a.v, b.v) >= 0.9"
+        ),
+        "minhash_near_dups_recall": (
+            # recall of the arrow minhash lane vs the exact 3-shingle
+            # Jaccard >= 0.8 pair set (n_missed = 0)
+            "WITH toks AS (SELECT doc_id, string_split(trim(regexp_replace("
+            "lower(text), '\\s+', ' ', 'g')), ' ') AS t FROM documents), "
+            "sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN "
+            "list_distinct(list_transform(generate_series(1, len(t) - 2), "
+            "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) "
+            "ELSE [array_to_string(t, ' ')] END AS g FROM toks), "
+            "ex AS (SELECT a.doc_id FROM sh a JOIN sh b ON a.doc_id < b.doc_id "
+            "WHERE len(list_intersect(a.g, b.g))::DOUBLE / (len(a.g) + len(b.g) "
+            "- len(list_intersect(a.g, b.g))) >= 0.8) "
+            "SELECT count(*)::BIGINT AS n_exact, count(*)::BIGINT AS n_found, "
+            "0::BIGINT AS n_missed FROM ex"
         ),
     }
 

@@ -109,27 +109,10 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    # The bench measures the PRODUCTION hash kernels (codegen'd xxhash64).
-    # The md5 kernels exist solely so the DuckDB oracle can reproduce the
-    # LSH pair sets bit-for-bit; they stay the default for the correctness
-    # gate (same queries() entries, no env override there).
-    # arrow = the vectorized numpy signature kernel. It needs live Python
-    # workers, so the untimed warm-up below spins them up explicitly (same
-    # disclosed treatment as the JVM/codegen warm-up); with warm workers it
-    # beats the pure-JVM expr kernel ~3x cold (1.7s vs 5.7s at sf0.1 —
-    # expr's cost is Catalyst optimizing the K-way unrolled expressions,
-    # paid again on every fresh plan).
-    os.environ.setdefault("DCSPARK_MINHASH_KERNEL", "arrow")
-    # simhash: numpy kernel ~4x the 64-way-unrolled JVM expr kernel
-    os.environ.setdefault("DCSPARK_SIMHASH_FAMILY", "arrow")
-    # winnow: the numpy rolling-hash kernel is ~5x the JVM expr
-    # kernel at sf0.1 (7.7s -> 1.5s cold with warm workers)
-    os.environ.setdefault("DCSPARK_WINNOW_FAMILY", "arrow")
-    # contamination: production joins on xxhash64(gram) longs, not strings
-    os.environ.setdefault("DCSPARK_CONTAM_HASH_GRAMS", "1")
-    # numpy matmul bucket assignment: collapses the ~3k-node Catalyst
-    # bucket tree whose per-round re-analysis dominates semantic_dedup
-    os.environ.setdefault("DCSPARK_EMB_LSH_KERNEL", "arrow")
+    # Each query names its lane as a literal in __spark_entry__.py: the LSH
+    # and contamination leaves time the oracle-checked reference lanes
+    # (md5 / raw grams), the embedding, DSIR and classifier leaves the
+    # arrow kernels. No environment variable selects a lane.
 
     import __spark_entry__ as entry_mod
     from datacontract_cli_spark.session import get_spark

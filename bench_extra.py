@@ -7,9 +7,8 @@ NOT the driver's bench — bench.py stays frozen. Usage:
     python bench_extra.py QUERY [QUERY ...] [--sf DIR] [--repeat N]
         [--explain-dir DIR] [--count]
 
-Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py. Applies the
-same production kernel env defaults as bench.py so numbers are
-comparable with the driver's measurement.
+Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py. Each query
+runs the lane its __spark_entry__.py definition names, as in bench.py.
 """
 
 from __future__ import annotations
@@ -35,12 +34,6 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # same production kernels as bench.py (disclosed there)
-    os.environ.setdefault("DCSPARK_MINHASH_KERNEL", "arrow")
-    os.environ.setdefault("DCSPARK_SIMHASH_FAMILY", "arrow")
-    os.environ.setdefault("DCSPARK_WINNOW_FAMILY", "arrow")
-    os.environ.setdefault("DCSPARK_CONTAM_HASH_GRAMS", "1")
-    os.environ.setdefault("DCSPARK_EMB_LSH_KERNEL", "arrow")
 
     import __spark_entry__ as entry_mod
     from datacontract_cli_spark.session import get_spark

@@ -88,7 +88,12 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
     ``decimal`` over the shortest repr (Python and Java agree on shortest
     round-trip decimal representations). The memo makes the cost scale
     with DISTINCT words per task, not token count — the md5 work drops by
-    the corpus' token repetition factor."""
+    the corpus' token repetition factor. ``kernel="expr"`` (default) is
+    the Column lane :func:`quality_gate` runs; any other value raises
+    ``ValueError``."""
+    if kernel not in ("expr", "arrow"):
+        raise ValueError(f"unknown classifier kernel {kernel!r}; "
+                         "expected 'expr' or 'arrow'")
     if kernel == "arrow":
         return _quality_scores_arrow(docs, id_col, text_col, n_buckets,
                                      seed, bias, weights, round_to)
@@ -121,8 +126,13 @@ def _quality_scores_arrow(docs: DataFrame, id_col: str, text_col: str,
             % n_buckets
         if wtab is not None:
             return wtab[b]
-        return ((b * 2654435761 + 12345 + seed) % (1 << 20)) \
-            / float(1 << 20) - 0.5
+        v = b * 2654435761 + 12345 + seed
+        # Spark's % takes the sign of the dividend (truncated division),
+        # Python's the divisor's: they differ when v < 0 (a negative seed)
+        r = v % (1 << 20)
+        if v < 0 and r:
+            r -= 1 << 20
+        return r / float(1 << 20) - 0.5
 
     # Java \s is ASCII-only [ \t\n\x0B\f\r]; Python's re.ASCII \s is the
     # identical set, so the token streams match byte-for-byte

@@ -15,10 +15,10 @@ composes from DataFrame ops:
                   in memory (the common case: eval sets are MBs, corpora
                   are TBs).
 
-At 100 TB the gram strings themselves should be compressed to 8-byte
-xxhash64 keys before the join (the gate query keeps raw strings so the
-DuckDB oracle reproduces the exact same join keys — hash families differ
-across engines; same policy as the LSH kernels)."""
+Join keys: ``hash_grams=True`` (the default) compresses each gram window
+to an 8-byte xxhash64 key; ``hash_grams=False`` keeps the raw gram
+strings, the reference lane a DuckDB oracle reproduces exactly (hash
+families differ across engines)."""
 
 from __future__ import annotations
 
@@ -80,11 +80,11 @@ def _gram_keys(df: DataFrame, id_col: Optional[str], text_col: str,
 
 def contaminated_docs(corpus: DataFrame, benchmark: DataFrame,
                       id_col: str = "doc_id", text_col: str = "text",
-                      n: int = 5, hash_grams: bool = False) -> DataFrame:
+                      n: int = 5, hash_grams: bool = True) -> DataFrame:
     """Distinct corpus ids sharing at least one word n-gram with the
-    benchmark. ``hash_grams=True`` compresses join keys to direct window
-    xxhash64 — the production setting; leave False only when an external
-    oracle must reproduce the keys."""
+    benchmark. ``hash_grams=True`` (default) compresses join keys to
+    direct window xxhash64; pass False only when an external oracle must
+    reproduce the keys."""
     def _grams(df: DataFrame, keep_id: bool) -> DataFrame:
         return _gram_keys(df, id_col if keep_id else None, text_col, n,
                           hash_grams)
@@ -97,7 +97,7 @@ def contaminated_docs(corpus: DataFrame, benchmark: DataFrame,
 
 def contamination_stats(corpus: DataFrame, benchmark: DataFrame,
                         id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 5, hash_grams: bool = False) -> DataFrame:
+                        n: int = 5, hash_grams: bool = True) -> DataFrame:
     """(contaminated_docs, total_docs, contamination_rate) one-row frame."""
     flagged = contaminated_docs(corpus, benchmark, id_col, text_col, n,
                                 hash_grams)
@@ -110,8 +110,7 @@ def contamination_stats(corpus: DataFrame, benchmark: DataFrame,
 
 
 def top_ngrams(corpus: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", n: int = 5, k: int = 20,
-               hash_grams: bool = False) -> DataFrame:
+               text_col: str = "text", n: int = 5, k: int = 20) -> DataFrame:
     """The k most frequent word n-grams across the corpus:
     (gram, n_occurrences, n_docs), ordered by (n_occurrences DESC,
     gram ASC) — the deduplication-analysis view (which boilerplate
@@ -122,7 +121,7 @@ def top_ngrams(corpus: DataFrame, id_col: str = "doc_id",
     per-gram two-phase aggregate with a partial-distinct doc count →
     ``orderBy().limit(k)`` plans TakeOrderedAndProject — per-partition
     top-k heaps, so a trillion-gram crawl never funnels one partition.
-    ``hash_grams`` is pointless here (the gram TEXT is the answer)."""
+    Grams stay strings here: the gram TEXT is the answer."""
     grams = corpus.select(F.col(id_col).alias("id"),
                           F.explode(word_ngrams(F.col(text_col), n))
                           .alias("gram"))
@@ -134,7 +133,7 @@ def top_ngrams(corpus: DataFrame, id_col: str = "doc_id",
 
 def contamination_fraction(corpus: DataFrame, benchmark: DataFrame,
                            id_col: str = "doc_id", text_col: str = "text",
-                           n: int = 5, hash_grams: bool = False) -> DataFrame:
+                           n: int = 5, hash_grams: bool = True) -> DataFrame:
     """Per-document overlap FRACTION with the benchmark: (id_col, n_grams,
     n_contaminated, overlap_fraction) — one row per corpus doc that has at
     least one n-gram, fraction over the doc's DISTINCT grams.

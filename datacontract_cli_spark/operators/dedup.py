@@ -1,9 +1,8 @@
 """Deduplication operators for large-scale text corpora.
 
-All hot-path expressions are JVM-side Column trees (higher-order array
-functions over tokenized text) — no Python executes per row. The pipeline
-shapes follow the standard near-dup literature (MinHash/LSH: Broder 1997;
-SimHash: Charikar 2002) re-expressed as DataFrame ops:
+The pipeline shapes follow the standard near-dup literature (MinHash/LSH:
+Broder 1997; SimHash: Charikar 2002; winnowing: Schleimer et al. 2003)
+re-expressed as DataFrame ops:
 
 - exact:    hash-groupBy on a normalization fingerprint (two-phase agg)
 - minhash:  shingle → K minhashes (per-row array math, no shuffle) →
@@ -13,19 +12,29 @@ SimHash: Charikar 2002) re-expressed as DataFrame ops:
 - simhash:  token-hash bit aggregation per row → 4×16-bit words →
             candidates share a word (pigeonhole: hamming ≤ 3 over 64 bits
             guarantees one equal word) → exact hamming on candidates
+- winnow:   k-gram hashes → per-window minima → inverted-index pair join
 - n-gram Jaccard: exact verification on candidate pairs (explode + join
             co-partitioned on doc id)
 - embedding cosine near-dup: see operators/similarity.py
+
+Lanes. Each LSH operator has exactly two signature lanes, chosen by its
+``kernel=`` / ``hash_family=`` argument; any other value raises
+``ValueError``:
+
+- ``"arrow"`` (the default) — a vectorized numpy kernel over Arrow
+  batches (``mapInPandas``): a small fixed plan, no per-row Python.
+- ``"md5"`` (the reference) — pure Column expressions on the md5 hash
+  family, which DuckDB reproduces bit-for-bit; the oracle queries in
+  ``__spark_entry__.py`` run this lane.
 
 Scale notes: every self-join here is bucket-local (the shuffle key is the
 LSH bucket, not the document), so the quadratic blow-up is bounded by
 bucket size; AQE splits skewed buckets. At 100 TB the band/bucket shuffle
 is the only full-data movement and it carries only (id, band, hash64).
 """
-
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -91,25 +100,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
 _MAX_LONG = (1 << 63) - 1
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """K independent minhashes: min over shingles of xxhash64(shingle, seed_k).
-
-    Implemented as ONE fold over the shingle array: the shingle expression is
-    evaluated exactly once per row (not once per seed — ``transform(seq(K),
-    k -> min(transform(shingles, ...)))`` would rebuild the shingle strings K
-    times), and each shingle updates all K running minima element-wise."""
-    return F.aggregate(
-        shingle_col,
-        F.array_repeat(F.lit(_MAX_LONG), num_hashes),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                        lambda k: F.xxhash64(s, k)),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-
 # --- shared-hash (md5) family: cross-engine reproducible -------------------
 #
 # xxhash64 exists only in Spark, so LSH outputs built on it cannot be
@@ -144,9 +134,9 @@ def md5_hash_long(col: Column, hex_chars: int = 8) -> Column:
 def minhash_signature_md5(shingle_col: Column, num_hashes: int = 64) -> Column:
     """K minhashes from one md5 per shingle + K affine permutations.
 
-    Same fold structure as :func:`minhash_signature` (single pass over the
-    shingle array, element-wise running minima), but on the shared-hash
-    family: oracle-reproducible in any engine with md5."""
+    ONE fold over the shingle array (each shingle hashes once and updates
+    all K running minima element-wise) on the shared-hash family:
+    oracle-reproducible in any engine with md5."""
     a_const, b_const = minhash_md5_constants(num_hashes)
     # literal ARRAYS indexed by k, not a K-way Python unroll: the unrolled
     # tree (K copies of the affine subtree per fold step) costs Catalyst ~10s
@@ -188,10 +178,10 @@ def minhash_signatures_arrow(
     change a minimum, so min-over-multiset == min-over-set and the signature
     is identical.
 
-    Rationale vs the pure-expression kernel: the nested higher-order-function
-    tree costs Catalyst seconds of one-time optimization and runs
-    interpreted (HOFs don't codegen); this kernel is a small fixed plan and
-    vectorizes everything. Same LSH semantics, different hash family."""
+    Versus the md5 Column lane: a small fixed plan with every inner loop
+    vectorized (the Column fold runs interpreted, as higher-order
+    functions do not codegen). Same LSH semantics, different hash
+    family."""
     import numpy as np
     import pandas as pd
 
@@ -266,34 +256,29 @@ def minhash_candidates(
     shingle_size: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    kernel: str = "expr",
+    kernel: str = "arrow",
     threshold: Optional[float] = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash LSH,
     with the signature-agreement Jaccard estimate attached.
 
-    kernel="expr" (default): pure Column-expression kernel — zero Python on
-    the executors, text never leaves the JVM; kernel="arrow": vectorized
-    numpy signature kernel via mapInPandas (smaller plan, Arrow transfer
-    cost); kernel="md5": pure Column kernel on the shared md5 hash family —
-    output reproducible bit-for-bit by an external SQL oracle (band keys are
-    then the raw signature-slice strings, not a hash of them, so no engine-
-    specific hash touches the result)."""
+    kernel="arrow" (default): vectorized numpy signature kernel via
+    mapInPandas; kernel="md5": pure Column kernel on the shared md5 hash
+    family — output reproducible bit-for-bit by an external SQL oracle
+    (band keys are then the raw signature-slice strings, not a hash of
+    them, so no engine-specific hash touches the result)."""
+    if kernel not in ("arrow", "md5"):
+        raise ValueError(f"unknown minhash kernel {kernel!r}; "
+                         "expected 'arrow' or 'md5'")
     rows_per_band = num_hashes // bands
     df = _ensure_parallelism(df)
     if kernel == "arrow":
         sig = minhash_signatures_arrow(df, id_col, text_col, shingle_size, num_hashes)
-    elif kernel == "md5":
+    else:
         sig = (
             df.select(F.col(id_col).alias("id"),
                       minhash_signature_md5(word_shingles(F.col(text_col), shingle_size),
                                             num_hashes).alias("sig"))
-        )
-    else:
-        sig = (
-            df.select(F.col(id_col).alias("id"),
-                      minhash_signature(word_shingles(F.col(text_col), shingle_size),
-                                        num_hashes).alias("sig"))
         )
     # Materialize signatures BEFORE banding: Catalyst's projection collapse
     # would otherwise inline the (shingles × K hashes) expression into every
@@ -319,7 +304,7 @@ def minhash_candidates(
         sig.select("id", "sig",
                    F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"))
         .withColumn(
-            # production kernels compress the shuffle key to 8 bytes with
+            # the arrow kernel compresses the shuffle key to 8 bytes with
             # xxhash64; the md5 kernel keeps the raw slice string so the
             # candidate set is a pure function of the shared hash family
             "bucket",
@@ -439,54 +424,16 @@ def ngram_jaccard(
 # simhash
 # ---------------------------------------------------------------------------
 
-def simhash_words(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash as 4×16-bit words (w0..w3) + the bit array.
-
-    Each token hashes once; its 64 bits vote ±1 per position; the sign of
-    each position's sum is the fingerprint bit. All in one per-row
-    ``aggregate`` over the token array — zero shuffle."""
-    toks = tokens(F.col(text_col))
-    # per-token ±1 votes for each of the 64 bit positions, unrolled at plan
-    # time (shiftright takes a literal bit count)
-    bit_votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (
-                        F.shiftright(F.xxhash64(t), b).bitwiseAND(F.lit(1)) * 2 - 1
-                    ).cast("long")
-                    for b in range(64)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    bits = F.transform(bit_votes, lambda v: (v > 0).cast("int"))
-    out = df.select(F.col(id_col).alias("id"), bits.alias("bits"))
-    word = lambda w: F.aggregate(  # noqa: E731
-        F.slice(F.col("bits"), w * 16 + 1, 16),
-        F.lit(0).cast("long"),
-        lambda acc, b: acc * 2 + b,
-    )
-    return out.select(
-        "id", "bits",
-        word(0).alias("w0"), word(1).alias("w1"), word(2).alias("w2"), word(3).alias("w3"),
-    )
-
-
 def _simhash_words_arrow(df: DataFrame, id_col: str,
                          text_col: str = "text",
                          with_bits: bool = True) -> DataFrame:
-    """Arrow-batched 64-bit SimHash (same output shape as
-    :func:`simhash_words`, different hash family — pandas siphash instead
-    of xxhash64). Fully vectorized across the batch: one flat token hash
-    array, a 64-column bit matrix via shifts, per-document vote sums via
-    ``np.add.reduceat`` — no per-token Python, no 64-way Catalyst unroll
-    (the expr kernel's vote tree runs interpreted and re-pays seconds of
-    optimizer time per fresh plan)."""
+    """Arrow-batched 64-bit SimHash as 4×16-bit words (w0..w3), plus the
+    bit array when ``with_bits``. Each token hashes once (pandas siphash);
+    its 64 bits vote ±1 per position; the sign of each position's sum is
+    the fingerprint bit. Fully vectorized across the batch: one flat token
+    hash array, a 64-column bit matrix via shifts, per-document vote sums
+    via ``np.add.reduceat`` — no per-token Python, no per-bit Catalyst
+    tree."""
     import numpy as np
     import pandas as pd
 
@@ -561,13 +508,15 @@ def _simhash_words_arrow(df: DataFrame, id_col: str,
 
 
 def simhash_words_md5(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """60-bit SimHash on the shared md5 hash family (4×15-bit words).
+    """60-bit SimHash on the shared md5 hash family (4×15-bit words) + the
+    bit array.
 
-    Same vote-aggregate structure as :func:`simhash_words`, but each token
-    hashes via md5 (60 bits from 15 hex chars) so the fingerprint — and
-    therefore the full near-dup pair set — is reproducible bit-for-bit by an
-    external SQL oracle (pigeonhole over 4 words stays exhaustive for
-    hamming ≤ 3 regardless of word width)."""
+    Same vote structure as :func:`_simhash_words_arrow`, as one per-row
+    ``aggregate`` over the token array, but each token hashes via md5 (60
+    bits from 15 hex chars) so the fingerprint — and therefore the full
+    near-dup pair set — is reproducible bit-for-bit by an external SQL
+    oracle (pigeonhole over 4 words stays exhaustive for hamming ≤ 3
+    regardless of word width)."""
     nbits = 60
     # hash each token ONCE (the fold's lambda var binds the hashed value),
     # and test bits with a literal power-of-two array instead of a 60-way
@@ -601,15 +550,16 @@ def simhash_words_md5(df: DataFrame, id_col: str, text_col: str = "text") -> Dat
 
 def simhash_near_duplicates(
     df: DataFrame, id_col: str, text_col: str = "text", max_hamming: int = 3,
-    hash_family: str = "xxhash64",
+    hash_family: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming (≤3 ⇒ pigeonhole
     over 4 words is exhaustive). Candidates block on each word; the
-    exact hamming distance filters them. hash_family="md5" uses the
-    oracle-reproducible 60-bit fingerprint; "arrow" the vectorized numpy
-    kernel (fastest with warm Python workers); "xxhash64" the JVM expr."""
-    words_fn = {"md5": simhash_words_md5,
-                "arrow": _simhash_words_arrow}.get(hash_family, simhash_words)
+    exact hamming distance filters them. hash_family="arrow" (default) is
+    the vectorized numpy kernel; "md5" the oracle-reproducible 60-bit
+    Column fingerprint."""
+    if hash_family not in ("arrow", "md5"):
+        raise ValueError(f"unknown simhash hash_family {hash_family!r}; "
+                         "expected 'arrow' or 'md5'")
     # persist the fingerprints: the 4 word-blocks self-join this frame (8
     # scans) and projection collapse would otherwise inline the whole
     # vote-aggregate tree into every branch — recomputing the per-token
@@ -641,7 +591,7 @@ def simhash_near_duplicates(
         words = _simhash_words_arrow(_ensure_parallelism(df), id_col,
                                      text_col, with_bits=False)
     else:
-        words = words_fn(_ensure_parallelism(df), id_col, text_col)
+        words = simhash_words_md5(_ensure_parallelism(df), id_col, text_col)
     s = words.select(
         "id", "w0", "w1", "w2", "w3", fp.alias("fp")).persist()
     # ONE banded self-join instead of four block joins (the minhash
@@ -680,16 +630,16 @@ def simhash_near_duplicates(
 # winnowing fingerprints (Schleimer, Wilkerson, Aiken — MOSS, SIGMOD 2003)
 # ---------------------------------------------------------------------------
 
-def winnow_fingerprints(col: Column, k: int = 8, window: int = 4,
-                        hash_family: str = "md5") -> Column:
+def winnow_fingerprints(col: Column, k: int = 8, window: int = 4) -> Column:
     """Document fingerprint set by winnowing: hash every character k-gram of
     the normalized text, slide a window of ``window`` hashes, keep each
     window's minimum, dedupe. Guarantees any shared substring of length
     >= k + window - 1 contributes a shared fingerprint.
 
-    Pure Column expression on the shared md5 hash family — one pass, no
-    shuffle, reproducible by an external SQL oracle. Short docs (< k chars)
-    fingerprint as the single hash of the whole normalized text."""
+    Pure Column expression on the shared md5 hash family (the reference
+    lane) — one pass, no shuffle, reproducible by an external SQL oracle.
+    Short docs (< k chars) fingerprint as the single hash of the whole
+    normalized text."""
     # Every intermediate (normalized string, gram-hash array) is bound ONCE
     # through a fold lambda variable. Referencing such an expression directly
     # inside a per-element lambda re-evaluates it per element (the
@@ -703,19 +653,12 @@ def winnow_fingerprints(col: Column, k: int = 8, window: int = 4,
             )
         )
 
-    def gram_hash(g: Column) -> Column:
-        # md5: the DuckDB-shared family (oracle-reproducible, interpreted —
-        # no codegen). xxhash64: the production family — codegen'd JVM hash,
-        # ~5x faster; same winnowing guarantees, not externally reproducible.
-        if hash_family == "xxhash64":
-            return F.xxhash64(g)
-        return md5_hash_long(g, 8) % F.lit(MINHASH_MD5_P)
-
     def grams_of(t: Column) -> Column:
         n_grams = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
         return F.transform(
             F.sequence(F.lit(1), n_grams),
-            lambda i: gram_hash(F.substring(t, i, k)),
+            lambda i: md5_hash_long(F.substring(t, i, k), 8)
+            % F.lit(MINHASH_MD5_P),
         )
 
     return F.aggregate(
@@ -739,9 +682,9 @@ def _winnow_fingerprints_arrow(df: DataFrame, id_col: str, text_col: str,
     call per substring) → sliding-window minimum (stride view) → unique.
     The Column kernel's nested HOF tree runs interpreted and re-pays
     Catalyst optimization per fresh plan; this is a small fixed plan with
-    all inner loops in C. Byte-level grams differ from the expr kernel's
-    character grams only for non-ASCII text — both are valid winnowing
-    families, neither reproduces the md5 oracle family."""
+    all inner loops in C. Byte-level grams differ from the md5 lane's
+    character grams only for non-ASCII text; a shared substring of c
+    characters spans at least c bytes, so the guarantee carries over."""
     import numpy as np
     import pandas as pd
 
@@ -795,7 +738,7 @@ def winnow_shared_pairs(
     window: int = 4,
     min_shared: int = 2,
     max_doc_freq: Optional[int] = None,
-    hash_family: str = "md5",
+    hash_family: str = "arrow",
 ) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared winnowing fingerprints.
 
@@ -808,16 +751,19 @@ def winnow_shared_pairs(
     but dominate the pair volume; at corpus scale this filter is what keeps
     the join linear.
 
-    ``hash_family``: "md5" (oracle-reproducible), "xxhash64" (codegen'd JVM
-    expr), or "arrow" (vectorized numpy rolling-hash kernel — the fastest
-    production lane when Python workers are warm)."""
+    ``hash_family``: "arrow" (default; vectorized numpy rolling-hash
+    kernel) or "md5" (the oracle-reproducible Column lane,
+    :func:`winnow_fingerprints`)."""
+    if hash_family not in ("arrow", "md5"):
+        raise ValueError(f"unknown winnow hash_family {hash_family!r}; "
+                         "expected 'arrow' or 'md5'")
     if hash_family == "arrow":
         fp = _winnow_fingerprints_arrow(_ensure_parallelism(df), id_col,
                                         text_col, k, window)
     else:
         fp = _ensure_parallelism(df).select(
             F.col(id_col).alias("id"),
-            winnow_fingerprints(F.col(text_col), k, window, hash_family).alias("fp"),
+            winnow_fingerprints(F.col(text_col), k, window).alias("fp"),
         )
     inv = fp.select("id", F.explode("fp").alias("f"))
     if max_doc_freq is not None:
@@ -842,6 +788,11 @@ def winnow_shared_pairs(
 # ---------------------------------------------------------------------------
 # connected components (dedup clusters)
 # ---------------------------------------------------------------------------
+
+# edge count up to which connected_components resolves the graph in one
+# task (union-find) instead of distributed label propagation
+_CC_LOCAL_EDGES = 5_000_000
+
 
 def connected_components(
     pairs: DataFrame,
@@ -883,12 +834,10 @@ def connected_components(
     # Output is identical by construction (cluster_id = min id of the
     # component). LSH-blocked pair sets are doc-frequency-capped, so even
     # petabyte corpora often land here; graphs above the bound take the
-    # distributed label-propagation path below, unchanged. The bound is
-    # env-tunable: 5M edges ~ 100-200 MB + a dict-based union-find in one
-    # executor core, far below task memory.
-    import os as _os
-    small_bound = int(_os.environ.get("DCSPARK_CC_LOCAL_EDGES", "5000000"))
-    if edges.count() <= small_bound:
+    # distributed label-propagation path below, unchanged. The bound,
+    # _CC_LOCAL_EDGES: 5M edges ~ 100-200 MB + a dict-based union-find in
+    # one executor core, far below task memory.
+    if edges.count() <= _CC_LOCAL_EDGES:
         id_type = edges.schema["a"].dataType.simpleString()
 
         def _union_find(batches):

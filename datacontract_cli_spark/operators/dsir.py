@@ -25,9 +25,10 @@ Spark-first shape (no all-pairs, no driver loops):
   orderBy(weight desc).limit(k)                  — TakeOrderedAndProject
 
 The hash family is the md5 bucket (`('0x'||substr(md5(w),1,6)) % B`) so
-a DuckDB oracle reproduces bucket ids bit-for-bit — same gate-vs-
-production split as the LSH kernels: production should pass
-``hash_family="xxhash64"`` (8-byte JVM hash, no hex detour).
+a DuckDB oracle reproduces bucket ids bit-for-bit. Two lanes compute the
+per-(doc, bucket) counts: ``kernel="arrow"`` (the default) counts each
+document narrowly in an Arrow kernel; ``kernel="expr"`` is the
+explode+groupBy Column reference, bit-identical by construction.
 
 At 100 TB: both model fits and the scoring pass are single-scan; the
 only wide shuffle keyed by doc_id carries one double per row. The
@@ -46,13 +47,9 @@ def _words(col: Column) -> Column:
     return F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
 
 
-def _bucket(col: Column, n_buckets: int, hash_family: str) -> Column:
-    if hash_family == "md5":
-        return (F.conv(F.substring(F.md5(col), 1, 6), 16, 10)
-                .cast("long") % n_buckets)
-    if hash_family == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(n_buckets))
-    raise ValueError(f"unknown hash_family {hash_family!r}")
+def _bucket(col: Column, n_buckets: int) -> Column:
+    return (F.conv(F.substring(F.md5(col), 1, 6), 16, 10)
+            .cast("long") % n_buckets)
 
 
 def _dsir_feats_arrow(docs: DataFrame, target_cond: Column, id_col: str,
@@ -122,18 +119,21 @@ def dsir_importance(docs: DataFrame, target_cond: Column,
                     id_col: str = "doc_id", text_col: str = "text",
                     n_buckets: int = 4096, smoothing: float = 0.5,
                     top_k: int = 20,
-                    hash_family: str = "md5",
-                    kernel: str = "expr") -> DataFrame:
+                    kernel: str = "arrow") -> DataFrame:
     """Top-k most target-like documents by DSIR log importance weight.
 
     ``target_cond`` marks the rows that define the target distribution
     (they are still scored — the weight says how target-like a document
     is, not which set it came from). Returns (id, n_words, log_weight)
-    ordered by log_weight desc, id asc. ``kernel="arrow"`` (md5 family
-    only) computes the feature table narrowly in an Arrow kernel — same
-    integer counts, no token explode, no wide (id, bucket) shuffle.
+    ordered by log_weight desc, id asc. ``kernel="arrow"`` (default)
+    computes the feature table narrowly in an Arrow kernel — no token
+    explode, no wide (id, bucket) shuffle; ``kernel="expr"`` is the
+    explode+groupBy reference with the same integer counts.
     """
-    if kernel == "arrow" and hash_family == "md5":
+    if kernel not in ("arrow", "expr"):
+        raise ValueError(f"unknown dsir kernel {kernel!r}; "
+                         "expected 'arrow' or 'expr'")
+    if kernel == "arrow":
         feats = _dsir_feats_arrow(docs, target_cond, id_col, text_col,
                                   n_buckets)
     else:
@@ -146,7 +146,7 @@ def dsir_importance(docs: DataFrame, target_cond: Column,
         # both the model fit and the scoring pass consume this frame
         feats = (toks.select(
                      "id", "is_target",
-                     _bucket(F.col("w"), n_buckets, hash_family).alias("b"))
+                     _bucket(F.col("w"), n_buckets).alias("b"))
                  .groupBy("id", "is_target", "b")
                  .agg(F.count(F.lit(1)).alias("cnt")))
     # scoped persist: the model fit AND the scoring pass both consume

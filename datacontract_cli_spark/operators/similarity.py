@@ -8,8 +8,13 @@
   path. Vectors hash to a ``nbits``-bit bucket; a query probes its own
   bucket (+ optional 1-bit-flip neighbors) and only those candidates get
   exact scoring. Hyperplanes are a seeded numpy matrix embedded as a
-  literal column, so bucketing is still pure Column math.
+  literal column, so single-query bucketing is pure Column math.
 - ``embedding_near_duplicates``: all pairs with cosine ≥ τ, LSH-blocked.
+  One lane: bucket assignment and pair scoring run as Arrow-batched numpy
+  kernels over the same seeded planes (a per-plane Column tree is ~3k
+  Catalyst nodes, and iterative consumers re-analyze it every round).
+  Recall is checked against brute force by the tests and the
+  ``embedding_near_dups`` oracle query.
 """
 
 from __future__ import annotations
@@ -397,7 +402,6 @@ def embedding_near_duplicates(
     dim: Optional[int] = None,
     num_tables: int = 4,
     broadcast_candidates: bool = True,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Pairs (id_a < id_b) with cosine ≥ threshold. LSH-blocked: only pairs
     landing in the same sign-bucket of ANY of ``num_tables`` independent
@@ -408,6 +412,13 @@ def embedding_near_duplicates(
     with L independent tables the miss probability decays as
     (1 - p^nbits)^L — ~5e-6 at cos 0.999, nbits=12, L=4.
 
+    Both vector passes run in Arrow-batched numpy kernels: bucket
+    assignment is one matmul per batch against the (L·nbits, dim) plane
+    matrix, and candidate scoring one einsum per batch. ``dim`` defaults
+    to the length of the first non-empty vector, read once on the driver,
+    so every task builds the same planes; null and other-length vectors
+    get no bucket and are never paired.
+
     Scale shape: the exploded frame carries ONLY (id, table, bucket) —
     never the vector payload — so the banded self-join shuffles 3 scalar
     columns × L rows per vector. Candidate pairs are deduped while still
@@ -416,100 +427,59 @@ def embedding_near_duplicates(
     joins — the 100 TB base table is scanned, never shuffled. Set it False
     when the candidate set itself is too large to broadcast; AQE then picks
     the join strategy."""
-    if dim is None and kernel != "arrow":
-        # the expr path builds per-plane Column trees, so it needs the
-        # dimension at plan time; the arrow kernel derives it from the
-        # first batch instead (the plane matrix is a deterministic
-        # function of (dim, seed)), saving one driver job per call
-        dim = len(df.select(vec_col).first()[0])
+    import pandas as pd
+    from pyspark.sql import types as T
+
     vec = F.col(vec_col).cast("array<double>")
-    if kernel == "arrow":
-        # one numpy matmul per Arrow batch instead of num_tables×nbits×dim
-        # Catalyst expression nodes — same sign convention (dot > 0), so
-        # identical/scale-invariant vectors co-bucket exactly as in the
-        # expr path; a near-zero dot may round to a different sign than
-        # the expr path's ordered sum, which only perturbs LSH blocking
-        # (recall is probabilistic either way). The big win is PLAN size:
-        # downstream iterative consumers re-analyze the producer plan,
-        # and a ~3k-node bucket tree turns analysis into the bottleneck.
-        import pandas as pd
-        from pyspark.sql import types as T
+    if dim is None:
+        first = df.select(vec_col).where(F.size(vec_col) > 0).first()
+        dim = len(first[0]) if first is not None else 0
+    planes = np.stack([
+        RandomHyperplaneLSH(dim, nbits=nbits, seed=seed + t).planes
+        for t in range(num_tables)
+    ]).reshape(num_tables * nbits, dim)
+    weights = (np.uint64(1) << np.arange(nbits, dtype=np.uint64)) \
+        .astype(np.int64)
+    id_type = df.schema[id_col].dataType
+    out_schema = T.StructType([
+        T.StructField("id", id_type),
+        T.StructField("table", T.IntegerType()),
+        T.StructField("__bucket__", T.LongType()),
+    ])
 
-        weights = (np.uint64(1) << np.arange(nbits, dtype=np.uint64)) \
-            .astype(np.int64)
+    def _assign(batches):
+        for pdf in batches:
+            # null / other-length vectors get NO bucket row, so they never
+            # join (a ragged batch would otherwise break the matmul)
+            ok = pdf[vec_col].map(
+                lambda v: v is not None and 0 < len(v) == dim)
+            pdf = pdf[ok]
+            n = len(pdf)
+            if n == 0:
+                continue
+            X = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            bits = (X @ planes.T) > 0
+            bucket = (
+                bits.reshape(n, num_tables, nbits) * weights
+            ).sum(axis=2).astype(np.int64)
+            yield pd.DataFrame({
+                "id": np.repeat(pdf[id_col].to_numpy(), num_tables),
+                "table": np.tile(
+                    np.arange(num_tables, dtype=np.int32), n),
+                "__bucket__": bucket.reshape(-1),
+            })
 
-        def _planes_for(d: int):
-            # deterministic in (d, seed): every task derives the identical
-            # matrix, so building it lazily from the first valid vector
-            # (dim=None) is equivalent to the driver-side sniff job
-            return np.stack([
-                RandomHyperplaneLSH(d, nbits=nbits, seed=seed + t).planes
-                for t in range(num_tables)
-            ]).reshape(num_tables * nbits, d)
-
-        planes = _planes_for(dim) if dim is not None else None
-        id_type = df.schema[id_col].dataType
-        out_schema = T.StructType([
-            T.StructField("id", id_type),
-            T.StructField("table", T.IntegerType()),
-            T.StructField("__bucket__", T.LongType()),
-        ])
-
-        def _assign(batches):
-            p = planes
-            d = dim
-            for pdf in batches:
-                if d is None:
-                    first = next((v for v in pdf[vec_col]
-                                  if v is not None and len(v) > 0), None)
-                    if first is None:
-                        continue
-                    d = len(first)
-                if p is None:
-                    p = _planes_for(d)
-                # null / wrong-length vectors get NO bucket row — the expr
-                # path maps them to a null bucket that never equi-joins,
-                # so dropping them here is behavior-identical (and a
-                # ragged batch would otherwise break the matmul)
-                ok = pdf[vec_col].map(
-                    lambda v: v is not None and len(v) == d)
-                pdf = pdf[ok]
-                n = len(pdf)
-                if n == 0:
-                    continue
-                X = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                bits = (X @ p.T) > 0
-                bucket = (
-                    bits.reshape(n, num_tables, nbits) * weights
-                ).sum(axis=2).astype(np.int64)
-                yield pd.DataFrame({
-                    "id": np.repeat(pdf[id_col].to_numpy(), num_tables),
-                    "table": np.tile(
-                        np.arange(num_tables, dtype=np.int32), n),
-                    "__bucket__": bucket.reshape(-1),
-                })
-
-        assigned = df.select(F.col(id_col), vec.alias(vec_col)) \
-            .mapInPandas(_assign, out_schema)
-    else:
-        buckets = F.array(*[
-            RandomHyperplaneLSH(dim, nbits=nbits, seed=seed + t).bucket_expr(vec)
-            for t in range(num_tables)
-        ])
-        assigned = df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(buckets).alias("table", "__bucket__")
-        )
     # scoped persist (same discipline as the simhash/minhash signature
     # tables): the self-join scans `assigned` twice, and without the cache
-    # each side re-runs the bucket assignment — for the arrow kernel that
-    # is a second full corpus pass through the Python workers. Rows are
-    # (id, int, long) × L per vector, payload-free. No eager count: the
-    # join's first shuffle-map stage materializes the cache, and the
-    # second side reads it (stages execute sequentially within the job) —
-    # an extra driver job + full pass saved per call.
-    assigned = assigned.persist()
+    # each side re-runs the bucket assignment — a second full corpus pass
+    # through the Python workers. Rows are (id, int, long) × L per vector,
+    # payload-free. No eager count: the join's first shuffle-map stage
+    # materializes the cache, and the second side reads it (stages execute
+    # sequentially within the job) — an extra driver job + full pass saved
+    # per call.
+    assigned = df.select(F.col(id_col), vec.alias(vec_col)) \
+        .mapInPandas(_assign, out_schema).persist()
     cand = (
         assigned.alias("a")
         .join(
@@ -528,50 +498,36 @@ def embedding_near_duplicates(
     va = df.select(F.col(id_col).alias("id_a"), vec.alias("va"))
     vb = df.select(F.col(id_col).alias("id_b"), vec.alias("vb"))
     joined = cand.join(va, "id_a").join(vb, "id_b")
-    if kernel == "arrow":
-        # vectorized scoring: one einsum per Arrow batch instead of the
-        # interpreted HOF fold (3 aggregates × dim lambda evaluations per
-        # candidate — measured 4.9s → the whole-pipeline dominant cost at
-        # ~20 candidates/vector). Same math as cosine(): dot/(|a||b|),
-        # 0-norm → NaN → fails the threshold, exactly like the expr lane.
-        import pandas as pd
-        from pyspark.sql import types as T
+    # same math as cosine(): dot/(|a||b|); a 0-norm gives NaN, which fails
+    # the threshold
+    score_schema = T.StructType([
+        T.StructField("id_a", id_type), T.StructField("id_b", id_type),
+        T.StructField("cosine_sim", T.DoubleType()),
+    ])
+    thr = float(threshold)
 
-        ida_t = df.schema[id_col].dataType
-        score_schema = T.StructType([
-            T.StructField("id_a", ida_t), T.StructField("id_b", ida_t),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ])
-        thr = float(threshold)
+    def _score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            A = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf["va"]])
+            B = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf["vb"]])
+            num = np.einsum("ij,ij->i", A, B)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cs = num / (np.linalg.norm(A, axis=1)
+                            * np.linalg.norm(B, axis=1))
+            keep = cs >= thr
+            if not keep.any():
+                continue
+            yield pd.DataFrame({
+                "id_a": pdf["id_a"].to_numpy()[keep],
+                "id_b": pdf["id_b"].to_numpy()[keep],
+                "cosine_sim": cs[keep],
+            })
 
-        def _score(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                A = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["va"]])
-                B = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["vb"]])
-                num = np.einsum("ij,ij->i", A, B)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cs = num / (np.linalg.norm(A, axis=1)
-                                * np.linalg.norm(B, axis=1))
-                keep = cs >= thr
-                if not keep.any():
-                    continue
-                yield pd.DataFrame({
-                    "id_a": pdf["id_a"].to_numpy()[keep],
-                    "id_b": pdf["id_b"].to_numpy()[keep],
-                    "cosine_sim": cs[keep],
-                })
-
-        pairs = joined.mapInPandas(_score, score_schema)
-        out = pairs.persist()
-    else:
-        pairs = joined.select(
-            "id_a", "id_b",
-            cosine(F.col("va"), F.col("vb")).alias("cosine_sim"))
-        out = pairs.filter(F.col("cosine_sim") >= threshold).persist()
+    out = joined.mapInPandas(_score, score_schema).persist()
     # materialize the (small) scored pair set so downstream consumers —
     # notably connected_components' checkpoint — never re-execute the
     # assignment + self-join pipeline, then release the signature cache

@@ -46,12 +46,14 @@ def duplicate_spans(
     min_shared: int = 1,
     min_len: int = 30,
     max_doc_freq: Optional[int] = None,
-    hash_family: str = "md5",
+    hash_family: str = "arrow",
 ) -> DataFrame:
     """(id_a, id_b, start_a, start_b, length): exact matching character
     blocks of length ≥ ``min_len`` between candidate near-dup pairs
     (id_a < id_b). Candidates come from winnowing fingerprints, so every
-    true span of length ≥ window+k-1 has its pair examined."""
+    true span of length ≥ window+k-1 has its pair examined.
+    ``hash_family`` picks the winnowing lane ("arrow" or "md5"), as in
+    :func:`..dedup.winnow_shared_pairs`."""
     import difflib
 
     import pandas as pd

@@ -68,6 +68,10 @@ ROTATED = {
     # rotated late-r5 for delta_deletion_vectors (green r01-r04; the
     # percent-threshold agg lane is untouched this round)
     "percent_failed",
+    # appended past the window: recall of the arrow minhash lane, checked
+    # by the local oracle gate at three SFs; its md5 twin
+    # minhash_near_dups and the in-window dedup_clusters cover the banding
+    "minhash_near_dups_recall",
 }
 
 

@@ -249,11 +249,9 @@ def test_embedding_near_duplicates(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 
-@pytest.mark.parametrize("kernel", ["expr", "arrow"])
-def test_semantic_dedup_keeps_min_id_per_group(spark, kernel):
+def test_semantic_dedup_keeps_min_id_per_group(spark):
     """Groups are transitive (1~2, 2~3 chains via scaling) and the min-id
-    representative survives; unrelated vectors pass through untouched —
-    identically under the Catalyst-expression and numpy bucket kernels."""
+    representative survives; unrelated vectors pass through untouched."""
     rng = np.random.default_rng(7)
     a, b = rng.standard_normal(8), rng.standard_normal(8)
     rows = [
@@ -264,8 +262,8 @@ def test_semantic_dedup_keeps_min_id_per_group(spark, kernel):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kept = sorted(r["vec_id"] for r in
-                  similarity.semantic_dedup(df, threshold=0.99, nbits=6,
-                                            kernel=kernel).collect())
+                  similarity.semantic_dedup(df, threshold=0.99,
+                                            nbits=6).collect())
     assert kept == [1, 10, 20, 30]
 
 
@@ -302,6 +300,19 @@ def test_detect_language(spark):
         assert r["got"] == r["expected"], (r["expected"], r["got"])
 
 
+def test_detect_language_ngram(spark):
+    df = spark.createDataFrame(
+        [("en", "the thing and the other thing are standing there"),
+         ("de", "der hund und die katze gehen durch die schule"),
+         ("fr", "les enfants que nous avons vus sont dans la maison"),
+         ("es", "los que están aquí han llegado de la ciudad")],
+        "expected string, text string")
+    rows = df.select("expected",
+                     textstats.detect_language_ngram(F.col("text")).alias("got")).collect()
+    for r in rows:
+        assert r["got"] == r["expected"]
+
+
 # --- refintegrity --------------------------------------------------------------------
 
 def test_orphan_count(spark):
@@ -310,11 +321,11 @@ def test_orphan_count(spark):
     assert refintegrity.orphan_count(child, "k", parent, "k") == 1  # only 3; NULL skipped
 
 
-@pytest.mark.parametrize("family", ["md5", "xxhash64"])
+@pytest.mark.parametrize("family", ["md5", "arrow"])
 def test_winnow_guarantee(spark, family):
     """Winnowing guarantee: any shared substring of length >= k + window - 1
     yields at least one shared fingerprint; disjoint texts share none.
-    Holds for both the oracle (md5) and production (xxhash64) hash families."""
+    Holds for both the reference (md5) and default (arrow) lanes."""
     from pyspark.sql import functions as F
 
     shared = "zqxjkwvyp bmfgthrdl cnslaoeiu"  # 29 chars >= 8 + 4 - 1
@@ -323,9 +334,13 @@ def test_winnow_guarantee(spark, family):
         (2, f"other start {shared} different end"),
         (3, "totally 12345 unrelated !!! content graph"),
     ], "doc_id int, text string")
-    fp = {r["doc_id"]: set(r["fp"]) for r in df.select(
-        "doc_id", dedup.winnow_fingerprints(F.col("text"), 8, 4,
-                                            family).alias("fp")).collect()}
+    if family == "md5":
+        fps = df.select("doc_id", dedup.winnow_fingerprints(
+            F.col("text"), 8, 4).alias("fp"))
+    else:
+        fps = dedup._winnow_fingerprints_arrow(df, "doc_id", "text", 8, 4) \
+            .withColumnRenamed("id", "doc_id")
+    fp = {r["doc_id"]: set(r["fp"]) for r in fps.collect()}
     assert fp[1] & fp[2], "shared substring must produce a shared fingerprint"
     assert not (fp[1] & fp[3])
     pairs = dedup.winnow_shared_pairs(df, "doc_id", min_shared=1,

@@ -81,14 +81,14 @@ def test_interval_join_rejects_unknown_how(spark):
 
 # both code paths must produce identical components: the single-task
 # union-find fast path (small edge sets) and the distributed label
-# propagation (forced via DCSPARK_CC_LOCAL_EDGES=0)
+# propagation (forced by setting dedup._CC_LOCAL_EDGES to 0)
 _CC_PATHS = ["local", "distributed"]
 
 
 @pytest.fixture(params=_CC_PATHS)
 def cc_path(request, monkeypatch):
     if request.param == "distributed":
-        monkeypatch.setenv("DCSPARK_CC_LOCAL_EDGES", "0")
+        monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES", 0)
     return request.param
 
 
@@ -119,7 +119,7 @@ def test_connected_components_double_ids_rounding_adversary(spark, monkeypatch):
     propagating — a sum-based test would declare convergence after round 1
     with a 3-way split of one true component (ADVICE r5). Forced onto the
     distributed path, where the sum shortcut lives."""
-    monkeypatch.setenv("DCSPARK_CC_LOCAL_EDGES", "0")
+    monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES", 0)
     vals = [11.4, 11.2, 11.0, 10.8, 10.6]
     pairs = spark.createDataFrame(
         [(vals[i], vals[i + 1]) for i in range(len(vals) - 1)],

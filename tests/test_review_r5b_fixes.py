@@ -72,16 +72,15 @@ def test_incremental_refuses_column_mapping(spark, tmp_path):
 
 
 def test_arrow_lsh_kernel_tolerates_null_and_ragged(spark):
-    """Null / wrong-length embeddings: the expr kernel maps them to a
-    null bucket that never joins; the arrow kernel must skip them the
-    same way instead of crashing the matmul."""
+    """Null / wrong-length embeddings get no bucket and never pair; the
+    arrow kernel must skip them instead of crashing the matmul."""
     rng = np.random.default_rng(11)
     a = rng.standard_normal(8)
     rows = [(1, a.tolist()), (2, (a * 2.0).tolist()),
             (3, None), (4, rng.standard_normal(5).tolist())]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     pairs = similarity.embedding_near_duplicates(
-        df, threshold=0.99, nbits=6, dim=8, kernel="arrow").collect()
+        df, threshold=0.99, nbits=6, dim=8).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 

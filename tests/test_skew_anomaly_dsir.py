@@ -80,27 +80,11 @@ def test_dsir_ranks_target_like_docs_first(spark):
     )
     df = spark.createDataFrame(rows)
     out = dsir_importance(df, F.col("lang") == "en", n_buckets=64,
-                          top_k=12, hash_family="xxhash64")
+                          top_k=12)
     scores = {r["doc_id"]: r["log_weight"] for r in out.collect()}
     assert scores[100] > scores[101]
     # every target-language doc outranks every background doc
     assert min(scores[i] for i in range(5)) > max(scores[10 + i] for i in range(5))
-
-
-def test_dsir_md5_and_xxhash_families_agree_on_ranking(spark):
-    rows = (
-        [Row(doc_id=i, lang="en", text=f"common word target{i % 3} extra") for i in range(8)]
-        + [Row(doc_id=50 + i, lang="fr", text=f"common word noise{i} filler junk") for i in range(8)]
-    )
-    df = spark.createDataFrame(rows)
-    a = [r["doc_id"] for r in dsir_importance(
-        df, F.col("lang") == "en", n_buckets=4096, top_k=4,
-        hash_family="md5").collect()]
-    b = [r["doc_id"] for r in dsir_importance(
-        df, F.col("lang") == "en", n_buckets=4096, top_k=4,
-        hash_family="xxhash64").collect()]
-    # different hash families, same model: the top docs are target docs
-    assert set(a) <= set(range(8)) and set(b) <= set(range(8))
 
 
 def test_dsir_arrow_kernel_bit_identical(spark):
@@ -122,12 +106,6 @@ def test_dsir_arrow_kernel_bit_identical(spark):
         df, F.col("lang") == "en", n_buckets=64, top_k=10,
         kernel="arrow").collect()]
     assert a == b and len(a) > 0
-
-
-def test_dsir_rejects_unknown_hash_family(spark):
-    df = spark.createDataFrame([Row(doc_id=1, lang="en", text="a b")])
-    with pytest.raises(ValueError):
-        dsir_importance(df, F.col("lang") == "en", hash_family="sha9")
 
 
 def test_conversation_stats_without_timestamps(spark):
