@@ -106,7 +106,6 @@ def _validate_transcripts(spark, path: str):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     # Each query names its lane as a literal in __spark_entry__.py: the LSH
@@ -115,15 +114,16 @@ def main() -> None:
     # arrow kernels. No environment variable selects a lane.
 
     import __spark_entry__ as entry_mod
-    from datacontract_cli_spark.session import get_spark
+    from datacontract_cli_spark.session import get_spark, machine_defaults
 
+    cpus, _ = machine_defaults()
     spark = get_spark("bench", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+                      shuffle_partitions=cpus)
     # explicit warm-up (disclosed, untimed): JVM/codegen + parquet reader +
     # footer caches + Python workers (one per core, for the Arrow kernels),
     # so per-query numbers reflect steady state
     spark.range(1000).count()
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)) \
+    spark.range(cpus * 4, numPartitions=cpus) \
         .mapInPandas(lambda it: it, "id long").count()
     # higher-order-function codegen paths (transform/aggregate/slice/
     # array_join + explode + broadcast semi-join) JIT on first use — ~3s
@@ -227,7 +227,7 @@ def main() -> None:
         "loadavg_1m": loadavg,
         "transcript_turns": n_turns,
         "validation_result": run.result.value,
-        "cpus": int(cpus),
+        "cpus": cpus,
     }))
 
 

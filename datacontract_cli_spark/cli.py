@@ -63,7 +63,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "column (agg-able checks, one extra aggregate)")
     t.add_argument("--output", default=None, help="write results to this path")
     t.add_argument("--output-format", default="json", choices=["json", "junit"])
-    t.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
+    t.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS], else local[<cores>])")
 
     ci = sub.add_parser(
         "ci", help="run tests for CI/CD pipelines (annotations, step "
@@ -382,10 +382,8 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"error: {e}", file=sys.stderr)
                 return 1
         else:
-            import os as _os
             from datacontract_cli_spark.session import get_spark
-            master = args.master or f"local[{_os.environ.get('SPARK_GRAFT_CPUS', '4')}]"
-            spark = get_spark("dcspark-import", master=master)
+            spark = get_spark("dcspark-import", master=args.master)
             try:
                 if args.format == "spark":
                     # live-session lane: --source names tables/views in the
@@ -413,14 +411,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command == "suggest":
         import json as _json
-        import os as _os
 
         from datacontract_cli_spark import export as _export
         from datacontract_cli_spark.session import get_spark
         from datacontract_cli_spark.suggest import suggest_contract
 
-        master = args.master or f"local[{_os.environ.get('SPARK_GRAFT_CPUS', '4')}]"
-        spark = get_spark("dcspark-suggest", master=master)
+        spark = get_spark("dcspark-suggest", master=args.master)
         try:
             reader = {"parquet": spark.read.parquet,
                       "orc": spark.read.orc,
@@ -448,14 +444,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command == "curate":
         import json as _json
-        import os as _os
 
         from datacontract_cli_spark.pipeline import (
             CurationReport, curate_corpus)
         from datacontract_cli_spark.session import get_spark
 
-        master = args.master or f"local[{_os.environ.get('SPARK_GRAFT_CPUS', '4')}]"
-        spark = get_spark("dcspark-curate", master=master)
+        spark = get_spark("dcspark-curate", master=args.master)
         try:
             reader = {"parquet": spark.read.parquet,
                       "orc": spark.read.orc,
@@ -508,7 +502,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command == "quarantine":
         import json as _json
-        import os as _os
 
         from datacontract_cli_spark.operators.quarantine import (
             quarantine_violations,
@@ -521,9 +514,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: {e}", file=sys.stderr)
             return 1
         model = args.schema_name or contract.schema_objects[0].name
-        master = args.master or \
-            f"local[{_os.environ.get('SPARK_GRAFT_CPUS', '4')}]"
-        spark = get_spark("dcspark-quarantine", master=master)
+        spark = get_spark("dcspark-quarantine", master=args.master)
         try:
             rep = quarantine_violations(
                 spark, args.table, contract, model,
@@ -545,7 +536,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command == "tail":
         import json as _json
-        import os as _os
         import time as _time
 
         from datacontract_cli_spark.engine.executor import SparkContractEngine
@@ -558,9 +548,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: {e}", file=sys.stderr)
             return 1
         model = args.schema_name or contract.schema_objects[0].name
-        master = args.master or \
-            f"local[{_os.environ.get('SPARK_GRAFT_CPUS', '4')}]"
-        spark = get_spark("dcspark-tail", master=master)
+        spark = get_spark("dcspark-tail", master=args.master)
         engine = SparkContractEngine(spark)
         any_failed = False
         polls = 0
@@ -600,7 +588,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command == "maintain":
         import json as _json
-        import os as _os
 
         if args.zorder_by and not args.compact:
             print("error: --zorder-by requires --compact",
@@ -625,9 +612,7 @@ def main(argv: list[str] | None = None) -> int:
         try:
             if args.compact:
                 from datacontract_cli_spark.session import get_spark
-                master = args.master or \
-                    f"local[{_os.environ.get('SPARK_GRAFT_CPUS', '4')}]"
-                spark = get_spark("dcspark-maintain", master=master)
+                spark = get_spark("dcspark-maintain", master=args.master)
                 zcols = ([c.strip() for c in args.zorder_by.split(",")
                           if c.strip()] if args.zorder_by else None)
                 n_files = args.target_files if args.target_files \

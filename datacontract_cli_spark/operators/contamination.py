@@ -27,23 +27,24 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datacontract_cli_spark.operators._hof import bind
+
 
 def word_ngrams(col: Column, n: int) -> Column:
     """Array of space-joined word n-grams of the lowercased text (empty
-    array when the text has fewer than n words). Bound via a fold so the
+    array when the text has fewer than n words). The word array is bound
+    once (:func:`~datacontract_cli_spark.operators._hof.bind`), so the
     split/normalize runs once, not per element."""
     words = F.split(F.lower(col), r"\s+")
-    return F.aggregate(
-        F.array(words), F.array().cast("array<string>"),
+    return bind(words, lambda w: F.when(
         # guard: Spark's sequence(1, stop) DESCENDS when stop < 1 (it would
         # emit [1, 0] for a too-short text), so short texts take the
         # empty-array branch explicitly
-        lambda _acc, w: F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                lambda i: F.array_join(F.slice(w, i, n), " "))
-        ).otherwise(F.array().cast("array<string>")))
+        F.size(w) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - (n - 1)),
+            lambda i: F.array_join(F.slice(w, i, n), " "))
+    ).otherwise(F.array().cast("array<string>")))
 
 
 def word_ngram_hashes(col: Column, n: int) -> Column:
@@ -56,15 +57,13 @@ def word_ngram_hashes(col: Column, n: int) -> Column:
     they intentionally differ from ``xxhash64(word_ngrams(...))`` — the
     hash lane's 64-bit keys were never externally reproducible anyway."""
     words = F.split(F.lower(col), r"\s+")
-    return F.aggregate(
-        F.array(words), F.array().cast("array<bigint>"),
-        lambda _acc, w: F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                lambda i: F.xxhash64(
-                    *[F.element_at(w, i + k) for k in range(n)]))
-        ).otherwise(F.array().cast("array<bigint>")))
+    return bind(words, lambda w: F.when(
+        F.size(w) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - (n - 1)),
+            lambda i: F.xxhash64(
+                *[F.element_at(w, i + k) for k in range(n)]))
+    ).otherwise(F.array().cast("array<bigint>")))
 
 
 def _gram_keys(df: DataFrame, id_col: Optional[str], text_col: str,

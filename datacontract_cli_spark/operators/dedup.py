@@ -39,6 +39,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datacontract_cli_spark.operators._hof import bind
+
 
 # ---------------------------------------------------------------------------
 # normalization + exact dedup
@@ -84,17 +86,22 @@ def tokens(col: Column) -> Column:
 
 
 def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams as an array column (empty-safe)."""
-    toks = tokens(col)
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    # short docs: fall back to the whole text as one shingle
-    return F.when(count > 0, F.array_distinct(grams)).otherwise(
-        F.array(normalized_text(col))
-    )
+    """Distinct word n-grams as an array column (empty-safe). The token
+    array is bound once (:func:`~datacontract_cli_spark.operators._hof.bind`),
+    not re-split per shingle."""
+    def shingles(toks: Column) -> Column:
+        count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
+        grams = F.transform(
+            F.sequence(F.lit(1), count),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        # short docs: fall back to the whole normalized text (the tokens
+        # re-joined on the single spaces they were split on) as one shingle
+        return F.when(count > 0, F.array_distinct(grams)).otherwise(
+            F.array(F.array_join(toks, " "))
+        )
+
+    return bind(tokens(col), shingles)
 
 
 _MAX_LONG = (1 << 63) - 1
@@ -395,8 +402,7 @@ def ngram_jaccard(
     sh = df.select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), n).alias("sh"),
-        F.size(word_shingles(F.col(text_col), n)).alias("len"),
-    )
+    ).withColumn("len", F.size("sh"))
     if candidates is not None:
         a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("len").alias("len_a"))
         b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("len").alias("len_b"))
@@ -640,11 +646,10 @@ def winnow_fingerprints(col: Column, k: int = 8, window: int = 4) -> Column:
     lane) — one pass, no shuffle, reproducible by an external SQL oracle.
     Short docs (< k chars) fingerprint as the single hash of the whole
     normalized text."""
-    # Every intermediate (normalized string, gram-hash array) is bound ONCE
-    # through a fold lambda variable. Referencing such an expression directly
-    # inside a per-element lambda re-evaluates it per element (the
-    # normalization per gram is O(n^2) chars/doc, the gram array per window
-    # O(n^2) md5 calls/doc — both measured as order-of-magnitude slowdowns).
+    # Both intermediates (normalized string, gram-hash array) are bound ONCE
+    # (catalyst trap #1, see operators/_hof.py bind): unbound, the
+    # normalization would rerun per gram (O(n^2) chars/doc) and the gram
+    # array per window (O(n^2) md5 calls/doc).
     def fingerprints_from_grams(g: Column) -> Column:
         return F.array_distinct(
             F.transform(
@@ -661,15 +666,8 @@ def winnow_fingerprints(col: Column, k: int = 8, window: int = 4) -> Column:
             % F.lit(MINHASH_MD5_P),
         )
 
-    return F.aggregate(
-        F.array(normalized_text(col)),
-        F.array().cast("array<long>"),
-        lambda _acc, t: F.aggregate(
-            F.array(grams_of(t)),
-            F.array().cast("array<long>"),
-            lambda _acc2, g: fingerprints_from_grams(g),
-        ),
-    )
+    return bind(normalized_text(col),
+                lambda t: bind(grams_of(t), fingerprints_from_grams))
 
 
 def _winnow_fingerprints_arrow(df: DataFrame, id_col: str, text_col: str,

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datacontract_cli_spark.operators._hof import bind
+
 
 def _literal_regex(sep: str) -> str:
     """Java-regex that matches ``sep`` literally (Pattern.quote): F.split
@@ -105,13 +107,15 @@ def collapse_repeated_lines(df: DataFrame, text_col: str = "text",
     the classic crawl-artifact cleaner (navigation chrome, repeated
     headers/footers, cursor spam in agent logs). Pure Column math: one
     split, an indexed higher-order filter against the previous element
-    (F.get is 0-based and null-safe out of bounds, so no ANSI index
-    traps), one array_join — zero shuffle, whole-stage codegen.
+    of the bound line array (F.get is 0-based and null-safe out of
+    bounds, so no ANSI index traps), one array_join — zero shuffle.
 
     Cross-document repeats are :func:`line_dedup`'s job (keep-first
     corpus-wide); this one is within-document and order-preserving."""
-    arr = F.split(F.col(text_col), _literal_regex(sep))
-    collapsed = F.filter(
-        arr, lambda x, i: (i == F.lit(0))
-        | ~x.eqNullSafe(F.get(arr, i - 1)))
+    # bound once: the split is not redone per line (see
+    # operators/_hof.py bind)
+    collapsed = bind(
+        F.split(F.col(text_col), _literal_regex(sep)),
+        lambda arr: F.filter(arr, lambda x, i: (i == F.lit(0))
+                             | ~x.eqNullSafe(F.get(arr, i - 1))))
     return df.withColumn(text_col, F.array_join(collapsed, sep))

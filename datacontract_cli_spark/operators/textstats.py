@@ -13,6 +13,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datacontract_cli_spark.operators._hof import bind
+
 # A BPE-ish word/punctuation splitter: words, numbers, or single
 # non-space symbols each count as one token.
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
@@ -93,12 +95,20 @@ def language_scores(col: Column) -> Column:
     return F.array(*entries)
 
 
+def _argmax_lang(scores: Column, default: str) -> Column:
+    """The first ``lang`` with the highest ``score``; ``default`` when no
+    score is positive. ``scores`` and its maximum are each bound once
+    (see :func:`~datacontract_cli_spark.operators._hof.bind`)."""
+    return bind(scores, lambda sc: bind(
+        F.array_max(F.transform(sc, lambda s: s["score"])),
+        lambda best: F.when(
+            best > 0, F.filter(sc, lambda s: s["score"] == best)[0]["lang"]
+        ).otherwise(F.lit(default))))
+
+
 def detect_language(col: Column, default: str = "und") -> Column:
     """Argmax of the stopword scores; 'und' when nothing matches."""
-    scores = language_scores(col)
-    best = F.array_max(F.transform(scores, lambda s: s["score"]))
-    winner = F.filter(scores, lambda s: s["score"] == best)[0]["lang"]
-    return F.when(best > 0, winner).otherwise(F.lit(default))
+    return _argmax_lang(language_scores(col), default)
 
 
 def doc_fingerprint(col: Column) -> Column:
@@ -149,10 +159,7 @@ def detect_language_ngram(col: Column, default: str = "und") -> Column:
         norm = F.greatest(F.length(lowered), F.lit(1))
         entries.append(F.struct(F.lit(lang).alias("lang"),
                                 (hits / norm).alias("score")))
-    scores = F.array(*entries)
-    best = F.array_max(F.transform(scores, lambda s: s["score"]))
-    winner = F.filter(scores, lambda s: s["score"] == best)[0]["lang"]
-    return F.when(best > 0, winner).otherwise(F.lit(default))
+    return _argmax_lang(F.array(*entries), default)
 
 
 def repetition_ratio(col: Column, n: int = 3) -> Column:
@@ -161,19 +168,22 @@ def repetition_ratio(col: Column, n: int = 3) -> Column:
     → 1 = the same phrase over and over). The standard boilerplate/spam
     signal in training-data quality filters (cf. Gopher/C4 repetition
     rules). Pure Column math over the token array — one scan, no shuffle,
-    no Python; short docs (< n tokens) score 0."""
+    no Python; short docs (< n tokens) score 0. The token array is bound
+    once, so each document is normalized and split once, not per n-gram."""
     from datacontract_cli_spark.operators.dedup import tokens
 
-    toks = tokens(col)
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(
-        count > 0,
-        F.lit(1.0) - F.size(F.array_distinct(grams)) / count.cast("double"),
-    ).otherwise(F.lit(0.0))
+    def ratio(toks: Column) -> Column:
+        count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
+        grams = F.transform(
+            F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        return F.when(
+            count > 0,
+            F.lit(1.0) - F.size(F.array_distinct(grams)) / count.cast("double"),
+        ).otherwise(F.lit(0.0))
+
+    return bind(tokens(col), ratio)
 
 
 def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
@@ -233,8 +243,9 @@ def gopher_quality(df: DataFrame, text_col: str = "text",
     into the scan stage and drops documents before anything shuffles."""
     words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     n_words = F.size(words)
-    # bind `words` once via the fold (per-element lambdas re-evaluate
-    # inlined expressions — catalyst trap #1)
+    # `words` is each HOF's array argument, never referenced from inside a
+    # lambda body, so it is evaluated once per call (catalyst trap #1, see
+    # operators/_hof.py bind)
     char_total = F.aggregate(words, F.lit(0),
                              lambda acc, w: acc + F.length(w))
     n_alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
@@ -293,13 +304,13 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
 
     words = F.split(F.trim(F.regexp_replace(F.col(text_col),
                                             r"\s+", " ")), " ")
-    # Column API (not an F.expr string — arbitrary column names survive,
-    # and Catalyst CSE shares the one split subtree): bigram i = word i
-    # + ' ' + word i+1, built by an indexed transform over the first
-    # size-1 words with an outer 0-based F.get back-reference
-    grams = F.transform(
-        F.slice(words, 1, F.greatest(F.size(words) - 1, F.lit(0))),
-        lambda x, i: F.concat(x, F.lit(" "), F.get(words, i + 1)))
+    # Column API (not an F.expr string — arbitrary column names survive):
+    # bigram i = word i + ' ' + word i+1, built by an indexed transform
+    # over the first size-1 words with a 0-based F.get back-reference into
+    # the word array, bound once so the split is not redone per bigram
+    grams = bind(words, lambda w: F.transform(
+        F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))),
+        lambda x, i: F.concat(x, F.lit(" "), F.get(w, i + 1))))
     bi = df.select(F.col(id_col),
                    F.length(F.array_join(words, " ")).alias("word_chars"),
                    F.explode_outer(grams).alias("__g"))

@@ -1,11 +1,16 @@
 """Property-based tests (hypothesis) for the pure driver-side machinery,
-and for the exact KS count-ifs against a numpy brute force."""
+for the exact KS count-ifs against a numpy brute force, and for the
+Column text builders against plain-Python references."""
 
+import collections
+import itertools
 import math
+import re
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.spec import Op, Threshold
 from datacontract_cli_spark.checks.types import categories_compatible, normalize_type_name
@@ -132,3 +137,106 @@ def test_ks_empty_or_all_null_is_nan(spark, n_nulls, points, tie_aware):
 def test_ks_constant_column_is_zero(spark, c, n, ps):
     assert ks_statistic(_frame(spark, [c] * n), "v",
                         {"quantiles": {str(p): c for p in ps}}) == 0.0
+
+
+# --- Column text builders against plain-Python references ------------------
+#
+# Texts mix whitespace runs, tabs, newlines, case, empty strings, nulls and
+# fewer than n tokens; the alphabet is small so n-grams and lines repeat.
+
+# word sequences from a tiny vocabulary, so multi-word n-grams repeat
+wordy = st.builds(
+    lambda lead, parts: lead + "".join(w + gap for w, gap in parts),
+    st.sampled_from(["", " ", "\t\n"]),
+    st.lists(st.tuples(st.sampled_from(["a", "b", "A", "ab", "."]),
+                       st.sampled_from([" ", "  ", "\t", " \t", "\n"])),
+             max_size=14))
+texts = st.lists(st.one_of(st.none(), wordy,
+                           st.text(alphabet="abA .\t\n", max_size=30)),
+                 min_size=1, max_size=12)
+
+
+def _docs_frame(spark, values):
+    return spark.createDataFrame(list(enumerate(values)),
+                                 "doc_id long, text string")
+
+
+def _py_tokens(text):
+    """dedup.tokens: lower, collapse Java \\s runs to one space, trim, split."""
+    return re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ").split(" ")
+
+
+def _py_grams(toks, n):
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+@settings(max_examples=25, deadline=None)
+@given(texts)
+def test_repetition_ratio_matches_python(spark, values):
+    from datacontract_cli_spark.operators.textstats import repetition_ratio
+
+    got = [r.v for r in _docs_frame(spark, values).orderBy("doc_id").select(
+        repetition_ratio(F.col("text"), 3).alias("v")).collect()]
+    want = []
+    for text in values:
+        grams = _py_grams(_py_tokens(text), 3) if text is not None else []
+        want.append(1.0 - len(set(grams)) / float(len(grams)) if grams
+                    else 0.0)
+    assert got == want
+
+
+@settings(max_examples=25, deadline=None)
+@given(texts)
+def test_word_shingles_match_python(spark, values):
+    from datacontract_cli_spark.operators.dedup import word_shingles
+
+    got = [r.v for r in _docs_frame(spark, values).orderBy("doc_id").select(
+        word_shingles(F.col("text"), 3).alias("v")).collect()]
+    want = []
+    for text in values:
+        if text is None:
+            want.append([None])
+            continue
+        toks = _py_tokens(text)
+        # distinct in first-occurrence order; short docs: the whole
+        # normalized text as the one shingle
+        want.append(list(dict.fromkeys(_py_grams(toks, 3)))
+                    or [" ".join(toks)])
+    assert got == want
+
+
+@settings(max_examples=25, deadline=None)
+@given(texts)
+def test_collapse_repeated_lines_matches_groupby(spark, values):
+    from datacontract_cli_spark.operators.lines import collapse_repeated_lines
+
+    got = [r.text for r in collapse_repeated_lines(
+        _docs_frame(spark, values)).orderBy("doc_id").collect()]
+    want = [None if t is None
+            else "\n".join(k for k, _ in itertools.groupby(t.split("\n")))
+            for t in values]
+    assert got == want
+
+
+@settings(max_examples=15, deadline=None)
+@given(texts)
+def test_gopher_top_bigram_char_frac_matches_python(spark, values):
+    from datacontract_cli_spark.operators.textstats import gopher_repetition
+
+    got = {r.doc_id: r.top_bigram_char_frac for r in gopher_repetition(
+        _docs_frame(spark, values)).collect()}
+    want = {}
+    for i, text in enumerate(values):
+        if text is None:
+            want[i] = 0.0
+            continue
+        words = re.sub(r"[ \t\n\x0b\f\r]+", " ", text).strip(" ").split(" ")
+        word_chars = len(" ".join(words))
+        counts = collections.Counter(_py_grams(words, 2))
+        if not counts or word_chars == 0:
+            want[i] = 0.0
+            continue
+        # highest count, ties to the lexicographically greatest gram
+        gram, c = max(counts.items(), key=lambda kv: (kv[1], kv[0]))
+        want[i] = float(c * len(gram)) / word_chars
+    assert got == want
