@@ -22,6 +22,15 @@ Execution model (Spark-first, scale-aware):
 - **Custom SQL** runs through ``spark.sql`` against temp views registered
   for every bound model.
 
+- **Independent actions run concurrently.** Each ``test()`` call owns one
+  thread pool; every Spark action that depends on no other (each model's
+  flat aggregate, each uniqueness, referential-integrity, PSI, custom-SQL
+  and maxRunLength check) is one submission. A model's violation samples
+  follow its aggregate in the same task, never waiting for the uniqueness
+  job. Pool threads inherit the caller's job group, description and tags
+  (``inheritable_thread_target``), and an exception escaping a submission
+  turns only that submission's checks into ``error``.
+
 Only aggregated scalars and ≤ sample_limit violation rows ever reach the
 driver.
 """
@@ -32,9 +41,11 @@ import datetime as dt
 import json
 import logging
 import math
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, List, Optional, Tuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +87,16 @@ _AGG_METRICS = (
 
 _ROW_COUNT_ALIAS = "__dc_row_count__"
 
+# Threads in one test() call's action pool. Median test() of the 1M-turn
+# transcripts validation (aggregate, uniqueness, referential integrity and
+# PSI actions) on 4 cores, 6 interleaved calls per width: 1 -> 4.05 s,
+# 2 -> 3.07 s, 3 -> 2.81 s, 4 -> 2.72 s, 6 -> 2.71 s, 8 -> 2.79 s.
+_ACTION_POOL_WIDTH = 4
+
+# submit(specs, fn, *args): run fn(*args) in the test() call's action pool;
+# ``specs`` are the checks it decides (they become errors if it raises)
+_Submit = Callable[..., None]
+
 
 @dataclass
 class _AggBatch:
@@ -108,6 +129,17 @@ class _AggBatch:
 def _fail_result(spec: CheckSpec) -> ResultEnum:
     severity = (spec.severity or "").strip().lower()
     return ResultEnum.warning if severity in _WARNING_SEVERITIES else ResultEnum.failed
+
+
+def _fail_closed(run: Run, specs: List[CheckSpec], fn: Callable, *args) -> None:
+    """Run one pool submission; an exception escaping it becomes an
+    ``error`` result on the checks it decides, never a lost thread."""
+    try:
+        fn(*args)
+    except Exception as e:  # noqa: BLE001
+        logger.warning("check action %s failed: %s", fn.__name__, e, exc_info=True)
+        for spec in specs:
+            run.set_result(spec.key, ResultEnum.error, f"Check execution failed: {e}")
 
 
 class SparkContractEngine:
@@ -196,15 +228,29 @@ class SparkContractEngine:
         for spec in specs:
             by_model.setdefault(spec.model, []).append(spec)
 
-        for model, model_specs in by_model.items():
-            df = lowered_tables.get(model.lower())
-            if df is None:
-                for spec in model_specs:
-                    run.set_result(spec.key, ResultEnum.error, f"Model '{model}' not found in server")
-                continue
-            self._run_model(run, model, model_specs, df, lowered_tables,
-                            objects.get(model.lower()), filters,
-                            raw_df=lowered_raw.get(model.lower(), df))
+        futures = []
+        with ThreadPoolExecutor(max_workers=_ACTION_POOL_WIDTH,
+                                thread_name_prefix="dcspark-check") as pool:
+            def submit(action_specs: List[CheckSpec], fn: Callable, *args) -> None:
+                # wrapped per submission: each task gets its own copy of the
+                # caller's local properties (Spark SQL writes its execution
+                # id into them while a query runs)
+                futures.append(pool.submit(
+                    _fail_closed, run, action_specs,
+                    inheritable_thread_target(self.spark)(fn), *args))
+
+            for model, model_specs in by_model.items():
+                df = lowered_tables.get(model.lower())
+                if df is None:
+                    for spec in model_specs:
+                        run.set_result(spec.key, ResultEnum.error,
+                                       f"Model '{model}' not found in server")
+                    continue
+                self._run_model(run, submit, model, model_specs, df, lowered_tables,
+                                objects.get(model.lower()), filters,
+                                raw_df=lowered_raw.get(model.lower(), df))
+        for future in futures:
+            future.result()  # _fail_closed keeps Exceptions; re-raise the rest
 
         # json-format servers additionally get full JSON-Schema row
         # validation, mirroring the reference's fastjsonschema pass
@@ -539,6 +585,7 @@ class SparkContractEngine:
     def _run_model(
         self,
         run: Run,
+        submit: _Submit,
         model: str,
         specs: List[CheckSpec],
         df: DataFrame,
@@ -620,23 +667,21 @@ class SparkContractEngine:
             run.set_result(spec.key, ResultEnum.warning, f"Unsupported metric {spec.metric}")
 
         if agg_specs and dup_specs:
-            # run the batched aggregation and the duplicate check as two
-            # overlapped jobs sharing nothing but the (cheap, pruned) scan:
-            # see _run_agg_with_duplicates for why metric columns must NOT
-            # ride the uniqueness exchange
-            self._run_agg_with_duplicates(run, model, agg_specs, dup_specs, df, obj)
+            self._run_agg_with_duplicates(run, submit, model, agg_specs,
+                                          dup_specs, df, obj)
         else:
-            self._run_agg_batch(run, model, agg_specs, df, obj)
+            if agg_specs:
+                submit(agg_specs, self._run_agg_batch, run, model, agg_specs, df, obj)
             for spec in dup_specs:
-                self._check_duplicates(run, spec, df, obj)
+                submit([spec], self._check_duplicates, run, spec, df, obj)
         for spec in sql_specs:
-            self._check_custom_sql(run, spec)
+            submit([spec], self._check_custom_sql, run, spec)
         for spec in ri_specs:
-            self._check_referential_integrity(run, spec, df, tables)
+            submit([spec], self._check_referential_integrity, run, spec, df, tables)
         for spec in psi_specs:
-            self._check_psi(run, spec, df)
+            submit([spec], self._check_psi, run, spec, df)
         for spec in run_specs:
-            self._check_max_run(run, spec, df)
+            submit([spec], self._check_max_run, run, spec, df)
 
     # ------------------------------------------------------------------
     # the batched aggregation
@@ -690,31 +735,43 @@ class SparkContractEngine:
                 batch.add(spec, alias, aggs, F.round(ks, 6))
         return batch
 
-    def _run_agg_with_duplicates(self, run: Run, model: str,
+    def _run_agg_with_duplicates(self, run: Run, submit: _Submit, model: str,
                                  agg_specs: List[CheckSpec],
                                  dup_specs: List[CheckSpec],
                                  df: DataFrame,
                                  obj: Optional[SchemaObject]) -> None:
-        """The agg batch and the first uniqueness check as two OVERLAPPED
-        jobs: a flat exchange-free metric fold (count-ifs sum map-side) and
-        a keys-only uniqueness groupBy whose skinny exchange the dup-sample
-        branch reuses. Metric columns never cross the uniqueness exchange —
-        on high-cardinality keys partial aggregation cannot reduce the
-        group count, so the old merged plan shuffled every aggregate column
-        per PK group (measured ~800 MB vs ~240 MB keys-only, 2.4s -> 1.4s
-        on the 8M-turn transcripts validation locally). Falls back to the
-        separate sequential path (which has per-check error isolation) on
-        any failure."""
+        """The agg batch and the first uniqueness check as two overlapped
+        submissions to the action pool: the flat exchange-free metric fold,
+        whose violation samples follow it in the same task without waiting
+        for the uniqueness job, and the keys-only uniqueness groupBy
+        (:meth:`_check_duplicates_keys_only`), kept apart so metric columns
+        never cross the uniqueness exchange. Each keeps its own fallback: a
+        failed batch aggregate retries check by check, a failed keys-only
+        job reruns its check on the two-phase path. The other uniqueness
+        checks are submissions of their own."""
         lead = dup_specs[0]
         lead_cols = lead.columns or ([lead.field] if lead.field else [])
         resolved = [resolve_column(df, c) for c in lead_cols]
-        if not resolved or any(c is None for c in resolved):
-            self._run_agg_batch(run, model, agg_specs, df, obj)
-            for spec in dup_specs:
-                self._check_duplicates(run, spec, df, obj)
-            return
+        submit(agg_specs, self._run_agg_batch, run, model, agg_specs, df, obj)
+        rest = dup_specs
+        if resolved and all(c is not None for c in resolved):
+            submit([lead], self._check_duplicates_keys_only, run, lead, df,
+                   resolved, obj)
+            rest = dup_specs[1:]
+        for spec in rest:
+            submit([spec], self._check_duplicates, run, spec, df, obj)
 
-        batch = self._build_agg_batch(run, model, agg_specs, df)
+    def _check_duplicates_keys_only(self, run: Run, spec: CheckSpec,
+                                    df: DataFrame, resolved: List[str],
+                                    obj: Optional[SchemaObject]) -> None:
+        """Duplicate-group count from one keys-only groupBy. Pushing the
+        metric count-ifs THROUGH this exchange would force every aggregate
+        column across the wire per PK group (800 MB shuffled vs 240 MB for
+        the keys alone on the 8M-turn table), so the metric fold runs as
+        its own exchange-free job and this one shuffles ONLY (keys, count);
+        the dup-sample branch rides the same exchange via ReusedExchange.
+        Falls back to :meth:`_check_duplicates` (two-phase, with per-check
+        error isolation) if the job fails."""
         dup_alias = "__dc_dup__"
         kind_alias = "__dc_kind__"
         skey_alias = "__dc_skey__"
@@ -722,20 +779,6 @@ class SparkContractEngine:
         sample_keys = (self._drop_sensitive(resolved, obj)
                        if self.include_failed_samples else [])
         try:
-            # Two jobs, overlapped, instead of one merged groupBy: pushing
-            # the metric count-ifs THROUGH the uniqueness exchange forces
-            # every aggregate column across the wire per PK group, and on
-            # high-cardinality keys (PK uniqueness: every group is size 1)
-            # partial aggregation reduces nothing — measured 800 MB
-            # shuffled vs 240 MB for the keys alone on the 8M-turn table.
-            # The metric fold decomposes map-side (count-ifs sum, freshness
-            # max, retention min), so a flat agg computes it with NO
-            # exchange at all; the uniqueness job shuffles ONLY
-            # (keys, count), and the dup-sample branch rides that skinny
-            # exchange via ReusedExchange. The two actions run from a
-            # 2-thread pool so the dup job's map stage back-fills cores
-            # the scan stage of the agg job leaves idle (guide-style
-            # overlap; measured 1.65s sequential → 1.38s overlapped).
             grouped = (df.groupBy(*[F.col(_q(c)) for c in resolved])
                        .agg(F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)))
             combined = (grouped.agg(F.coalesce(
@@ -758,48 +801,35 @@ class SparkContractEngine:
                 )
                 combined = combined.unionByName(samples_branch,
                                                 allowMissingColumns=True)
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                agg_future = pool.submit(batch.frame(df).collect)
-                dup_future = pool.submit(combined.collect)
-                collected = dup_future.result()
-                row = agg_future.result()[0].asDict()
-            fold_row = next(r for r in collected
-                            if r[kind_alias] == "fold").asDict()
-            row[dup_alias] = fold_row[dup_alias]
-            dup_samples = [r for r in collected if r[kind_alias] == "dup"]
+            collected = combined.collect()
         except Exception as e:  # noqa: BLE001
-            logger.warning("merged agg+duplicates job failed (%s); "
-                           "falling back to separate jobs", e)
-            self._run_agg_batch(run, model, agg_specs, df, obj)
-            for spec in dup_specs:
-                try:
-                    self._check_duplicates(run, spec, df, obj)
-                except Exception as dup_err:  # noqa: BLE001
-                    run.set_result(spec.key, ResultEnum.error,
-                                   f"Duplicate check failed: {dup_err}")
-            return
-        self._evaluate_agg_row(run, row, batch, df, obj)
-        self._evaluate(run, lead, int(row[dup_alias]), None)
-        check = run.check(lead.key)
-        if (self.include_failed_samples and check is not None
-                and check.result in (ResultEnum.failed, ResultEnum.warning)):
-            if sample_keys:
-                # TakeOrdered emits one sorted partition; collect preserves
-                # intra-partition order, so the rows are already in stable
-                # (key-ascending) order
-                rows = []
-                for r in dup_samples:
-                    rec = self._parse_sample(r[skey_alias], sample_keys)
-                    rec["duplicate_count"] = r[sdup_alias]
-                    rows.append(rec)
-                check.failedSamples = rows
-            else:
-                self._collect_duplicate_samples(run, lead, df, resolved, obj)
-        for spec in dup_specs[1:]:
+            logger.warning("keys-only uniqueness job failed (%s); "
+                           "falling back to the separate check", e)
             self._check_duplicates(run, spec, df, obj)
+            return
+        fold_row = next(r for r in collected if r[kind_alias] == "fold")
+        self._evaluate(run, spec, int(fold_row[dup_alias]), None)
+        check = run.check(spec.key)
+        if not (self.include_failed_samples and check is not None
+                and check.result in (ResultEnum.failed, ResultEnum.warning)):
+            return
+        if not sample_keys:
+            try:
+                self._collect_duplicate_samples(run, spec, df, resolved, obj)
+            except Exception as e:  # noqa: BLE001 — diagnostics only
+                logger.warning("duplicate-sample collection failed for "
+                               "%s: %s", spec.key, e)
+            return
+        # TakeOrdered emits one sorted partition; collect preserves
+        # intra-partition order, so the rows are already in stable
+        # (key-ascending) order
+        rows = []
+        for r in collected:
+            if r[kind_alias] == "dup":
+                rec = self._parse_sample(r[skey_alias], sample_keys)
+                rec["duplicate_count"] = r[sdup_alias]
+                rows.append(rec)
+        check.failedSamples = rows
 
     def _run_agg_batch(self, run: Run, model: str, specs: List[CheckSpec],
                        df: DataFrame, obj: Optional[SchemaObject]) -> None:

@@ -98,8 +98,8 @@ def test_missing_model_errors(spark, contract):
 
 
 def test_merged_dup_samples_match_direct_query(spark, contract):
-    """The dup samples riding the merged union query (executor.py
-    _run_agg_with_duplicates samples_branch) must equal the dedicated
+    """The dup samples riding the keys-only union query (executor.py
+    _check_duplicates_keys_only samples_branch) must equal the dedicated
     groupBy/filter/orderBy/limit query they replaced."""
     from pyspark.sql import functions as F
 

@@ -186,3 +186,51 @@ schema:
     assert by_key["m__v__quantile_drift_ks"].result.value == "error"
     assert "baseline" in by_key["m__v__quantile_drift_ks"].reason
     assert by_key["m__row_count"].result.value == "passed"
+
+
+def test_every_job_of_a_call_carries_the_callers_job_group(spark):
+    """The aggregate, uniqueness, referential-integrity and PSI actions run
+    on pool threads; each of their jobs still belongs to the job group the
+    caller set, so no job started during the call is untagged."""
+    import os
+
+    import yaml
+
+    from datacontract_cli_spark.model.contract import load_contract_str as load
+    from datacontract_cli_spark.sources.transcripts import synthesize_transcripts
+
+    path = os.path.join(os.path.dirname(__file__), "fixtures",
+                        "transcripts_contract.yaml")
+    with open(path) as f:
+        doc = yaml.safe_load(f)
+    by_name = {p["name"]: p for p in doc["schema"][0]["properties"]}
+    by_name["role"]["quality"] = [{
+        "type": "library", "metric": "freqDriftPsi", "mustBeLessThan": 0.25,
+        "arguments": {"baseline": {"system": 0.25, "user": 0.25,
+                                   "assistant": 0.25, "tool": 0.25}}}]
+    by_name["conv_id"]["quality"] = [{
+        "type": "library", "metric": "referentialIntegrity", "mustBe": 0,
+        "arguments": {"ref": "conversations.conv_id"}}]
+    doc["schema"].append({"name": "conversations", "properties": [
+        {"name": "conv_id", "logicalType": "string"}]})
+    contract = load(yaml.safe_dump(doc, sort_keys=False))
+    df = synthesize_transcripts(spark, n_convs=300, turns_per_conv=4,
+                                defect_rate=0.2)
+    tables = {"transcripts": df,
+              "conversations": df.select("conv_id").distinct().limit(250)}
+    engine = SparkContractEngine(spark, include_failed_samples=True)
+
+    before = _jobs(spark, "job-tags-before", lambda: spark.range(1).collect())
+    runs = []
+    tagged = _jobs(spark, "job-tags-call",
+                   lambda: runs.append(engine.test(contract, tables=tables)))
+    after = _jobs(spark, "job-tags-after", lambda: spark.range(1).collect())
+
+    started = set(range(max(before) + 1, min(after)))
+    assert started, "the call ran no Spark job"
+    assert started == set(tagged), sorted(started - set(tagged))
+    by_key = {c.key: c for c in runs[0].checks}
+    for key in ("transcripts__row_count", "transcripts__primary_key_unique",
+                "transcripts__conv_id__referential_integrity",
+                "transcripts__role__freq_drift_psi"):
+        assert by_key[key].result.value in ("passed", "failed"), by_key[key]
