@@ -753,6 +753,7 @@ def _schema_object_checks(model: str, obj: SchemaObject, server: Optional[Server
 
         if prop.quality:
             checks.extend(_quality_list(model, field, prop.quality, server))
+        checks.extend(_malformed(model, field, _nested_malformed(prop)))
 
     if composite_pk:
         cols = [p.column for p in pk_props]
@@ -772,8 +773,38 @@ def _schema_object_checks(model: str, obj: SchemaObject, server: Optional[Server
 
     if obj.quality:
         checks.extend(_quality_list(model, None, obj.quality, server))
+    checks.extend(_malformed(model, None, obj.malformed))
 
     return checks
+
+
+def _nested_malformed(prop: Property) -> List[str]:
+    """The malformed-element labels of ``prop`` and every property nested in it."""
+    labels = list(prop.malformed)
+    for child in (prop.properties or []) + ([prop.items] if prop.items else []):
+        labels += _nested_malformed(child)
+    return labels
+
+
+def _malformed(model: str, field: Optional[str], labels: List[str]) -> List[CheckSpec]:
+    """One ``error`` check per contract list element that is not a mapping:
+    the rule or property it stood for is reported unchecked, never dropped."""
+    prefix = f"{model}__{field}" if field else model
+    return [
+        CheckSpec(
+            key=f"{prefix}__malformed_element_{i}",
+            category="quality" if " quality[" in label else "schema",
+            type="malformed_element",
+            name=f"Check that contract element {label} is a mapping",
+            model=model,
+            field=field,
+            metric=MetricType.UNSUPPORTED,
+            preset_result="error",
+            preset_reason=f"Contract element {label} is not a mapping, so it "
+                          "was not checked",
+        )
+        for i, label in enumerate(labels)
+    ]
 
 
 # ---------------------------------------------------------------------------

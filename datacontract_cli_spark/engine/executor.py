@@ -169,6 +169,16 @@ class SparkContractEngine:
         quality_id: Optional[str] = None,
         tag: Optional[str] = None,
     ) -> Run:
+        """Compile ``contract`` to checks and run them against ``tables``
+        (or the frames its server binds), returning one Run.
+
+        The independent actions of a call (the flat aggregate, uniqueness,
+        referential integrity, PSI, custom SQL, maxRunLength) run
+        concurrently, and each scans its model's frame itself. A batch
+        source must therefore stay stable for the length of the call: a
+        table appended to or rewritten meanwhile, or a frame with a
+        non-deterministic input, can give each check a different snapshot.
+        Persist such a frame before the call if its checks must agree."""
         run = Run(dataContractId=contract.id, dataContractVersion=contract.version,
                   server=server, filters=list(filters) if filters else None)
 

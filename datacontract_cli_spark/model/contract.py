@@ -75,16 +75,19 @@ class QualityRule:
         )
 
 
-def _dicts_in(v: Any, where: str) -> List[Dict[str, Any]]:
+def _dicts_in(v: Any, where: str, malformed: List[str]) -> List[Dict[str, Any]]:
     """Container-shape guard (ADVICE-1 bug class): a field that must hold a
     list of mappings may arrive as a scalar/mapping in malformed YAML.
-    None -> []; list -> its dict elements (non-dicts skipped, matching
-    _list_at); anything else -> path-labelled ValueError, never a crash."""
+    None -> []; list -> its dict elements, each other element labelled in
+    ``malformed`` (the compiler turns each label into an ``error`` check);
+    anything else -> path-labelled ValueError, never a crash."""
     if v is None:
         return []
     if not isinstance(v, list):
         raise ValueError(
             f"contract element '{where}' must be a list, got {type(v).__name__}")
+    malformed.extend(f"{where}[{i}] ({type(x).__name__})"
+                     for i, x in enumerate(v) if not isinstance(x, dict))
     return [x for x in v if isinstance(x, dict)]
 
 
@@ -119,6 +122,8 @@ class Property:
     properties: Optional[List["Property"]] = None  # object children
     items: Optional["Property"] = None  # array element
     quality: List[QualityRule] = dc_field(default_factory=list)
+    # list elements that are not mappings, as 'where[i] (type)'; see _dicts_in
+    malformed: List[str] = dc_field(default_factory=list)
 
     @property
     def column(self) -> str:
@@ -127,8 +132,10 @@ class Property:
 
     @staticmethod
     def from_dict(d: Dict[str, Any]) -> "Property":
-        children = _dicts_in(d.get("properties"), "property.properties") \
-            if d.get("properties") is not None else None
+        name = d.get("name") or ""
+        malformed: List[str] = []
+        children = _dicts_in(d.get("properties"), f"property '{name}' properties",
+                             malformed) if d.get("properties") is not None else None
         items = d.get("items")
         options = _options_dict(d.get("logicalTypeOptions"),
                                 "property.logicalTypeOptions")
@@ -141,7 +148,7 @@ class Property:
                 c.get("property"): c.get("value") for c in cp if isinstance(c, dict)
             }
         return Property(
-            name=d.get("name") or "",
+            name=name,
             logical_type=d.get("logicalType"),
             physical_type=d.get("physicalType"),
             physical_name=d.get("physicalName"),
@@ -157,8 +164,9 @@ class Property:
             options=options,
             properties=[Property.from_dict(c) for c in children] if children else None,
             items=Property.from_dict(items) if isinstance(items, dict) else None,
-            quality=[QualityRule.from_dict(q)
-                     for q in _dicts_in(d.get("quality"), "property.quality")],
+            quality=[QualityRule.from_dict(q) for q in _dicts_in(
+                d.get("quality"), f"property '{name}' quality", malformed)],
+            malformed=malformed,
         )
 
 
@@ -172,6 +180,7 @@ class SchemaObject:
     description: Optional[str] = None
     properties: List[Property] = dc_field(default_factory=list)
     quality: List[QualityRule] = dc_field(default_factory=list)
+    malformed: List[str] = dc_field(default_factory=list)  # see Property
 
     @property
     def table(self) -> str:
@@ -179,17 +188,20 @@ class SchemaObject:
 
     @staticmethod
     def from_dict(d: Dict[str, Any]) -> "SchemaObject":
+        name = d.get("name") or ""
+        malformed: List[str] = []
         return SchemaObject(
-            name=d.get("name") or "",
+            name=name,
             physical_name=d.get("physicalName"),
             business_name=d.get("businessName"),
             logical_type=d.get("logicalType") or "table",
             physical_type=d.get("physicalType"),
             description=d.get("description") if isinstance(d.get("description"), str) else None,
-            properties=[Property.from_dict(p)
-                        for p in _dicts_in(d.get("properties"), "schema.properties")],
-            quality=[QualityRule.from_dict(q)
-                     for q in _dicts_in(d.get("quality"), "schema.quality")],
+            properties=[Property.from_dict(p) for p in _dicts_in(
+                d.get("properties"), f"schema '{name}' properties", malformed)],
+            quality=[QualityRule.from_dict(q) for q in _dicts_in(
+                d.get("quality"), f"schema '{name}' quality", malformed)],
+            malformed=malformed,
         )
 
 
@@ -293,6 +305,7 @@ _DCS_TYPE_MAP = {
 
 def _convert_legacy_field(name: str, f: Dict[str, Any]) -> Property:
     """Legacy DCS field → ODCS-ish Property (reference: imports/dcs_importer.py)."""
+    malformed: List[str] = []
     options: Dict[str, Any] = {}
     for src, dst in [
         ("minLength", "minLength"),
@@ -334,7 +347,8 @@ def _convert_legacy_field(name: str, f: Dict[str, Any]) -> Property:
                     if isinstance(c, dict)] or None,
         items=_convert_legacy_field("items", items) if isinstance(items, dict) else None,
         quality=[QualityRule.from_dict(q)
-                 for q in _dicts_in(f.get("quality"), f"field '{name}' quality")],
+                 for q in _dicts_in(f.get("quality"), f"field '{name}' quality", malformed)],
+        malformed=malformed,
     )
 
 
@@ -433,13 +447,16 @@ def _from_legacy(doc: Dict[str, Any]) -> DataContract:
             raise ValueError(f"model '{model_name}' must be a mapping")
         props = [_convert_legacy_field(n, f)
                  for n, f in _dict_at(m, "fields").items() if isinstance(f, dict)]
+        malformed: List[str] = []
         schema_objects.append(
             SchemaObject(
                 name=model_name,
                 logical_type=m.get("type") or "table",
                 description=m.get("description") if isinstance(m.get("description"), str) else None,
                 properties=props,
-                quality=[QualityRule.from_dict(q) for q in _list_at(m, "quality")],
+                quality=[QualityRule.from_dict(q) for q in _dicts_in(
+                    m.get("quality"), f"model '{model_name}' quality", malformed)],
+                malformed=malformed,
             )
         )
     info = _dict_at(doc, "info")

@@ -6,7 +6,8 @@ at runtime; cores, driver heap and shuffle partitions default to this
 machine's (:func:`machine_defaults`; on a cluster partitions would be sized
 to ~2-3× total cores); session timezone is pinned UTC so
 timestamp semantics match the DuckDB oracle and the reference's naive→UTC
-localization.
+localization. A new driver JVM maps its classes from a per-user class-data
+archive, or writes one at exit (:mod:`jvm_archive`).
 """
 
 from __future__ import annotations
@@ -14,6 +15,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from datacontract_cli_spark import jvm_archive
+
+# throughput GC (heap size: see machine_defaults)
+# ReservedCodeCacheSize: a long-lived session compiling many distinct
+# queries (the bench runs ~50) generates enough bytecode to thrash the JVM's
+# default 240 MB code cache — flushing evicts hot compiled methods and
+# queries re-run interpreted/deoptimized
+# -Xlog: JVM warnings go to stderr, not stdout (which carries `--json`
+# output); the class-archive ones are dropped (jvm_archive reports its state)
+_JAVA_OPTIONS = ("-XX:+UseParallelGC -XX:ReservedCodeCacheSize=512m "
+                 "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds=off:stderr")
 
 
 def machine_defaults() -> tuple[int, str]:
@@ -55,13 +68,7 @@ def get_spark(
         # genuinely tiny partitions
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # throughput GC (heap size: see machine_defaults)
-        # ReservedCodeCacheSize: a long-lived session compiling many
-        # distinct queries (the bench runs ~50) generates enough bytecode
-        # to thrash the JVM's default 240 MB code cache — flushing evicts
-        # hot compiled methods and queries re-run interpreted/deoptimized
-        .config("spark.driver.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:ReservedCodeCacheSize=512m")
+        .config("spark.driver.extraJavaOptions", _JAVA_OPTIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory)
@@ -74,8 +81,9 @@ def get_spark(
         .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = jvm_archive.start(builder, _JAVA_OPTIONS, extra_conf)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -20,6 +20,8 @@ from datacontract_cli_spark.model.run import ResultEnum, Run
 HERE = os.path.dirname(__file__)
 REPO = os.path.dirname(HERE)
 REF_CONTRACT = "/root/reference/tests/fixtures/dbt_sync/orders.odcs.yaml"
+needs_reference = pytest.mark.skipif(not os.path.exists(REF_CONTRACT),
+                                     reason="reference fixtures not available")
 
 
 def _project(tmp_path: Path) -> Path:
@@ -54,6 +56,7 @@ def test_bound_violation_predicate_none_without_bounds():
 
 # --- generation golden on the reference fixture ------------------------------
 
+@needs_reference
 def test_generate_from_reference_fixture(tmp_path):
     contract = load_contract(REF_CONTRACT)
     run = Run()
@@ -110,6 +113,7 @@ def test_generate_from_reference_fixture(tmp_path):
     assert table_q and "SELECT COUNT(*) AS row_count FROM orders" in table_q[0].sql
 
 
+@needs_reference
 def test_write_dbt_tests_sidecar_files(tmp_path):
     contract = load_contract(REF_CONTRACT)
     proj = _project(tmp_path)
@@ -124,6 +128,7 @@ def test_write_dbt_tests_sidecar_files(tmp_path):
         assert '"include_in_tests": true' in p.read_text()
 
 
+@needs_reference
 def test_resync_removes_stale_generated_files(tmp_path):
     contract = load_contract(REF_CONTRACT)
     proj = _project(tmp_path)
@@ -145,6 +150,7 @@ def test_resync_removes_stale_generated_files(tmp_path):
     assert user.exists()               # no generated header: untouched
 
 
+@needs_reference
 def test_write_dbt_tests_requires_project(tmp_path):
     contract = load_contract(REF_CONTRACT)
     with pytest.raises(ValueError, match="dbt_project.yml"):
@@ -176,6 +182,7 @@ def _write_target(proj: Path, results, nodes):
     (target / "manifest.json").write_text(json.dumps({"nodes": nodes}))
 
 
+@needs_reference
 def test_parse_run_results(tmp_path):
     contract = load_contract(REF_CONTRACT)
     proj = _project(tmp_path)
@@ -218,6 +225,7 @@ def test_parse_run_results(tmp_path):
     assert run.result == ResultEnum.error  # worst of the three
 
 
+@needs_reference
 def test_parse_missing_run_results_warns(tmp_path):
     proj = _project(tmp_path)
     run = dbt_sync.parse_run_results_file(proj, load_contract(REF_CONTRACT))
@@ -234,6 +242,7 @@ def test_run_dbt_test_gated_on_binary(tmp_path, monkeypatch):
 
 # --- CLI ---------------------------------------------------------------------
 
+@needs_reference
 def test_cli_dbt_sync_skip_tests(tmp_path):
     proj = _project(tmp_path)
     proc = subprocess.run(
@@ -246,6 +255,7 @@ def test_cli_dbt_sync_skip_tests(tmp_path):
     assert (proj / "models" / "datacontract_cli" / "orders.yml").is_file()
 
 
+@needs_reference
 def test_cli_dbt_test_without_binary_errors(tmp_path):
     proj = _project(tmp_path)
     env = dict(os.environ, PATH=str(tmp_path))

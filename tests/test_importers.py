@@ -3,6 +3,9 @@ imports/ surface (parquet/csv/json reflection; avro + jsonschema structural
 conversion as exact inverses of our exporters)."""
 
 import json
+import os
+
+import pytest
 
 from datacontract_cli_spark import export
 from datacontract_cli_spark.engine.executor import SparkContractEngine
@@ -127,6 +130,8 @@ def test_jsonschema_roundtrip_reference_orders_fixture():
     from datacontract_cli_spark.sources.importers import import_jsonschema
 
     src = "/root/reference/tests/fixtures/import/orders.json"
+    if not os.path.exists(src):
+        pytest.skip("reference fixtures not available")
     contract = import_jsonschema(src)
     with open(src, "r", encoding="utf-8") as f:
         expected = _json.load(f)

@@ -2,6 +2,9 @@
 table JSON — validated against the reference repo's own import fixtures
 and (for dbt) its committed expected-output contract."""
 
+import os
+
+import pytest
 import yaml
 
 from datacontract_cli_spark.cli import main
@@ -12,8 +15,12 @@ DBT_EXPECTED = "/root/reference/tests/fixtures/dbt/import/expected/manifest_jaff
 BQ_SCHEMA = "/root/reference/tests/fixtures/bigquery/import/complete_table_schema.json"
 UNITY_SCHEMA = "/root/reference/tests/fixtures/databricks-unity/import/unity_table_schema.json"
 UNITY_COMPLEX = "/root/reference/tests/fixtures/databricks-unity/import/unity_table_schema_complex_types.json"
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(os.path.dirname(os.path.dirname(os.path.dirname(DBT_MANIFEST)))),
+    reason="reference fixtures not available")
 
 
+@needs_reference
 def test_dbt_manifest_matches_reference_expected_contract():
     got = importers.import_dbt_manifest_file(DBT_MANIFEST)
     expected = yaml.safe_load(open(DBT_EXPECTED))
@@ -36,6 +43,7 @@ def test_dbt_manifest_matches_reference_expected_contract():
             assert got_refs == exp_refs, (name, ep["name"])
 
 
+@needs_reference
 def test_dbt_primary_key_inference_orders():
     got = importers.import_dbt_manifest_file(DBT_MANIFEST)
     orders = {o.name: o for o in got.schema_objects}["orders"]
@@ -44,11 +52,13 @@ def test_dbt_primary_key_inference_orders():
     assert pk[0].required and pk[0].unique
 
 
+@needs_reference
 def test_dbt_node_filter():
     got = importers.import_dbt_manifest_file(DBT_MANIFEST, dbt_nodes=["orders"])
     assert [o.name for o in got.schema_objects] == ["orders"]
 
 
+@needs_reference
 def test_bigquery_schema_import():
     got = importers.import_bigquery_json_file(BQ_SCHEMA)
     [obj] = got.schema_objects
@@ -75,6 +85,7 @@ def test_bigquery_schema_import():
                               "dataset": "test_dataset"}
 
 
+@needs_reference
 def test_unity_schema_import():
     got = importers.import_unity_json_file(UNITY_SCHEMA)
     [obj] = got.schema_objects
@@ -86,6 +97,7 @@ def test_unity_schema_import():
     assert by["is_active"].logical_type == "boolean"
 
 
+@needs_reference
 def test_unity_complex_types_via_spark_type_json():
     got = importers.import_unity_json_file(UNITY_COMPLEX)
     by = {p.name: p for p in got.schema_objects[0].properties}
@@ -102,6 +114,7 @@ def test_unity_complex_types_via_spark_type_json():
     assert by["attributes"].physical_type.startswith("map<")
 
 
+@needs_reference
 def test_cli_import_round3_formats(capsys):
     for fmt, src, probe in [("dbt", DBT_MANIFEST, "jaffle"),
                             ("bigquery", BQ_SCHEMA, "BQ_Example_Table"),
@@ -117,6 +130,7 @@ ICEBERG_SIMPLE = "/root/reference/tests/fixtures/iceberg/simple_schema.json"
 ICEBERG_INVALID = "/root/reference/tests/fixtures/iceberg/invalid_schema.json"
 
 
+@needs_reference
 def test_iceberg_schema_import_nested():
     got = importers.import_iceberg_json_file(ICEBERG_NESTED, "t")
     by = {p.name: p for p in got.schema_objects[0].properties}
@@ -139,18 +153,21 @@ def test_iceberg_schema_import_nested():
     assert by["foo"].options["customProperties"]["icebergFieldId"] == 1
 
 
+@needs_reference
 def test_iceberg_identifier_fields_become_primary_keys():
     got = importers.import_iceberg_json_file(ICEBERG_SIMPLE, "s")
     [prop] = [p for p in got.schema_objects[0].properties if p.primary_key]
     assert prop.primary_key_position == 1 and prop.required
 
 
+@needs_reference
 def test_iceberg_invalid_schema_raises():
     import pytest as _pytest
     with _pytest.raises(ValueError):
         importers.import_iceberg_json_file(ICEBERG_INVALID)
 
 
+@needs_reference
 def test_cli_import_iceberg(capsys):
     rc = main(["import", "--format", "iceberg", "--source", ICEBERG_NESTED])
     assert rc == 0
@@ -160,6 +177,7 @@ def test_cli_import_iceberg(capsys):
 DBML_FIXTURE = "/root/reference/tests/fixtures/dbml/import/dbml.txt"
 
 
+@needs_reference
 def test_dbml_import_reference_fixture():
     got = importers.import_dbml_file(DBML_FIXTURE)
     assert got.name == "Orders Latest"
@@ -181,6 +199,7 @@ def test_dbml_import_reference_fixture():
         "orders.order_id"
 
 
+@needs_reference
 def test_dbml_table_filter_and_errors():
     got = importers.import_dbml_file(DBML_FIXTURE, import_tables=["line_items"])
     assert [o.name for o in got.schema_objects] == ["line_items"]
@@ -191,6 +210,7 @@ def test_dbml_table_filter_and_errors():
         importers.import_dbml("no tables here at all")
 
 
+@needs_reference
 def test_cli_import_dbml(capsys):
     rc = main(["import", "--format", "dbml", "--source", DBML_FIXTURE])
     assert rc == 0
@@ -201,6 +221,7 @@ PROTO_SAMPLE = "/root/reference/tests/fixtures/protobuf/data/sample_data.proto3.
 PROTO_NESTED = "/root/reference/tests/fixtures/protobuf/nested_imports/C.proto"
 
 
+@needs_reference
 def test_protobuf_import_matches_reference_expected():
     from datacontract_cli_spark.sources.proto_import import import_protobuf
 
@@ -233,6 +254,7 @@ def test_protobuf_import_matches_reference_expected():
         check(got[name].properties, exp[name].get("properties") or [])
 
 
+@needs_reference
 def test_protobuf_transitive_imports():
     from datacontract_cli_spark.sources.proto_import import import_protobuf
 
@@ -244,6 +266,7 @@ def test_protobuf_transitive_imports():
         ["street", "city", "country", "postal_code"]
 
 
+@needs_reference
 def test_cli_import_protobuf(capsys):
     rc = main(["import", "--format", "protobuf", "--source", PROTO_SAMPLE])
     assert rc == 0
@@ -305,6 +328,7 @@ PBIT_FIXTURE = "/root/reference/tests/fixtures/powerbi/Artificial Intelligence S
 BIM_FIXTURE = "/root/reference/tests/fixtures/powerbi/model.bim"
 
 
+@needs_reference
 def test_powerbi_pbit_import():
     from datacontract_cli_spark.sources.powerbi_import import import_powerbi_file
 
@@ -322,6 +346,7 @@ def test_powerbi_pbit_import():
     assert created.options["customProperties"]["references"] == "Case_Calendar.Date"
 
 
+@needs_reference
 def test_powerbi_bim_import_measures_and_relationships():
     from datacontract_cli_spark.sources.powerbi_import import import_powerbi_file
 
@@ -346,6 +371,7 @@ def test_powerbi_bad_files():
         import_powerbi_file("/nonexistent.bim")
 
 
+@needs_reference
 def test_cli_import_powerbi(capsys):
     rc = main(["import", "--format", "powerbi", "--source", BIM_FIXTURE])
     assert rc == 0
@@ -356,6 +382,7 @@ XLSX_FIXTURE = "/root/reference/tests/fixtures/excel/shipments-odcs.xlsx"
 XLSX_EXPECTED = "/root/reference/tests/fixtures/excel/shipments-odcs.yaml"
 
 
+@needs_reference
 def test_excel_import_matches_reference_expected():
     """The Excel template importer (stdlib SpreadsheetML reader — openpyxl
     absent) must reproduce the reference's expected contract for its own
@@ -396,6 +423,7 @@ def test_excel_import_matches_reference_expected():
     assert (sla.property, sla.value, sla.unit) == ("availability", "95%", "%")
 
 
+@needs_reference
 def test_excel_import_nested_properties():
     from datacontract_cli_spark.sources.excel_import import import_excel
 
@@ -414,6 +442,7 @@ def test_excel_import_nested_properties():
             assert g.items is not None, name
 
 
+@needs_reference
 def test_cli_import_excel(capsys):
     rc = main(["import", "--format", "excel", "--source", XLSX_FIXTURE])
     assert rc == 0

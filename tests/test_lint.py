@@ -162,6 +162,68 @@ def test_cli_lint_rejects_invalid(tmp_path):
     assert r.stdout.startswith("OK:")
 
 
+def _malformed_declared(doc) -> int:
+    """Elements that are not mappings in the quality and properties lists of
+    the (non-blob) schema objects and their properties, counted on the raw
+    document the way the loader walks it."""
+    from datacontract_cli_spark.model.contract import _is_legacy_dcs
+
+    def bad(v):
+        return sum(not isinstance(x, dict) for x in v) if isinstance(v, list) else 0
+
+    def field(f, legacy):
+        kids = f.get("fields" if legacy else "properties")
+        if legacy:
+            kids = list(kids.values()) if isinstance(kids, dict) else []
+        n = bad(f.get("quality")) + (0 if legacy else bad(kids))
+        kids = [k for k in (kids if isinstance(kids, list) else []) if isinstance(k, dict)]
+        if isinstance(f.get("items"), dict):
+            kids.append(f["items"])
+        return n + sum(field(k, legacy) for k in kids)
+
+    legacy = _is_legacy_dcs(doc)
+    if legacy:
+        models = doc["models"].values() if isinstance(doc["models"], dict) else []
+    else:
+        models = doc.get("schema") if isinstance(doc.get("schema"), list) else []
+    models = [m for m in models if isinstance(m, dict)
+              and (m.get("type" if legacy else "logicalType") or "table") != "blob"]
+    return sum(field(m, legacy) for m in models)
+
+
+def test_malformed_list_elements_become_error_checks():
+    from datacontract_cli_spark.checks.compile import compile_checks
+    from datacontract_cli_spark.model.contract import load_contract_str
+
+    specs = compile_checks(load_contract_str("""
+schema:
+  - name: t
+    quality: [oops, {type: sql, query: "select 0", mustBe: 0}]
+    properties:
+      - name: a
+        logicalType: object
+        quality: [7]
+        properties: [5, {name: c, logicalType: string, quality: [x]}]
+      - not a property
+"""))
+    errors = {sp.key: (sp.category, sp.preset_result, sp.preset_reason)
+              for sp in specs if sp.type == "malformed_element"}
+    assert errors == {
+        "t__a__malformed_element_0": ("schema", "error", "Contract element property 'a' "
+                                      "properties[0] (int) is not a mapping, so it was not checked"),
+        "t__a__malformed_element_1": ("quality", "error", "Contract element property 'a' "
+                                      "quality[0] (int) is not a mapping, so it was not checked"),
+        "t__a__malformed_element_2": ("quality", "error", "Contract element property 'c' "
+                                      "quality[0] (str) is not a mapping, so it was not checked"),
+        "t__malformed_element_0": ("schema", "error", "Contract element schema 't' "
+                                   "properties[1] (str) is not a mapping, so it was not checked"),
+        "t__malformed_element_1": ("quality", "error", "Contract element schema 't' "
+                                   "quality[0] (str) is not a mapping, so it was not checked"),
+    }
+    # the well-formed rule still compiles
+    assert any(sp.type == "model_quality_sql" for sp in specs)
+
+
 def test_loader_never_crashes_on_fuzzed_documents():
     """Shape-fuzz the loader + check compiler: arbitrary nested YAML
     documents must either load or raise a clean ValueError/TypeError —
@@ -202,11 +264,59 @@ def test_loader_never_crashes_on_fuzzed_documents():
         except Exception:
             return
         try:
-            compile_checks(load_contract_str(text))
+            specs = compile_checks(load_contract_str(text))
         except (ValueError, TypeError):
-            pass  # clean rejection
+            return  # clean rejection
+        # fail closed: every declared list element that is not a mapping is
+        # one emitted error check, never a silent drop
+        assert sum(sp.type == "malformed_element" for sp in specs) \
+            == _malformed_declared(d)
 
     run()
+
+    # the same invariant on contract-shaped documents, where malformed
+    # elements sit at every quality/properties/fields/items depth
+    scalar = st.sampled_from(["x", 3, True, None])
+    rule = st.one_of(scalar, st.fixed_dictionaries(
+        {"metric": st.sampled_from(["rowCount", "nullValues"])},
+        optional={"mustBe": st.just(0)}))
+    rules = st.lists(rule, max_size=3)
+    names = st.sampled_from(["a", "b", "c"])
+
+    def prop(children, legacy):
+        nested = (st.dictionaries(names, children, max_size=2) if legacy
+                  else st.lists(st.one_of(scalar, children), max_size=3))
+        return st.fixed_dictionaries({"name": names}, optional={
+            "fields" if legacy else "properties": nested, "items": children,
+            "quality": rules, "type" if legacy else "logicalType":
+                st.sampled_from(["string", "object", "array"])})
+
+    def model(legacy):
+        props = st.recursive(
+            st.fixed_dictionaries({"name": names}, optional={"quality": rules}),
+            lambda c: prop(c, legacy), max_leaves=6)
+        kind = st.sampled_from(["table", "blob"])
+        if legacy:
+            return st.fixed_dictionaries({}, optional={
+                "type": kind, "quality": rules,
+                "fields": st.dictionaries(names, props, max_size=3)})
+        return st.fixed_dictionaries({"name": names}, optional={
+            "logicalType": kind, "quality": rules,
+            "properties": st.lists(st.one_of(scalar, props), max_size=3)})
+
+    @settings(max_examples=150, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(d=st.one_of(
+        st.fixed_dictionaries({"schema": st.lists(st.one_of(scalar, model(False)),
+                                                  max_size=3)}),
+        st.fixed_dictionaries({"models": st.dictionaries(names, model(True),
+                                                         max_size=2)})))
+    def run_shaped(d):
+        specs = compile_checks(load_contract_str(yaml.safe_dump(d)))
+        assert sum(sp.type == "malformed_element" for sp in specs) \
+            == _malformed_declared(d)
+
+    run_shaped()
 
     # r6: scalar-at-every-container-position adversaries, run explicitly —
     # each of these container fields must reject (or ignore) a scalar with

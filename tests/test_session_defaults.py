@@ -1,17 +1,28 @@
 """get_spark sizes the local session from the machine when the
-environment names no core count or heap."""
+environment names no core count or heap, and launches a new driver JVM with
+the class-data archive flags of :mod:`jvm_archive`."""
 
+import mmap
 import os
+import subprocess
+import sys
 from types import SimpleNamespace
 
-from datacontract_cli_spark import session
+import pytest
+from pyspark import SparkContext
+
+from datacontract_cli_spark import jvm_archive, session
 
 
 class _RecordingBuilder:
-    """Stands in for SparkSession.builder: records the conf, starts no JVM."""
+    """Stands in for SparkSession.builder: records the conf and the
+    environment each launch sees, starts no JVM. ``gateway`` stands in for
+    the session's ``sparkContext._gateway``."""
 
-    def __init__(self):
+    def __init__(self, gateway=None):
         self.conf = {}
+        self.gateway = gateway
+        self.launch_envs = []
 
     def master(self, master):
         self.conf["master"] = master
@@ -25,19 +36,20 @@ class _RecordingBuilder:
         return self
 
     def getOrCreate(self):
-        return SimpleNamespace(
-            sparkContext=SimpleNamespace(setLogLevel=lambda _level: None))
+        self.launch_envs.append(dict(os.environ))
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            _gateway=self.gateway, setLogLevel=lambda _level: None))
 
 
-def _session_conf(monkeypatch, **kwargs):
-    builder = _RecordingBuilder()
+def _session_conf(monkeypatch, builder=None, **kwargs):
+    builder = builder or _RecordingBuilder()
     monkeypatch.setattr(session, "SparkSession",
                         SimpleNamespace(builder=builder))
     session.get_spark(**kwargs)
     return builder.conf
 
 
-def test_defaults_from_machine_without_env(monkeypatch):
+def test_defaults_from_machine_without_env(monkeypatch, fake_install):
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
     cores = len(os.sched_getaffinity(0))
@@ -54,10 +66,177 @@ def test_defaults_from_machine_without_env(monkeypatch):
     assert conf["spark.sql.shuffle.partitions"] == str(cores)
 
 
-def test_env_overrides_machine_defaults(monkeypatch):
+def test_env_overrides_machine_defaults(monkeypatch, fake_install):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
     conf = _session_conf(monkeypatch)
     assert conf["master"] == "local[3]"
     assert conf["spark.sql.shuffle.partitions"] == "3"
     assert conf["spark.driver.memory"] == "2g"
+
+
+# ---------------------------------------------------------------------------
+# class-data archive flags, decided before the JVM starts
+# ---------------------------------------------------------------------------
+
+@pytest.fixture
+def fake_install(tmp_path, monkeypatch):
+    """A Spark home with jars and a templates-only conf dir, a Java home
+    with a base archive, a fresh cache and no running gateway JVM."""
+    spark_home, java_home = tmp_path / "spark", tmp_path / "java"
+    for d in ("jars", "conf"):
+        (spark_home / d).mkdir(parents=True)
+    (spark_home / "jars" / "spark-core.jar").write_bytes(b"jar")
+    (spark_home / "conf" / "spark-defaults.conf.template").write_text("# x\n")
+    (java_home / "bin").mkdir(parents=True)
+    (java_home / "bin" / "java").write_text("")
+    (java_home / "lib" / "server").mkdir(parents=True)
+    for name in ("libjvm.so", "classes.jsa"):
+        (java_home / "lib" / "server" / name).write_bytes(b"jvm")
+    monkeypatch.setenv("SPARK_HOME", str(spark_home))
+    monkeypatch.setenv("JAVA_HOME", str(java_home))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for name in ("SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT", *jvm_archive._CLASSPATH_ENV):
+        monkeypatch.delenv(name, raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(jvm_archive, "state", None)
+    return SimpleNamespace(spark_home=spark_home,
+                           cache=tmp_path / "cache" / "datacontract-cli-spark")
+
+
+def _archive(fake_install):
+    return str(fake_install.cache / f"driver-{jvm_archive._key(str(fake_install.spark_home))}.jsa")
+
+
+def _this_process():
+    """A gateway whose JVM is this test process, so /proc/<pid>/maps is ours."""
+    return SimpleNamespace(proc=SimpleNamespace(pid=os.getpid()))
+
+
+def test_no_archive_dumps_one_to_a_temp_name(monkeypatch, fake_install):
+    conf = _session_conf(monkeypatch)
+    opts = conf["spark.driver.extraJavaOptions"]
+    assert opts.startswith(session._JAVA_OPTIONS)
+    assert f"-XX:ArchiveClassesAtExit={_archive(fake_install)}.{os.getpid()}.tmp" in opts
+    assert "SharedArchiveFile" not in opts
+    assert jvm_archive.state == "dumped"
+
+
+def test_archive_present_is_mapped(monkeypatch, fake_install):
+    _session_conf(monkeypatch)  # creates the cache dir
+    archive = _archive(fake_install)
+    with open(archive, "wb") as f:
+        f.write(jvm_archive._MAGIC + bytes(mmap.PAGESIZE))
+    with open(archive, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ):
+        conf = _session_conf(monkeypatch, _RecordingBuilder(_this_process()))
+    assert conf["spark.driver.extraJavaOptions"] == (
+        f"{session._JAVA_OPTIONS} -XX:SharedArchiveFile={archive}")
+    assert jvm_archive.state == "used"
+    assert os.path.exists(archive)
+
+
+def test_archive_the_jvm_did_not_map_is_deleted(monkeypatch, fake_install):
+    _session_conf(monkeypatch)
+    archive = _archive(fake_install)
+    open(archive, "wb").close()
+    _session_conf(monkeypatch, _RecordingBuilder(_this_process()))
+    assert jvm_archive.state == "rejected"
+    assert not os.path.exists(archive)
+    # the next launch dumps a new one
+    conf = _session_conf(monkeypatch)
+    assert "ArchiveClassesAtExit" in conf["spark.driver.extraJavaOptions"]
+
+
+def test_jvm_that_dies_on_its_archive_is_relaunched_dumping(monkeypatch, fake_install):
+    _session_conf(monkeypatch)
+    archive = _archive(fake_install)
+    open(archive, "wb").close()
+
+    class CrashOnArchive(_RecordingBuilder):
+        def getOrCreate(self):
+            if "SharedArchiveFile" in self.conf["spark.driver.extraJavaOptions"]:
+                raise RuntimeError("Java gateway process exited")
+            return super().getOrCreate()
+
+    conf = _session_conf(monkeypatch, CrashOnArchive())
+    assert "ArchiveClassesAtExit" in conf["spark.driver.extraJavaOptions"]
+    assert jvm_archive.state == "dumped"
+    assert not os.path.exists(archive)
+
+
+def test_templates_only_conf_dir_is_swapped_for_the_launch(monkeypatch, fake_install):
+    before = dict(os.environ)
+    builder = _RecordingBuilder()
+    _session_conf(monkeypatch, builder)
+    launch_conf = builder.launch_envs[0]["SPARK_CONF_DIR"]
+    assert launch_conf == str(fake_install.cache / "conf")
+    assert os.listdir(launch_conf) == []
+    assert dict(os.environ) == before
+
+    # a caller's own templates-only conf dir is swapped too, then restored
+    monkeypatch.setenv("SPARK_CONF_DIR", str(fake_install.spark_home / "conf"))
+    before = dict(os.environ)
+    builder = _RecordingBuilder()
+    _session_conf(monkeypatch, builder)
+    assert builder.launch_envs[0]["SPARK_CONF_DIR"] == launch_conf
+    assert dict(os.environ) == before
+
+
+def test_conf_dir_with_spark_defaults_is_skipped(monkeypatch, fake_install):
+    (fake_install.spark_home / "conf" / "spark-defaults.conf").write_text(
+        "spark.eventLog.enabled true\n")
+    before = dict(os.environ)
+    builder = _RecordingBuilder()
+    conf = _session_conf(monkeypatch, builder)
+    assert conf["spark.driver.extraJavaOptions"] == session._JAVA_OPTIONS
+    assert jvm_archive.state == "skipped"
+    assert "SPARK_CONF_DIR" not in builder.launch_envs[0]
+    assert dict(os.environ) == before
+
+
+def test_callers_driver_java_options_win(monkeypatch, fake_install):
+    conf = _session_conf(monkeypatch, extra_conf={
+        "spark.driver.extraJavaOptions": "-Dmine=1"})
+    assert conf["spark.driver.extraJavaOptions"] == "-Dmine=1"
+    assert jvm_archive.state == "skipped"
+
+
+def test_running_gateway_gets_no_new_launch(monkeypatch, fake_install):
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    conf = _session_conf(monkeypatch)
+    assert conf["spark.driver.extraJavaOptions"] == session._JAVA_OPTIONS
+    assert jvm_archive.state is None
+
+
+def _jvm_stand_in(exit_code):
+    """A child that, like the gateway JVM, exits when its stdin closes."""
+    return subprocess.Popen(
+        [sys.executable, "-c", f"import sys; sys.stdin.read(); sys.exit({exit_code})"],
+        stdin=subprocess.PIPE)
+
+
+@pytest.mark.parametrize("exit_code,header,published", [
+    (0, jvm_archive._MAGIC, True),
+    (1, jvm_archive._MAGIC, False),   # the JVM failed its dump
+    (0, bytes(4), False),             # cut off before the header was written
+])
+def test_publish_renames_only_a_complete_dump(tmp_path, exit_code, header, published):
+    archive, dump_to = str(tmp_path / "a.jsa"), str(tmp_path / "a.jsa.1.tmp")
+    with open(dump_to, "wb") as f:
+        f.write(header + b"regions")
+    jvm_archive.publish(_jvm_stand_in(exit_code), dump_to, archive)
+    assert os.path.exists(archive) == published
+    assert not os.path.exists(dump_to)
+
+
+def test_stale_dumps_of_ended_processes_are_removed(monkeypatch, fake_install):
+    _session_conf(monkeypatch)
+    archive = _archive(fake_install)
+    ended = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                           capture_output=True, text=True).stdout.strip()
+    stale, live = f"{archive}.{ended}.tmp", f"{archive}.{os.getppid()}.tmp"
+    for path in (stale, live):
+        open(path, "wb").close()
+    _session_conf(monkeypatch)
+    assert not os.path.exists(stale)
+    assert os.path.exists(live)
