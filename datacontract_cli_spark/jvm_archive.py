@@ -8,10 +8,10 @@ four archive states:
 - ``used``: a valid archive exists; the JVM maps it
   (``-XX:SharedArchiveFile``);
 - ``dumped``: no archive exists yet; this JVM writes the classes it loaded
-  to a temp file at exit (``-XX:ArchiveClassesAtExit``). When the JVM has
-  exited 0 and the file is complete, an atomic rename publishes it, so no
-  partial archive ever sits at the final path and concurrent first runs
-  are safe;
+  to a temp file at exit (``-XX:ArchiveClassesAtExit``). The process does
+  not wait for that: a detached child waits for the JVM to end and, when
+  the file is complete, publishes it with an atomic rename, so no partial
+  archive ever sits at the final path and concurrent first runs are safe;
 - ``rejected``: the JVM did not map the archive it was given
   (``-Xshare:auto`` falls back silently). The archive is deleted, so the
   next run dumps a new one;
@@ -20,11 +20,17 @@ four archive states:
   JVM already exists, or the Spark conf dir holds files Spark reads. The
   JVM refuses a non-empty directory on the class path, and the conf dir
   is on it; a conf dir holding only ``*.template`` files is swapped for an
-  empty one for the launch.
+  empty one for the launch. A process that finds no cache directory also
+  launches plain and only creates it: a dumping JVM takes ~5 s longer to
+  start and run its first query, which pays off only if the cache outlives
+  the process (not so in a throwaway home or CI runner), so the first dump
+  waits for a cache that an earlier process left.
 
 The archive lives in ``${XDG_CACHE_HOME:-~/.cache}/datacontract-cli-spark/``
 and is keyed on the Java runtime (``libjvm.so`` and its base archive) and
-the Spark jar set (names, sizes, mtimes). Deleting that directory drops it.
+the Spark jar set (names, sizes, mtimes). Each launch that maps it touches
+its mtime; archives of other keys (an older JDK or Spark) unused for 30
+days are deleted. Deleting that directory drops them all.
 """
 
 from __future__ import annotations
@@ -37,6 +43,8 @@ import logging
 import os
 import shutil
 import subprocess
+import sys
+import time
 from dataclasses import dataclass
 
 logger = logging.getLogger(__name__)
@@ -49,6 +57,7 @@ _MAGIC = b"\xa8\xab\x0b\xf0"
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 _CALLER_CONF = ("spark.driver.extraJavaOptions", "spark.driver.extraClassPath")
 _DUMP_WAIT_S = 120
+_UNUSED_S = 30 * 24 * 3600
 
 # Archive state of the driver JVM this process launched (None before a launch).
 state: str | None = None
@@ -75,25 +84,30 @@ def start(builder, java_options: str, extra_conf: dict):
     try:
         spark = _launch(builder, java_options, launch)
     except Exception:
-        if launch.state != "used":
-            raise
+        if launch.state != "used" or SparkContext._gateway is not None:
+            raise  # the JVM came up: the failure is not the archive's
         # a JVM that dies mapping its archive (a truncated one does) gets
-        # one relaunch that dumps a fresh archive
-        _remove(launch.archive)
-        launch = _plan(extra_conf)
+        # one relaunch that dumps a fresh one; if that JVM comes up, the
+        # archive was at fault
+        archive = launch.archive
+        launch = _plan(extra_conf, use_archive=False)
         spark = _launch(builder, java_options, launch)
+        _remove(archive)
     proc = getattr(spark.sparkContext._gateway, "proc", None)
     state = launch.state
     if state == "used" and not _maps(proc, launch.archive):
         _remove(launch.archive)
         state = "rejected"
+    elif state == "used":
+        with contextlib.suppress(OSError):
+            os.utime(launch.archive)  # in use: not for _remove_leftovers
     elif state == "dumped" and proc is not None:
         atexit.register(_publish_at_exit, proc, launch.dump_to, launch.archive)
     logger.info("driver JVM class archive %s: %s", state, launch.archive or "-")
     return spark
 
 
-def _plan(extra_conf: dict) -> _Launch:
+def _plan(extra_conf: dict, use_archive: bool = True) -> _Launch:
     """The archive flags and conf dir for a new driver JVM."""
     from pyspark.find_spark_home import _find_spark_home
 
@@ -106,53 +120,78 @@ def _plan(extra_conf: dict) -> _Launch:
         if _holds_conf(os.environ.get("SPARK_CONF_DIR")
                        or os.path.join(spark_home, "conf")):
             return _Launch("skipped")
-        cache = os.path.join(os.environ.get("XDG_CACHE_HOME")
-                             or os.path.expanduser("~/.cache"),
-                             "datacontract-cli-spark")
+        # canonical, as the kernel writes the archive's path in /proc/<pid>/maps
+        cache = os.path.realpath(os.path.join(os.environ.get("XDG_CACHE_HOME")
+                                              or os.path.expanduser("~/.cache"),
+                                              "datacontract-cli-spark"))
+        new_cache = not os.path.isdir(cache)
         conf_dir = os.path.join(cache, "conf")
         os.makedirs(conf_dir, exist_ok=True)
         key = _key(spark_home)
     except OSError:
         return _Launch("skipped")
-    if key is None:
+    if key is None or new_cache:
         return _Launch("skipped")
     archive = os.path.join(cache, f"driver-{key}.jsa")
-    if os.path.isfile(archive):
+    _remove_leftovers(archive)
+    if use_archive and os.path.isfile(archive):
         return _Launch("used", f"-XX:SharedArchiveFile={archive}", conf_dir, archive)
-    _remove_stale_dumps(archive)
     dump_to = f"{archive}.{os.getpid()}.tmp"
     return _Launch("dumped", f"-XX:ArchiveClassesAtExit={dump_to}", conf_dir,
                   archive, dump_to)
 
 
-def publish(proc, dump_to: str, archive: str) -> None:
-    """At interpreter exit: end the driver JVM (it exits when its stdin
-    closes), wait for its dump, and rename a complete dump to ``archive``."""
+def publish(returncode: int | None, dump_to: str, archive: str) -> None:
+    """Rename the dump of a JVM that has ended to ``archive`` if the file is
+    complete and the JVM exited 0 (``returncode`` None: not known); else
+    delete it."""
     try:
-        if proc.poll() is None:
-            if proc.stdin:
-                proc.stdin.close()
-            proc.wait(timeout=_DUMP_WAIT_S)
         with open(dump_to, "rb") as f:
             complete = f.read(len(_MAGIC)) == _MAGIC
-        if proc.returncode == 0 and complete:
+        if complete and returncode in (0, None):
             os.replace(dump_to, archive)
             logger.info("driver JVM class archive published: %s", archive)
             return
-    except (OSError, subprocess.TimeoutExpired):
+    except OSError:
         pass
     _remove(dump_to)
 
 
 def _publish_at_exit(proc, dump_to: str, archive: str) -> None:
-    """:func:`publish`, after stopping the active context: its accumulator
-    server would otherwise print an EOFError when the JVM leaves first."""
+    """At interpreter exit: end the driver JVM (it exits, and dumps, when its
+    stdin closes) and leave :func:`publish` to a detached child, so this
+    process need not wait for the dump. The active context is stopped
+    first: its accumulator server would otherwise print an EOFError when
+    the JVM leaves first."""
     from pyspark import SparkContext
 
     if SparkContext._active_spark_context is not None:
         with contextlib.suppress(Exception):
             SparkContext._active_spark_context.stop()
-    publish(proc, dump_to, archive)
+    if proc.poll() is not None:  # the caller has already ended the JVM
+        publish(proc.returncode, dump_to, archive)
+        return
+    if proc.stdin:
+        proc.stdin.close()
+    # -I: the package dir must not shadow the standard library. Without a
+    # publisher the dump stays behind until _remove_leftovers.
+    with contextlib.suppress(OSError):
+        subprocess.Popen([sys.executable, "-I", os.path.abspath(__file__),
+                          str(proc.pid), dump_to, archive],
+                         stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+                         stderr=subprocess.DEVNULL, start_new_session=True)
+
+
+def _publish_when_ended(pid: int, dump_to: str, archive: str) -> None:
+    """In the detached child: wait for JVM ``pid`` (not our child, so its
+    exit code is not known) to end, then publish its dump."""
+    deadline = time.monotonic() + _DUMP_WAIT_S
+    while _alive(pid):
+        if time.monotonic() > deadline:
+            _remove(dump_to)
+            return
+        time.sleep(0.1)
+    publish(None, dump_to, archive)
 
 
 def _launch(builder, java_options: str, launch: _Launch):
@@ -216,24 +255,41 @@ def _maps(proc, path: str) -> bool:
         return True
 
 
-def _remove_stale_dumps(archive: str) -> None:
-    """Delete dumps left by processes that ended before publishing."""
-    for path in glob.glob(glob.escape(archive) + ".*.tmp"):
-        pid = path[len(archive) + 1:-len(".tmp")]
-        if pid.isdigit() and not _alive(int(pid)):
+def _remove_leftovers(archive: str) -> None:
+    """Delete, next to ``archive``, dumps that no one will publish (their
+    process has ended and they are older than a publisher waits) and
+    archives of other keys unused for ``_UNUSED_S``."""
+    now = time.time()
+    for path in glob.glob(os.path.join(glob.escape(os.path.dirname(archive)), "driver-*")):
+        try:
+            age = now - os.stat(path).st_mtime
+        except OSError:
+            continue
+        if path.endswith(".tmp"):
+            pid = path[:-len(".tmp")].rpartition(".")[2]
+            if age > _DUMP_WAIT_S and pid.isdigit() and not _alive(int(pid)):
+                _remove(path)
+        elif path != archive and age > _UNUSED_S:
             _remove(path)
 
 
 def _alive(pid: int) -> bool:
+    """Whether process ``pid`` runs (a zombie has ended)."""
     try:
         os.kill(pid, 0)
     except ProcessLookupError:
         return False
     except PermissionError:
         pass
+    with contextlib.suppress(OSError), open(f"/proc/{pid}/stat") as f:
+        return f.read().rpartition(")")[2].split()[0] != "Z"
     return True
 
 
 def _remove(path: str) -> None:
     with contextlib.suppress(OSError):
         os.remove(path)
+
+
+if __name__ == "__main__":
+    _publish_when_ended(int(sys.argv[1]), sys.argv[2], sys.argv[3])
