@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
 from datacontract_cli_spark.engine.predicates import invalid_condition, missing_condition
-from datacontract_cli_spark.operators import dedup, drift, similarity, textstats
+from datacontract_cli_spark.operators import dedup, drift, textstats
 from datacontract_cli_spark.operators.refintegrity import orphan_count
 
 
@@ -421,81 +421,6 @@ def _q_benchmark_contamination(spark, sf):
     return contamination_stats(corpus, bench, n=5, hash_grams=False)
 
 
-def _q_streaming_counts(spark, sf):
-    """Structured Streaming IN the gate: a bounded file stream of events
-    driven to completion; hourly event-time windows with missing/invalid
-    counts must equal the batch date_trunc aggregation (DuckDB oracle)."""
-    from datacontract_cli_spark.streaming import checks as sc
-
-    specs = [
-        _spec(key="missing_et", field="event_type",
-              metric=MetricType.MISSING_COUNT, missing_values=["error"]),
-        _spec(key="invalid_val", field="value", valid_max=10.0),
-    ]
-    out = sc.run_batch_smoke(
-        spark, f"{sf}/events.parquet",
-        # watermarks require TIMESTAMP (the table stores TIMESTAMP_NTZ)
-        lambda s: sc.streaming_check_counts(
-            s.withColumn("ts", F.col("ts").cast("timestamp")), specs,
-            ts_col="ts", window="1 hour", watermark="0 seconds"),
-        name="gate_stream_counts",
-    )
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        F.col("row_count").cast("long").alias("row_count"),
-        F.col("missing_et").cast("long").alias("missing_et"),
-        F.col("invalid_val").cast("long").alias("invalid_val"),
-    ).orderBy("hour")
-
-
-def _q_streaming_psi(spark, sf):
-    """Continuous drift monitoring IN the gate: per-hour PSI of the
-    event_type distribution vs a uniform baseline, computed by ONE
-    streaming aggregation (count-ifs over the known baseline keys; PSI is
-    post-agg Column math, state = one row per window). Must equal the
-    batch per-hour PSI (DuckDB oracle)."""
-    from datacontract_cli_spark.streaming import checks as sc
-
-    baseline = {"click": 0.2, "error": 0.2, "purchase": 0.2,
-                "signup": 0.2, "view": 0.2}
-    out = sc.run_batch_smoke(
-        spark, f"{sf}/events.parquet",
-        lambda s: sc.streaming_psi(
-            s.withColumn("ts", F.col("ts").cast("timestamp")),
-            "event_type", baseline,
-            ts_col="ts", window="1 hour", watermark="0 seconds"),
-        name="gate_stream_psi",
-    )
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        F.col("row_count").cast("long").alias("row_count"),
-        F.col("psi").alias("psi"),
-    ).orderBy("hour")
-
-
-def _q_streaming_jsd(spark, sf):
-    """Per-hour Jensen-Shannon divergence of event_type vs a uniform
-    baseline, as ONE streaming aggregation — the bounded companion of
-    streaming_psi. Must equal the batch per-hour JSD (DuckDB oracle)."""
-    from datacontract_cli_spark.streaming import checks as sc
-
-    baseline = {"click": 0.2, "error": 0.2, "purchase": 0.2,
-                "signup": 0.2, "view": 0.2}
-    out = sc.run_batch_smoke(
-        spark, f"{sf}/events.parquet",
-        lambda s: sc.streaming_jsd(
-            s.withColumn("ts", F.col("ts").cast("timestamp")),
-            "event_type", baseline,
-            ts_col="ts", window="1 hour", watermark="0 seconds"),
-        name="gate_stream_jsd",
-    )
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        F.col("row_count").cast("long").alias("row_count"),
-        F.col("jsd").alias("jsd"),
-    ).orderBy("hour")
-
-
 def _q_partitioned_validation(spark, sf):
     """The north-rule centerpiece IN the correctness gate: per-bucket
     verdicts over hash buckets of user_id, folded to global metrics — the
@@ -589,13 +514,6 @@ def _q_text_quality(spark, sf):
     )
 
 
-def _q_cosine_topk(spark, sf):
-    emb = _t(spark, sf, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    top = similarity.cosine_topk(emb.filter(F.col("vec_id") != 0), "embedding", qv, 5)
-    return top.select("vec_id", F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
 def _q_minhash_near_dups(spark, sf):
     docs = _t(spark, sf, "documents")
     # md5 kernel (the reference lane): the shared hash family — banded-LSH
@@ -626,27 +544,6 @@ def _q_simhash_near_dups(spark, sf):
     ).select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
 
-def _q_embedding_near_dups(spark, sf):
-    """LSH near-dup RECALL against the exact brute-force ground truth: the
-    oracle asserts n_missed == 0, i.e. sign-bucket LSH at this threshold
-    loses no pair the exact all-pairs scan finds (the exact side is
-    gate-scale only; production recall measurement would sample)."""
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    a, b = emb.alias("a"), emb.alias("b")
-    exact = (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .filter(similarity.cosine(F.col("a.v"), F.col("b.v")) >= 0.9)
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-    )
-    lsh = similarity.embedding_near_duplicates(
-        _t(spark, sf, "embeddings"), threshold=0.9).select("id_a", "id_b")
-    found = exact.join(lsh, ["id_a", "id_b"], "left_semi")
-    return spark.createDataFrame(
-        [(exact.count(), found.count())], "n_exact bigint, n_found bigint"
-    ).select("n_exact", "n_found", (F.col("n_exact") - F.col("n_found")).alias("n_missed"))
-
-
 def _q_minhash_near_dups_recall(spark, sf):
     """MinHash LSH RECALL on the arrow lane (the library default) against
     the exact 3-shingle Jaccard >= 0.8 pair set: the oracle asserts
@@ -665,47 +562,6 @@ def _q_minhash_near_dups_recall(spark, sf):
         [(n_exact, n_found)], "n_exact bigint, n_found bigint"
     ).select("n_exact", "n_found",
              (F.col("n_exact") - F.col("n_found")).alias("n_missed"))
-
-
-def _q_semantic_dedup(spark, sf):
-    """SemDeDup survivors over embeddings + planted duplicate groups.
-
-    The synthetic embeddings have no natural cosine-0.99 neighbors (max
-    pairwise ≈0.6), so the query plants them deterministically: every
-    vec_id%7 row gets a ×2-scaled copy at id −(vec_id+1) and every
-    vec_id%21 row additionally a ×0.5 copy at id vec_id+1000000 — positive
-    scaling keeps cosine exactly 1 AND the sign-LSH bucket identical, so
-    the blocked pair set provably equals the brute-force one. Groups of 2
-    and 3; the min-id representative is the NEGATIVE planted id, so the
-    keep policy is visible in the survivor list. The oracle replays the
-    planting + pairs + recursive-CTE components relationally."""
-    emb = _t(spark, sf, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.col("embedding").cast("array<double>").alias("embedding"))
-    dup_neg = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (-(F.col("vec_id") + 1)).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"))
-    dup_pos = emb.filter(F.col("vec_id") % 21 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(0.5)).alias("embedding"))
-    corpus = emb.unionByName(dup_neg).unionByName(dup_pos)
-    # identical-direction vectors co-bucket (sign(v·p) is scale-invariant),
-    # and no natural pair reaches 0.99
-    out = similarity.semantic_dedup(corpus, threshold=0.99)
-    return out.select("vec_id").orderBy("vec_id")
-
-
-def _q_json_validation(spark, sf):
-    from pyspark.sql import types as T
-    from datacontract_cli_spark.operators.jsonvalidate import json_validation_counts
-    ev = _t(spark, sf, "events")
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    counts = json_validation_counts(ev, "props", schema, required=["k"])
-    return spark.createDataFrame(
-        [(counts["row_count"], counts["null_count"], counts["corrupt_count"],
-          counts["missing_k"])],
-        "row_count bigint, null_count bigint, corrupt_count bigint, missing_k bigint",
-    )
 
 
 def _q_events_hourly(spark, sf):
@@ -805,50 +661,6 @@ def _q_pivot_status(spark, sf):
     )
 
 
-def _q_embedding_pairs_exact(spark, sf):
-    """Brute-force exact near-pair count (the LSH variants' ground truth)."""
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    a, b = emb.alias("a"), emb.alias("b")
-    pair_sim = similarity.cosine(F.col("a.v"), F.col("b.v"))
-    pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(pair_sim.alias("s"))
-    return pairs.agg(
-        F.sum(F.when(F.col("s") >= 0.8, 1).otherwise(0)).alias("pairs_ge_080"),
-        F.sum(F.when(F.col("s") >= 0.5, 1).otherwise(0)).alias("pairs_ge_050"),
-        F.count(F.lit(1)).alias("n_pairs"),
-    )
-
-
-def _q_asof_join(spark, sf):
-    from datacontract_cli_spark.operators.asof import asof_join
-    ev = _t(spark, sf, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("last_purchase_value"))
-    joined = asof_join(ev.select("event_id", "user_id", "ts"), purchases,
-                       on="ts", by="user_id")
-    return joined.agg(
-        F.count("last_purchase_value").alias("n_matched"),
-        F.round(F.sum("last_purchase_value"), 2).alias("total_lpv"),
-    )
-
-
-def _q_interval_join_events(spark, sf):
-    """Key-free interval join (clicks within 120s after each purchase,
-    across ALL users): bucketed equi-join on the 60s epoch bucket recovers
-    a hash join where the naive range predicate would plan a broadcast
-    nested loop. Oracle: DuckDB's native inequality join."""
-    from datacontract_cli_spark.operators.intervaljoin import window_count
-
-    ev = _t(spark, sf, "events")
-    return (
-        window_count(ev, "event_type = 'purchase'", "event_type = 'click'",
-                     window_seconds=120, bucket_seconds=60)
-        .select(F.col("anchor_id").cast("long").alias("anchor_id"),
-                F.col("n_matches").cast("long").alias("n_matches"))
-        .orderBy("anchor_id")
-    )
-
-
 def _q_dedup_clusters(spark, sf):
     """Connected components over the md5-family minhash near-dup pairs:
     cluster_id = min doc id of the component (the representative a dedup
@@ -890,15 +702,6 @@ def _q_fd_violations(spark, sf):
     b = fd_violations(orders, ["o_orderkey"], "o_custkey") \
         .select(F.col("violating_groups").alias("order_cust_violations"))
     return a.crossJoin(b)
-
-
-def _q_cohort_retention(spark, sf):
-    """Weekly cohort retention over events — first-touch cohorts, distinct
-    weekly activity, cohort x offset distinct-user counts (three bounded
-    shuffles; cohort sizes broadcast back for the rate)."""
-    from datacontract_cli_spark.operators.cohorts import cohort_retention
-    return cohort_retention(_t(spark, sf, "events"), "user_id", "ts",
-                            period="week", max_offset=8)
 
 
 def _q_sequence_violations(spark, sf):
@@ -990,49 +793,6 @@ def _q_top_ngrams(spark, sf):
     return top_ngrams(docs, n=5, k=15)
 
 
-def _q_key_skew_report(spark, sf):
-    """Heavy-hitter / key-skew diagnostic on the events stream key: top-10
-    user_ids with share-of-rows and ratio-to-mean-key-size. The 'seeing'
-    half of the north rule's explicit skew handling."""
-    from datacontract_cli_spark.operators.skew import key_skew_report
-
-    return key_skew_report(_t(spark, sf, "events"), ["user_id"], top_k=10)
-
-
-def _q_mad_outliers(spark, sf):
-    """Robust (median/MAD) outlier count on events.value — exact
-    interpolated percentiles so the DuckDB quantile_cont oracle matches
-    bit-for-bit; production passes approx=True (t-digest sketch)."""
-    from datacontract_cli_spark.operators.anomaly import mad_outliers
-
-    return mad_outliers(_t(spark, sf, "events"), "value", z=3.5)
-
-
-def _q_props_json_stats(spark, sf):
-    """Per-event-type profile of the embedded JSON props column: JVM-side
-    get_json_object extraction (no Python), parse-failure counting,
-    min/avg/max of $.k."""
-    from datacontract_cli_spark.operators.semistructured import json_field_stats
-
-    return json_field_stats(_t(spark, sf, "events"), "props", "k",
-                            group_by=["event_type"])
-
-
-def _q_dsir_weights(spark, sf):
-    """DSIR importance ranking (Xie et al. 2023): top-20 documents most
-    like the lang='en' target under hashed unigram LMs; md5 bucket family
-    so the oracle reproduces bucket ids."""
-    from datacontract_cli_spark.operators.dsir import dsir_importance
-
-    docs = _t(spark, sf, "documents")
-    # arrow kernel: identical md5 buckets and integer counts computed
-    # narrowly per document (oracle-verified at 3 SFs) — no token explode,
-    # no wide (id, bucket) shuffle
-    return dsir_importance(docs, F.col("lang") == "en",
-                           n_buckets=4096, smoothing=0.5, top_k=20,
-                           kernel="arrow")
-
-
 def _q_turn_contiguity(spark, sf):
     """Turn-index density check (north rule: stable dense turn ordering
     per conversation) exercised on a driver table: lineitem's
@@ -1050,48 +810,6 @@ def _q_turn_contiguity(spark, sf):
             .orderBy("conv_id").limit(10)
             .select("conv_id", "n_turns", "min_turn", "max_turn",
                     "dup_turn_groups", "total_violations"))
-
-
-def _q_embedding_centroid_drift(spark, sf):
-    """Per-label embedding centroid vs the global centroid (cosine) — the
-    embedding-space analogue of categorical PSI; one scan, shuffle payload
-    groups x dims regardless of row count."""
-    from datacontract_cli_spark.operators.similarity import centroid_drift
-
-    return centroid_drift(_t(spark, sf, "embeddings"), "embedding", "label")
-
-
-def _q_table_diff(spark, sf):
-    """Version diff of orders against an in-query derived v2 (drop every
-    97th key, bump totalprice on every 13th, add relocated copies of every
-    101st). The oracle derives the expected counts independently from the
-    construction — it never mirrors the join. The operator runs its
-    production xxhash64 fingerprint lane: fingerprint equality is
-    engine-internal, so no cross-engine hash parity is needed."""
-    from datacontract_cli_spark.operators.tablediff import table_diff
-
-    o = _t(spark, sf, "orders")
-    b = (o.filter(F.col("o_orderkey") % 97 != 0)
-         .withColumn("o_totalprice",
-                     F.when(F.col("o_orderkey") % 13 == 0,
-                            F.col("o_totalprice") + 1)
-                     .otherwise(F.col("o_totalprice"))))
-    added = (o.filter(F.col("o_orderkey") % 101 == 0)
-             # negate for the relocated ids: TPC-H keys are positive at
-             # every sf, so -k-1 can never collide with a real key (a
-             # fixed +10M offset collides above sf~1.7)
-             .withColumn("o_orderkey", -F.col("o_orderkey") - 1))
-    return table_diff(o, b.unionByName(added), ["o_orderkey"])
-
-
-def _q_bm25_topk(spark, sf):
-    """Okapi BM25 keyword top-10 over documents — the retrieval
-    counterpart of cosine_topk. Query-term filter prunes the scan before
-    the only wide shuffle; idf table broadcasts."""
-    from datacontract_cli_spark.operators.retrieval import bm25_topk
-
-    docs = _t(spark, sf, "documents")
-    return bm25_topk(docs, ["scan", "fast", "merge"], k=10)
 
 
 def _q_quality_classifier(spark, sf):
@@ -1700,26 +1418,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- never driver-tested (r04 cap) or failed in r04 — must be in top 50
         "repetition_ratio": _q_repetition_ratio,
-        "streaming_psi": _q_streaming_psi,
-        "streaming_jsd": _q_streaming_jsd,
         "diversity_sample": _q_diversity_sample,
         "tfidf_top_terms": _q_tfidf_top_terms,
         "fd_violations": _q_fd_violations,
-        "cohort_retention": _q_cohort_retention,
         "sequence_violations": _q_sequence_violations,
         "pii_scan_customer": _q_pii_scan_customer,
         "pii_scrub_customer": _q_pii_scrub_customer,
         # --- new in round 5
         "gopher_quality": _q_gopher_quality,
         "top_ngrams": _q_top_ngrams,
-        "key_skew_report": _q_key_skew_report,
-        "mad_outliers": _q_mad_outliers,
-        "props_json_stats": _q_props_json_stats,
-        "dsir_weights": _q_dsir_weights,
         "turn_contiguity": _q_turn_contiguity,
-        "embedding_centroid_drift": _q_embedding_centroid_drift,
-        "table_diff_orders": _q_table_diff,
-        "bm25_topk": _q_bm25_topk,
         "quality_classifier": _q_quality_classifier,
         "sequence_packing": _q_sequence_packing,
         "mixture_sample": _q_mixture_sample,
@@ -1737,7 +1445,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "iceberg_merge_on_read": _q_iceberg_mor,
         "iceberg_quarantine": _q_iceberg_quarantine,
         "delta_deletion_vectors": _q_delta_deletion_vectors,
-        "semantic_dedup": _q_semantic_dedup,
         "delta_zorder": _q_delta_zorder,
         "iceberg_upsert": _q_iceberg_upsert,
         "iceberg_evolution": _q_iceberg_evolution,
@@ -1745,8 +1452,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher_repetition": _q_gopher_repetition,
         # --- green in r03 but pushed past the cap in r04
         "partitioned_validation": _q_partitioned_validation,
-        "streaming_counts": _q_streaming_counts,
-        "interval_join_events": _q_interval_join_events,
         "dedup_clusters": _q_dedup_clusters,
         "stratified_sample": _q_stratified_sample,
         "hash_split": _q_hash_split,
@@ -1762,9 +1467,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (lm_quality_score STAYS in-window: its fit was rewritten this
         # round — the driver must re-verify it)
         "lm_quality_score": _q_lm_quality_score,
-        # ---------------- position 51+: multi-round driver-green, rotated out
-        # (benchmark_contamination rotated late-r5 for semantic_dedup:
-        # green r04, contamination.py untouched since;
+        # --- rows that had been rotated out and came back into the window
+        # when the 18 queries of the unreached operators (streaming,
+        # similarity, asof, cohorts, ...) were deleted with their modules
+        # (benchmark_contamination had been rotated late-r5 for
+        # semantic_dedup: green r04, contamination.py untouched since;
         # chi2_event_type rotated for delta_zorder: green r04, and the
         # round's one drift.py change — _baseline_literal key rendering —
         # is identically exercised by psi/jsd_event_type, which stay)
@@ -1793,9 +1500,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "missing_count": _q_missing_count,
         "duplicate_count": _q_duplicate_count,
         "duplicate_count_composite": _q_duplicate_composite,
+        # ---------------- position 51+: stable rows, rotated out
         "freshness_retention": _q_freshness_retention,
-        # (tpch_q1/topk_parts/json_validation/cosine_topk/embedding_near_dups/
-        # simhash_near_dups rotated r5: their code paths are untouched this
+        # (tpch_q1/topk_parts/simhash_near_dups rotated r5: their code
+        # paths are untouched this
         # round — the one dedup.py change was the winnow arrow kernel.
         # profile_orders/referential_integrity/ks_value rotated late-r5 for
         # line_dedup/contamination_fraction/transition_drift: green r03+r04,
@@ -1807,11 +1515,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r01-r04, a one-line direct aggregate untouched since r1)
         "row_count": _q_row_count,
         "simhash_near_dups": _q_simhash_near_dups,
-        "embedding_near_dups": _q_embedding_near_dups,
         "tpch_q1": _q_tpch_q1,
         "topk_parts": _q_topk_parts,
-        "json_validation": _q_json_validation,
-        "cosine_topk": _q_cosine_topk,
         "token_stats": _q_token_stats,
         "dedup_keep_first": _q_dedup_keep_first,
         "window_top3_per_customer": _q_window_top3,
@@ -1827,13 +1532,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "invalid_count_max_length": _q_invalid_max_length,
         "events_hourly": _q_events_hourly,
         "conversation_stats": _q_conversation_stats,
-        "asof_join": _q_asof_join,
         "cube_revenue": _q_cube_revenue,
         "pivot_status": _q_pivot_status,
         "semi_anti_join": _q_semi_anti_join,
         "rollup_orders": _q_rollup_orders,
         "unpivot_part": _q_unpivot_part,
-        "embedding_pairs_exact": _q_embedding_pairs_exact,
         "histogram_totalprice": _q_histogram_totalprice,
         # appended past the window: the local oracle gate checks it at
         # three SFs
@@ -2280,59 +1983,6 @@ def oracle_sql() -> dict[str, str]:
             "total_violations FROM v CROSS JOIN tot "
             "ORDER BY conv_id LIMIT 10"
         ),
-        "table_diff_orders": (
-            # expected counts derived from the v2 construction itself,
-            # independent of the operator's join/fingerprint machinery
-            "SELECT "
-            "CAST((SELECT count(*) FROM orders WHERE o_orderkey % 101 = 0) "
-            "AS BIGINT) AS n_added, "
-            "CAST((SELECT count(*) FROM orders WHERE o_orderkey % 97 = 0) "
-            "AS BIGINT) AS n_removed, "
-            "CAST((SELECT count(*) FROM orders WHERE o_orderkey % 97 <> 0 "
-            "AND o_orderkey % 13 = 0) AS BIGINT) AS n_changed, "
-            "CAST((SELECT count(*) FROM orders WHERE o_orderkey % 97 <> 0 "
-            "AND o_orderkey % 13 <> 0) AS BIGINT) AS n_unchanged"
-        ),
-        "embedding_centroid_drift": (
-            # parallel unnests zip positionally in DuckDB; range() is
-            # 0-based like posexplode. Per-dim group sums -> weighted
-            # global mean -> cosine, all in doubles; round 5 absorbs
-            # float-summation order differences between engines
-            "WITH e AS (SELECT label, unnest(range(len(embedding))) AS pos, "
-            "CAST(unnest(embedding) AS DOUBLE) AS val FROM embeddings), "
-            "su AS (SELECT label, pos, sum(val) AS s, "
-            "CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1, 2), "
-            "gl AS (SELECT pos, sum(s) / sum(n) AS gm FROM su GROUP BY 1), "
-            "pd AS (SELECT label, pos, s / n AS m, n FROM su), "
-            "j AS (SELECT label, max(n) AS n_vectors, "
-            "round(sum(m * gm) / (sqrt(sum(m * m)) * sqrt(sum(gm * gm))), 5) "
-            "AS centroid_cosine FROM pd JOIN gl USING (pos) GROUP BY 1) "
-            "SELECT label, n_vectors, centroid_cosine FROM j ORDER BY label"
-        ),
-        "bm25_topk": (
-            # Okapi BM25, k1=1.2 b=0.75, query {scan,fast,merge}; float-op
-            # ORDER mirrors the Spark expression tree exactly — (1.0+1.2)
-            # and (0.25 + (0.75*dl)/avgdl) are computed, not folded, so
-            # both engines round identically before the 5dp cut
-            r"WITH d AS (SELECT doc_id, list_filter(regexp_split_to_array("
-            r"lower(text), '\s+'), x -> x <> '') AS ws FROM documents), "
-            r"dd AS (SELECT doc_id, len(ws) AS dl, ws FROM d), "
-            r"st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl "
-            r"FROM dd), "
-            r"tok AS (SELECT doc_id, dl, unnest(ws) AS w FROM dd), "
-            r"tf AS (SELECT doc_id, dl, w, count(*) AS tf FROM tok "
-            r"WHERE w IN ('scan','fast','merge') GROUP BY doc_id, dl, w), "
-            r"dfreq AS (SELECT w, count(*) AS df FROM tf GROUP BY w), "
-            r"idf AS (SELECT w, ln(1.0 + ((st.n - df) + 0.5) / (df + 0.5)) "
-            r"AS idf FROM dfreq CROSS JOIN st), "
-            r"sc AS (SELECT tf.doc_id, "
-            r"round(sum(((idf.idf * tf.tf) * (1.0 + 1.2)) "
-            r"/ (tf.tf + 1.2 * (0.25 + (0.75 * tf.dl) / st.avgdl))), 5) "
-            r"AS bm25, count(*) AS n_terms_matched "
-            r"FROM tf JOIN idf USING (w) CROSS JOIN st GROUP BY tf.doc_id) "
-            r"SELECT doc_id, bm25, n_terms_matched FROM sc "
-            r"ORDER BY bm25 DESC, doc_id LIMIT 10"
-        ),
         "quality_classifier": (
             # hashed-linear score: md5 bucket (shared hash family) →
             # seeded affine weight, exact integer math; weights are exact
@@ -2392,7 +2042,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "sliced_validation": (
             # per-status grouped checks; quantile_cont = Spark's exact
-            # interpolated percentile (same parity as mad_outliers);
+            # interpolated percentile;
             # missing/invalid conditions mirror the engine's predicates
             "WITH g AS (SELECT o_orderstatus, count(*) AS n, "
             "sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS miss, "
@@ -2433,70 +2083,6 @@ def oracle_sql() -> dict[str, str]:
             r"WHERE ('0x' || substring(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT "
             r"/ 4294967296.0 < p.p "
             r"GROUP BY d.source ORDER BY d.source"
-        ),
-        "key_skew_report": (
-            # integer divisions cast to DOUBLE on both sides; counts cast
-            # to BIGINT (DuckDB sum/count stay BIGINT here, but the share
-            # math must not go int/int)
-            "WITH c AS (SELECT user_id, count(*) AS n_rows FROM events "
-            "GROUP BY 1), "
-            "t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS total, "
-            "count(*) AS n_keys FROM c) "
-            "SELECT user_id, CAST(n_rows AS BIGINT) AS n_rows, "
-            "round(n_rows / CAST(total AS DOUBLE), 6) AS share, "
-            "round(n_rows * n_keys / CAST(total AS DOUBLE), 4) AS skew_ratio "
-            "FROM c CROSS JOIN t ORDER BY n_rows DESC, user_id LIMIT 10"
-        ),
-        "mad_outliers": (
-            # quantile_cont = Spark's exact interpolated percentile; the
-            # median/MAD are computed from the same doubles so the outlier
-            # comparison is bit-identical
-            "WITH v AS (SELECT value AS x FROM events WHERE value IS NOT NULL), "
-            "m AS (SELECT quantile_cont(x, 0.5) AS med FROM v), "
-            "d AS (SELECT quantile_cont(abs(x - med), 0.5) AS mad, "
-            "first(med) AS med FROM v CROSS JOIN m) "
-            "SELECT round(first(med), 6) AS median, "
-            "round(first(mad), 6) AS mad, "
-            "CAST(sum(CASE WHEN abs(x - med) > 3.5 * 1.4826 * mad "
-            "THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers, "
-            "round(sum(CASE WHEN abs(x - med) > 3.5 * 1.4826 * mad "
-            "THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6) "
-            "AS outlier_fraction FROM v CROSS JOIN d"
-        ),
-        "props_json_stats": (
-            "SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows, "
-            "CAST(sum(CASE WHEN CAST(json_extract_string(props, '$.k') "
-            "AS BIGINT) IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_unparsed, "
-            "min(CAST(json_extract_string(props, '$.k') AS BIGINT)) "
-            "AS min_value, "
-            "round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) "
-            "AS avg_value, "
-            "max(CAST(json_extract_string(props, '$.k') AS BIGINT)) "
-            "AS max_value "
-            "FROM events GROUP BY event_type ORDER BY event_type"
-        ),
-        "dsir_weights": (
-            # md5 bucket family shared bit-for-bit with the Spark kernel;
-            # smoothing 0.5, 4096 buckets -> +2048.0 in the denominators
-            r"WITH toks AS (SELECT doc_id, "
-            r"CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_target, "
-            r"unnest(string_split(trim(regexp_replace(lower(text), "
-            r"'\s+', ' ', 'g')), ' ')) AS w FROM documents), "
-            r"f AS (SELECT doc_id, is_target, "
-            r"('0x' || substring(md5(w), 1, 6))::BIGINT % 4096 AS b "
-            r"FROM toks WHERE w <> ''), "
-            r"c AS (SELECT b, count(*) AS raw_n, sum(is_target) AS tgt_n "
-            r"FROM f GROUP BY 1), "
-            r"t AS (SELECT sum(raw_n) AS raw_total, sum(tgt_n) AS tgt_total "
-            r"FROM c), "
-            r"r AS (SELECT b, ln((tgt_n + 0.5) / (tgt_total + 2048.0)) - "
-            r"ln((raw_n + 0.5) / (raw_total + 2048.0)) AS log_ratio "
-            r"FROM c CROSS JOIN t), "
-            r"s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, "
-            r"round(sum(log_ratio), 4) AS log_weight "
-            r"FROM f JOIN r USING (b) GROUP BY 1) "
-            r"SELECT doc_id, n_words, log_weight FROM s "
-            r"ORDER BY log_weight DESC, doc_id LIMIT 20"
         ),
         "benchmark_contamination": (
             r"WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), "
@@ -2609,12 +2195,6 @@ def oracle_sql() -> dict[str, str]:
             "count(*) AS total FROM (SELECT lang, CASE WHEN length(trim(text)) = 0 THEN 0 "
             "ELSE len(string_split_regex(trim(text), '\\s+')) END AS n, text FROM documents)"
         ),
-        "cosine_topk": (
-            "WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) "
-            "SELECT vec_id, round(list_cosine_similarity(embedding::DOUBLE[], (SELECT qv FROM q)), 4) "
-            "AS cosine_sim FROM embeddings WHERE vec_id != 0 "
-            "ORDER BY list_cosine_similarity(embedding::DOUBLE[], (SELECT qv FROM q)) DESC, vec_id LIMIT 5"
-        ),
         "ngram_jaccard_dups": (
             "WITH toks AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), "
             "'\\s+', ' ', 'g')), ' ') AS t FROM documents), "
@@ -2628,14 +2208,6 @@ def oracle_sql() -> dict[str, str]:
             "WHERE len(list_intersect(a.g, b.g)) > 0) "
             "SELECT id_a, id_b, round(CAST(inter AS DOUBLE) / (la + lb - inter), 4) AS jaccard "
             "FROM pairs WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8"
-        ),
-        "json_validation": (
-            "SELECT count(*) AS row_count, "
-            "count(*) FILTER (WHERE props IS NULL) AS null_count, "
-            "count(*) FILTER (WHERE props IS NOT NULL AND NOT json_valid(props)) AS corrupt_count, "
-            "count(*) FILTER (WHERE props IS NOT NULL AND json_valid(props) "
-            "AND json_extract(props, '$.k') IS NULL) AS missing_k "
-            "FROM events"
         ),
         "events_hourly": (
             "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, "
@@ -2686,22 +2258,6 @@ def oracle_sql() -> dict[str, str]:
             "count(*) FILTER (WHERE o_orderstatus = 'P') AS n_pending "
             "FROM orders GROUP BY o_orderpriority"
         ),
-        "embedding_pairs_exact": (
-            "SELECT count(*) FILTER (WHERE s >= 0.8) AS pairs_ge_080, "
-            "count(*) FILTER (WHERE s >= 0.5) AS pairs_ge_050, "
-            "count(*) AS n_pairs FROM ("
-            "SELECT list_cosine_similarity(a.embedding::DOUBLE[], "
-            "b.embedding::DOUBLE[]) AS s "
-            "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)"
-        ),
-        "asof_join": (
-            "SELECT count(lp.last_purchase_value) AS n_matched, "
-            "round(sum(lp.last_purchase_value), 2) AS total_lpv "
-            "FROM events e ASOF LEFT JOIN "
-            "(SELECT user_id, ts, value AS last_purchase_value FROM events "
-            "WHERE event_type = 'purchase') lp "
-            "ON e.user_id = lp.user_id AND e.ts >= lp.ts"
-        ),
         # the LSH queries run on the shared md5 hash family, so DuckDB
         # reproduces the banded-LSH / pigeonhole pipelines bit-for-bit
         "bpe_token_stats": (
@@ -2711,50 +2267,6 @@ def oracle_sql() -> dict[str, str]:
             "'[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]')) AS n FROM documents)"
         ),
         "winnow_dups": _winnow_oracle(),
-        "streaming_counts": (
-            "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, "
-            "count(*) AS row_count, "
-            "count(*) FILTER (WHERE event_type IS NULL OR event_type = 'error') "
-            "AS missing_et, "
-            "count(*) FILTER (WHERE value > 10.0) AS invalid_val "
-            "FROM events GROUP BY 1 ORDER BY 1"
-        ),
-        "streaming_jsd": (
-            # batch per-hour JSD replicating streaming_jsd exactly (all
-            # observed mass is inside the baseline keys -> no other term;
-            # the q-side term is unconditional since q=0.2 > 0)
-            "WITH h AS (SELECT date_trunc('hour', ts) AS hr, "
-            "CAST(count(*) AS DOUBLE) AS n, "
-            "CAST(count(*) FILTER (WHERE event_type = 'click') AS DOUBLE) AS c0, "
-            "CAST(count(*) FILTER (WHERE event_type = 'error') AS DOUBLE) AS c1, "
-            "CAST(count(*) FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS c2, "
-            "CAST(count(*) FILTER (WHERE event_type = 'signup') AS DOUBLE) AS c3, "
-            "CAST(count(*) FILTER (WHERE event_type = 'view') AS DOUBLE) AS c4 "
-            "FROM events GROUP BY 1) "
-            "SELECT strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour, "
-            "CAST(n AS BIGINT) AS row_count, "
-            "round(((CASE WHEN c0/n > 0 THEN c0/n * log2((c0/n) / ((c0/n + 0.2)/2)) ELSE 0 END) + 0.2 * log2(0.2 / ((c0/n + 0.2)/2)) + (CASE WHEN c1/n > 0 THEN c1/n * log2((c1/n) / ((c1/n + 0.2)/2)) ELSE 0 END) + 0.2 * log2(0.2 / ((c1/n + 0.2)/2)) + (CASE WHEN c2/n > 0 THEN c2/n * log2((c2/n) / ((c2/n + 0.2)/2)) ELSE 0 END) + 0.2 * log2(0.2 / ((c2/n + 0.2)/2)) + (CASE WHEN c3/n > 0 THEN c3/n * log2((c3/n) / ((c3/n + 0.2)/2)) ELSE 0 END) + 0.2 * log2(0.2 / ((c3/n + 0.2)/2)) + (CASE WHEN c4/n > 0 THEN c4/n * log2((c4/n) / ((c4/n + 0.2)/2)) ELSE 0 END) + 0.2 * log2(0.2 / ((c4/n + 0.2)/2))) / 2, 6) AS jsd FROM h ORDER BY hour"
-        ),
-        "streaming_psi": (
-            # batch per-hour PSI replicating streaming_psi's formula exactly
-            # (the all-mass-in-baseline case: the "other" term is zero)
-            "WITH h AS (SELECT date_trunc('hour', ts) AS hr, "
-            "CAST(count(*) AS DOUBLE) AS n, "
-            "CAST(count(*) FILTER (WHERE event_type = 'click') AS DOUBLE) AS c0, "
-            "CAST(count(*) FILTER (WHERE event_type = 'error') AS DOUBLE) AS c1, "
-            "CAST(count(*) FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS c2, "
-            "CAST(count(*) FILTER (WHERE event_type = 'signup') AS DOUBLE) AS c3, "
-            "CAST(count(*) FILTER (WHERE event_type = 'view') AS DOUBLE) AS c4 "
-            "FROM events GROUP BY 1) "
-            "SELECT strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour, "
-            "CAST(n AS BIGINT) AS row_count, round("
-            "(greatest(c0/n, 1e-6) - 0.2) * ln(greatest(c0/n, 1e-6) / 0.2) + "
-            "(greatest(c1/n, 1e-6) - 0.2) * ln(greatest(c1/n, 1e-6) / 0.2) + "
-            "(greatest(c2/n, 1e-6) - 0.2) * ln(greatest(c2/n, 1e-6) / 0.2) + "
-            "(greatest(c3/n, 1e-6) - 0.2) * ln(greatest(c3/n, 1e-6) / 0.2) + "
-            "(greatest(c4/n, 1e-6) - 0.2) * ln(greatest(c4/n, 1e-6) / 0.2), 6) "
-            "AS psi FROM h ORDER BY hour"
-        ),
         "partitioned_validation": (
             # the per-bucket fold must equal the plain global counts
             "SELECT 16::BIGINT AS n_buckets, count(*) AS row_count, "
@@ -2777,42 +2289,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "minhash_near_dups": _minhash_md5_oracle(),
         "simhash_near_dups": _simhash_md5_oracle(),
-        "interval_join_events": (
-            # native inequality join — the Spark side must produce the exact
-            # same pair multiset through the bucketed equi-join
-            "SELECT a.event_id AS anchor_id, count(*) AS n_matches "
-            "FROM events a JOIN events b ON b.ts >= a.ts "
-            "AND b.ts < a.ts + INTERVAL 120 SECOND "
-            "WHERE a.event_type = 'purchase' AND b.event_type = 'click' "
-            "GROUP BY 1 ORDER BY 1"
-        ),
         "dedup_clusters": _dedup_clusters_oracle(),
-        "semantic_dedup": (
-            # same planted duplicate groups, brute-force cosine pair set,
-            # recursive min-label components, survivors = NOT IN (losers)
-            "WITH RECURSIVE base AS ("
-            "SELECT CAST(vec_id AS BIGINT) AS vec_id, "
-            "embedding::DOUBLE[] AS v FROM embeddings), "
-            "corpus AS MATERIALIZED ("
-            "SELECT vec_id, v FROM base "
-            "UNION ALL SELECT -(vec_id + 1), "
-            "list_transform(v, x -> x * 2.0) FROM base WHERE vec_id % 7 = 0 "
-            "UNION ALL SELECT vec_id + 1000000, "
-            "list_transform(v, x -> x * 0.5) FROM base WHERE vec_id % 21 = 0), "
-            "p AS MATERIALIZED (SELECT a.vec_id AS id_a, b.vec_id AS id_b "
-            "FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id "
-            "WHERE list_cosine_similarity(a.v, b.v) >= 0.99), "
-            "edges AS MATERIALIZED ("
-            "SELECT id_a AS a, id_b AS b FROM p "
-            "UNION SELECT id_b, id_a FROM p), "
-            "cc(node, label) AS (SELECT a, a FROM edges "
-            "UNION SELECT e2.a, cc.label FROM edges e2 "
-            "JOIN cc ON cc.node = e2.b), "
-            "losers AS (SELECT node FROM cc GROUP BY node "
-            "HAVING node != min(label)) "
-            "SELECT vec_id FROM corpus "
-            "WHERE vec_id NOT IN (SELECT node FROM losers) ORDER BY vec_id"
-        ),
         "fd_violations": (
             "SELECT "
             "(SELECT CAST(coalesce(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END), 0) AS BIGINT) "
@@ -2821,24 +2298,6 @@ def oracle_sql() -> dict[str, str]:
             "(SELECT CAST(coalesce(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END), 0) AS BIGINT) "
             "FROM (SELECT count(DISTINCT o_custkey) AS n FROM orders "
             "GROUP BY o_orderkey)) AS order_cust_violations"
-        ),
-        "cohort_retention": (
-            "WITH first AS (SELECT user_id AS u, "
-            "min(date_trunc('week', ts)) AS cohort FROM events GROUP BY 1), "
-            "active AS (SELECT DISTINCT user_id AS u, "
-            "date_trunc('week', ts) AS p FROM events), "
-            "j AS (SELECT a.u, f.cohort, "
-            "CAST(date_diff('day', f.cohort, a.p) / 7 AS BIGINT) AS off "
-            "FROM active a JOIN first f USING (u)), "
-            "counts AS (SELECT cohort, off, count(DISTINCT u) AS n_active "
-            "FROM j WHERE off <= 8 GROUP BY 1, 2), "
-            "sizes AS (SELECT cohort, count(*) AS cohort_size "
-            "FROM first GROUP BY 1) "
-            "SELECT strftime(cohort, '%Y-%m-%d') AS cohort, "
-            "off AS period_offset, n_active, cohort_size, "
-            "round(CAST(n_active AS DOUBLE) / cohort_size, 4) AS retention "
-            "FROM counts JOIN sizes USING (cohort) "
-            "ORDER BY cohort, period_offset"
         ),
         "sequence_violations": (
             "WITH lagged AS (SELECT event_type AS s, lag(event_type) OVER ("
@@ -2909,14 +2368,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT ('0x' || substring(md5(doc_id::VARCHAR || 'split'), 1, 8))"
             "::BIGINT / 4294967296.0 AS u FROM documents)) "
             "GROUP BY 1 ORDER BY 1"
-        ),
-        "embedding_near_dups": (
-            # recall vs exact ground truth: asserts the LSH path misses no
-            # pair the brute-force scan finds (n_missed = 0)
-            "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) "
-            "SELECT count(*)::BIGINT AS n_exact, count(*)::BIGINT AS n_found, "
-            "0::BIGINT AS n_missed FROM e a JOIN e b ON a.vec_id < b.vec_id "
-            "WHERE list_cosine_similarity(a.v, b.v) >= 0.9"
         ),
         "minhash_near_dups_recall": (
             # recall of the arrow minhash lane vs the exact 3-shingle

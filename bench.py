@@ -33,14 +33,12 @@ BENCH_QUERIES = [
     "sessionization",
     "token_stats",
     "minhash_near_dups",
-    "cosine_topk",
     "dedup_exact",
     # round-2 additions (r01 keys above stay 1:1 comparable)
     "winnow_dups",
     "bpe_token_stats",
     "simhash_near_dups",
     # round-3 additions
-    "interval_join_events",
     "stratified_sample",
     "hash_split",
     # round-4 additions
@@ -49,16 +47,10 @@ BENCH_QUERIES = [
     "benchmark_contamination",
     "lm_quality_score",
     "tfidf_top_terms",
-    "cohort_retention",
     "fd_violations",
     # round-5 additions
     "gopher_quality",
     "top_ngrams",
-    "key_skew_report",
-    "mad_outliers",
-    "props_json_stats",
-    "dsir_weights",
-    "bm25_topk",
     "quality_classifier",
     "sequence_packing",
     "mixture_sample",
@@ -71,7 +63,6 @@ BENCH_QUERIES = [
     "agent_loops",
     "error_followup",
     "ks_by_event_type",
-    "semantic_dedup",
 ]
 
 TRANSCRIPT_CONVS = int(os.environ.get("BENCH_TRANSCRIPT_CONVS", "1000000"))
@@ -110,8 +101,8 @@ def main() -> None:
 
     # Each query names its lane as a literal in __spark_entry__.py: the LSH
     # and contamination leaves time the oracle-checked reference lanes
-    # (md5 / raw grams), the embedding, DSIR and classifier leaves the
-    # arrow kernels. No environment variable selects a lane.
+    # (md5 / raw grams), the classifier leaf the arrow kernel. No
+    # environment variable selects a lane.
 
     import __spark_entry__ as entry_mod
     from datacontract_cli_spark.session import get_spark, machine_defaults

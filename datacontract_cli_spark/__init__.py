@@ -11,7 +11,7 @@ reference's result model (reference: datacontract/model/run.py).
 Beyond the reference, the engine adds referential-integrity checks,
 distribution-drift checks (PSI, exact KS), per-partition
 verdicts with checkpoint/resume, and a library of large-scale training-data
-operators (dedup, similarity search, text stats) under
+operators (dedup, decontamination, text stats) under
 ``datacontract_cli_spark.operators``.
 """
 

@@ -786,14 +786,18 @@ def _nested_malformed(prop: Property) -> List[str]:
     return labels
 
 
-def _malformed(model: str, field: Optional[str], labels: List[str]) -> List[CheckSpec]:
+def _malformed(model: Optional[str], field: Optional[str],
+               labels: List[str]) -> List[CheckSpec]:
     """One ``error`` check per contract list element that is not a mapping:
-    the rule or property it stood for is reported unchecked, never dropped."""
-    prefix = f"{model}__{field}" if field else model
+    the rule or property it stood for is reported unchecked, never dropped.
+    ``model`` is None for elements of the top-level lists."""
+    prefix = f"{model}__{field}" if field else model or "contract"
     return [
         CheckSpec(
             key=f"{prefix}__malformed_element_{i}",
-            category="quality" if " quality[" in label else "schema",
+            category=("quality" if " quality[" in label
+                      else "servicelevel" if label.startswith("slaProperties[")
+                      else "schema"),
             type="malformed_element",
             name=f"Check that contract element {label} is a mapping",
             model=model,
@@ -965,4 +969,5 @@ def compile_checks(contract: DataContract, server: Optional[Server] = None,
         checks.extend(_schema_object_checks(obj.table, obj, server))
     if schema_name == "all":
         checks.extend(_sla_checks(contract))
+    checks.extend(_malformed(None, None, contract.malformed))
     return _dedupe_keys(checks)

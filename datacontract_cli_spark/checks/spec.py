@@ -124,7 +124,7 @@ class CheckSpec:
     category: str  # schema | quality | servicelevel | custom
     type: str  # stable type string, e.g. "field_required"
     name: str
-    model: str
+    model: Optional[str]  # None: a contract-level check (no table)
     metric: MetricType
     field: Optional[str] = None
     threshold: Optional[Threshold] = None

@@ -13,7 +13,7 @@ through one code path.
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import Optional, Tuple
 
 from datacontract_cli_spark.model.contract import Property
 
@@ -129,10 +129,6 @@ def spark_type_to_property(name: str, dt) -> Property:
     simple = dt.simpleString()  # e.g. "bigint", "decimal(10,2)", "timestamp_ntz"
     category = normalize_type_name(simple)
     return Property(name=name, logical_type=category, physical_type=simple)
-
-
-def dataframe_schema_properties(df) -> List[Property]:
-    return [spark_type_to_property(f.name, f.dataType) for f in df.schema.fields]
 
 
 # ---------------------------------------------------------------------------

@@ -236,7 +236,11 @@ class SparkContractEngine:
 
         by_model: Dict[str, List[CheckSpec]] = {}
         for spec in specs:
-            by_model.setdefault(spec.model, []).append(spec)
+            if spec.model is None:  # contract-level verdicts read no table
+                run.set_result(spec.key, ResultEnum(spec.preset_result),
+                               spec.preset_reason)
+            else:
+                by_model.setdefault(spec.model, []).append(spec)
 
         futures = []
         with ThreadPoolExecutor(max_workers=_ACTION_POOL_WIDTH,

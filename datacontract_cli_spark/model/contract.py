@@ -258,6 +258,9 @@ class DataContract:
     schema_objects: List[SchemaObject] = dc_field(default_factory=list)
     servers: List[Server] = dc_field(default_factory=list)
     sla_properties: List[SLAProperty] = dc_field(default_factory=list)
+    # elements of the top-level schema/servers/slaProperties lists that are
+    # not mappings; see Property
+    malformed: List[str] = dc_field(default_factory=list)
 
     def schema_object(self, name: str) -> Optional[SchemaObject]:
         lowered = name.lower()
@@ -431,15 +434,6 @@ def _dict_at(doc: Dict[str, Any], key: str) -> Dict[str, Any]:
     return v
 
 
-def _list_at(doc: Dict[str, Any], key: str) -> List[Any]:
-    v = doc.get(key)
-    if v is None:
-        return []
-    if not isinstance(v, list):
-        raise ValueError(f"contract element '{key}' must be a list, got {type(v).__name__}")
-    return [x for x in v if isinstance(x, dict)]
-
-
 def _from_legacy(doc: Dict[str, Any]) -> DataContract:
     schema_objects = []
     for model_name, m in _dict_at(doc, "models").items():
@@ -486,15 +480,20 @@ def _from_odcs(doc: Dict[str, Any]) -> DataContract:
         desc = desc.get("purpose")
     team = doc.get("team")
     owner = team.get("name") if isinstance(team, dict) else None
+    malformed: List[str] = []
     return DataContract(
         id=doc.get("id"),
         version=doc.get("version"),
         name=doc.get("name"),
         description=desc if isinstance(desc, str) else None,
         owner=owner,
-        schema_objects=[SchemaObject.from_dict(s) for s in _list_at(doc, "schema")],
-        servers=[Server.from_dict(s) for s in _list_at(doc, "servers")],
-        sla_properties=[SLAProperty.from_dict(s) for s in _list_at(doc, "slaProperties")],
+        schema_objects=[SchemaObject.from_dict(s)
+                        for s in _dicts_in(doc.get("schema"), "schema", malformed)],
+        servers=[Server.from_dict(s)
+                 for s in _dicts_in(doc.get("servers"), "servers", malformed)],
+        sla_properties=[SLAProperty.from_dict(s) for s in _dicts_in(
+            doc.get("slaProperties"), "slaProperties", malformed)],
+        malformed=malformed,
     )
 
 

@@ -15,7 +15,6 @@ re-expressed as DataFrame ops:
 - winnow:   k-gram hashes → per-window minima → inverted-index pair join
 - n-gram Jaccard: exact verification on candidate pairs (explode + join
             co-partitioned on doc id)
-- embedding cosine near-dup: see operators/similarity.py
 
 Lanes. Each LSH operator has exactly two signature lanes, chosen by its
 ``kernel=`` / ``hash_family=`` argument; any other value raises
@@ -273,7 +272,10 @@ def minhash_candidates(
     mapInPandas; kernel="md5": pure Column kernel on the shared md5 hash
     family — output reproducible bit-for-bit by an external SQL oracle
     (band keys are then the raw signature-slice strings, not a hash of
-    them, so no engine-specific hash touches the result)."""
+    them, so no engine-specific hash touches the result).
+
+    The returned frame is persisted and already materialized: the caller
+    owns that cache and must ``unpersist()`` it when done."""
     if kernel not in ("arrow", "md5"):
         raise ValueError(f"unknown minhash kernel {kernel!r}; "
                          "expected 'arrow' or 'md5'")
@@ -377,6 +379,8 @@ def minhash_near_duplicates(
     threshold: float = 0.8,
     **kwargs,
 ) -> DataFrame:
+    """:func:`minhash_candidates` with ``est_jaccard >= threshold``; the
+    caller owns the persisted result and must ``unpersist()`` it."""
     return minhash_candidates(df, id_col, text_col, threshold=threshold,
                               **kwargs)
 
@@ -562,7 +566,10 @@ def simhash_near_duplicates(
     over 4 words is exhaustive). Candidates block on each word; the
     exact hamming distance filters them. hash_family="arrow" (default) is
     the vectorized numpy kernel; "md5" the oracle-reproducible 60-bit
-    Column fingerprint."""
+    Column fingerprint.
+
+    The returned frame is persisted and already materialized: the caller
+    owns that cache and must ``unpersist()`` it when done."""
     if hash_family not in ("arrow", "md5"):
         raise ValueError(f"unknown simhash hash_family {hash_family!r}; "
                          "expected 'arrow' or 'md5'")
@@ -808,7 +815,11 @@ def connected_components(
     O(diameter), the same doubling idea as the large-star/small-star
     formulation (Kiveris et al., SoCC'14). Each round is two shuffle-by-key
     joins + a groupBy; labels persist per round and the previous round
-    unpersists, so peak storage is two label tables."""
+    unpersists, so peak storage is two label tables.
+
+    On both paths (single-task union-find and distributed rounds) the
+    returned frame is persisted and already materialized: the caller owns
+    that cache and must ``unpersist()`` it when done."""
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = (
         edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))

@@ -84,9 +84,7 @@ def sign_bucket(vec_col: Column, nbits: int = 8) -> Column:
     The canonical-basis special case of random-hyperplane LSH — nearby
     vectors (cosine) land in nearby buckets, and unlike random planes the
     bucket is a pure function of the vector, reproducible in ANY engine
-    (no plane constants to ship). The coarse-but-auditable lane; use
-    ``similarity.RandomHyperplaneLSH`` when bucket quality matters more
-    than cross-engine reproducibility."""
+    (no plane constants to ship)."""
     bucket = F.lit(0).cast("long")
     for i in range(nbits):
         bit = (F.element_at(vec_col, i + 1) > 0).cast("long")

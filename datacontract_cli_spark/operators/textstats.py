@@ -1,5 +1,4 @@
-"""Text analysis operators: token counts, quality scoring, language ID,
-document fingerprinting.
+"""Text analysis operators: token counts, quality scoring, language ID.
 
 Everything is built from ``pyspark.sql.functions`` Column expressions —
 whole-stage-codegen'd, zero Python on the executors. Each function returns
@@ -8,7 +7,7 @@ either a Column (composable into any select) or a DataFrame transformer.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -50,14 +49,6 @@ def upper_ratio(col: Column) -> Column:
     total = F.length(F.regexp_replace(col, r"[^A-Za-z]", ""))
     uppers = F.length(F.regexp_replace(col, r"[^A-Z]", ""))
     return F.when(total > 0, uppers / total).otherwise(F.lit(0.0))
-
-
-def mean_word_length(col: Column) -> Column:
-    toks = F.split(F.trim(col), r"\s+")
-    total_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.when(F.size(toks) > 0, total_len / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def stopword_ratio(col: Column, lang: str = "en") -> Column:
@@ -109,28 +100,6 @@ def _argmax_lang(scores: Column, default: str) -> Column:
 def detect_language(col: Column, default: str = "und") -> Column:
     """Argmax of the stopword scores; 'und' when nothing matches."""
     return _argmax_lang(language_scores(col), default)
-
-
-def doc_fingerprint(col: Column) -> Column:
-    """64-bit rolling-hash-style fingerprint of the normalized document."""
-    return F.xxhash64(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """All per-document stats in one projection (single scan, codegen'd)."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        F.length(c).alias("n_chars_computed"),
-        whitespace_token_count(c).alias("n_tokens"),
-        regex_token_count(c).alias("n_tokens_bpe"),
-        punct_ratio(c).alias("punct_ratio"),
-        upper_ratio(c).alias("upper_ratio"),
-        stopword_ratio(c).alias("stopword_ratio"),
-        quality_score(c).alias("quality_score"),
-        detect_language(c).alias("lang_pred"),
-        doc_fingerprint(c).alias("fingerprint"),
-    )
 
 
 # Character-trigram profiles per language (tiny, illustrative set — the

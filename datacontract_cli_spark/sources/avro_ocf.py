@@ -25,7 +25,7 @@ import io
 import json
 import os
 import zlib
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Tuple
 
 from datacontract_cli_spark.sources.kafka_avro import (
     _read_long,
@@ -84,12 +84,6 @@ def read_ocf(source: "bytes | str") -> Tuple[Any, List[Dict[str, Any]]]:
         if buf.read(16) != sync:
             raise ValueError("Avro sync marker mismatch (corrupt block)")
     return schema, records
-
-
-def iter_ocf(source: "bytes | str") -> Iterator[Dict[str, Any]]:
-    """Streaming convenience over :func:`read_ocf`."""
-    _, records = read_ocf(source)
-    yield from records
 
 
 def write_ocf(path: Optional[str], schema: Any,

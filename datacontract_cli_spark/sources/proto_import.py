@@ -90,12 +90,6 @@ _FIELD_RE = re.compile(
     r"([A-Za-z_][\w.]*(?:\s*<[^>]*>)?)\s+(\w+)\s*=\s*\d+", re.MULTILINE)
 
 
-class _ProtoFile:
-    def __init__(self, messages: Dict[str, str], top_level: List[str]):
-        self.messages = messages      # simple name -> body
-        self.top_level = top_level    # message names declared at file level
-
-
 def _parse_file(text: str, messages: Dict[str, str],
                 enums: Dict[str, Dict[str, int]]) -> List[str]:
     """Register all messages/enums (recursively); return top-level message

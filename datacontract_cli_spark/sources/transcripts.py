@@ -120,8 +120,3 @@ def synthesize_transcripts(
         )
 
     return out
-
-
-def conversations_dim(transcripts: DataFrame) -> DataFrame:
-    """Distinct conv_ids — the 'parent' side for referential-integrity checks."""
-    return transcripts.select("conv_id").distinct()

@@ -1,8 +1,4 @@
-"""engine.test_partitioned: Run-shaped per-partition validation + IVF ANN."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
+"""engine.test_partitioned: Run-shaped per-partition validation."""
 
 from datacontract_cli_spark.engine.executor import SparkContractEngine
 from datacontract_cli_spark.model.contract import load_contract
@@ -34,20 +30,3 @@ def test_test_partitioned_matches_global(spark, tmp_path):
     assert all(c.diagnostics["failed_buckets"] for c in failed
                if c.type in ("field_required",))
     assert prun.result is ResultEnum.failed
-
-
-def test_ivf_topk(spark):
-    from datacontract_cli_spark.operators.similarity import IVFIndex, cosine_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    qv = [float(x) for x in emb.filter("vec_id = 7").first()["embedding"]]
-    ivf = IVFIndex(n_cells=8, seed=42).fit(emb, "embedding")
-    assigned = ivf.assign(emb, "embedding").persist()
-    assert assigned.count() == emb.count()
-    top = ivf.topk(assigned, qv, k=5, nprobe=2).collect()
-    assert top[0]["vec_id"] == 7  # the identical vector is found
-    assert top[0]["cosine_sim"] == pytest.approx(1.0, abs=1e-9)
-    # recall vs brute force at nprobe=4
-    brute = {r["vec_id"] for r in cosine_topk(emb, "embedding", qv, 5).collect()}
-    approx = {r["vec_id"] for r in ivf.topk(assigned, qv, k=5, nprobe=4).collect()}
-    assert len(brute & approx) >= 3

@@ -21,7 +21,12 @@ import __spark_entry__ as entry_mod
 # the same code path (the r5 exceptions: jsd_event_type/chi2_event_type —
 # the psi lane twin; benchmark_contamination — the contamination_fraction
 # twin). Every rotated row additionally stays covered by the local
-# 97-query oracle gate at three SFs.
+# oracle gate (every query) at three SFs. Rows that came back into the
+# window when the unreached operators' queries were deleted with their
+# modules (psi/jsd/chi2_event_type, benchmark_contamination, row_filter,
+# violation_samples, minhash_near_dups, ngram_jaccard_dups, dedup_exact,
+# percent_failed, missing_count, duplicate_count,
+# duplicate_count_composite) left this set.
 ROTATED = {
     "join_revenue_by_nation", "sessionization",
     "bpe_token_stats", "winnow_dups", "window_top3_per_customer",
@@ -29,21 +34,11 @@ ROTATED = {
     "lang_freq", "text_quality_filter",
     "invalid_count_enum", "invalid_count_range", "invalid_count_regex",
     "invalid_count_max_length", "events_hourly", "conversation_stats",
-    "asof_join", "cube_revenue", "pivot_status", "semi_anti_join",
-    "rollup_orders", "unpivot_part", "embedding_pairs_exact",
+    "cube_revenue", "pivot_status", "semi_anti_join",
+    "rollup_orders", "unpivot_part",
     "histogram_totalprice",
     # rotated r5 (green r03+r04; code paths untouched this round)
-    "tpch_q1", "topk_parts", "json_validation", "cosine_topk",
-    "embedding_near_dups", "simhash_near_dups",
-    # rotated late-r5 for semantic_dedup / delta_zorder (green r04;
-    # chi2's one touched lane, _baseline_literal, is covered by psi/jsd)
-    "benchmark_contamination", "chi2_event_type",
-    # rotated late-r5 for iceberg_upsert / iceberg_evolution (green
-    # r01-r04; the round's executor change is off their path)
-    "row_filter", "violation_samples",
-    # rotated late-r5 for collapse_lines / gopher_repetition (green
-    # r03+r04; the drift-lane fix is locally gate-verified at 3 SFs)
-    "jsd_event_type", "psi_event_type",
+    "tpch_q1", "topk_parts", "simhash_near_dups",
     # rotated late-r5 for line_dedup/contamination_fraction/
     # transition_drift (green r03+r04; profile.py, refintegrity.py and the
     # drift ks lane are untouched this round)
@@ -51,23 +46,9 @@ ROTATED = {
     # rotated late-r5 for tool_args_validation (green r01-r04; a one-line
     # direct aggregate untouched since round 1)
     "row_count",
-    # rotated late-r5 for agent_loops/error_followup/ks_by_event_type
-    # (green r03+r04, dedup_exact r01-r04; the only dedup.py edits this
-    # round were in the winnowing/simhash lanes)
-    "minhash_near_dups", "ngram_jaccard_dups", "dedup_exact",
-    # rotated late-r5 for iceberg_scan_documents/delta_time_travel
-    # (green r01-r04; the missing/duplicate predicate+agg lanes are
-    # untouched this round)
-    "missing_count", "duplicate_count",
-    # rotated late-r5 for iceberg_merge_on_read (green r01-r04; the
-    # composite-PK compile/layout lane is untouched this round)
-    "duplicate_count_composite",
     # rotated late-r5 for iceberg_quarantine (green r01-r04; the
     # freshness/retention agg lane is untouched this round)
     "freshness_retention",
-    # rotated late-r5 for delta_deletion_vectors (green r01-r04; the
-    # percent-threshold agg lane is untouched this round)
-    "percent_failed",
     # appended past the window: recall of the arrow minhash lane, checked
     # by the local oracle gate at three SFs; its md5 twin
     # minhash_near_dups and the in-window dedup_clusters cover the banding

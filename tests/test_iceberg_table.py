@@ -295,26 +295,6 @@ def test_import_cli_table_dir(table, tmp_path, capsys):
     assert "conv_id" in names and "ts" in names
 
 
-def test_diff_snapshots(spark, tmp_path):
-    """table_diff between two snapshots of the SAME table: appended
-    conversations surface as added rows, nothing removed/changed."""
-    from datacontract_cli_spark.operators.tablediff import diff_snapshots
-
-    root = str(tmp_path / "diff")
-    df1 = synthesize_transcripts(spark, n_convs=6, turns_per_conv=3)
-    df2 = synthesize_transcripts(spark, n_convs=2, turns_per_conv=3,
-                                 seed=21).withColumn(
-        "conv_id", F.concat(F.lit("x-"), F.col("conv_id")))
-    write_iceberg_table(df1, root, partition_by=["role"])
-    append_iceberg(df2, root)
-    row = diff_snapshots(spark, root, 1, None,
-                         keys=["conv_id", "turn_idx"]).collect()[0]
-    # appended convs have fresh conv_ids -> pure adds
-    n_new_keys = df2.select("conv_id", "turn_idx").distinct().count()
-    assert row["n_added"] == n_new_keys
-    assert row["n_removed"] == 0 and row["n_changed"] == 0
-
-
 def test_scan_keeps_catalyst_pushdown(spark, table):
     """The metadata plane is Python, but the DATA plane must stay fully
     Catalyst: filters push into the parquet scan of the planned files and

@@ -3,9 +3,7 @@ operator's lane set raises ValueError instead of silently running some
 other lane."""
 
 import pytest
-from pyspark.sql import functions as F
-
-from datacontract_cli_spark.operators import classifier, dedup, dsir, spans
+from datacontract_cli_spark.operators import classifier, dedup, spans
 
 _CASES = {
     "minhash": lambda df: dedup.minhash_near_duplicates(
@@ -16,8 +14,6 @@ _CASES = {
         df, "doc_id", hash_family="xxhash64"),
     "spans": lambda df: spans.duplicate_spans(
         df, "doc_id", hash_family="MD5"),
-    "dsir": lambda df: dsir.dsir_importance(
-        df, F.col("doc_id") == 1, kernel="sha9"),
     "classifier": lambda df: classifier.quality_scores(
         df, "doc_id", kernel="arow"),
 }

@@ -163,8 +163,9 @@ def test_cli_lint_rejects_invalid(tmp_path):
 
 
 def _malformed_declared(doc) -> int:
-    """Elements that are not mappings in the quality and properties lists of
-    the (non-blob) schema objects and their properties, counted on the raw
+    """Elements that are not mappings in the top-level schema, servers and
+    slaProperties lists and in the quality and properties lists of the
+    (non-blob) schema objects and their properties, counted on the raw
     document the way the loader walks it."""
     from datacontract_cli_spark.model.contract import _is_legacy_dcs
 
@@ -188,7 +189,9 @@ def _malformed_declared(doc) -> int:
         models = doc.get("schema") if isinstance(doc.get("schema"), list) else []
     models = [m for m in models if isinstance(m, dict)
               and (m.get("type" if legacy else "logicalType") or "table") != "blob"]
-    return sum(field(m, legacy) for m in models)
+    top = 0 if legacy else sum(bad(doc.get(k))
+                               for k in ("schema", "servers", "slaProperties"))
+    return top + sum(field(m, legacy) for m in models)
 
 
 def test_malformed_list_elements_become_error_checks():
@@ -222,6 +225,39 @@ schema:
     }
     # the well-formed rule still compiles
     assert any(sp.type == "model_quality_sql" for sp in specs)
+
+
+def test_malformed_top_level_elements_become_error_checks(spark):
+    from datacontract_cli_spark.checks.compile import compile_checks
+    from datacontract_cli_spark.engine.executor import SparkContractEngine
+    from datacontract_cli_spark.model.contract import load_contract_str
+
+    contract = load_contract_str("""
+schema: [oops, {name: t, properties: [{name: a, required: true}]}]
+servers: [7]
+slaProperties: [[retention], {property: retention, value: 1y}]
+""")
+    errors = {sp.key: (sp.category, sp.model, sp.preset_reason)
+              for sp in compile_checks(contract) if sp.type == "malformed_element"}
+    assert errors == {
+        "contract__malformed_element_0": ("schema", None, "Contract element "
+                                          "schema[0] (str) is not a mapping, so it was not checked"),
+        "contract__malformed_element_1": ("schema", None, "Contract element "
+                                          "servers[0] (int) is not a mapping, so it was not checked"),
+        "contract__malformed_element_2": ("servicelevel", None, "Contract element "
+                                          "slaProperties[0] (list) is not a mapping, so it was not "
+                                          "checked"),
+    }
+    # a filtered compile still reports them: they belong to no schema object
+    assert sum(sp.type == "malformed_element"
+               for sp in compile_checks(contract, schema_name="t")) == 3
+    # the engine reports them without a table, next to the checks that ran
+    run = SparkContractEngine(spark).test(
+        contract, tables={"t": spark.createDataFrame([("x",)], "a string")})
+    results = {c.key: (c.result.value, c.model) for c in run.checks}
+    assert results["contract__malformed_element_1"] == ("error", None)
+    assert results["t__a__field_required"] == ("passed", "t")
+    assert run.result.value == "error"
 
 
 def test_loader_never_crashes_on_fuzzed_documents():

@@ -1,13 +1,12 @@
-"""Unit tests for the operator library: drift, dedup, similarity,
-textstats, refintegrity."""
+"""Unit tests for the operator library: drift, dedup, textstats,
+refintegrity."""
 
 import math
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from datacontract_cli_spark.operators import dedup, drift, refintegrity, similarity, textstats
+from datacontract_cli_spark.operators import dedup, drift, refintegrity, textstats
 
 
 # --- drift -------------------------------------------------------------------
@@ -221,52 +220,6 @@ def test_simhash_identical_zero_distance(spark):
 
 # --- similarity -----------------------------------------------------------------
 
-def test_cosine_topk_exact(spark):
-    rows = [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]), (4, [-1.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    top = similarity.cosine_topk(df, "embedding", [1.0, 0.0], k=2).collect()
-    assert [r["vec_id"] for r in top] == [1, 2]
-    assert top[0]["cosine_sim"] == pytest.approx(1.0)
-
-
-def test_lsh_topk_contains_identical_vector(spark):
-    rng = np.random.default_rng(3)
-    vecs = [(i, rng.standard_normal(16).tolist()) for i in range(200)]
-    df = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
-    q = vecs[7][1]
-    lsh = similarity.RandomHyperplaneLSH(16, nbits=8)
-    top = lsh.topk(df, "embedding", q, k=3).collect()
-    assert top[0]["vec_id"] == 7
-    assert top[0]["cosine_sim"] == pytest.approx(1.0, abs=1e-9)
-
-
-def test_embedding_near_duplicates(spark):
-    base = np.random.default_rng(5).standard_normal(8)
-    rows = [(1, base.tolist()), (2, (base * 1.001).tolist()),
-            (3, (-base).tolist())]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    pairs = similarity.embedding_near_duplicates(df, threshold=0.99, nbits=6).collect()
-    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
-
-
-def test_semantic_dedup_keeps_min_id_per_group(spark):
-    """Groups are transitive (1~2, 2~3 chains via scaling) and the min-id
-    representative survives; unrelated vectors pass through untouched."""
-    rng = np.random.default_rng(7)
-    a, b = rng.standard_normal(8), rng.standard_normal(8)
-    rows = [
-        (1, a.tolist()), (2, (a * 2.0).tolist()), (3, (a * 0.5).tolist()),
-        (10, b.tolist()), (11, (b * 3.0).tolist()),
-        (20, (-a).tolist()),          # anti-parallel: cosine -1, kept
-        (30, rng.standard_normal(8).tolist()),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kept = sorted(r["vec_id"] for r in
-                  similarity.semantic_dedup(df, threshold=0.99,
-                                            nbits=6).collect())
-    assert kept == [1, 10, 20, 30]
-
-
 # --- textstats --------------------------------------------------------------------
 
 def test_token_counts(spark):
@@ -405,38 +358,6 @@ def test_predecessor_violations_and_chat_format(spark):
         {"tool": {"allowed": ["assistant"], "allow_first": True}}
     ).collect()[0].asDict()
     assert out2 == {"tool_violations": 1}
-
-
-def test_cohort_retention_hand_computed(spark):
-    import datetime as dt
-
-    from datacontract_cli_spark.operators.cohorts import cohort_retention
-    w0 = dt.datetime(2024, 1, 1)   # a Monday
-    w1 = w0 + dt.timedelta(weeks=1)
-    w2 = w0 + dt.timedelta(weeks=2)
-    rows = [  # cohort w0: users a,b ; cohort w1: user c
-        ("a", w0), ("b", w0),
-        ("a", w1),             # a retained in week 1
-        ("a", w2), ("b", w2),  # both retained in week 2
-        ("c", w1), ("c", w2),  # c: cohort w1, retained offset 1
-    ]
-    df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-    out = {(r["cohort"], r["period_offset"]): r
-           for r in cohort_retention(df, max_offset=5).collect()}
-    c0, c1 = "2024-01-01", "2024-01-08"
-    assert out[(c0, 0)]["n_active"] == 2 and out[(c0, 0)]["retention"] == 1.0
-    assert out[(c0, 1)]["n_active"] == 1 and out[(c0, 1)]["retention"] == 0.5
-    assert out[(c0, 2)]["n_active"] == 2
-    assert out[(c1, 0)]["cohort_size"] == 1
-    assert out[(c1, 1)]["retention"] == 1.0
-    # month period uses calendar months, not day arithmetic
-    m = cohort_retention(
-        spark.createDataFrame(
-            [("a", dt.datetime(2024, 1, 31)), ("a", dt.datetime(2024, 2, 1))],
-            "user_id string, ts timestamp"),
-        period="month", max_offset=3).collect()
-    offs = {r["period_offset"] for r in m}
-    assert offs == {0, 1}  # Jan 31 -> Feb 1 is one calendar month apart
 
 
 def test_fd_violations(spark):

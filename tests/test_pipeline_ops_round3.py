@@ -1,78 +1,11 @@
-"""Round-3 pipeline operators: interval join (key-free range join),
-connected components (dedup clusters), deterministic stratified sampling
-and hash splits."""
-
-import datetime as dt
+"""Round-3 pipeline operators: connected components (dedup clusters),
+deterministic stratified sampling and hash splits."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators import dedup
-from datacontract_cli_spark.operators.intervaljoin import interval_join, window_count
 from datacontract_cli_spark.operators.sampling import hash_split, stratified_sample
-
-
-def _ts(minute, second=0):
-    return dt.datetime(2024, 1, 1, 0, minute, second)
-
-
-def test_interval_join_exact_pairs(spark):
-    anchors = spark.createDataFrame(
-        [(1, _ts(0), _ts(2)), (2, _ts(10), _ts(12)), (3, _ts(20), _ts(22))],
-        "aid int, w_start timestamp, w_end timestamp")
-    events = spark.createDataFrame(
-        [(100, _ts(0)),          # == start: inclusive
-         (101, _ts(1, 59)),      # inside
-         (102, _ts(2)),          # == end: exclusive
-         (103, _ts(11)),         # inside window 2
-         (104, _ts(30))],        # no window
-        "eid int, ts timestamp")
-    got = {(r["aid"], r["eid"]) for r in
-           interval_join(anchors, events, "w_start", "w_end", "ts",
-                         bucket_seconds=60).collect()}
-    assert got == {(1, 100), (1, 101), (2, 103)}
-
-
-def test_interval_join_no_duplicate_pairs_across_buckets(spark):
-    # window spans many buckets; each match must appear exactly once
-    anchors = spark.createDataFrame([(1, _ts(0), _ts(50))],
-                                    "aid int, w_start timestamp, w_end timestamp")
-    events = spark.createDataFrame([(i, _ts(i)) for i in range(0, 50, 7)],
-                                   "eid int, ts timestamp")
-    rows = interval_join(anchors, events, "w_start", "w_end", "ts",
-                         bucket_seconds=60).collect()
-    assert len(rows) == len({r["eid"] for r in rows}) == 8
-
-
-def test_interval_join_no_nested_loop_in_plan(spark):
-    anchors = spark.createDataFrame([(1, _ts(0), _ts(2))],
-                                    "aid int, w_start timestamp, w_end timestamp")
-    events = spark.createDataFrame([(1, _ts(1))], "eid int, ts timestamp")
-    q = interval_join(anchors, events, "w_start", "w_end", "ts")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_interval_join_matches_naive_join(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    got = window_count(ev, "event_type = 'purchase'", "event_type = 'click'",
-                       window_seconds=300, bucket_seconds=60)
-    a = ev.filter("event_type = 'purchase'").select(
-        F.col("event_id").alias("anchor_id"), F.col("ts").alias("a_ts"))
-    b = ev.filter("event_type = 'click'").select(F.col("ts").alias("b_ts"))
-    naive = (a.join(b, (F.col("b_ts") >= F.col("a_ts")) &
-                    (F.col("b_ts") < F.col("a_ts") + F.expr("INTERVAL 300 SECOND")))
-             .groupBy("anchor_id").agg(F.count(F.lit(1)).alias("n_matches")))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, naive.collect()))
-
-
-def test_interval_join_rejects_unknown_how(spark):
-    df = spark.range(1).select(
-        F.col("id"), F.current_timestamp().alias("s"),
-        F.current_timestamp().alias("e"))
-    with pytest.raises(ValueError):
-        interval_join(df, df, "s", "e", "s", how="full")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Unit tests for the round-5 training-pipeline operators: BM25 retrieval,
-hashed linear classifier scoring, sequence packing, corpus mixing."""
+"""Unit tests for the round-5 training-pipeline operators: hashed linear
+classifier scoring, sequence packing, corpus mixing."""
 
 import hashlib
 import math
@@ -12,7 +12,6 @@ from datacontract_cli_spark.operators.classifier import (
     classifier_score, quality_gate, quality_scores)
 from datacontract_cli_spark.operators.packing import (
     mixture_sample, pack_sequences, packing_stats)
-from datacontract_cli_spark.operators.retrieval import bm25_topk, doc_term_stats
 
 
 def _docs(spark):
@@ -22,86 +21,6 @@ def _docs(spark):
         Row(doc_id=3, text="query planner for the query engine query"),
         Row(doc_id=4, text="unrelated words entirely"),
     ])
-
-
-def _bm25_expected(corpus, query, k1=1.2, b=0.75):
-    docs = {i: t.lower().split() for i, t in corpus.items()}
-    n = len(docs)
-    avgdl = sum(len(w) for w in docs.values()) / n
-    scores = {}
-    for t in sorted(set(query)):
-        df = sum(1 for ws in docs.values() if t in ws)
-        if df == 0:
-            continue
-        idf = math.log(1 + (n - df + 0.5) / (df + 0.5))
-        for i, ws in docs.items():
-            tf = ws.count(t)
-            if tf:
-                dl = len(ws)
-                scores[i] = scores.get(i, 0.0) + (
-                    idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl)))
-    return scores
-
-
-def test_bm25_matches_hand_formula(spark):
-    corpus = {
-        1: "spark query engine fast query",
-        2: "slow table scan",
-        3: "query planner for the query engine query",
-        4: "unrelated words entirely",
-    }
-    out = {r["doc_id"]: r for r in
-           bm25_topk(_docs(spark), ["query", "engine"], k=10).collect()}
-    exp = _bm25_expected(corpus, ["query", "engine"])
-    assert set(out) == set(exp)
-    for i, s in exp.items():
-        assert out[i]["bm25"] == pytest.approx(s, abs=1e-4)
-    # top-1 = the argmax of the reference formula (doc 1: its shorter
-    # length beats doc 3's higher tf under the dl/avgdl normalization)
-    top = bm25_topk(_docs(spark), ["query", "engine"], k=1).collect()[0]
-    assert top["doc_id"] == max(exp, key=lambda i: (exp[i], -i))
-    assert top["n_terms_matched"] == 2
-
-
-def test_bm25_query_normalization_and_set_semantics(spark):
-    # duplicate / cased / padded query terms collapse to one
-    a = bm25_topk(_docs(spark), ["Query", "query ", "query"], k=5).collect()
-    b = bm25_topk(_docs(spark), ["query"], k=5).collect()
-    assert [(r["doc_id"], r["bm25"]) for r in a] == \
-        [(r["doc_id"], r["bm25"]) for r in b]
-
-
-def test_bm25_empty_query_raises(spark):
-    with pytest.raises(ValueError):
-        bm25_topk(_docs(spark), ["  ", ""])
-
-
-def test_bm25_unmatched_query_returns_empty(spark):
-    assert bm25_topk(_docs(spark), ["zzzmissing"], k=5).count() == 0
-
-
-def test_bm25_returned_plan_scans_once(spark, tmp_path):
-    # the df/idf statistics collect in separate jobs; the RETURNED plan
-    # must touch the corpus exactly once (a naive two-branch tf/df plan
-    # re-scans it — Catalyst prunes the branches differently, no reuse)
-    p = str(tmp_path / "docs.parquet")
-    _docs(spark).write.parquet(p)
-    df = bm25_topk(spark.read.parquet(p), ["query", "engine"], k=5)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # AQE's toString appends an "== Initial Plan ==" copy — count only
-    # the final plan's scans
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Scan parquet") == 1
-    assert "TakeOrderedAndProject" in final
-
-
-def test_doc_term_stats_is_an_inverted_index(spark):
-    idx = {(r["term"], r["doc_id"]): (r["tf"], r["dl"]) for r in
-           doc_term_stats(_docs(spark)).collect()}
-    assert idx[("query", 3)] == (3, 7)
-    assert idx[("scan", 2)] == (1, 3)
-    assert ("query", 2) not in idx
 
 
 def _py_score(text, n_buckets=4096, seed=0, bias=0.0):

@@ -1,13 +1,11 @@
 """Regression tests for the late-round-5 review findings: URI-encoded
 _metadata.file_path vs raw DV/delete paths, the column-mapping guard on
-the file-incremental lane, arrow-kernel null tolerance, and maintain's
-flags-before-side-effects validation."""
+the file-incremental lane, and maintain's flags-before-side-effects
+validation."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from datacontract_cli_spark.operators import similarity
 from datacontract_cli_spark.sources.delta_table import (
     delete_rows_delta,
     plan_delta,
@@ -69,19 +67,6 @@ def test_incremental_refuses_column_mapping(spark, tmp_path):
     iv = IncrementalValidator(spark, str(tmp_path / "ckpt"))
     with pytest.raises(NotImplementedError, match="column mapping"):
         iv.run_delta(root, [spec], "m")
-
-
-def test_arrow_lsh_kernel_tolerates_null_and_ragged(spark):
-    """Null / wrong-length embeddings get no bucket and never pair; the
-    arrow kernel must skip them instead of crashing the matmul."""
-    rng = np.random.default_rng(11)
-    a = rng.standard_normal(8)
-    rows = [(1, a.tolist()), (2, (a * 2.0).tolist()),
-            (3, None), (4, rng.standard_normal(5).tolist())]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = similarity.embedding_near_duplicates(
-        df, threshold=0.99, nbits=6, dim=8).collect()
-    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 
 DELTA_P3_CONTRACT = """

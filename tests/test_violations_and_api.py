@@ -1,15 +1,9 @@
-"""Violation-row sink + HTTP API source."""
-
-import http.server
-import json
-import os
-import threading
+"""Violation-row sink."""
 
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.engine.violations import quarantine, violations
 from datacontract_cli_spark.model.contract import load_contract_str
-from datacontract_cli_spark.sources.api import read_api_json
 from datacontract_cli_spark.sources.transcripts import synthesize_transcripts
 
 CONTRACT = """
@@ -62,34 +56,6 @@ def test_quarantine_roundtrip(spark, tmp_path):
     assert n == violations(df, contract, "transcripts").count() > 0
     persisted = spark.read.parquet(out)
     assert "__violations__" in persisted.columns
-
-
-def test_api_json_source(spark):
-    rows = [{"id": i, "name": f"row{i}"} for i in range(20)]
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):
-            body = json.dumps(rows).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):
-            pass
-
-    server = http.server.HTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    try:
-        df = read_api_json(spark, f"http://127.0.0.1:{port}/data")
-        assert df.count() == 20
-        assert set(df.columns) == {"id", "name"}
-        assert df.agg(F.sum("id")).first()[0] == sum(range(20))
-    finally:
-        server.shutdown()
 
 
 def test_check_deprecated_snake_case_aliases():

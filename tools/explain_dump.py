@@ -88,26 +88,6 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     sections.append(("Winnowing fingerprints: inverted-index join, "
                      "two-phase pair count", wn))
 
-    # round 3: key-free interval join — bucket explode recovers a hash join
-    # (SortMergeJoin/ShuffledHashJoin on __bucket__), no nested loop
-    from datacontract_cli_spark.operators.intervaljoin import window_count
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ij = window_count(ev, "event_type = 'purchase'", "event_type = 'click'",
-                      window_seconds=120, bucket_seconds=60)
-    sections.append(("Interval join (key-free range join): bucketed "
-                     "equi-join, exact window filter, NO "
-                     "BroadcastNestedLoopJoin", ij))
-
-    # round 3: embedding near-dup — the exploded self-join carries only
-    # (id, table, bucket); vectors join back by id via broadcast hash joins
-    from datacontract_cli_spark.operators.similarity import embedding_near_duplicates
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    nd = embedding_near_duplicates(emb, "vec_id", "embedding", threshold=0.9,
-                                   nbits=8, num_tables=2)
-    sections.append(("Embedding near-dup: payload-free banded self-join "
-                     "(no array<double> in any Exchange), vectors join "
-                     "back broadcast", nd))
-
     # round 4: declarative drift — one plan, zero driver round-trips
     from datacontract_cli_spark.operators.drift import psi_df
     ev4 = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -136,14 +116,6 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     sections.append(("Benchmark contamination: corpus n-grams LEFT SEMI "
                      "broadcast-join against the (tiny) benchmark gram set; "
                      "8-byte xxhash64 join keys, no corpus-side shuffle", cont))
-
-    # round 4 tail: cohort retention — three bounded two-phase shuffles,
-    # cohort sizes broadcast back
-    from datacontract_cli_spark.operators.cohorts import cohort_retention
-    coh = cohort_retention(ev4, "user_id", "ts", period="week", max_offset=8)
-    sections.append(("Cohort retention: first-touch agg + distinct activity "
-                     "+ cohort x offset counts; sizes joined back broadcast",
-                     coh))
 
     out = ["# PLANS — physical plans of the engine's core query shapes\n",
            f"Generated by `python tools/explain_dump.py {sf_dir}` "

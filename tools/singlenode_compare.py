@@ -7,8 +7,6 @@ on the same N-turn transcripts parquet:
 
 1. DuckDB 32-threads: the batched validation aggregate + the duplicate check
 2. Spark local[32]: the same two stages, plain parquet layout
-3. Spark local[32]: the duplicate check on a conv_id-bucketed table
-   (shuffle-free — the layout the engine prescribes at warehouse scale)
 
 Appends a section to BENCH/BASELINE.md. Usage:
     python tools/singlenode_compare.py [n_convs] [turns_per_conv]
@@ -68,7 +66,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from datacontract_cli_spark.session import get_spark
-    from datacontract_cli_spark.sources.layout import write_bucketed
 
     spark = get_spark("compare", master="local[32]", shuffle_partitions=64)
     df = spark.read.parquet(path)
@@ -91,26 +88,10 @@ def main() -> None:
     sp_agg = median_time(spark_agg)
     sp_dup = median_time(spark_dup)
 
-    table = f"transcripts_bucketed_{n_convs}"
-    if table not in [t.name for t in spark.catalog.listTables()]:
-        write_bucketed(df, table, bucket_col="conv_id", n_buckets=64,
-                       sort_cols=["conv_id", "turn_idx"])
-    bt = spark.table(table)
-
-    def spark_dup_bucketed():
-        bt.groupBy("conv_id", "turn_idx").count().filter("count>1").count()
-
-    plan = (bt.groupBy("conv_id", "turn_idx").count()
-            ._jdf.queryExecution().executedPlan().toString())
-    shuffle_free = "Exchange" not in plan
-    sp_dup_bucket = median_time(spark_dup_bucketed)
-
     result = {
         "n_turns": n_turns,
         "duckdb_agg_sec": duck_agg, "duckdb_dup_sec": duck_dup,
         "spark_agg_sec": sp_agg, "spark_dup_sec": sp_dup,
-        "spark_dup_bucketed_sec": sp_dup_bucket,
-        "bucketed_shuffle_free": shuffle_free,
     }
     print(json.dumps(result))
 
@@ -121,19 +102,15 @@ def main() -> None:
 The reference CLI executes checks on DuckDB; same {n_turns:,}-turn input,
 32 threads both engines (median of 4 warm):
 
-| stage | DuckDB | Spark local[32] (plain parquet) | Spark local[32] (bucketed by conv_id) |
-|---|---|---|---|
-| batched validation aggregate | {duck_agg}s | {sp_agg}s | — |
-| duplicate (conv_id, turn_idx) check | {duck_dup}s | {sp_dup}s | {sp_dup_bucket}s (Exchange-free: {shuffle_free}) |
+| stage | DuckDB | Spark local[32] (plain parquet) |
+|---|---|---|
+| batched validation aggregate | {duck_agg}s | {sp_agg}s |
+| duplicate (conv_id, turn_idx) check | {duck_dup}s | {sp_dup}s |
 
 DuckDB's vectorized single-node executor wins at a scale that fits one
 machine — expected, and exactly why the reference uses it there. The
 engine's claim is different: identical check semantics on inputs that
-do NOT fit one machine. The bucketed column shows the prescribed warehouse
-layout (Iceberg ``bucket(N, conv_id)`` / Spark ``bucketBy``) removing the
-uniqueness check's shuffle entirely — at cluster scale the check's
-cross-network byte volume drops to zero and per-node work is exactly the
-DuckDB-style local aggregation, while 10^12 turns split across executors.
+do NOT fit one machine.
 
 Reproduce: `python tools/singlenode_compare.py {n_convs} {turns}`
 """
