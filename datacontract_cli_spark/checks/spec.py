@@ -186,15 +186,21 @@ class CheckSpec:
         )
 
 
+def threshold_percent(spec: "CheckSpec", value, row_count):
+    """``value`` as a percent of ``row_count`` (6dp) when ``spec``'s
+    threshold is a percent of a missing/invalid count, else None."""
+    is_percent = spec.threshold_is_percent and spec.metric in (
+        MetricType.MISSING_COUNT, MetricType.INVALID_COUNT)
+    if not is_percent or value is None:
+        return None
+    return round(value / row_count * 100, 6) if row_count else 0.0
+
+
 def passes_with_percent(spec: "CheckSpec", value, row_count):
     """(ok, compare_value): threshold evaluation honoring percent
     thresholds — the single shared rule for every lane (batch,
-    incremental, tail, partitioned, sliced). A percent threshold on a
-    missing/invalid count compares value/row_count*100 (6dp), matching
-    the batch executor's _evaluate."""
-    is_percent = bool(spec.threshold_is_percent) and spec.metric in (
-        MetricType.MISSING_COUNT, MetricType.INVALID_COUNT)
-    compare = value
-    if is_percent and value is not None:
-        compare = round(value / row_count * 100, 6) if row_count else 0.0
+    incremental, tail, partitioned). A percent threshold on a
+    missing/invalid count compares :func:`threshold_percent`."""
+    percent = threshold_percent(spec, value, row_count)
+    compare = value if percent is None else percent
     return spec.threshold.passes(compare), compare

@@ -4,7 +4,8 @@ Execution model (Spark-first, scale-aware):
 
 - **One batched aggregation per model.** Every ROW_COUNT / MISSING_COUNT /
   INVALID_COUNT / FRESHNESS / RETENTION / QUANTILE / QUANTILE_DRIFT_KS
-  metric of a model compiles into named aggregate expressions and they all
+  metric of a model compiles (``compile_aggregates``, which the slice,
+  bucket and file lanes share) into named aggregate expressions and they all
   run as a single ``df.agg(*exprs)`` job (the reference batches the count
   metrics the same way: datacontract/engines/ibis/ibis_check_execute.py:
   254-327; we additionally fold freshness/retention MAX/MIN, percentiles
@@ -43,7 +44,7 @@ import logging
 import math
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -51,7 +52,12 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
 from datacontract_cli_spark.checks.physical import physical_types_match
-from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
+from datacontract_cli_spark.checks.spec import (
+    CheckSpec,
+    MetricType,
+    passes_with_percent,
+    threshold_percent,
+)
 from datacontract_cli_spark.checks.types import (
     normalize_type_name,
     property_matches,
@@ -85,6 +91,13 @@ _AGG_METRICS = (
     MetricType.QUANTILE_DRIFT_KS,
 )
 
+_SCHEMA_METRICS = (
+    MetricType.FIELD_PRESENT,
+    MetricType.FIELD_TYPE,
+    MetricType.FIELD_PHYSICAL_TYPE,
+    MetricType.FIELD_NESTED_TYPE,
+)
+
 _ROW_COUNT_ALIAS = "__dc_row_count__"
 
 # Threads in one test() call's action pool. Median test() of the 1M-turn
@@ -100,18 +113,17 @@ _Submit = Callable[..., None]
 
 @dataclass
 class _AggBatch:
-    """One model's flat aggregate, compiled. ``aggs`` run as one ``df.agg``
-    and ``values`` project each check's result column (alias) out of that
-    one row — a KS check reads several count-ifs. ``parts`` keeps each
-    check's own (aggs, value), so a failed batch is retried check by
-    check."""
+    """Checks compiled to one aggregate by :func:`compile_aggregates`.
+    ``aggs`` run as one aggregation and ``values`` project each check's
+    result column (alias) out of its row — a KS check reads several
+    count-ifs. ``parts`` keeps each check's own (aggs, value), so a failed
+    batch is retried check by check."""
     aggs: List[Column] = field(default_factory=lambda: [
         F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)])
     values: List[Column] = field(default_factory=lambda: [
         F.col(_ROW_COUNT_ALIAS)])
     parts: Dict[str, Tuple[List[Column], Column]] = field(default_factory=dict)
     evaluators: List[Tuple[CheckSpec, str]] = field(default_factory=list)
-    constant_zero: List[CheckSpec] = field(default_factory=list)
     sample_conds: Dict[str, Any] = field(default_factory=dict)
 
     def add(self, spec: CheckSpec, alias: str, aggs: List[Column],
@@ -122,13 +134,99 @@ class _AggBatch:
         self.parts[alias] = (aggs, value)
         self.evaluators.append((spec, alias))
 
-    def frame(self, df: DataFrame) -> DataFrame:
-        return df.agg(*self.aggs).select(*self.values)
+    def frame(self, df: DataFrame, keys: Sequence[Any] = ()) -> DataFrame:
+        """One row of values, or with ``keys`` one row per key group (a
+        slice, bucket or file), the keys first. Each group's row is what
+        the flat aggregate computes over that group's rows alone (up to
+        the sketch error of an approximate percentile): count-ifs and
+        min/max are partial aggregates that merge across partitions."""
+        return (df.groupBy(*keys).agg(*self.aggs)
+                .select(*keys, *self.values))
+
+
+# (spec, result test() reports, reason) of a spec the compiler could not
+# turn into an aggregate
+_Unevaluated = Tuple[CheckSpec, ResultEnum, str]
+
+
+def compile_aggregates(df: DataFrame, specs: List[CheckSpec]
+                       ) -> Tuple[_AggBatch, List[_Unevaluated]]:
+    """The one CheckSpec → aggregate-column compiler: test()'s flat
+    aggregate and the slice, bucket and file lanes (which pass their own
+    metric subsets and group the batch by a key). A spec whose column is
+    absent fails; a malformed KS baseline is an error. Predicates are
+    looked up as this module's ``missing_condition``/``invalid_condition``,
+    so a wrapper installed there (``perfbench/trace.py``) times every
+    lane's predicate builds."""
+    batch = _AggBatch()
+    unevaluated: List[_Unevaluated] = []
+    for i, spec in enumerate(specs):
+        alias = f"__dc_m{i}__"
+        if spec.metric is MetricType.ROW_COUNT:
+            batch.evaluators.append((spec, _ROW_COUNT_ALIAS))
+            continue
+        column = resolve_column(df, spec.field) if spec.field else None
+        if spec.field and column is None:
+            unevaluated.append((spec, _fail_result(spec),
+                                f"Column '{spec.field}' not found in model "
+                                f"{spec.model}"))
+            continue
+        if spec.metric is MetricType.MISSING_COUNT:
+            cond = missing_condition(df, column, spec)
+            batch.add(spec, alias, [count_if(cond, alias)])
+            batch.sample_conds[spec.key] = (column, cond)
+        elif spec.metric is MetricType.INVALID_COUNT:
+            cond = invalid_condition(df, column, spec)
+            if cond is None:  # no constraints: 0 with no predicate to run
+                batch.add(spec, alias, [F.lit(0).cast("bigint").alias(alias)])
+            else:
+                batch.add(spec, alias, [count_if(cond, alias)])
+                batch.sample_conds[spec.key] = (column, cond)
+        elif spec.metric is MetricType.FRESHNESS:
+            batch.add(spec, alias, [F.max(F.col(_q(column))).alias(alias)])
+        elif spec.metric is MetricType.RETENTION:
+            batch.add(spec, alias, [F.min(F.col(_q(column))).alias(alias)])
+        elif spec.metric is MetricType.QUANTILE:
+            q = float(spec.quantile if spec.quantile is not None else 0.5)
+            # approx (fixed-memory sketch) is the 100 TB default;
+            # arguments.exact=true opts into the exact interpolated
+            # percentile (buffers the column per group)
+            expr = (F.percentile(F.col(_q(column)), F.lit(q))
+                    if spec.quantile_exact
+                    else F.percentile_approx(F.col(_q(column)), q, 10000))
+            batch.add(spec, alias, [expr.alias(alias)])
+        elif spec.metric is MetricType.QUANTILE_DRIFT_KS:
+            try:
+                aggs, ks = drift.ks_aggregates(F.col(_q(column)),
+                                               spec.baseline, alias)
+            except ValueError as e:
+                unevaluated.append((spec, ResultEnum.error,
+                                    f"Invalid quantileDriftKs baseline: {e}"))
+                continue
+            batch.add(spec, alias, aggs, F.round(ks, 6))
+    return batch, unevaluated
 
 
 def _fail_result(spec: CheckSpec) -> ResultEnum:
     severity = (spec.severity or "").strip().lower()
     return ResultEnum.warning if severity in _WARNING_SEVERITIES else ResultEnum.failed
+
+
+def _threshold_result(spec: CheckSpec, value: Any,
+                      row_count: Optional[int]) -> ResultEnum:
+    ok, _ = passes_with_percent(spec, value, row_count)
+    return ResultEnum.passed if ok else _fail_result(spec)
+
+
+def _check_for(spec: CheckSpec) -> Check:
+    """The Check that reports ``spec``, before it has a result: test()
+    registers one per spec up front, the folding lanes one per verdict."""
+    return Check(key=spec.key, category=spec.category, type=spec.type,
+                 name=spec.name, model=spec.model, field=spec.field,
+                 language="introspection" if spec.metric in _SCHEMA_METRICS
+                 else "spark-sql",
+                 qualityId=spec.quality_id, tags=spec.tags,
+                 dimension=spec.dimension)
 
 
 def _fail_closed(run: Run, specs: List[CheckSpec], fn: Callable, *args) -> None:
@@ -188,24 +286,7 @@ class SparkContractEngine:
 
         # pre-register every check as a stub so ordering/filtering is stable
         # even if execution dies mid-way (reference ibis_check_execute.py:57-92)
-        for spec in specs:
-            run.checks.append(
-                Check(
-                    key=spec.key,
-                    category=spec.category,
-                    type=spec.type,
-                    name=spec.name,
-                    model=spec.model,
-                    field=spec.field,
-                    language="introspection"
-                    if spec.metric in (MetricType.FIELD_PRESENT, MetricType.FIELD_TYPE,
-                                       MetricType.FIELD_PHYSICAL_TYPE, MetricType.FIELD_NESTED_TYPE)
-                    else "spark-sql",
-                    qualityId=spec.quality_id,
-                    tags=spec.tags,
-                    dimension=spec.dimension,
-                )
-            )
+        run.checks.extend(_check_for(spec) for spec in specs)
 
         if tables is None:
             from datacontract_cli_spark.sources.readers import bind_server_with_raw
@@ -359,10 +440,7 @@ class SparkContractEngine:
 
         run = Run(dataContractId=contract.id, dataContractVersion=contract.version)
         for spec in unroutable:
-            check = Check(key=spec.key, category=spec.category,
-                          type=spec.type, name=spec.name, model=spec.model,
-                          field=spec.field, language="spark-sql",
-                          dimension=spec.dimension)
+            check = _check_for(spec)
             check.result = ResultEnum.error
             check.reason = (
                 f"uniqueness on {spec.columns or [spec.field]} cannot be "
@@ -371,9 +449,7 @@ class SparkContractEngine:
                 "run it through test() (the batched lane is exact)")
             run.checks.append(check)
         for spec in runnable:
-            check = Check(key=spec.key, category=spec.category, type=spec.type,
-                          name=spec.name, model=spec.model, field=spec.field,
-                          language="spark-sql", dimension=spec.dimension)
+            check = _check_for(spec)
             # global verdict from the folded metric (exact: counts sum across
             # buckets); per-bucket verdicts stay in diagnostics/manifest
             value = folded["metrics"].get(
@@ -392,10 +468,8 @@ class SparkContractEngine:
                 run.checks.append(check)
                 continue
             if spec.threshold is not None:
-                ok, _ = self._passes_with_percent(
+                check.result = _threshold_result(
                     spec, value, folded["metrics"].get("row_count"))
-                check.result = (ResultEnum.passed if ok
-                                else _fail_result(spec))
             check.diagnostics = {
                 "metric": spec.metric.value,
                 "value": value,
@@ -450,9 +524,7 @@ class SparkContractEngine:
                   dataContractVersion=contract.version)
         unevaluated = set(result.get("unevaluated") or [])
         for spec in specs:
-            check = Check(key=spec.key, category=spec.category, type=spec.type,
-                          name=spec.name, model=spec.model, field=spec.field,
-                          language="spark-sql", dimension=spec.dimension)
+            check = _check_for(spec)
             if spec.key in unevaluated:
                 # a column absent from the validated files is an ERROR,
                 # never a passing zero — the batch lane errors the same way
@@ -468,10 +540,8 @@ class SparkContractEngine:
                 spec.key, result["folded"]["row_count"]
                 if spec.metric is MetricType.ROW_COUNT else 0)
             if spec.threshold is not None:
-                ok, _ = self._passes_with_percent(
+                check.result = _threshold_result(
                     spec, value, result["folded"].get("row_count"))
-                check.result = (ResultEnum.passed if ok
-                                else _fail_result(spec))
             check.diagnostics = {
                 "metric": spec.metric.value, "value": value,
                 "n_files": len(result["files"]),
@@ -521,11 +591,7 @@ class SparkContractEngine:
                 # unreadable version (e.g. vacuumed history) — one error
                 # verdict, never a silent skip
                 for spec in specs:
-                    check = Check(key=spec.key, category=spec.category,
-                                  type=spec.type, name=spec.name,
-                                  model=spec.model, field=spec.field,
-                                  language="spark-sql",
-                                  dimension=spec.dimension)
+                    check = _check_for(spec)
                     check.result = ResultEnum.error
                     check.reason = result["error"]
                     run.checks.append(check)
@@ -534,10 +600,7 @@ class SparkContractEngine:
             maintenance = result.get("data_change") is False
             unevaluated = set(result.get("unevaluated") or [])
             for spec in specs:
-                check = Check(key=spec.key, category=spec.category,
-                              type=spec.type, name=spec.name,
-                              model=spec.model, field=spec.field,
-                              language="spark-sql", dimension=spec.dimension)
+                check = _check_for(spec)
                 if spec.key in unevaluated:
                     check.result = ResultEnum.error
                     check.reason = (f"column '{spec.field}' not present in "
@@ -558,10 +621,8 @@ class SparkContractEngine:
                     check.reason = ("maintenance commit (no data "
                                     "change); thresholds not applied")
                 elif spec.threshold is not None:
-                    ok, _ = self._passes_with_percent(
+                    check.result = _threshold_result(
                         spec, value, result["delta"].get("row_count"))
-                    check.result = (ResultEnum.passed if ok
-                                    else _fail_result(spec))
                 check.diagnostics = {
                     "metric": spec.metric.value, "value": value,
                     "cumulative": result["folded"].get(
@@ -681,11 +742,11 @@ class SparkContractEngine:
             run.set_result(spec.key, ResultEnum.warning, f"Unsupported metric {spec.metric}")
 
         if agg_specs and dup_specs:
-            self._run_agg_with_duplicates(run, submit, model, agg_specs,
-                                          dup_specs, df, obj)
+            self._run_agg_with_duplicates(run, submit, agg_specs, dup_specs,
+                                          df, obj)
         else:
             if agg_specs:
-                submit(agg_specs, self._run_agg_batch, run, model, agg_specs, df, obj)
+                submit(agg_specs, self._run_agg_batch, run, agg_specs, df, obj)
             for spec in dup_specs:
                 submit([spec], self._check_duplicates, run, spec, df, obj)
         for spec in sql_specs:
@@ -700,56 +761,7 @@ class SparkContractEngine:
     # ------------------------------------------------------------------
     # the batched aggregation
     # ------------------------------------------------------------------
-    def _build_agg_batch(self, run: Run, model: str, specs: List[CheckSpec],
-                         df: DataFrame) -> _AggBatch:
-        """Compile the agg-able specs into one flat aggregate."""
-        batch = _AggBatch()
-        for i, spec in enumerate(specs):
-            alias = f"__dc_m{i}__"
-            if spec.metric is MetricType.ROW_COUNT:
-                batch.evaluators.append((spec, _ROW_COUNT_ALIAS))
-                continue
-            column = resolve_column(df, spec.field) if spec.field else None
-            if spec.field and column is None:
-                run.set_result(spec.key, _fail_result(spec),
-                               f"Column '{spec.field}' not found in model {model}")
-                continue
-            if spec.metric is MetricType.MISSING_COUNT:
-                cond = missing_condition(df, column, spec)
-                batch.add(spec, alias, [count_if(cond, alias)])
-                batch.sample_conds[spec.key] = (column, cond)
-            elif spec.metric is MetricType.INVALID_COUNT:
-                cond = invalid_condition(df, column, spec)
-                if cond is None:
-                    batch.constant_zero.append(spec)  # no constraints ⇒ 0 without querying
-                else:
-                    batch.add(spec, alias, [count_if(cond, alias)])
-                    batch.sample_conds[spec.key] = (column, cond)
-            elif spec.metric is MetricType.FRESHNESS:
-                batch.add(spec, alias, [F.max(F.col(_q(column))).alias(alias)])
-            elif spec.metric is MetricType.RETENTION:
-                batch.add(spec, alias, [F.min(F.col(_q(column))).alias(alias)])
-            elif spec.metric is MetricType.QUANTILE:
-                q = float(spec.quantile if spec.quantile is not None else 0.5)
-                # approx (fixed-memory sketch) is the 100 TB default;
-                # arguments.exact=true opts into the exact interpolated
-                # percentile (buffers the column per group)
-                expr = (F.percentile(F.col(_q(column)), F.lit(q))
-                        if spec.quantile_exact
-                        else F.percentile_approx(F.col(_q(column)), q, 10000))
-                batch.add(spec, alias, [expr.alias(alias)])
-            elif spec.metric is MetricType.QUANTILE_DRIFT_KS:
-                try:
-                    aggs, ks = drift.ks_aggregates(F.col(_q(column)),
-                                                   spec.baseline, alias)
-                except ValueError as e:
-                    run.set_result(spec.key, ResultEnum.error,
-                                   f"Invalid quantileDriftKs baseline: {e}")
-                    continue
-                batch.add(spec, alias, aggs, F.round(ks, 6))
-        return batch
-
-    def _run_agg_with_duplicates(self, run: Run, submit: _Submit, model: str,
+    def _run_agg_with_duplicates(self, run: Run, submit: _Submit,
                                  agg_specs: List[CheckSpec],
                                  dup_specs: List[CheckSpec],
                                  df: DataFrame,
@@ -766,7 +778,7 @@ class SparkContractEngine:
         lead = dup_specs[0]
         lead_cols = lead.columns or ([lead.field] if lead.field else [])
         resolved = [resolve_column(df, c) for c in lead_cols]
-        submit(agg_specs, self._run_agg_batch, run, model, agg_specs, df, obj)
+        submit(agg_specs, self._run_agg_batch, run, agg_specs, df, obj)
         rest = dup_specs
         if resolved and all(c is not None for c in resolved):
             submit([lead], self._check_duplicates_keys_only, run, lead, df,
@@ -845,11 +857,11 @@ class SparkContractEngine:
                 rows.append(rec)
         check.failedSamples = rows
 
-    def _run_agg_batch(self, run: Run, model: str, specs: List[CheckSpec],
+    def _run_agg_batch(self, run: Run, specs: List[CheckSpec],
                        df: DataFrame, obj: Optional[SchemaObject]) -> None:
-        if not specs:
-            return
-        batch = self._build_agg_batch(run, model, specs, df)
+        batch, unevaluated = compile_aggregates(df, specs)
+        for spec, result, reason in unevaluated:
+            run.set_result(spec.key, result, reason)
 
         try:
             row = batch.frame(df).collect()[0].asDict()
@@ -866,8 +878,6 @@ class SparkContractEngine:
                 row[_ROW_COUNT_ALIAS] = df.agg(batch.aggs[0]).collect()[0][0]
             except Exception as e:  # noqa: BLE001
                 for spec, _ in batch.evaluators:
-                    run.set_result(spec.key, ResultEnum.error, f"Aggregation failed: {e}")
-                for spec in batch.constant_zero:
                     run.set_result(spec.key, ResultEnum.error, f"Aggregation failed: {e}")
                 return
             for spec, alias in list(batch.evaluators):
@@ -887,9 +897,6 @@ class SparkContractEngine:
                           obj: Optional[SchemaObject]) -> None:
         row_count = int(row[_ROW_COUNT_ALIAS])
         sample_conds = batch.sample_conds
-
-        for spec in batch.constant_zero:
-            self._evaluate(run, spec, 0, row_count)
 
         failed_sample_keys = []
         for spec, alias in batch.evaluators:
@@ -1232,29 +1239,16 @@ class SparkContractEngine:
     # ------------------------------------------------------------------
     # evaluation + diagnostics (reference ibis_check_execute.py:943-989)
     # ------------------------------------------------------------------
-    @staticmethod
-    def _passes_with_percent(spec: CheckSpec, value: Any,
-                             row_count: Optional[int]):
-        """(ok, compare_value): threshold evaluation honoring percent
-        thresholds EXACTLY like the batch lane's _evaluate — the
-        incremental/tail/partitioned lanes fold raw counts, and
-        comparing a raw count against a percent bound gives wrong
-        verdicts in both directions. Shared rule: checks/spec.py."""
-        from datacontract_cli_spark.checks.spec import passes_with_percent
-        return passes_with_percent(spec, value, row_count)
-
     def _evaluate(self, run: Run, spec: CheckSpec, value: Any,
                   row_count: Optional[int], metric_label: Optional[str] = None) -> None:
         is_bad_row = spec.metric in (MetricType.MISSING_COUNT, MetricType.INVALID_COUNT)
-        is_percent = bool(spec.threshold_is_percent) and is_bad_row
-        percent = (round(value / row_count * 100, 6) if row_count else 0.0) if is_percent else None
-        compare_value = percent if is_percent else value
+        percent = threshold_percent(spec, value, row_count)
 
         diag: Dict[str, Any] = {"metric": metric_label or spec.metric.value}
         if spec.field is not None:
             diag["field"] = spec.field
         diag["value"] = value
-        if is_percent:
+        if percent is not None:
             diag["unit"] = "percent"
         if spec.severity is not None:
             diag["severity"] = spec.severity
@@ -1276,12 +1270,12 @@ class SparkContractEngine:
         if spec.threshold is None:
             run.set_result(spec.key, ResultEnum.passed, None)
             return
-        ok = spec.threshold.passes(compare_value)
+        ok, _ = passes_with_percent(spec, value, row_count)
         target = spec.field or spec.model
         label = metric_label or spec.metric.value
         if ok:
             reason = None
-        elif is_percent:
+        elif percent is not None:
             reason = (f"Actual {label}({target}) was {percent}% ({value} of {row_count} rows), "
                       f"expected {spec.threshold.describe()}%")
         else:

@@ -33,14 +33,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
-from datacontract_cli_spark.engine.predicates import (
-    count_if,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
+from datacontract_cli_spark.engine.executor import (
+    _ROW_COUNT_ALIAS,
+    compile_aggregates,
 )
 
 _FILE = "__dc_file__"
+
+# metrics whose per-file values sum to the table's; duplicates cross file
+# boundaries (the bucketed lane)
+_FILE_METRICS = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
+                 MetricType.INVALID_COUNT)
 
 # Bumped when evaluation semantics change in a way that can turn a
 # previously-unevaluable spec evaluable (e.g. the basePath fix that
@@ -216,35 +219,21 @@ class IncrementalValidator:
             if schema is not None:
                 reader = reader.schema(schema)
             df = reader.parquet(*sorted(todo))
-            exprs = [F.count(F.lit(1)).alias("__n__")]
-            evaluators: List[Tuple[CheckSpec, str]] = []
-            for i, spec in enumerate(specs):
-                alias = f"m{i}"
-                if spec.metric is MetricType.ROW_COUNT:
-                    evaluators.append((spec, "__n__"))
-                    continue
-                col = resolve_column(df, spec.field) if spec.field else None
-                if spec.metric is MetricType.MISSING_COUNT and col:
-                    exprs.append(count_if(missing_condition(df, col, spec), alias))
-                    evaluators.append((spec, alias))
-                elif spec.metric is MetricType.INVALID_COUNT and col:
-                    cond = invalid_condition(df, col, spec)
-                    if cond is not None:
-                        exprs.append(count_if(cond, alias))
-                        evaluators.append((spec, alias))
-                # duplicate checks cross file boundaries: bucketed lane
-            evaluated_keys = {spec.key for spec, _ in evaluators}
-            skipped = sorted(spec_keys - evaluated_keys)
-            rows = (df.withColumn(_FILE, F.input_file_name())
-                      .groupBy(_FILE).agg(*exprs).collect())
+            batch, _ = compile_aggregates(
+                df, [s for s in specs if s.metric in _FILE_METRICS])
+            # a spec the batch does not evaluate (absent column, or outside
+            # the count metrics) is recorded unevaluated on every file
+            skipped = sorted(spec_keys - {s.key for s, _ in batch.evaluators})
+            rows = batch.frame(df.withColumn(_FILE, F.input_file_name()),
+                               [_FILE]).collect()
             by_file = {_norm_uri(r[_FILE]): r for r in rows}
             now = datetime.now(timezone.utc).isoformat()
             for f in sorted(todo):
                 row = by_file.get(f)
                 size, mtime = current[f]
                 metrics: Dict[str, Any] = {}
-                n = int(row["__n__"]) if row is not None else 0
-                for spec, alias in evaluators:
+                n = int(row[_ROW_COUNT_ALIAS]) if row is not None else 0
+                for spec, alias in batch.evaluators:
                     v = row[alias] if row is not None else 0
                     metrics[spec.key] = int(v) if v is not None else 0
                 new_verdicts.append(FileVerdict(

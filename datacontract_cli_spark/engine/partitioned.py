@@ -34,21 +34,20 @@ from typing import Any, Dict, List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datacontract_cli_spark.checks.spec import (
-    CheckSpec,
-    MetricType,
-    passes_with_percent,
+from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
+from datacontract_cli_spark.engine.executor import (
+    _ROW_COUNT_ALIAS,
+    _threshold_result,
+    compile_aggregates,
 )
-from datacontract_cli_spark.engine.executor import _ROW_COUNT_ALIAS, _fail_result
-from datacontract_cli_spark.engine.predicates import (
-    _q as _qc,
-    count_if,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
-)
+from datacontract_cli_spark.engine.predicates import _q as _qc, resolve_column
 
 _BUCKET = "__dc_bucket__"
+
+# metrics whose per-bucket values sum to the table's; duplicate counts are
+# bucket-local jobs of their own
+_BUCKET_METRICS = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
+                   MetricType.INVALID_COUNT)
 
 
 @dataclass
@@ -111,16 +110,10 @@ class PartitionedValidator:
 
     # -- execution -----------------------------------------------------------
     def run(self, df: DataFrame, specs: List[CheckSpec], model: str,
-            source_path: Optional[str] = None,
-            distinct_cols: Optional[List[str]] = None) -> Dict[int, BucketVerdict]:
+            source_path: Optional[str] = None) -> Dict[int, BucketVerdict]:
         """Validate every (remaining) bucket; returns ALL bucket verdicts
-        (cached + newly computed).
-
-        ``distinct_cols``: per-bucket MERGEABLE HLL sketches
-        (hll_sketch_agg, Apache DataSketches) for these columns are stored
-        base64 in the manifest; fold() unions them for a global
-        approx-distinct WITHOUT rescanning — the resume-safe way to keep
-        table-wide distinct counts while validating incrementally."""
+        (cached + newly computed). A spec whose column is absent gets no
+        bucket metric, so a fold reports it unevaluated."""
         done = self.completed_buckets(model)
         # a checkpoint built under a DIFFERENT bucketing cannot be merged:
         # changing n_buckets re-hashes rows into other buckets (double
@@ -150,32 +143,9 @@ class PartitionedValidator:
             # resume: prune completed buckets before any metric work
             work = work.filter(F.col(_BUCKET).isin(remaining))
 
-        exprs = [F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)]
-        evaluators = []
-        for i, spec in enumerate(specs):
-            alias = f"m{i}"
-            if spec.metric is MetricType.ROW_COUNT:
-                evaluators.append((spec, _ROW_COUNT_ALIAS))
-                continue
-            col = resolve_column(df, spec.field) if spec.field else None
-            if spec.metric is MetricType.MISSING_COUNT and col:
-                exprs.append(count_if(missing_condition(df, col, spec), alias))
-                evaluators.append((spec, alias))
-            elif spec.metric is MetricType.INVALID_COUNT and col:
-                cond = invalid_condition(df, col, spec)
-                if cond is not None:
-                    exprs.append(count_if(cond, alias))
-                    evaluators.append((spec, alias))
-            elif spec.metric is MetricType.DUPLICATE_COUNT:
-                # bucket-local when the duplicate key includes/derives the
-                # partition key: computed as a dedicated grouped job below
-                continue
-        for c in distinct_cols or []:
-            rc = resolve_column(df, c)
-            if rc is not None:
-                exprs.append(F.hll_sketch_agg(F.col(rc)).alias(f"__hll_{c}__"))
-
-        gdf = work.groupBy(_BUCKET).agg(*exprs)
+        batch, _ = compile_aggregates(
+            df, [s for s in specs if s.metric in _BUCKET_METRICS])
+        gdf = batch.frame(work, [_BUCKET])
         rows = gdf.collect()
 
         # buckets with NO rows produce no group — they are still VALIDATED
@@ -234,22 +204,15 @@ class PartitionedValidator:
             row_count = int(d[_ROW_COUNT_ALIAS])
             results: Dict[str, str] = {}
             metrics: Dict[str, Any] = {"row_count": row_count}
-            for c in distinct_cols or []:
-                sk = d.get(f"__hll_{c}__")
-                if sk is not None:
-                    import base64
-                    metrics[f"hll_sketch::{c}"] = base64.b64encode(bytes(sk)).decode()
-            for spec, alias in evaluators:
-                value = d[alias] if alias in d else None
+            for spec, alias in batch.evaluators:
+                value = d[alias]
                 value = int(value) if value is not None else 0
                 metrics[spec.key] = value
                 if spec.threshold is not None:
                     # percent thresholds evaluate against the BUCKET's
                     # own rate, not the raw count
-                    ok, _ = passes_with_percent(spec, value, row_count)
-                    results[spec.key] = (
-                        "passed" if ok else _fail_result(spec).value
-                    )
+                    results[spec.key] = _threshold_result(
+                        spec, value, row_count).value
             for spec in dup_specs:
                 if spec.key in dup_errors:
                     results[spec.key] = "error"
@@ -257,9 +220,8 @@ class PartitionedValidator:
                 value = dup_values.get(spec.key, {}).get(bucket, 0)
                 metrics[spec.key] = value
                 if spec.threshold is not None:
-                    results[spec.key] = (
-                        "passed" if spec.threshold.passes(value) else _fail_result(spec).value
-                    )
+                    results[spec.key] = _threshold_result(
+                        spec, value, row_count).value
             new_verdicts.append(BucketVerdict(
                 bucket, row_count, results, metrics,
                 {"source": source_path, "validated_at": now,
@@ -289,8 +251,6 @@ class PartitionedValidator:
         severity = {"failed": 0, "error": 1, "warning": 2, "passed": 3}
         for v in verdicts.values():
             for k, val in v.metrics.items():
-                if k.startswith("hll_sketch::"):
-                    continue  # binary sketches union via fold_distinct()
                 totals[k] = totals.get(k, 0) + (val or 0)
             for k, res in v.results.items():
                 cur = results.get(k)
@@ -303,63 +263,7 @@ class PartitionedValidator:
                     continue  # never upgrade an error
                 if spec.threshold is None or spec.key not in totals:
                     continue
-                ok, _ = passes_with_percent(spec, totals[spec.key],
-                                            row_count)
-                results[spec.key] = ("passed" if ok
-                                     else _fail_result(spec).value)
+                results[spec.key] = _threshold_result(
+                    spec, totals[spec.key], row_count).value
         return {"metrics": totals, "results": results,
                 "n_buckets_validated": len(verdicts)}
-
-    @staticmethod
-    def fold_distinct(spark, verdicts: Dict[int, BucketVerdict]) -> Dict[str, int]:
-        """Global approx-distinct per sketched column by UNIONING the
-        per-bucket HLL sketches from the manifest — no table rescan. The
-        sketches are mergeable (DataSketches HLL), so resumed runs and
-        incremental buckets compose exactly like a fresh full pass."""
-        import base64
-
-        by_col: Dict[str, List[bytes]] = {}
-        for v in verdicts.values():
-            for k, val in v.metrics.items():
-                if k.startswith("hll_sketch::") and val:
-                    by_col.setdefault(k.split("::", 1)[1], []).append(
-                        base64.b64decode(val))
-        out: Dict[str, int] = {}
-        for col, sketches in by_col.items():
-            df = spark.createDataFrame([(s,) for s in sketches], "sk binary")
-            est = df.agg(
-                F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("d")).collect()[0]["d"]
-            out[col] = int(est)
-        return out
-
-
-def per_file_verdicts(df: DataFrame, specs: List[CheckSpec]) -> DataFrame:
-    """Per-INPUT-FILE verdicts: the same agg-able check batch grouped by the
-    hidden ``_metadata.file_path`` column of file sources — pinpoints WHICH
-    files carry violations without a second scan (at warehouse scale this is
-    the 'quarantine the bad file' primitive). One grouped aggregation,
-    map-side combinable; output one row per file with per-check violation
-    counts."""
-    exprs = [F.count(F.lit(1)).alias("row_count")]
-    for spec in specs:
-        if spec.metric not in (MetricType.MISSING_COUNT,
-                               MetricType.INVALID_COUNT):
-            continue
-        col = resolve_column(df, spec.field) if spec.field else None
-        if col is None:
-            # a NULL column, not a silently absent one: a consumer
-            # quarantining files by violation counts must SEE that the
-            # check never evaluated (schema drift dropped the column)
-            exprs.append(F.max(F.lit(None).cast("long")).alias(spec.key))
-            continue
-        if spec.metric is MetricType.MISSING_COUNT:
-            exprs.append(count_if(missing_condition(df, col, spec), spec.key))
-        else:
-            cond = invalid_condition(df, col, spec)
-            if cond is not None:
-                exprs.append(count_if(cond, spec.key))
-    return (
-        df.groupBy(F.col("_metadata.file_path").alias("file"))
-        .agg(*exprs)
-        .orderBy("file")
-    )

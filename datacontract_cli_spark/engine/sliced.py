@@ -4,11 +4,11 @@ in one shuffle.
 A whole-table pass/fail hides which slice of the data broke — at web
 scale, a contract usually fails because one source, one day, or one
 language went bad while the rest stayed green. ``sliced_validation``
-groups by the slice columns and evaluates the same compiled check
-expressions the engine's batched aggregate runs (missing/invalid
-count-ifs, row counts, quantile sketches), then folds each spec's
-threshold into a Column-level verdict — the per-slice analogue of the
-north rule's per-partition pass/fail verdicts, with semantic segments
+groups by the slice columns the aggregate that the engine's compiler
+(``executor.compile_aggregates``) builds for ``test()`` — missing/invalid
+count-ifs, row counts, quantile sketches, KS count-ifs — then folds each
+spec's threshold into a Column-level verdict: the per-slice analogue of
+the north rule's per-partition pass/fail verdicts, with semantic segments
 instead of physical buckets.
 
 Scale shape: ONE groupBy(slice) over one scan, map-side combine, rows =
@@ -17,13 +17,13 @@ frame; the long (slice, check, value, passed) form explodes a literal
 array of structs — no second pass, no driver loop, works on a thousand
 slices as on three. Threshold evaluation matches
 ``checks.spec.Threshold.passes`` for numeric thresholds (``passes(None)``
-= False). Drift checks ride the same shuffle: freqDriftPsi baselines
-expand to per-category count-ifs (novel mass folded into one bucket —
-see ``_psi_value``) and quantileDriftKs baselines (``cdf`` and
-``quantiles``) to the per-point count-ifs of ``drift.ks_aggregates``, so
-per-slice drift verdicts cost zero extra passes. Checks whose thresholds
-aren't expressible as Column math (timestamp SLAs, custom SQL) are
-skipped — run the engine for those.
+= False). Drift checks ride the same shuffle: quantileDriftKs compiles
+like any other check, and freqDriftPsi baselines, which ``test()`` runs
+as a job of their own, expand here to per-category count-ifs added to
+the same batch (novel mass folded into one bucket — see
+``_psi_value``), so per-slice drift verdicts cost zero extra passes.
+Checks whose thresholds aren't expressible as Column math (timestamp
+SLAs, custom SQL) are skipped — run the engine for those.
 """
 
 from __future__ import annotations
@@ -35,21 +35,17 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
-from datacontract_cli_spark.engine.predicates import (
-    _q,
-    count_if,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
+from datacontract_cli_spark.engine.executor import (
+    _ROW_COUNT_ALIAS,
+    compile_aggregates,
 )
+from datacontract_cli_spark.engine.predicates import _q, count_if, resolve_column
 from datacontract_cli_spark.model.contract import DataContract
-from datacontract_cli_spark.operators import drift
+from datacontract_cli_spark.operators.drift import _EPS
 
 _SLICEABLE = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
               MetricType.INVALID_COUNT, MetricType.QUANTILE,
               MetricType.FREQ_DRIFT_PSI, MetricType.QUANTILE_DRIFT_KS)
-
-_DRIFT_EPS = 1e-6  # matches operators.drift._EPS
 
 
 def _psi_value(prefix: str, baseline: dict, n: Column) -> Column:
@@ -62,7 +58,7 @@ def _psi_value(prefix: str, baseline: dict, n: Column) -> Column:
     ``frequency_fractions`` applies past its category cap). For
     enum-constrained drift columns the novel mass is ~0 and the two lanes
     agree to float precision."""
-    eps = F.lit(_DRIFT_EPS)
+    eps = F.lit(_EPS)
     total_known = None
     out = None
     for j, (k, b) in enumerate(baseline.items()):
@@ -128,75 +124,41 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
         if s.model == model and s.metric in _SLICEABLE
         and s.threshold is not None
     ]
-    exprs = [F.count(F.lit(1)).alias("__n__")]
-    verdicts = []  # (key, value_col_alias)
-    for i, spec in enumerate(specs):
-        alias = f"__m{i}__"
-        column = resolve_column(df, spec.field) if spec.field else None
-        if spec.field and column is None:
-            # column lost to schema drift: surface the check as FAILING
-            # in every slice (null metric), never silently drop it — the
-            # batch engine fails the same check with "Column not found"
-            verdicts.append((spec, None))
+    psi_specs = [s for s in specs if s.metric is MetricType.FREQ_DRIFT_PSI]
+    batch, unevaluated = compile_aggregates(
+        df, [s for s in specs if s.metric is not MetricType.FREQ_DRIFT_PSI])
+    # a column lost to schema drift or a malformed baseline: the check
+    # FAILS in every slice (null metric), never silently dropped — the
+    # batch engine fails or errors the same check
+    failing = [spec for spec, _, _ in unevaluated]
+    for i, spec in enumerate(psi_specs):
+        column = resolve_column(df, spec.field)
+        if column is None:
+            failing.append(spec)
             continue
-        if spec.metric is MetricType.ROW_COUNT:
-            verdicts.append((spec, "__n__"))
+        baseline = spec.baseline or {}
+        if not baseline:
             continue
-        if spec.metric is MetricType.FREQ_DRIFT_PSI:
-            baseline = spec.baseline or {}
-            if not baseline:
-                continue
-            for j, k in enumerate(baseline):
-                # native-typed comparison (no string rendering — the
-                # bool 'True' vs 'true' hazard); None is its own category
-                qcol = F.col(_q(column))
-                cond = (qcol.isNull() if k is None
-                        else qcol.eqNullSafe(F.lit(k)))
-                exprs.append(count_if(cond, f"{alias}k{j}"))
-            verdicts.append(
-                (spec, F.round(_psi_value(alias, baseline, F.col("__n__")),
-                               6)))
-            continue
-        if spec.metric is MetricType.QUANTILE_DRIFT_KS:
-            try:
-                aggs, ks = drift.ks_aggregates(F.col(_q(column)),
-                                               spec.baseline, alias)
-            except ValueError:  # malformed baseline
-                verdicts.append((spec, None))
-                continue
-            exprs.extend(aggs)
-            verdicts.append((spec, F.round(ks, 6)))
-            continue
-        if spec.metric is MetricType.MISSING_COUNT:
-            expr = count_if(missing_condition(df, column, spec), alias)
-        elif spec.metric is MetricType.INVALID_COUNT:
-            cond = invalid_condition(df, column, spec)
-            expr = (count_if(cond, alias) if cond is not None
-                    else F.lit(0).cast("bigint").alias(alias))
-        else:  # QUANTILE
-            q = float(spec.quantile if spec.quantile is not None else 0.5)
-            expr = (F.percentile(F.col(_q(column)), F.lit(q))
-                    if spec.quantile_exact
-                    else F.percentile_approx(F.col(_q(column)), q, 10000)
-                    ).alias(alias)
-        exprs.append(expr)
-        verdicts.append((spec, alias))
+        alias = f"__dc_psi{i}__"
+        # native-typed comparison (no string rendering — the bool 'True'
+        # vs 'true' hazard); None is its own category
+        qcol = F.col(_q(column))
+        batch.add(spec, alias, [
+            count_if(qcol.isNull() if k is None else qcol.eqNullSafe(F.lit(k)),
+                     f"{alias}k{j}")
+            for j, k in enumerate(baseline)],
+            F.round(_psi_value(alias, baseline, F.col(_ROW_COUNT_ALIAS)), 6))
 
-    grouped = df.groupBy(*[F.col(c) for c in slice_cols]).agg(*exprs)
+    grouped = batch.frame(df, slice_cols)
     if min_slice_rows > 0:
-        grouped = grouped.filter(F.col("__n__") >= min_slice_rows)
+        grouped = grouped.filter(F.col(_ROW_COUNT_ALIAS) >= min_slice_rows)
 
-    rows = []
-    for spec, alias in verdicts:
-        if alias is None:  # missing column or bad baseline: failed, null metric
-            rows.append(F.struct(
-                F.lit(spec.key).alias("check_key"),
-                F.lit(None).cast("double").alias("metric_value"),
-                F.lit(False).alias("passed"),
-            ))
-            continue
-        value = (alias if isinstance(alias, Column)
-                 else F.col(alias)).cast("double")
+    rows = [F.struct(F.lit(spec.key).alias("check_key"),
+                     F.lit(None).cast("double").alias("metric_value"),
+                     F.lit(False).alias("passed"))
+            for spec in failing]
+    for spec, alias in batch.evaluators:
+        value = F.col(alias).cast("double")
         compare = value
         if (spec.threshold_is_percent
                 and spec.metric in (MetricType.MISSING_COUNT,
@@ -205,8 +167,9 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
             # exactly like the batch lane's _evaluate; the raw count
             # stays in metric_value
             compare = F.when(
-                F.col("__n__") > 0,
-                F.round(value / F.col("__n__") * 100, 6)).otherwise(0.0)
+                F.col(_ROW_COUNT_ALIAS) > 0,
+                F.round(value / F.col(_ROW_COUNT_ALIAS) * 100, 6)
+            ).otherwise(0.0)
         cond = _threshold_condition(spec.threshold, compare)
         if cond is None:
             continue

@@ -10,8 +10,9 @@ Beyond-reference operators mandated by the north rule (SURVEY.md §2.9):
 
 - **KS statistic** compares the observed distribution against a baseline
   at the baseline's k points, exactly, with count-ifs that fold into any
-  aggregate (``ks_aggregates``): the engine runs them inside each model's
-  one flat aggregate, ``engine/sliced.py`` inside its slice groupBy.
+  aggregate (``ks_aggregates``): the engine's aggregate compiler
+  (``engine/executor.py compile_aggregates``) folds them into each model's
+  one flat aggregate and into ``engine/sliced.py``'s slice groupBy.
   ``baseline={"cdf": [[x, p], ...]}`` scores ``|F(x) - p|``;
   ``baseline={"quantiles": {p: x}}`` scores p's distance to the interval
   ``[F(x-), F(x)]`` — 0 when x is a p-quantile of the data (so a constant

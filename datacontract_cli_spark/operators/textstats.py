@@ -1,4 +1,4 @@
-"""Text analysis operators: token counts, quality scoring, language ID.
+"""Text analysis operators: token counts, quality scoring, repetition.
 
 Everything is built from ``pyspark.sql.functions`` Column expressions —
 whole-stage-codegen'd, zero Python on the executors. Each function returns
@@ -67,68 +67,6 @@ def quality_score(col: Column) -> Column:
     upper_pen = F.lit(1.0) - F.least(upper_ratio(col) * 2, F.lit(1.0))
     stop_bonus = F.least(stopword_ratio(col) * 5, F.lit(1.0))
     return (length_ok * 0.4 + punct_pen * 0.25 + upper_pen * 0.15 + stop_bonus * 0.2)
-
-
-def language_scores(col: Column) -> Column:
-    """Per-language stopword-hit fractions as a map<string,double>."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    n = F.greatest(F.size(toks), F.lit(1))
-
-    def membership(words):
-        # factory so each lambda closes over its own stopword list and stays
-        # single-arg (pyspark derives lambda arity from the signature)
-        return lambda t: t.isin(*words)
-
-    entries = []
-    for lang, stops in _STOPWORDS.items():
-        hits = F.size(F.filter(toks, membership(stops)))
-        entries.append(F.struct(F.lit(lang).alias("lang"), (hits / n).alias("score")))
-    return F.array(*entries)
-
-
-def _argmax_lang(scores: Column, default: str) -> Column:
-    """The first ``lang`` with the highest ``score``; ``default`` when no
-    score is positive. ``scores`` and its maximum are each bound once
-    (see :func:`~datacontract_cli_spark.operators._hof.bind`)."""
-    return bind(scores, lambda sc: bind(
-        F.array_max(F.transform(sc, lambda s: s["score"])),
-        lambda best: F.when(
-            best > 0, F.filter(sc, lambda s: s["score"] == best)[0]["lang"]
-        ).otherwise(F.lit(default))))
-
-
-def detect_language(col: Column, default: str = "und") -> Column:
-    """Argmax of the stopword scores; 'und' when nothing matches."""
-    return _argmax_lang(language_scores(col), default)
-
-
-# Character-trigram profiles per language (tiny, illustrative set — the
-# n-gram-heuristic flavor of language ID; real profiles would be learned
-# from a corpus). Scores are trigram-hit fractions, argmax wins.
-_CHAR_TRIGRAMS: Dict[str, List[str]] = {
-    "en": ["the", "ing", "and", "ion", "ent", " th", "he ", "er "],
-    "de": ["der", "ein", "ich", "und", "sch", "die", "en ", "ch "],
-    "fr": ["les", "ent", "que", "ait", "ion", "de ", "le ", "es "],
-    "es": ["que", "ión", "los", "ent", "ado", "de ", "la ", "os "],
-}
-
-
-def detect_language_ngram(col: Column, default: str = "und") -> Column:
-    """Char-trigram language ID: count profile-trigram occurrences per
-    language (JVM-side: one `locate`-style contains count per trigram via
-    split length), argmax."""
-    lowered = F.lower(col)
-    entries = []
-    for lang, grams in _CHAR_TRIGRAMS.items():
-        hits = None
-        for g in grams:
-            # occurrences of g = size(split(text, g)) - 1, JVM-side
-            n = F.size(F.split(lowered, F.lit(g), -1)) - 1
-            hits = n if hits is None else hits + n
-        norm = F.greatest(F.length(lowered), F.lit(1))
-        entries.append(F.struct(F.lit(lang).alias("lang"),
-                                (hits / norm).alias("score")))
-    return _argmax_lang(F.array(*entries), default)
 
 
 def repetition_ratio(col: Column, n: int = 3) -> Column:

@@ -30,3 +30,26 @@ def test_test_partitioned_matches_global(spark, tmp_path):
     assert all(c.diagnostics["failed_buckets"] for c in failed
                if c.type in ("field_required",))
     assert prun.result is ResultEnum.failed
+
+
+def test_validate_job_partitioned_fails_closed(spark, tmp_path, monkeypatch):
+    """A uniqueness check whose key lacks the partition key cannot be
+    folded per bucket: the job reports it as an error and exits non-zero."""
+    import yaml
+
+    from tools import validate_job
+
+    with open(os.path.join(HERE, "fixtures", "transcripts_contract.yaml")) as f:
+        doc = yaml.safe_load(f)
+    text = next(p for p in doc["schema"][0]["properties"] if p["name"] == "text")
+    text["unique"] = True
+    contract = tmp_path / "contract.yaml"
+    contract.write_text(yaml.safe_dump(doc, sort_keys=False))
+    data = str(tmp_path / "transcripts")
+    synthesize_transcripts(spark, n_convs=40, turns_per_conv=3).write.parquet(data)
+
+    monkeypatch.setattr("sys.argv", [
+        "validate_job.py", "--contract", str(contract), "--data", data,
+        "--model", "transcripts", "--partitioned",
+        "--checkpoint-dir", str(tmp_path / "ckpt"), "--n-buckets", "4"])
+    assert validate_job.main() == 1

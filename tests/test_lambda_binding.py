@@ -82,8 +82,6 @@ BUILDERS = {
     "gopher_repetition": lambda df: textstats.gopher_repetition(df),
     "collapse_repeated_lines": lambda df: lines.collapse_repeated_lines(df),
     "word_shingles": _col_builder(dedup.word_shingles),
-    "detect_language": _col_builder(textstats.detect_language),
-    "detect_language_ngram": _col_builder(textstats.detect_language_ngram),
     "word_ngrams": _col_builder(lambda c: contamination.word_ngrams(c, 3)),
     "word_ngram_hashes": _col_builder(
         lambda c: contamination.word_ngram_hashes(c, 3)),

@@ -242,30 +242,6 @@ def test_quality_score_ordering(spark):
     assert rows["good"] > rows["bad"]
 
 
-def test_detect_language(spark):
-    df = spark.createDataFrame(
-        [("en", "the cat and the dog went to the park and it was fun"),
-         ("de", "der hund und die katze sind nicht mit der maus"),
-         ("fr", "le chat et le chien sont dans la maison des amis")],
-        "expected string, text string")
-    rows = df.select("expected", textstats.detect_language(F.col("text")).alias("got")).collect()
-    for r in rows:
-        assert r["got"] == r["expected"], (r["expected"], r["got"])
-
-
-def test_detect_language_ngram(spark):
-    df = spark.createDataFrame(
-        [("en", "the thing and the other thing are standing there"),
-         ("de", "der hund und die katze gehen durch die schule"),
-         ("fr", "les enfants que nous avons vus sont dans la maison"),
-         ("es", "los que están aquí han llegado de la ciudad")],
-        "expected string, text string")
-    rows = df.select("expected",
-                     textstats.detect_language_ngram(F.col("text")).alias("got")).collect()
-    for r in rows:
-        assert r["got"] == r["expected"]
-
-
 # --- refintegrity --------------------------------------------------------------------
 
 def test_orphan_count(spark):

@@ -106,49 +106,6 @@ def test_non_monotonic_join_matches_window(spark):
     assert vw == vj > 0
 
 
-def test_hll_sketches_fold_across_resume(spark, tmp_path):
-    """Per-bucket HLL sketches union to the table-wide distinct count — and
-    the union over a RESUMED run (half the buckets from the manifest, half
-    freshly computed) equals the full-pass estimate."""
-    from datacontract_cli_spark.engine.partitioned import PartitionedValidator
-    from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
-
-    df = spark.range(4000).selectExpr(
-        "concat('conv-', cast(id % 800 as string)) as conv_id",
-        "cast(id % 7 as int) as turn_idx",
-        "concat('u', cast(id % 321 as string)) as user")
-    specs = [CheckSpec(key="rc", category="quality", type="row_count", name="rc",
-                       model="t", metric=MetricType.ROW_COUNT,
-                       threshold=Threshold(Op.GT, 0))]
-
-    import json as _json
-    import os
-
-    ckpt = str(tmp_path / "ckpt")
-    pv = PartitionedValidator(spark, checkpoint_dir=ckpt, n_buckets=8)
-    # full run, then simulate a crash by deleting 3 buckets' manifest lines
-    v0 = pv.run(df, specs, "t", distinct_cols=["user"])
-    assert len(v0) == 8
-    manifest = os.path.join(ckpt, "t.manifest.jsonl")
-    kept = [l for l in open(manifest) if _json.loads(l)["bucket"] >= 3]
-    open(manifest, "w").writelines(kept)
-    pv = PartitionedValidator(spark, checkpoint_dir=ckpt, n_buckets=8)
-    assert len(pv.completed_buckets("t")) == 5
-    # resume: only the 3 missing buckets recompute
-    v2 = pv.run(df, specs, "t", distinct_cols=["user"])
-    assert len(v2) == 8
-    est = PartitionedValidator.fold_distinct(spark, v2)
-    assert abs(est["user"] - 321) <= 321 * 0.05  # HLL within 5%
-    # fresh single-pass estimate matches the resumed union
-    pv2 = PartitionedValidator(spark, checkpoint_dir=str(tmp_path / "ckpt2"), n_buckets=8)
-    v_full = pv2.run(df, specs, "t", distinct_cols=["user"])
-    est_full = PartitionedValidator.fold_distinct(spark, v_full)
-    assert est == est_full
-    # numeric metrics still fold (sketches excluded from sums)
-    folded = PartitionedValidator.fold(v2)
-    assert folded["metrics"]["row_count"] == 4000
-
-
 def test_ordering_check_formulations_agree(spark):
     """The skew-fragile window formulation and the skew-immune adjacency
     join compute the same non-monotonic-turn count on dense turn indices
@@ -173,37 +130,3 @@ def test_ordering_check_formulations_agree(spark):
     # than turn 3? turn4.ts > turn3.ts (base+4min > base-1min, monotonic) —
     # exactly ONE violation per seeded conversation
     assert win == adj == 60
-
-
-def test_per_file_verdicts(spark, tmp_path):
-    """Per-file verdicts via _metadata.file_path: file-level counts sum to
-    the global counts and every input file gets a row."""
-    import glob
-
-    from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
-    from datacontract_cli_spark.engine.partitioned import per_file_verdicts
-
-    df = spark.range(1000).selectExpr(
-        "cast(id as int) id",
-        "case when id % 100 = 7 then null else concat('u', id % 50) end as user",
-        "cast(id % 20 as double) as v")
-    out = str(tmp_path / "files")
-    df.repartition(4).write.parquet(out)
-
-    specs = [
-        CheckSpec(key="missing_user", category="schema", type="field_required",
-                  name="m", model="t", field="user",
-                  metric=MetricType.MISSING_COUNT, threshold=Threshold(Op.EQ, 0)),
-        CheckSpec(key="invalid_v", category="schema", type="field_maximum",
-                  name="i", model="t", field="v",
-                  metric=MetricType.INVALID_COUNT, threshold=Threshold(Op.EQ, 0),
-                  valid_max=15.0),
-    ]
-    read = spark.read.parquet(out)
-    verdicts = per_file_verdicts(read, specs).collect()
-    n_files = len(glob.glob(out + "/part-*.parquet"))
-    assert len(verdicts) == n_files == 4
-    assert sum(r["row_count"] for r in verdicts) == 1000
-    assert sum(r["missing_user"] for r in verdicts) == 10
-    assert sum(r["invalid_v"] for r in verdicts) == 1000 / 20 * 4  # v in {16..19}
-    assert all(r["file"].startswith("file:") for r in verdicts)

@@ -24,7 +24,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     from pyspark.sql import functions as F
 
     from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
-    from datacontract_cli_spark.engine.predicates import invalid_condition, missing_condition
+    from datacontract_cli_spark.engine.executor import compile_aggregates
     from datacontract_cli_spark.operators.refintegrity import orphan_rows
     from datacontract_cli_spark.session import get_spark
 
@@ -34,15 +34,17 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
 
     sections = []
 
-    spec = CheckSpec(key="k", category="q", type="t", name="n", model="m",
-                     metric=MetricType.INVALID_COUNT, field="o_orderstatus",
-                     valid_values=["O", "F"])
-    batched = orders.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.sum(F.when(missing_condition(orders, "o_orderstatus", spec), 1).otherwise(0)).alias("missing"),
-        F.sum(F.when(invalid_condition(orders, "o_orderstatus", spec), 1).otherwise(0)).alias("invalid"),
-        F.max("o_orderdate").alias("freshness"),
-    )
+    specs = [
+        CheckSpec(key=metric.value, category="q", type="t", name="n",
+                  model="orders", metric=metric, field=field, **args)
+        for metric, field, args in (
+            (MetricType.ROW_COUNT, None, {}),
+            (MetricType.MISSING_COUNT, "o_orderstatus", {}),
+            (MetricType.INVALID_COUNT, "o_orderstatus",
+             {"valid_values": ["O", "F"]}),
+            (MetricType.FRESHNESS, "o_orderdate", {}))]
+    batch, _ = compile_aggregates(orders, specs)
+    batched = batch.frame(orders)
     sections.append(("Batched validation aggregate (one scan, partial+final "
                      "hash agg, pruned ReadSchema)", batched))
 

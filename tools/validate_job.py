@@ -7,7 +7,8 @@
 Build the zip with ``python tools/package.py`` (writes dist/dcspark.zip).
 On a real cluster the same invocation works with ``--master yarn``/k8s —
 the engine only ever talks to the SparkSession it is given. Exit code
-follows the run result (1 on failure), so the job slots into schedulers.
+follows the run result (1 on a failed or error verdict, in every mode),
+so the job slots into schedulers.
 """
 
 from __future__ import annotations
@@ -45,19 +46,17 @@ def main() -> int:
     spark = SparkSession.builder.appName("datacontract-validate").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from datacontract_cli_spark.checks.compile import compile_checks
     from datacontract_cli_spark.engine.executor import SparkContractEngine
-    from datacontract_cli_spark.engine.partitioned import PartitionedValidator
     from datacontract_cli_spark.model.contract import load_contract
     from datacontract_cli_spark.output import writers
 
     contract = load_contract(args.contract)
+    engine = SparkContractEngine(spark)
 
     if args.incremental:
         if not args.checkpoint_dir:
             print("error: --incremental needs --checkpoint-dir", file=sys.stderr)
             return 2
-        engine = SparkContractEngine(spark)
         run, result = engine.test_incremental(
             contract, args.data, args.model, args.checkpoint_dir,
             table_format=args.table_format, snapshot_id=args.snapshot_id)
@@ -69,18 +68,14 @@ def main() -> int:
         return writers.exit_code(run)
 
     df = spark.read.parquet(args.data)
-
     if args.partitioned:
-        specs = [s for s in compile_checks(contract, None) if s.model == args.model]
-        pv = PartitionedValidator(spark, checkpoint_dir=args.checkpoint_dir,
-                                  partition_key=args.partition_key,
-                                  n_buckets=args.n_buckets)
-        verdicts = pv.run(df, specs, args.model, source_path=args.data)
-        folded = PartitionedValidator.fold(verdicts, specs=specs)
-        print(json.dumps(folded, default=str))
-        return 1 if "failed" in folded["results"].values() else 0
-
-    run = SparkContractEngine(spark).test(contract, tables={args.model: df})
+        run, verdicts = engine.test_partitioned(
+            contract, df, args.model, checkpoint_dir=args.checkpoint_dir,
+            partition_key=args.partition_key, n_buckets=args.n_buckets,
+            source_path=args.data)
+        print(json.dumps({"n_buckets_validated": len(verdicts)}))
+    else:
+        run = engine.test(contract, tables={args.model: df})
     print(writers.console_table(run))
     return writers.exit_code(run)
 
