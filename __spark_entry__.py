@@ -1222,39 +1222,6 @@ def _q_iceberg_evolution(spark, sf):
     return read_iceberg(spark, root).orderBy("doc_id")
 
 
-def _q_delta_zorder(spark, sf):
-    """OPTIMIZE ... ZORDER BY lifecycle: documents → Delta table →
-    z-order compaction on two DECORRELATED derived keys → filtered read
-    on the non-leading key. The read path prunes files by the rewritten
-    stats before re-applying the filter, so a wrong Morton layout, wrong
-    stats, or over-eager pruning all surface as a row mismatch against
-    the relational oracle (sources/zorder.py; Delta OPTIMIZE ZORDER BY
-    parity — the reference delegates this to delta-spark)."""
-    import os
-
-    from datacontract_cli_spark.sources.delta_table import (
-        compact_delta,
-        read_delta,
-        write_delta_table,
-    )
-
-    root = _table_fixture_root(sf, "deltaz")
-    marker = os.path.join(root, "_READY")
-    if not os.path.exists(marker):
-        docs = _t(spark, sf, "documents").select(
-            "doc_id", "n_chars",
-            (F.col("doc_id") % 50).alias("zx"),
-            ((F.col("doc_id") * 7919) % 50).alias("zy"))
-        write_delta_table(docs, root)
-        compact_delta(spark, root, zorder_by=["zx", "zy"],
-                      target_files=16)
-        open(marker, "w").close()
-    return (read_delta(spark, root, filters=[("zy", "<", 10)])
-            .select("doc_id", F.col("n_chars").cast("long")
-                    .alias("n_chars"))
-            .orderBy("doc_id"))
-
-
 def _q_delta_deletion_vectors(spark, sf):
     """Delta protocol-3 merge-on-read lifecycle over documents: a
     COLUMN-MAPPED table (parquet files carry generated physical names)
@@ -1445,7 +1412,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "iceberg_merge_on_read": _q_iceberg_mor,
         "iceberg_quarantine": _q_iceberg_quarantine,
         "delta_deletion_vectors": _q_delta_deletion_vectors,
-        "delta_zorder": _q_delta_zorder,
         "iceberg_upsert": _q_iceberg_upsert,
         "iceberg_evolution": _q_iceberg_evolution,
         "collapse_lines": _q_collapse_lines,
@@ -1472,9 +1438,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # similarity, asof, cohorts, ...) were deleted with their modules
         # (benchmark_contamination had been rotated late-r5 for
         # semantic_dedup: green r04, contamination.py untouched since;
-        # chi2_event_type rotated for delta_zorder: green r04, and the
-        # round's one drift.py change — _baseline_literal key rendering —
-        # is identically exercised by psi/jsd_event_type, which stay)
+        # chi2_event_type had been rotated for the since-deleted
+        # delta_zorder: green r04, and the round's one drift.py change —
+        # _baseline_literal key rendering — is identically exercised by
+        # psi/jsd_event_type, which stay)
         # (jsd_event_type rotated late-r5 for collapse_lines,
         # psi_event_type for gopher_repetition: both green r03+r04; the
         # round's _baseline_literal fix is verified by the local gate at
@@ -1500,8 +1467,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "missing_count": _q_missing_count,
         "duplicate_count": _q_duplicate_count,
         "duplicate_count_composite": _q_duplicate_composite,
-        # ---------------- position 51+: stable rows, rotated out
+        # (freshness_retention came back when delta_zorder was deleted)
         "freshness_retention": _q_freshness_retention,
+        # ---------------- position 51+: stable rows, rotated out
         # (tpch_q1/topk_parts/simhash_near_dups rotated r5: their code
         # paths are untouched this
         # round — the one dedup.py change was the winnow arrow kernel.
@@ -1658,13 +1626,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(doc_id % 100 AS BIGINT), CAST(doc_id % 7 AS DOUBLE) "
             "FROM documents WHERE doc_id % 25 = 0 "
             "ORDER BY doc_id"
-        ),
-        "delta_zorder": (
-            # same derived keys; any layout/stats/pruning defect in the
-            # z-ordered rewrite surfaces as a row mismatch
-            "SELECT CAST(doc_id AS BIGINT) AS doc_id, "
-            "CAST(n_chars AS BIGINT) AS n_chars FROM documents "
-            "WHERE (doc_id * 7919) % 50 < 10 ORDER BY doc_id"
         ),
         "delta_deletion_vectors": (
             # surviving set after two DV DELETE commits on the

@@ -172,19 +172,6 @@ class CheckSpec:
 
     extra: Dict[str, Any] = dc_field(default_factory=dict)
 
-    def has_validity_constraints(self) -> bool:
-        return any(
-            v is not None
-            for v in (
-                self.valid_values,
-                self.valid_regex,
-                self.valid_min,
-                self.valid_max,
-                self.valid_min_length,
-                self.valid_max_length,
-            )
-        )
-
 
 def threshold_percent(spec: "CheckSpec", value, row_count):
     """``value`` as a percent of ``row_count`` (6dp) when ``spec``'s

@@ -294,33 +294,6 @@ def build_parser() -> argparse.ArgumentParser:
     tl.add_argument("--max-polls", type=int, default=None,
                     help="stop --follow after N polls")
     tl.add_argument("--master", default=None)
-
-    mt = sub.add_parser(
-        "maintain",
-        help="Table maintenance: bin-pack compaction (materializes "
-             "pending deletes / deletion vectors), snapshot expiry "
-             "(iceberg), vacuum (delta)")
-    mt.add_argument("table", help="Iceberg or Delta table directory")
-    mt.add_argument("--format", choices=["iceberg", "delta"],
-                    default="iceberg")
-    mt.add_argument("--compact", action="store_true",
-                    help="rewrite data files bin-packed; applies pending "
-                         "merge-on-read delete files / deletion vectors")
-    mt.add_argument("--target-files", type=int, default=None,
-                    help="files per partition group after compaction "
-                         "(default 1, or 8 with --zorder-by)")
-    mt.add_argument("--zorder-by", default=None,
-                    help="comma-separated columns: cut the rewritten "
-                         "files along Morton-code ranges so stats "
-                         "pruning works on every listed column "
-                         "(OPTIMIZE ... ZORDER BY)")
-    mt.add_argument("--expire-keep", type=int, default=None,
-                    help="expire all but the newest N snapshots and "
-                         "delete unreferenced files (iceberg)")
-    mt.add_argument("--vacuum", action="store_true",
-                    help="delete files the current version does not "
-                         "reference (delta)")
-    mt.add_argument("--master", default=None)
     return p
 
 
@@ -585,68 +558,6 @@ def main(argv: list[str] | None = None) -> int:
                 break
             _time.sleep(args.interval)
         return 1 if any_failed else 0
-
-    if args.command == "maintain":
-        import json as _json
-
-        if args.zorder_by and not args.compact:
-            print("error: --zorder-by requires --compact",
-                  file=sys.stderr)
-            return 1
-        if not args.compact and args.expire_keep is None \
-                and not getattr(args, "vacuum", False):
-            print("error: nothing to do (pass --compact, --expire-keep N "
-                  "and/or --vacuum)", file=sys.stderr)
-            return 1
-        # flag/format combinations are rejected BEFORE any work runs — a
-        # compaction must not commit and then exit 1 on a later bad flag
-        if args.expire_keep is not None and args.format == "delta":
-            print("error: --expire-keep is iceberg-only; use --vacuum "
-                  "for delta", file=sys.stderr)
-            return 1
-        if getattr(args, "vacuum", False) and args.format == "iceberg":
-            print("error: --vacuum is delta-only; use --expire-keep N "
-                  "for iceberg", file=sys.stderr)
-            return 1
-        out = {}
-        try:
-            if args.compact:
-                from datacontract_cli_spark.session import get_spark
-                spark = get_spark("dcspark-maintain", master=args.master)
-                zcols = ([c.strip() for c in args.zorder_by.split(",")
-                          if c.strip()] if args.zorder_by else None)
-                n_files = args.target_files if args.target_files \
-                    is not None else (8 if zcols else 1)
-                if args.format == "delta":
-                    from datacontract_cli_spark.sources.delta_table import (
-                        compact_delta,
-                    )
-                    out["compacted_version"] = compact_delta(
-                        spark, args.table, zorder_by=zcols,
-                        target_files=n_files)
-                else:
-                    from datacontract_cli_spark.sources.iceberg_write import (
-                        compact_iceberg,
-                    )
-                    out["compacted_snapshot_id"] = compact_iceberg(
-                        spark, args.table, files_per_group=n_files,
-                        zorder_by=zcols)
-            if args.expire_keep is not None:
-                from datacontract_cli_spark.sources.iceberg_write import (
-                    expire_snapshots,
-                )
-                out.update(expire_snapshots(args.table,
-                                            keep_last=args.expire_keep))
-            if getattr(args, "vacuum", False):
-                from datacontract_cli_spark.sources.delta_table import (
-                    vacuum_delta,
-                )
-                out.update(vacuum_delta(args.table))
-        except Exception as e:
-            print(f"error: {e}", file=sys.stderr)
-            return 1
-        print(_json.dumps(out))
-        return 0
 
     if args.command == "export":
         from datacontract_cli_spark.export_registry import export_contract

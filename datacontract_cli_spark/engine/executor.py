@@ -66,7 +66,6 @@ from datacontract_cli_spark.checks.types import (
 from datacontract_cli_spark.engine.predicates import (
     _q,
     count_if,
-    describe_condition,
     invalid_condition,
     missing_condition,
     resolve_column,

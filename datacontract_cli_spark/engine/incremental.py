@@ -336,8 +336,9 @@ class IncrementalValidator:
                 # (materializes them) are the correct lanes.
                 raise NotImplementedError(
                     "delta table has deletion vectors; file-incremental "
-                    "validation needs copy-on-write files — run "
-                    "compact_delta first or validate via the batch engine")
+                    "validation needs copy-on-write files — compact the "
+                    "table (materialize its deletion vectors) first or "
+                    "validate via the batch engine")
         root = _strip_scheme(table_path)
         listing = [
             (_norm_uri("file://" + os.path.join(root, a["path"])),
@@ -410,7 +411,7 @@ class SnapshotTailer:
                 r = self.iv.run_iceberg(table_path, specs, model,
                                         snapshot_id=sid)
             except Exception as e:  # noqa: BLE001 — verdicts must surface
-                # expire_snapshots drops expired snapshots from the
+                # snapshot expiry drops expired snapshots from the
                 # metadata this poll reads, so unlike Delta the normal
                 # maintenance path never lands here — but manually
                 # deleted files / races still must not lose the batch's

@@ -121,11 +121,3 @@ def resolve_column(df: DataFrame, name: str) -> Optional[str]:
         return name
     lowered = {c.lower(): c for c in df.columns}
     return lowered.get(name.lower())
-
-
-def describe_condition(df: DataFrame, cond: Column) -> str:
-    """Best-effort SQL-ish text of a Column for Check.implementation."""
-    try:
-        return str(cond._jc.toString())  # type: ignore[attr-defined]
-    except Exception:
-        return str(cond)

@@ -12,10 +12,8 @@ from __future__ import annotations
 from typing import Any, Dict
 
 import yaml
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from datacontract_cli_spark.checks.types import spark_type_to_property
 from datacontract_cli_spark.model.contract import DataContract, Property, SchemaObject
 from datacontract_cli_spark.sources.readers import contract_schema
 
@@ -30,19 +28,6 @@ def to_spark_schema(obj: SchemaObject) -> T.StructType:
         for f in base.fields
     ]
     return T.StructType(fields)
-
-
-def import_dataframe(df: DataFrame, name: str, contract_id: str = None,
-                     version: str = "0.0.1") -> DataContract:
-    """Reflect a DataFrame's schema into a contract (Spark → logical types)."""
-    props = [spark_type_to_property(f.name, f.dataType) for f in df.schema.fields]
-    for prop, field in zip(props, df.schema.fields):
-        prop.required = not field.nullable
-    return DataContract(
-        id=contract_id or name,
-        version=version,
-        schema_objects=[SchemaObject(name=name, properties=props)],
-    )
 
 
 _QUALITY_KEYS = [

@@ -295,8 +295,3 @@ def to_excel_bytes(contract: DataContract) -> bytes:
         for i, sh in enumerate(sheets):
             z.writestr(f"xl/worksheets/sheet{i + 1}.xml", sh.xml())
     return buf.getvalue()
-
-
-def to_excel_file(contract: DataContract, path: str) -> None:
-    with open(path, "wb") as f:
-        f.write(to_excel_bytes(contract))

@@ -195,10 +195,6 @@ class Run:
             return ResultEnum.unknown
         return ResultEnum.passed
 
-    @property
-    def has_passed(self) -> bool:
-        return self.result == ResultEnum.passed
-
     def to_dict(self) -> Dict[str, Any]:
         return {
             "runId": self.runId,

@@ -2,7 +2,7 @@
 
 The north rule's input is conversations with a heavy-tailed turn count — a
 single hot conv_id can dominate a shuffle partition. Per-conversation
-aggregates (turn count, turn_idx density, timestamp monotonicity) use the
+aggregates (turn count, turn_idx density, timestamp range) use the
 salted two-phase pattern: partial aggregation per (conv_id, salt) spreads a
 hot conversation over ``salt_buckets`` reducers, the final per-conv merge
 touches only salt_buckets rows per conversation.
@@ -65,42 +65,6 @@ def turn_density_violations(df: DataFrame, conv_col: str = "conv_id",
     ).select(conv_col, "n_turns", "min_turn", "max_turn", "dup_turn_groups")
 
 
-def non_monotonic_ts_count(df: DataFrame, conv_col: str = "conv_id",
-                           turn_col: str = "turn_idx", ts_col: str = "ts") -> DataFrame:
-    """Turns whose ts is earlier than the previous turn's ts within the same
-    conversation (window over (conv, turn order)). Returns a 1-row count.
-
-    NOTE: a window partitioned by conv_id sorts each conversation in ONE
-    task — measured 4.2× slower when one conversation holds 30% of all
-    turns. Under skew use :func:`non_monotonic_ts_count_join`."""
-    w = Window.partitionBy(conv_col).orderBy(turn_col)
-    prev = F.lag(F.col(ts_col)).over(w)
-    return (
-        df.select(conv_col, turn_col, F.col(ts_col))
-        .withColumn("bad", F.when(prev.isNotNull() & (F.col(ts_col) < prev), 1).otherwise(0))
-        .agg(F.sum("bad").alias("non_monotonic_turns"))
-    )
-
-
-def non_monotonic_ts_count_join(df: DataFrame, conv_col: str = "conv_id",
-                                turn_col: str = "turn_idx",
-                                ts_col: str = "ts") -> DataFrame:
-    """Skew-immune formulation of the same check: join each turn to its
-    successor on (conv_id, turn_idx+1). The join key INCLUDES turn_idx, so a
-    hot conversation spreads across as many keys as it has turns — no single
-    reducer ever owns it (assumes dense turn indexing, which
-    turn_density_violations checks independently)."""
-    cur = df.select(F.col(conv_col).alias("c"), F.col(turn_col).alias("t"),
-                    F.col(ts_col).alias("ts0"))
-    nxt = df.select(F.col(conv_col).alias("c"), (F.col(turn_col) - 1).alias("t"),
-                    F.col(ts_col).alias("ts1"))
-    pairs = cur.join(nxt, ["c", "t"])
-    return pairs.agg(
-        F.coalesce(F.sum(F.when(F.col("ts1") < F.col("ts0"), 1).otherwise(0)), F.lit(0))
-        .alias("non_monotonic_turns")
-    )
-
-
 def predecessor_violations(df: DataFrame, key_col: str, order_cols: list,
                            state_col: str,
                            rules: dict) -> DataFrame:
@@ -118,8 +82,7 @@ def predecessor_violations(df: DataFrame, key_col: str, order_cols: list,
     One window pass + one aggregate; returns a single row with one
     ``{state}_violations`` count per rule. Order by a UNIQUE tuple (e.g.
     ts + id) for determinism under ties. Skew: a hot key concentrates its
-    window in one task — same caveat as non_monotonic_ts_count; the
-    join-based rewrite applies if a dense index exists."""
+    window in one task."""
     w = Window.partitionBy(key_col).orderBy(*[F.col(c) for c in order_cols])
     prev = F.lag(F.col(state_col)).over(w)
     staged = df.select(F.col(state_col).alias("__s__"), prev.alias("__p__"))
@@ -131,27 +94,6 @@ def predecessor_violations(df: DataFrame, key_col: str, order_cols: list,
         bad = (F.col("__s__") == state) & ~F.coalesce(ok, F.lit(False))
         aggs.append(F.sum(bad.cast("long")).alias(f"{state}_violations"))
     return staged.agg(*aggs)
-
-
-CHAT_FORMAT_RULES = {
-    # the standard fine-tuning chat template invariants: a conversation
-    # opens with system or user; assistant answers user or tool output;
-    # tool calls follow an assistant turn; user speaks first or after
-    # an assistant reply
-    "system": {"allowed": [], "allow_first": True},
-    "user": {"allowed": ["system", "assistant"], "allow_first": True},
-    "assistant": {"allowed": ["user", "tool"], "allow_first": False},
-    "tool": {"allowed": ["assistant"], "allow_first": False},
-}
-
-
-def chat_format_violations(df: DataFrame, conv_col: str = "conv_id",
-                           turn_col: str = "turn_idx",
-                           role_col: str = "role") -> DataFrame:
-    """Chat-template conformance counts for a transcripts table
-    (:data:`CHAT_FORMAT_RULES`), ordered by turn index."""
-    return predecessor_violations(df, conv_col, [turn_col], role_col,
-                                  CHAT_FORMAT_RULES)
 
 
 def transitions(df: DataFrame, conv_col: str = "conv_id",
@@ -269,42 +211,3 @@ def followup_rates(df: DataFrame, target: str,
                   .alias("n_followed"))
             .withColumn("followup_rate",
                         F.round(F.col("n_followed") / F.col("n"), digits)))
-
-
-def conversation_text(df: DataFrame, conv_col: str = "conv_id",
-                      turn_col: str = "turn_idx", text_col: str = "text",
-                      sep: str = "\n") -> DataFrame:
-    """Flatten each conversation to ONE document: (conv, text) with turns
-    concatenated under stable turn order. ``sort_array`` on the per-conv
-    struct list gives the ordering WITHOUT a window — one groupBy(conv)
-    shuffle whose partial aggregation builds the lists map-side; a
-    conversation's size is bounded by context length, so the per-key list
-    never approaches executor memory the way an unbounded key would.
-    NULL turn texts are dropped by array_join (not rendered as 'null')."""
-    g = (df.groupBy(conv_col)
-           .agg(F.sort_array(F.collect_list(F.struct(
-               F.col(turn_col).alias("i"),
-               F.col(text_col).alias("t")))).alias("__ts__")))
-    return g.select(
-        conv_col,
-        F.array_join(F.transform("__ts__", lambda s: s["t"]), sep)
-         .alias(text_col))
-
-
-def conversation_near_duplicates(df: DataFrame, conv_col: str = "conv_id",
-                                 turn_col: str = "turn_idx",
-                                 text_col: str = "text",
-                                 threshold: float = 0.8,
-                                 **kwargs) -> DataFrame:
-    """Near-duplicate pairs at CONVERSATION granularity: templated /
-    replayed conversations share most of their turn text even when ids
-    and timestamps differ, so per-turn exact dedup misses them. Flattens
-    via :func:`conversation_text`, then the banded MinHash-LSH lane
-    (`operators/dedup.py minhash_candidates` — bucket equi-join, never
-    all-pairs) over the flattened documents. kwargs pass through
-    (num_hashes, bands, kernel...)."""
-    from datacontract_cli_spark.operators.dedup import minhash_near_duplicates
-
-    docs = conversation_text(df, conv_col, turn_col, text_col)
-    return minhash_near_duplicates(docs, conv_col, text_col,
-                                   threshold=threshold, **kwargs)

@@ -55,17 +55,6 @@ def text_fingerprint(col: Column) -> Column:
     return F.xxhash64(normalized_text(col))
 
 
-def exact_duplicate_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical (after normalization) documents:
-    fingerprint, n. Two-phase hash aggregate; only (hash, count) shuffles."""
-    return (
-        df.select(text_fingerprint(F.col(text_col)).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def dedup_exact(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Keep the lowest-id document of every exact-duplicate group."""
     w = Window.partitionBy(text_fingerprint(F.col(text_col))).orderBy(F.col(id_col))

@@ -278,51 +278,3 @@ def ks_statistic(df: DataFrame, column: str, baseline: Dict[str, Any]) -> float:
     aggs, ks = ks_aggregates(F.col(column), baseline, "__ks_")
     value = df.agg(*aggs).select(ks).first()[0]
     return float("nan") if value is None else float(value)
-
-
-def chi2_pvalue(chi2: float, df_degrees: int) -> float:
-    """Upper-tail p-value of the chi-square statistic (scipy-free): the
-    regularized upper incomplete gamma Q(df/2, chi2/2) via the standard
-    series / continued-fraction split (Numerical Recipes 6.2) — makes
-    :func:`chi2_df`'s output directly thresholdable by alpha."""
-    if chi2 <= 0:
-        return 1.0
-    if df_degrees <= 0:
-        # a single-category baseline gives df=0: the statistic carries no
-        # information — NaN, not a lgamma(0) domain error
-        return float("nan")
-    a, x = df_degrees / 2.0, chi2 / 2.0
-    gln = math.lgamma(a)
-    if x < a + 1:
-        # series for P(a,x); Q = 1 - P
-        ap, total, delta = a, 1.0 / a, 1.0 / a
-        for _ in range(500):
-            ap += 1
-            delta *= x / ap
-            total += delta
-            if abs(delta) < abs(total) * 1e-14:
-                break
-        p = total * math.exp(-x + a * math.log(x) - gln)
-        return max(0.0, min(1.0, 1.0 - p))
-    # continued fraction for Q(a,x) (modified Lentz)
-    tiny = 1e-300
-    b = x + 1 - a
-    c = 1 / tiny
-    d = 1 / b
-    h = d
-    for i in range(1, 500):
-        an = -i * (i - a)
-        b += 2
-        d = an * d + b
-        if abs(d) < tiny:
-            d = tiny
-        c = b + an / c
-        if abs(c) < tiny:
-            c = tiny
-        d = 1 / d
-        delta = d * c
-        h *= delta
-        if abs(delta - 1.0) < 1e-14:
-            break
-    q = math.exp(-x + a * math.log(x) - gln) * h
-    return max(0.0, min(1.0, q))

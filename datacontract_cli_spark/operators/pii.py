@@ -43,16 +43,6 @@ def match_count(col: Column, category: str) -> Column:
         F.lit(0))
 
 
-def contains_pii(col: Column,
-                 categories: Optional[Sequence[str]] = None) -> Column:
-    """Boolean: the value contains at least one match of any category."""
-    cats = list(categories or PATTERNS)
-    out = col.rlike(PATTERNS[cats[0]])
-    for c in cats[1:]:
-        out = out | col.rlike(PATTERNS[c])
-    return out
-
-
 def scrub(col: Column, categories: Optional[Sequence[str]] = None,
           mask: str = DEFAULT_MASK) -> Column:
     """Replace every match of the given categories with ``mask`` (chained

@@ -7,9 +7,9 @@ then data blocks of ``(record_count, byte_length, payload, sync)`` where
 the payload is the concatenated schemaless binary encoding, optionally
 deflate-compressed (raw DEFLATE, no zlib header, per the Avro spec).
 
-Built on the same pure-Python binary codec the Kafka lane uses
-(:mod:`datacontract_cli_spark.sources.kafka_avro` — fastavro is not in
-this image). This is a METADATA-plane reader: Iceberg manifests are
+Built on the pure-Python binary codec of
+:mod:`datacontract_cli_spark.sources.kafka_avro` (no fastavro
+dependency). This is a METADATA-plane reader: Iceberg manifests are
 small (KBs–MBs) and read driver-side during planning, exactly as the
 Iceberg library itself plans scans; the data plane stays
 ``spark.read.parquet`` on executors.

@@ -121,11 +121,6 @@ def make_descriptor_u(uid: _uuid.UUID, offset: int, size: int,
             "cardinality": cardinality}
 
 
-def make_descriptor_inline(blob: bytes, cardinality: int) -> Dict[str, Any]:
-    return {"storageType": "i", "pathOrInlineDv": z85_encode(blob),
-            "sizeInBytes": len(blob), "cardinality": cardinality}
-
-
 def deleted_positions(descriptor: Dict[str, Any],
                       table_root: str) -> np.ndarray:
     """Sorted uint64 deleted row indexes of one add-action's DV."""

@@ -822,9 +822,7 @@ def delete_rows_delta(spark: SparkSession, table_path: str,
     return version
 
 
-def compact_delta(spark: SparkSession, table_path: str,
-                  zorder_by: Optional[Sequence[str]] = None,
-                  target_files: int = 8) -> int:
+def compact_delta(spark: SparkSession, table_path: str) -> int:
     """Bin-pack compaction (OPTIMIZE + DV materialization): read the
     current table state — deletion vectors applied — rewrite it as clean
     parquet, and commit one version that removes every old add and adds
@@ -832,13 +830,7 @@ def compact_delta(spark: SparkSession, table_path: str,
     compaction rearranges bytes, it does not change data). Post-compaction
     scans carry no DVs, so the anti-join disappears from the plan. Prior
     versions stay time-travelable until :func:`vacuum_delta` reclaims
-    their files — exactly Delta's OPTIMIZE/VACUUM split.
-
-    ``zorder_by`` = OPTIMIZE ... ZORDER BY: instead of one bin-packed
-    file per partition group, write ``target_files`` files cut along
-    Morton-code ranges of the given (logical) columns, so the stats
-    pruning in :func:`plan_delta` skips files for predicates on ANY
-    z-column (see :mod:`..sources.zorder`)."""
+    their files — exactly Delta's OPTIMIZE/VACUUM split."""
     import time
 
     state = _replay(table_path)
@@ -858,20 +850,6 @@ def compact_delta(spark: SparkSession, table_path: str,
     part_phys = [phys.get(c, c) for c in part_cols]
     data_schema = T.StructType(
         [f for f in physical.fields if f.name not in part_phys])
-
-    z_phys: List[str] = []
-    z_bounds = None
-    if zorder_by:
-        from datacontract_cli_spark.sources.zorder import zorder_boundaries
-        for c in zorder_by:
-            if c in part_cols:
-                raise ValueError(
-                    f"zorder column {c!r} is a partition column")
-        z_phys = [phys.get(c, c) for c in zorder_by]
-        # boundaries once, on the whole table (not per partition group):
-        # global rank buckets cluster every group consistently and cost
-        # one approxQuantile pass per column
-        z_bounds = zorder_boundaries(df, z_phys)
 
     groups: List[Tuple[Dict[str, Optional[str]], Any, str]] = []
     if part_phys:
@@ -905,15 +883,7 @@ def compact_delta(spark: SparkSession, table_path: str,
     for pv, sub, rel in groups:
         outdir = os.path.join(root, rel, f"v{version}") if rel \
             else os.path.join(root, f"v{version}")
-        if z_phys:
-            from datacontract_cli_spark.sources.zorder import (
-                cluster_by_zorder,
-            )
-            sub = cluster_by_zorder(sub, z_phys, target_files,
-                                    boundaries=z_bounds)
-        else:
-            sub = sub.coalesce(1)
-        sub.write.mode("overwrite").parquet(outdir)
+        sub.coalesce(1).write.mode("overwrite").parquet(outdir)
         for name in sorted(os.listdir(outdir)):
             if not name.endswith(".parquet"):
                 continue

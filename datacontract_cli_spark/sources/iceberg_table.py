@@ -647,15 +647,6 @@ def plan_scan_entries(table_path: str, snapshot_id: Optional[int] = None,
     return meta, entries
 
 
-def plan_scan(table_path: str, snapshot_id: Optional[int] = None,
-              filters: Sequence[Tuple[str, str, Any]] = ()
-              ) -> Tuple[Dict[str, Any], List[str]]:
-    """(metadata, pruned parquet paths) for a snapshot — exposed for tests
-    asserting pruning counts and for the incremental-validation lane."""
-    meta, entries = plan_scan_entries(table_path, snapshot_id, filters)
-    return meta, [e["data_file"]["file_path"] for e in entries]
-
-
 def plan_scan_with_deletes(table_path: str,
                            snapshot_id: Optional[int] = None,
                            filters: Sequence[Tuple[str, str, Any]] = ()):

@@ -352,9 +352,7 @@ def _partition_expr(p: Dict[str, Any]):
 
 def _write_data_files(df: DataFrame, data_dir: str,
                       parts: List[Dict[str, Any]],
-                      files_per_group: int,
-                      zorder_by: Optional[Sequence[str]] = None
-                      ) -> List[Tuple[Dict, List[str]]]:
+                      files_per_group: int) -> List[Tuple[Dict, List[str]]]:
     """[(partition_values, parquet paths)] — full rows in every file
     (Iceberg keeps partition source columns in the data, unlike Hive).
     ``parts`` are parsed transform specs; grouping runs on derived
@@ -386,22 +384,9 @@ def _write_data_files(df: DataFrame, data_dir: str,
     else:
         groups.append(({}, df, data_dir))
 
-    z_bounds = None
-    if zorder_by:
-        from datacontract_cli_spark.sources.zorder import zorder_boundaries
-        z_bounds = zorder_boundaries(df, zorder_by)
-
     out: List[Tuple[Dict, List[str]]] = []
     for pv, sub, subdir in groups:
-        if zorder_by:
-            from datacontract_cli_spark.sources.zorder import (
-                cluster_by_zorder,
-            )
-            sub = cluster_by_zorder(sub, zorder_by, files_per_group,
-                                    boundaries=z_bounds)
-        else:
-            sub = sub.repartition(files_per_group)
-        sub.write.mode("overwrite").parquet(subdir)
+        sub.repartition(files_per_group).write.mode("overwrite").parquet(subdir)
         files = sorted(
             os.path.join(subdir, f) for f in os.listdir(subdir)
             if f.endswith(".parquet"))
@@ -584,9 +569,7 @@ def evolve_schema_iceberg(table_path: str,
     return new_sid
 
 
-def compact_iceberg(spark, table_path: str,
-                    files_per_group: int = 1,
-                    zorder_by: Optional[Sequence[str]] = None) -> int:
+def compact_iceberg(spark, table_path: str, files_per_group: int = 1) -> int:
     """Bin-pack compaction (rewrite_data_files + apply pending deletes):
     read the current table state — merge-on-read delete files applied —
     and commit it as a REPLACE snapshot whose manifest list references
@@ -594,95 +577,17 @@ def compact_iceberg(spark, table_path: str,
     read (asserted by tests); pending positional/equality deletes are
     materialized and no longer carried, so post-compaction scans skip the
     anti-joins entirely. Prior snapshots remain time-travelable — their
-    manifest lists still reference the old files (run expire_snapshots
-    to reclaim). At production scale this is Iceberg's
-    rewriteDataFiles/bin-pack action: the table-sized rewrite is the
-    point (amortizing small files + delete debt into clean scans)."""
+    manifest lists still reference the old files. At production scale
+    this is Iceberg's rewriteDataFiles/bin-pack action: the table-sized
+    rewrite is the point (amortizing small files + delete debt into clean
+    scans)."""
     from datacontract_cli_spark.sources.iceberg_table import read_iceberg
 
     meta = load_table_metadata(table_path)
     df = read_iceberg(spark, table_path)
     return _commit(df, table_path, _spec_to_partition_by(meta),
                    files_per_group, dict(meta.get("properties") or {}),
-                   base_meta=meta, operation="replace", replace_prior=True,
-                   zorder_by=zorder_by)
-
-
-def expire_snapshots(table_path: str, keep_last: int = 1) -> Dict[str, int]:
-    """Expire all but the most recent ``keep_last`` snapshots and delete
-    every file (manifest lists, manifests, data + delete files) no
-    surviving snapshot references — Iceberg's expire_snapshots +
-    remove_orphan_files maintenance pair. Metadata-bound: cost is
-    O(manifests), never a data scan. Returns
-    ``{"expired_snapshots": n, "deleted_files": n, "reclaimed_bytes": n}``."""
-    meta = load_table_metadata(table_path)
-    root = _strip_scheme(table_path)
-    loc = meta.get("location", "")
-    snaps = meta.get("snapshots", [])
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    kept = snaps[-keep_last:]
-    cur_id = meta.get("current-snapshot-id")
-    if cur_id is not None and all(s["snapshot-id"] != cur_id for s in kept):
-        raise ValueError("cannot expire the current snapshot")
-    expired = snaps[:-keep_last]
-    if not expired:
-        return {"expired_snapshots": 0, "deleted_files": 0,
-                "reclaimed_bytes": 0}
-
-    from datacontract_cli_spark.sources.iceberg_table import _rebase
-
-    def _referenced(snapshot: Dict[str, Any]) -> set:
-        refs = set()
-        ml = snapshot.get("manifest-list")
-        if not ml:
-            return refs
-        ml = _rebase(ml, loc, root)
-        refs.add(os.path.abspath(ml))
-        if not os.path.exists(ml):
-            return refs
-        _, manifests = read_ocf(ml)
-        for mf in manifests:
-            mp = _rebase(mf["manifest_path"], loc, root)
-            refs.add(os.path.abspath(mp))
-            if not os.path.exists(mp):
-                continue
-            _, entries = read_ocf(mp)
-            for e in entries:
-                refs.add(os.path.abspath(
-                    _rebase(e["data_file"]["file_path"], loc, root)))
-        return refs
-
-    keep_refs = set()
-    for s in kept:
-        keep_refs |= _referenced(s)
-    drop_refs = set()
-    for s in expired:
-        drop_refs |= _referenced(s)
-
-    deleted = reclaimed = 0
-    for path in sorted(drop_refs - keep_refs):
-        if os.path.exists(path):
-            reclaimed += os.path.getsize(path)
-            os.remove(path)
-            deleted += 1
-
-    kept_ids = {s["snapshot-id"] for s in kept}
-    new_meta = dict(meta)
-    new_meta["snapshots"] = kept
-    new_meta["snapshot-log"] = [
-        e for e in meta.get("snapshot-log", [])
-        if e.get("snapshot-id") in kept_ids]
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(root, "metadata")
-    version = _current_version(meta_dir) + 1
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json"),
-              "w") as f:
-        json.dump(new_meta, f, indent=2)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write(str(version))
-    return {"expired_snapshots": len(expired), "deleted_files": deleted,
-            "reclaimed_bytes": reclaimed}
+                   base_meta=meta, operation="replace", replace_prior=True)
 
 
 def delete_rows_iceberg(spark, table_path: str, predicate: str) -> int:
@@ -928,8 +833,7 @@ def _commit(df: DataFrame, table_path: str, partition_by: Sequence[str],
             base_meta: Optional[Dict[str, Any]],
             extra_manifests: Optional[List[Dict[str, Any]]] = None,
             operation: str = "append",
-            replace_prior: bool = False,
-            zorder_by: Optional[Sequence[str]] = None) -> int:
+            replace_prior: bool = False) -> int:
     root = _strip_scheme(table_path)
     meta_dir = os.path.join(root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
@@ -986,8 +890,7 @@ def _commit(df: DataFrame, table_path: str, partition_by: Sequence[str],
     data_dir = os.path.join(root, "data",
                             f"snap-{snapshot_id}") if base_meta is not None \
         else os.path.join(root, "data")
-    written = _write_data_files(df, data_dir, parts, files_per_group,
-                                zorder_by=zorder_by)
+    written = _write_data_files(df, data_dir, parts, files_per_group)
     entry_schema = _manifest_entry_schema(part_fields_avro)
     entries = []
     added_rows = 0

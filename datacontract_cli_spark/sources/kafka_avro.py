@@ -1,26 +1,11 @@
-"""Kafka Avro value decoding: Confluent framing + Avro binary codec.
+"""Pure-Python Avro binary codec (no fastavro dependency).
 
-Mirrors the reference's Avro lane (datacontract/engines/ibis/connections/
-kafka.py:42-56, 264-357): messages serialized through the Confluent Schema
-Registry carry a 5-byte prefix (magic 0x00 + 4-byte big-endian schema id);
-the payload must be decoded with the exact schema it was WRITTEN with
-(Avro is positionally encoded — a merely similar schema either raises or
-yields rows of nulls). Unframed messages decode with the schema derived
-from the data contract; framed messages require the writer schema by id.
-Null-valued messages (compaction tombstones) are skipped, and a topic
-whose schema evolved decodes per-writer-schema and unions by name.
-
-The codec itself is a self-contained pure-Python Avro binary
-reader/writer (fastavro is not in this image): zigzag varints, IEEE
-floats, length-prefixed bytes/strings, records/arrays/maps/unions/enums/
-fixed, and the date / timestamp-millis / timestamp-micros / decimal
-logical types.
-
-Spark-first execution: :func:`decode_kafka_avro_batch` decodes a
-kafka-shaped DataFrame (binary ``value`` column) via Arrow-batched
-``mapInPandas`` — the decode runs on executors, one Python worker per
-partition, so a 100 TB topic backfill decodes in parallel instead of on
-the driver (the reference decodes single-process)."""
+Zigzag varints, IEEE floats, length-prefixed bytes/strings, records/
+arrays/maps/unions/enums/fixed, and the date / timestamp-millis /
+timestamp-micros / decimal logical types. :mod:`.avro_ocf` builds the
+Avro object-container files of Iceberg manifests on it; it follows the
+schemaless codec of the reference's Avro lane (datacontract/engines/ibis/
+connections/kafka.py:42-56)."""
 
 from __future__ import annotations
 
@@ -28,12 +13,7 @@ import datetime
 import decimal
 import io
 import struct
-from typing import Any, Dict, List, Optional, Tuple
-
-from pyspark.sql import DataFrame
-
-CONFLUENT_MAGIC_BYTE = 0x00
-CONFLUENT_PREFIX_LENGTH = 5
+from typing import Any, Dict, List
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 _EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
@@ -287,100 +267,3 @@ def schemaless_write(out: io.BytesIO, schema: Any, value: Any) -> None:
         _write_long(out, 0)
     else:
         raise ValueError(f"unsupported Avro type: {t!r}")
-
-
-# ---------------------------------------------------------------------------
-# Confluent framing
-# ---------------------------------------------------------------------------
-
-def strip_confluent_frame(value: bytes) -> Tuple[Optional[int], bytes]:
-    """(schema_id, payload): framed messages are stripped; plain Avro
-    records pass through intact (the magic-byte check keeps unframed
-    records whole — reference #1344)."""
-    if len(value) > CONFLUENT_PREFIX_LENGTH and value[0] == CONFLUENT_MAGIC_BYTE:
-        return (int.from_bytes(value[1:CONFLUENT_PREFIX_LENGTH], "big"),
-                value[CONFLUENT_PREFIX_LENGTH:])
-    return None, value
-
-
-def frame_confluent(schema_id: int, payload: bytes) -> bytes:
-    return bytes((CONFLUENT_MAGIC_BYTE,)) + schema_id.to_bytes(4, "big") + payload
-
-
-def avro_schema_for_object(obj) -> Dict[str, Any]:
-    """The contract-derived writer schema for unframed messages (same
-    derivation as `export --format avro`)."""
-    from datacontract_cli_spark.export import _avro_field_type
-
-    return {"type": "record", "name": obj.table,
-            "fields": [{"name": p.column, "type": _avro_field_type(p)}
-                       for p in obj.properties]}
-
-
-# ---------------------------------------------------------------------------
-# Spark lane
-# ---------------------------------------------------------------------------
-
-def decode_kafka_avro_batch(raw: DataFrame, obj,
-                            writer_schemas: Optional[Dict[int, Dict[str, Any]]] = None,
-                            framing: str = "auto") -> DataFrame:
-    """Decode a kafka-shaped frame (binary ``value`` column) of Avro
-    messages into the contract's typed columns.
-
-    ``writer_schemas`` maps Confluent schema ids to the Avro schemas held
-    by the registry (fetched once on the driver — ids are few, messages
-    many). Framed messages without a registered writer schema raise,
-    mirroring the reference's explicit registry-required error
-    (kafka.py:318-330): decoding them with a lookalike schema would
-    silently produce nulls. Tombstones (null values) are skipped.
-
-    ``framing`` resolves the magic-byte ambiguity (an UNFRAMED record whose
-    first encoded byte is 0x00 — leading zigzag 0, boolean false, empty
-    string, union branch 0 — is indistinguishable from a Confluent prefix;
-    the reference shares this heuristic): "auto" sniffs per message (the
-    reference behavior, correct for all-framed or non-colliding topics),
-    "none" never strips (unframed topics whose first field can encode to
-    0x00), "confluent" always strips (all-framed topics).
-
-    Executed as Arrow-batched ``mapInPandas`` so the decode distributes;
-    only the tiny id->schema dict is closure-captured."""
-    import pandas as pd
-
-    from datacontract_cli_spark.sources.readers import contract_schema
-
-    if framing not in ("auto", "none", "confluent"):
-        raise ValueError("framing must be 'auto', 'none' or 'confluent'")
-    contract_avro = avro_schema_for_object(obj)
-    writer_schemas = dict(writer_schemas or {})
-    out_schema = contract_schema(obj)
-    colnames = [f.name for f in out_schema.fields]
-
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for value in pdf["value"]:
-                if value is None:
-                    continue  # compaction tombstone
-                value = bytes(value)
-                if framing == "none":
-                    schema_id, payload = None, value
-                elif framing == "confluent":
-                    schema_id = int.from_bytes(
-                        value[1:CONFLUENT_PREFIX_LENGTH], "big")
-                    payload = value[CONFLUENT_PREFIX_LENGTH:]
-                else:
-                    schema_id, payload = strip_confluent_frame(value)
-                if schema_id is None:
-                    schema = contract_avro
-                elif schema_id in writer_schemas:
-                    schema = writer_schemas[schema_id]
-                else:
-                    raise ValueError(
-                        f"Cannot decode Confluent-framed Avro message: the "
-                        f"writer schema (id {schema_id}) is held in the "
-                        f"schema registry; pass writer_schemas={{id: schema}}.")
-                rec = schemaless_read(io.BytesIO(payload), schema)
-                rows.append({c: rec.get(c) for c in colnames})
-            yield pd.DataFrame(rows, columns=colnames)
-
-    return raw.mapInPandas(_decode, schema=out_schema)

@@ -87,11 +87,6 @@ def _model_path(server: Server, model: str, fmt: str) -> Optional[str]:
     return base
 
 
-def bind_server(spark: SparkSession, contract: DataContract,
-                server: Optional[Server]) -> Dict[str, DataFrame]:
-    return bind_server_with_raw(spark, contract, server)[0]
-
-
 def bind_server_with_raw(
     spark: SparkSession, contract: DataContract, server: Optional[Server]
 ) -> tuple[Dict[str, DataFrame], Dict[str, DataFrame]]:

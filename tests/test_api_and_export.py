@@ -3,13 +3,10 @@
 from pyspark.sql import types as T
 
 from datacontract_cli_spark.api import DataContractRunner
-from datacontract_cli_spark.export import (
-    import_dataframe,
-    to_odcs_yaml,
-    to_spark_schema,
-)
+from datacontract_cli_spark.export import to_odcs_yaml, to_spark_schema
 from datacontract_cli_spark.model.contract import load_contract_str
 from datacontract_cli_spark.model.run import ResultEnum
+from datacontract_cli_spark.sources.importers import import_spark
 from datacontract_cli_spark.sources.transcripts import synthesize_transcripts
 
 CONTRACT = """
@@ -73,7 +70,7 @@ def test_import_dataframe_roundtrip(spark):
         "id bigint, name string, vec array<double>, m map<string,bigint>, "
         "s struct<flag:boolean>",
     )
-    contract = import_dataframe(df, "t")
+    contract = import_spark(spark, source="t", dataframe=df)
     obj = contract.schema_objects[0]
     by = {p.name: p for p in obj.properties}
     assert by["id"].logical_type == "integer"

@@ -55,7 +55,7 @@ schema:
 
 
 def test_multi_model_binding_from_parquet_dir(spark):
-    """bind_server against the driver's sf0.001 directory; RI across models."""
+    """Server binding of the driver's sf0.001 directory; RI across models."""
     from datacontract_cli_spark.engine.executor import SparkContractEngine
     from datacontract_cli_spark.model.contract import load_contract_str
     from datacontract_cli_spark.model.run import ResultEnum

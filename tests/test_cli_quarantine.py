@@ -1,13 +1,9 @@
-"""CLI surface for the quarantine + maintenance lanes."""
+"""CLI surface for the quarantine lane."""
 
 import json
 
 from datacontract_cli_spark.cli import main
-from datacontract_cli_spark.sources.iceberg_table import (
-    load_table_metadata,
-    read_iceberg,
-)
-from datacontract_cli_spark.sources.iceberg_write import write_iceberg_table
+from datacontract_cli_spark.sources.iceberg_table import read_iceberg
 
 from tests.test_quarantine import CONTRACT, _table
 
@@ -29,29 +25,3 @@ def test_cli_quarantine(spark, tmp_path, capsys):
     assert rep["snapshot_id"] is not None
     assert len(rep["counts_by_check"]) == 4
     assert read_iceberg(spark, root).count() == 40
-
-
-def test_cli_maintain_compact_and_expire(spark, tmp_path, capsys):
-    root = _table(spark, tmp_path)
-    cpath = tmp_path / "contract.yaml"
-    cpath.write_text(CONTRACT)
-    assert main(["quarantine", str(cpath), "--table", root]) == 0
-    capsys.readouterr()
-
-    assert main(["maintain", root, "--compact", "--target-files", "2",
-                 "--expire-keep", "1"]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["compacted_snapshot_id"] == 3
-    assert out["expired_snapshots"] == 2
-    assert out["deleted_files"] > 0
-    assert read_iceberg(spark, root).count() == 40
-    assert len(load_table_metadata(root)["snapshots"]) == 1
-
-    # nothing requested -> usage error
-    assert main(["maintain", root]) == 1
-
-
-def test_cli_maintain_bad_table(tmp_path, capsys):
-    assert main(["maintain", str(tmp_path / "nope"), "--expire-keep",
-                 "1"]) == 1
-    assert "error:" in capsys.readouterr().err

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from datacontract_cli_spark.sources.delta_dv import (
     build_dv_blob,
     deleted_positions,
-    make_descriptor_inline,
     make_descriptor_u,
     read_dv_blob,
     write_dv_file,
@@ -123,7 +122,8 @@ def test_dv_file_roundtrip_and_crc(tmp_path):
 
 def test_inline_descriptor(tmp_path):
     blob = build_dv_blob(np.array([2, 4], dtype=np.uint64))
-    d = make_descriptor_inline(blob, 2)
+    d = {"storageType": "i", "pathOrInlineDv": z85_encode(blob),
+         "sizeInBytes": len(blob), "cardinality": 2}
     assert d["storageType"] == "i"
     assert deleted_positions(d, str(tmp_path)).tolist() == [2, 4]
 
@@ -305,22 +305,3 @@ def test_vacuum_reclaims_unreferenced(spark, tmp_path):
     assert sorted(r["doc_id"]
                   for r in read_delta(spark, root).collect()) == expect
     assert not [f for f in os.listdir(root) if f.endswith(".bin")]
-
-
-def test_maintain_cli_delta(spark, tmp_path):
-    import json as _json
-    import subprocess
-    import sys as _sys
-
-    root = str(tmp_path / "t")
-    write_delta_table(_doc_df(spark, 60), root)
-    delete_rows_delta(spark, root, "doc_id < 6")
-    r = subprocess.run(
-        [_sys.executable, "-m", "datacontract_cli_spark.cli", "maintain",
-         root, "--format", "delta", "--compact", "--vacuum",
-         "--master", "local[2]"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
-    assert r.returncode == 0, r.stderr[-2000:]
-    out = _json.loads(r.stdout.strip().splitlines()[-1])
-    assert "compacted_version" in out and out["deleted_files"] > 0
-    assert read_delta(spark, root).count() == 54

@@ -26,7 +26,8 @@ import __spark_entry__ as entry_mod
 # modules (psi/jsd/chi2_event_type, benchmark_contamination, row_filter,
 # violation_samples, minhash_near_dups, ngram_jaccard_dups, dedup_exact,
 # percent_failed, missing_count, duplicate_count,
-# duplicate_count_composite) left this set.
+# duplicate_count_composite; freshness_retention when the delta_zorder
+# query was deleted with Z-order compaction) left this set.
 ROTATED = {
     "join_revenue_by_nation", "sessionization",
     "bpe_token_stats", "winnow_dups", "window_top3_per_customer",
@@ -46,9 +47,6 @@ ROTATED = {
     # rotated late-r5 for tool_args_validation (green r01-r04; a one-line
     # direct aggregate untouched since round 1)
     "row_count",
-    # rotated late-r5 for iceberg_quarantine (green r01-r04; the
-    # freshness/retention agg lane is untouched this round)
-    "freshness_retention",
     # appended past the window: recall of the arrow minhash lane, checked
     # by the local oracle gate at three SFs; its md5 twin
     # minhash_near_dups and the in-window dedup_clusters cover the banding

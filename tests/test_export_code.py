@@ -638,13 +638,14 @@ def test_excel_export_roundtrips_through_importer(tmp_path):
     """to_excel writes a workbook the stdlib importer reads back losslessly
     for every covered field — verified on the reference's shipments
     contract."""
-    from datacontract_cli_spark.export_excel import to_excel_file
+    from datacontract_cli_spark.export_excel import to_excel_bytes
     from datacontract_cli_spark.sources.excel_import import import_excel
 
     src = import_excel(
         "/root/reference/tests/fixtures/excel/shipments-odcs.xlsx")
     path = str(tmp_path / "roundtrip.xlsx")
-    to_excel_file(src, path)
+    with open(path, "wb") as f:
+        f.write(to_excel_bytes(src))
     back = import_excel(path)
     assert (back.id, back.name, back.version) == (src.id, src.name, src.version)
     assert back.description == src.description

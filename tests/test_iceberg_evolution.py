@@ -4,8 +4,7 @@ Evolution is the field-id contract: add/rename/drop/promote commit a new
 schema-id as a METADATA-ONLY version bump (no snapshot, no data rewrite);
 the reader maps each data file from its write-time schema to the current
 one by field id. Maintenance: compact_iceberg (bin-pack rewrite that
-materializes pending merge-on-read deletes) and expire_snapshots
-(metadata-bound orphan-file reclamation).
+materializes pending merge-on-read deletes).
 
 Reference parity: the reference CLI reads evolved Iceberg tables through
 pyiceberg, which performs the identical field-id projection
@@ -19,8 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.sources.iceberg_table import (
-    load_table_metadata,
-    plan_scan,
+    plan_scan_entries,
     read_iceberg,
 )
 from datacontract_cli_spark.sources.iceberg_write import (
@@ -29,7 +27,6 @@ from datacontract_cli_spark.sources.iceberg_write import (
     delete_equality_iceberg,
     delete_rows_iceberg,
     evolve_schema_iceberg,
-    expire_snapshots,
     upsert_iceberg,
     write_iceberg_table,
 )
@@ -170,7 +167,7 @@ def test_compact_materializes_deletes(spark, tmp_path):
     snap = compact_iceberg(spark, root, files_per_group=2)
     after = read_iceberg(spark, root)
     assert _rows(after) == before            # row-identical rewrite
-    meta, paths = plan_scan(root)
+    meta, paths = plan_scan_entries(root)
     assert len(paths) == 2                   # bin-packed
     # delete files are materialized: the new snapshot carries none
     from datacontract_cli_spark.sources.iceberg_table import (
@@ -183,35 +180,3 @@ def test_compact_materializes_deletes(spark, tmp_path):
     # prior snapshots still time-travel to pre-delete states
     first = meta["snapshots"][0]["snapshot-id"]
     assert read_iceberg(spark, root, snapshot_id=first).count() == 100
-
-
-def test_expire_snapshots_reclaims_files(spark, tmp_path):
-    root = str(tmp_path / "t")
-    write_iceberg_table(_df(spark, 0, 100), root, files_per_group=5)
-    delete_rows_iceberg(spark, root, "doc_id % 4 = 0")
-    compact_iceberg(spark, root, files_per_group=2)
-    current = _rows(read_iceberg(spark, root))
-    n_files_before = len(glob.glob(os.path.join(root, "data", "**",
-                                                "*.parquet"),
-                                   recursive=True))
-    stats = expire_snapshots(root, keep_last=1)
-    assert stats["expired_snapshots"] == 2
-    assert stats["deleted_files"] > 0 and stats["reclaimed_bytes"] > 0
-    # current state untouched; orphaned data + delete files gone
-    assert _rows(read_iceberg(spark, root)) == current
-    n_files_after = len(glob.glob(os.path.join(root, "data", "**",
-                                               "*.parquet"),
-                                  recursive=True))
-    assert n_files_after < n_files_before
-    meta = load_table_metadata(root)
-    assert len(meta["snapshots"]) == 1
-    # expiring the current snapshot is refused
-    with pytest.raises(ValueError, match="keep_last"):
-        expire_snapshots(root, keep_last=0)
-
-
-def test_expire_noop_when_nothing_to_expire(spark, tmp_path):
-    root = str(tmp_path / "t")
-    write_iceberg_table(_df(spark, 0, 10), root)
-    assert expire_snapshots(root, keep_last=3) == {
-        "expired_snapshots": 0, "deleted_files": 0, "reclaimed_bytes": 0}

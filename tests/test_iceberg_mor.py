@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.sources.iceberg_table import (
     load_table_metadata,
-    plan_scan,
+    plan_scan_entries,
     plan_scan_with_deletes,
     read_iceberg,
     snapshots,
@@ -136,11 +136,11 @@ def test_plan_scan_with_deletes_surface(mor_table):
 
 
 def test_incremental_surface_still_refuses_mor(mor_table):
-    """plan_scan (the incremental-validation planning surface) must keep
-    its honest refusal: silently ignoring delete files would fold
-    deleted rows into incremental metrics."""
+    """plan_scan_entries (the incremental-validation planning surface)
+    must keep its honest refusal: silently ignoring delete files would
+    fold deleted rows into incremental metrics."""
     with pytest.raises(NotImplementedError, match="merge-on-read|copy-on-write"):
-        plan_scan(mor_table)
+        plan_scan_entries(mor_table)
 
 
 def test_moved_table_rebases_delete_paths(spark, mor_table, tmp_path):

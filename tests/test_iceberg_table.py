@@ -15,7 +15,7 @@ from datacontract_cli_spark.sources.iceberg_table import (
     decode_bound,
     encode_bound,
     load_table_metadata,
-    plan_scan,
+    plan_scan_entries,
     read_iceberg,
     snapshots,
 )
@@ -111,8 +111,8 @@ def test_metadata_shape(table):
 
 def test_partition_pruning(spark, table):
     root, df = table
-    _, all_paths = plan_scan(root)
-    _, pruned = plan_scan(root, filters=[("role", "=", "assistant")])
+    _, all_paths = plan_scan_entries(root)
+    _, pruned = plan_scan_entries(root, filters=[("role", "=", "assistant")])
     assert 0 < len(pruned) < len(all_paths)
     got = read_iceberg(spark, root, filters=[("role", "=", "assistant")])
     assert got.count() == df.filter(F.col("role") == "assistant").count()
@@ -121,7 +121,7 @@ def test_partition_pruning(spark, table):
 def test_stats_pruning_skips_all_files(table):
     root, _ = table
     # turn_idx max is 4; stats bounds from the parquet footers prune all
-    _, pruned = plan_scan(root, filters=[("turn_idx", ">", 100)])
+    _, pruned = plan_scan_entries(root, filters=[("turn_idx", ">", 100)])
     assert pruned == []
 
 
@@ -171,7 +171,7 @@ def test_delete_manifest_guard(spark, tmp_path):
     fake = dict(manifests[0], content=1)
     write_ocf(ml, _MANIFEST_FILE_SCHEMA, manifests + [fake])
     with pytest.raises(NotImplementedError, match="copy-on-write"):
-        plan_scan(root)
+        plan_scan_entries(root)
 
 
 def test_moved_table_rebases_paths(spark, tmp_path):

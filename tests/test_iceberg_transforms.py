@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.sources.iceberg_table import (
     load_table_metadata,
-    plan_scan,
+    plan_scan_entries,
     read_iceberg,
 )
 from datacontract_cli_spark.sources.iceberg_transforms import (
@@ -98,9 +98,9 @@ def test_bucket_round_trip_exact(spark, bucketed):
 
 
 def test_bucket_pruning_equality(spark, bucketed):
-    _, all_paths = plan_scan(bucketed)
+    _, all_paths = plan_scan_entries(bucketed)
     assert len(all_paths) == 8
-    _, pruned = plan_scan(bucketed, filters=[("conv_id", "=", "c42")])
+    _, pruned = plan_scan_entries(bucketed, filters=[("conv_id", "=", "c42")])
     assert len(pruned) == 1
     got = read_iceberg(spark, bucketed, filters=[("conv_id", "=", "c42")])
     exp = _df(spark).filter("conv_id = 'c42'")
@@ -112,7 +112,7 @@ def test_bucket_pruning_in_long(spark, tmp_path):
     root = str(tmp_path / "t")
     write_iceberg_table(_df(spark), root,
                         partition_by=["bucket(4, turn_id)"])
-    _, pruned = plan_scan(root, filters=[("turn_id", "in", [5, 6])])
+    _, pruned = plan_scan_entries(root, filters=[("turn_id", "in", [5, 6])])
     assert len(pruned) <= 2
     assert read_iceberg(
         spark, root, filters=[("turn_id", "in", [5, 6])]).count() == 2
@@ -127,7 +127,7 @@ def test_append_lands_in_spec_buckets(spark, bucketed):
                        filters=[("conv_id", "=", "c42")]).count()
     exp = _df(spark).filter("conv_id = 'c42'").count() + 5
     assert got == exp
-    _, pruned = plan_scan(bucketed, filters=[("conv_id", "=", "c42")])
+    _, pruned = plan_scan_entries(bucketed, filters=[("conv_id", "=", "c42")])
     assert len(pruned) == 2  # one original bucket file + one appended
 
 
@@ -148,8 +148,8 @@ def test_truncate_int_floors_negatives(spark, tmp_path):
     write_iceberg_table(df, root, partition_by=["truncate(4, v)"])
     assert read_iceberg(spark, root).count() == 20
     # -9 lives in the [-12, -8) partition (floor, not C-style trunc)
-    _, pruned = plan_scan(root, filters=[("v", "=", -9)])
-    _, allp = plan_scan(root)
+    _, pruned = plan_scan_entries(root, filters=[("v", "=", -9)])
+    _, allp = plan_scan_entries(root)
     assert len(pruned) < len(allp)
     assert read_iceberg(spark, root, filters=[("v", "=", -9)]).count() == 1
 
@@ -161,7 +161,7 @@ def test_truncate_string(spark, tmp_path):
     write_iceberg_table(df, root, partition_by=["truncate(4, w)"])
     spec = load_table_metadata(root)["partition-specs"][0]["fields"][0]
     assert spec["transform"] == "truncate[4]"
-    _, pruned = plan_scan(root, filters=[("w", "=", "beta")])
+    _, pruned = plan_scan_entries(root, filters=[("w", "=", "beta")])
     assert len(pruned) == 1
     assert read_iceberg(spark, root,
                         filters=[("w", "=", "beta")]).count() == 1
@@ -319,8 +319,8 @@ def test_day_range_pruning_exact(spark, day_bucketed):
     tight (file count matches the matching-day count) and the result is
     identical to the unpartitioned filter."""
     cut = dt.datetime(2024, 1, 5)
-    _, allp = plan_scan(day_bucketed)
-    _, pruned = plan_scan(day_bucketed, filters=[("ts", ">=", cut)])
+    _, allp = plan_scan_entries(day_bucketed)
+    _, pruned = plan_scan_entries(day_bucketed, filters=[("ts", ">=", cut)])
     # 300 hourly rows span 13 days (0..12); cut keeps days 4..12
     assert len(pruned) == round(len(allp) * 9 / 13)
     got = read_iceberg(spark, day_bucketed, filters=[("ts", ">=", cut)])
@@ -343,8 +343,8 @@ def test_day_and_bucket_compose(spark, day_bucketed):
     equality land on one bucket within the matching days."""
     cut = dt.datetime(2024, 1, 10)
     filt = [("ts", ">=", cut), ("conv_id", "=", "c7")]
-    _, allp = plan_scan(day_bucketed)
-    _, pruned = plan_scan(day_bucketed, filters=filt)
+    _, allp = plan_scan_entries(day_bucketed)
+    _, pruned = plan_scan_entries(day_bucketed, filters=filt)
     assert len(pruned) <= 4  # 4 matching days (Jan 10..12 + half-day 13) x 1 bucket
     got = read_iceberg(spark, day_bucketed, filters=filt)
     exp = _ts_df(spark).filter(
@@ -357,17 +357,13 @@ def test_manifest_level_temporal_pruning(spark, tmp_path):
     """Two snapshots covering disjoint day ranges: a filter inside the
     second range plans files from the second manifest only (manifest
     partition summaries prune before any manifest is opened)."""
-    from datacontract_cli_spark.sources.iceberg_table import (
-        plan_scan_entries,
-    )
-
     root = str(tmp_path / "t")
     early = _ts_df(spark, 48)                       # days 0-1
     late = _ts_df(spark, 300).filter("id >= 240")   # days 10-12
     write_iceberg_table(early, root, partition_by=["day(ts)"])
     append_iceberg(late, root)
-    _, all_paths = plan_scan(root)
-    _, pruned = plan_scan(
+    _, all_paths = plan_scan_entries(root)
+    _, pruned = plan_scan_entries(
         root, filters=[("ts", ">=", dt.datetime(2024, 1, 11))])
     assert 0 < len(pruned) < len(all_paths)
     got = read_iceberg(
@@ -378,9 +374,9 @@ def test_manifest_level_temporal_pruning(spark, tmp_path):
 def test_hour_partitioning(spark, tmp_path):
     root = str(tmp_path / "t")
     write_iceberg_table(_ts_df(spark, 24), root, partition_by=["hour(ts)"])
-    _, allp = plan_scan(root)
+    _, allp = plan_scan_entries(root)
     assert len(allp) == 24
-    _, pruned = plan_scan(
+    _, pruned = plan_scan_entries(
         root, filters=[("ts", "=", dt.datetime(2024, 1, 1, 5, 30))])
     assert len(pruned) == 1
     assert read_iceberg(
@@ -402,7 +398,7 @@ def test_month_year_partitioning(spark, tmp_path):
     assert got.count() == 3  # Oct(>1st), Nov, Dec 2024
     root2 = str(tmp_path / "t2")
     write_iceberg_table(df, root2, partition_by=["year(d)"])
-    _, pruned = plan_scan(root2, filters=[("d", "<", dt.date(2024, 1, 1))])
+    _, pruned = plan_scan_entries(root2, filters=[("d", "<", dt.date(2024, 1, 1))])
     # `<` relaxes to `<=` on the transformed value, so the boundary year's
     # partition stays planned (2 files); the residual filter keeps it exact
     assert len(pruned) == 2
@@ -418,7 +414,7 @@ def test_temporal_append_follows_spec(spark, tmp_path):
     got = read_iceberg(
         spark, root, filters=[("ts", ">=", dt.datetime(2024, 1, 13))])
     assert got.count() == 12
-    _, pruned = plan_scan(
+    _, pruned = plan_scan_entries(
         root, filters=[("ts", ">=", dt.datetime(2024, 1, 13))])
     assert len(pruned) == 1  # the appended day-12 file only
 

@@ -1,7 +1,7 @@
-"""Kafka Avro decode lane: pure-Python codec round-trips, Confluent
-framing, and the distributed mapInPandas decode of a kafka-shaped frame.
+"""Pure-Python Avro binary codec: round-trips, unions, logical types and
+positional misreads.
 
-Reference: datacontract/engines/ibis/connections/kafka.py:42-56, 264-357.
+Reference: datacontract/engines/ibis/connections/kafka.py:42-56.
 """
 
 import datetime
@@ -12,39 +12,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from datacontract_cli_spark.model.contract import load_contract_str
 from datacontract_cli_spark.sources import kafka_avro as ka
-
-CONTRACT = """\
-apiVersion: v3.1.0
-kind: DataContract
-id: kafka-avro
-version: 1.0.0
-status: active
-schema:
-  - name: clicks
-    properties:
-      - name: id
-        logicalType: integer
-        physicalType: bigint
-        required: true
-      - name: user
-        logicalType: string
-        required: true
-      - name: score
-        logicalType: number
-      - name: ok
-        logicalType: boolean
-        required: true
-      - name: ts
-        logicalType: timestamp
-        required: true
-"""
-
-
-def _obj():
-    return load_contract_str(CONTRACT).schema_objects[0]
-
 
 def _encode(schema, record) -> bytes:
     out = io.BytesIO()
@@ -159,96 +127,6 @@ def test_positional_misread_detected():
         ka.schemaless_read(io.BytesIO(payload), wrong)
 
 
-# --- framing -----------------------------------------------------------------
-
-def test_confluent_frame_strip_and_passthrough():
-    sid, payload = ka.strip_confluent_frame(ka.frame_confluent(73, b"abcdef"))
-    assert sid == 73 and payload == b"abcdef"
-    # unframed payload (first byte != 0x00) passes through whole
-    sid, payload = ka.strip_confluent_frame(b"\x02plain")
-    assert sid is None and payload == b"\x02plain"
-    # a short value that happens to start with 0x00 stays intact
-    sid, payload = ka.strip_confluent_frame(b"\x00abc")
-    assert sid is None and payload == b"\x00abc"
-
-
-# --- spark decode lane -------------------------------------------------------
-
-def _messages(n=6):
-    """Synthetic topic: unframed contract-schema messages + framed messages
-    written with an EVOLVED schema (extra column, reordered-compatible)."""
-    obj = _obj()
-    contract_schema = ka.avro_schema_for_object(obj)
-    evolved = {"type": "record", "name": "clicks", "fields":
-               contract_schema["fields"] + [{"name": "extra", "type": "string"}]}
-    msgs = []
-    for i in range(1, n + 1):
-        ts = datetime.datetime(2024, 1, 1, 12, 0, i,
-                               tzinfo=datetime.timezone.utc)
-        # ids start at 1: a leading zigzag 0 encodes to 0x00, which is
-        # indistinguishable from the Confluent magic byte (the reference
-        # shares this framing ambiguity; real topics are all-or-none framed)
-        rec = {"id": i, "user": f"u{i % 3}", "score": float(i) / 2 if i % 2 else None,
-               "ok": i % 2 == 0, "ts": ts}
-        if i % 2 == 0:
-            msgs.append(_encode(contract_schema, rec))
-        else:
-            rec = dict(rec, extra="ignored")
-            msgs.append(ka.frame_confluent(7, _encode(evolved, rec)))
-    return msgs, evolved
-
-
-def _kafka_frame(spark, msgs):
-    rows = [(f"k{i}".encode(), m) for i, m in enumerate(msgs)]
-    return spark.createDataFrame(rows, "key binary, value binary")
-
-
-def test_decode_kafka_avro_batch(spark):
-    msgs, evolved = _messages()
-    raw = _kafka_frame(spark, msgs + [(None)] * 0)
-    out = ka.decode_kafka_avro_batch(raw, _obj(), writer_schemas={7: evolved})
-    rows = {r["id"]: r for r in out.collect()}
-    assert len(rows) == 6
-    assert rows[2]["user"] == "u2" and rows[2]["ok"] is True
-    assert rows[1]["user"] == "u1" and rows[1]["ok"] is False
-    assert rows[1]["score"] == 0.5 and rows[2]["score"] is None
-    assert rows[3]["ts"].year == 2024  # timestamp decoded
-    assert "extra" not in out.columns  # evolved column projected away
-
-
-def test_decode_skips_tombstones(spark):
-    msgs, evolved = _messages(4)
-    rows = [(b"k", m) for m in msgs] + [(b"dead", None)]
-    raw = spark.createDataFrame(rows, "key binary, value binary")
-    out = ka.decode_kafka_avro_batch(raw, _obj(), writer_schemas={7: evolved})
-    assert out.count() == 4
-
-
-def test_decode_framed_without_registry_raises(spark):
-    msgs, _ = _messages(2)
-    raw = _kafka_frame(spark, msgs)
-    out = ka.decode_kafka_avro_batch(raw, _obj())  # no writer_schemas
-    from py4j.protocol import Py4JJavaError
-    with pytest.raises(Exception) as e:
-        out.collect()
-    assert "schema registry" in str(e.value) or "writer_schemas" in str(e.value)
-
-
-def test_framing_none_decodes_magic_colliding_record(spark):
-    # an UNFRAMED record whose first encoded byte is 0x00 (id=0 zigzag)
-    # misleads the auto sniffer; framing="none" decodes it correctly
-    obj = _obj()
-    schema = ka.avro_schema_for_object(obj)
-    ts = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
-    rec = {"id": 0, "user": "u0", "score": None, "ok": True, "ts": ts}
-    raw = spark.createDataFrame([(b"k", _encode(schema, rec))],
-                                "key binary, value binary")
-    out = ka.decode_kafka_avro_batch(raw, obj, framing="none").collect()
-    assert out[0]["id"] == 0 and out[0]["user"] == "u0"
-    with pytest.raises(ValueError):
-        ka.decode_kafka_avro_batch(raw, obj, framing="bogus")
-
-
 def test_timestamp_micros_exact_and_naive_is_utc():
     # integer datetime arithmetic: no float truncation at any microsecond
     for us in (1, 2, 3, 999999):
@@ -260,16 +138,3 @@ def test_timestamp_micros_exact_and_naive_is_utc():
     naive = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
     got = _roundtrip({"type": "long", "logicalType": "timestamp-micros"}, naive)
     assert got == naive.replace(tzinfo=datetime.timezone.utc)
-
-
-def test_decoded_frame_validates_against_contract(spark):
-    # full loop: decoded topic -> engine test green
-    from datacontract_cli_spark.engine.executor import SparkContractEngine
-    msgs, evolved = _messages()
-    raw = _kafka_frame(spark, msgs)
-    decoded = ka.decode_kafka_avro_batch(raw, _obj(), writer_schemas={7: evolved})
-    contract = load_contract_str(CONTRACT)
-    run = SparkContractEngine(spark).test(contract, tables={"clicks": decoded})
-    assert run.result.value == "passed", [
-        (c.key, c.result.value, c.reason) for c in run.checks
-        if c.result.value != "passed"]

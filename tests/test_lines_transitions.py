@@ -1,7 +1,6 @@
 """line_dedup / contamination_fraction / transition_drift unit tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators.contamination import contamination_fraction
 from datacontract_cli_spark.operators.convchecks import transition_drift, transitions
@@ -139,73 +138,3 @@ def test_followup_rates(spark):
     assert out["error"]["n_followed"] == 0
     # last turn of a conv never counts as followed (lead is NULL)
     assert out["done"]["n_followed"] == 0
-
-
-def test_conversation_text_and_near_dups(spark):
-    from datacontract_cli_spark.operators.convchecks import (
-        conversation_near_duplicates, conversation_text)
-
-    # c1 and c2 are near-identical conversations (one word differs); c3 is
-    # unrelated; turns arrive out of order and must flatten under turn order
-    rows = []
-    base = ("the quick brown fox jumps over the lazy dog and then "
-            "runs far away into the deep dark woods tonight").split()
-    for conv, tweak in (("c1", "dog"), ("c2", "cat"), ("c3", None)):
-        for i in range(4):
-            if conv == "c3":
-                words = [f"zz{i}_{j}" for j in range(12)]
-            else:
-                words = list(base[i * 5:i * 5 + 12]) or base[:12]
-                words[0] = tweak if i == 1 else words[0]
-            rows.append((conv, 3 - i, " ".join(words)))
-    df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "text"])
-
-    flat = {r["conv_id"]: r["text"] for r in conversation_text(df).collect()}
-    # stable turn order: turn 0 (built last, i=3) flattens FIRST and the
-    # i=0 row (turn 3) flattens last
-    assert flat["c1"].split("\n")[0].startswith("the deep dark")
-    assert flat["c1"].split("\n")[-1].startswith("the quick brown")
-    assert len(flat["c1"].split("\n")) == 4
-
-    pairs = conversation_near_duplicates(df, threshold=0.5,
-                                         num_hashes=32).collect()
-    got = {tuple(sorted((r[0], r[1]))) for r in pairs}
-    assert ("c1", "c2") in got
-    assert all("c3" not in p for p in got)
-
-
-def test_sft_prep_recipe_composition(spark):
-    """The SFT-prep recipe end-to-end: transcripts -> per-conversation
-    flatten -> conversation near-dedup (drop one of each dup pair) ->
-    token-budget packing of whole conversations. Each stage is an
-    already-verified operator; this pins the COMPOSITION (schemas line
-    up, no operator breaks another's invariants)."""
-    from pyspark.sql import functions as F
-
-    from datacontract_cli_spark.operators.convchecks import (
-        conversation_near_duplicates, conversation_text)
-    from datacontract_cli_spark.operators.packing import pack_sequences
-    from datacontract_cli_spark.sources.transcripts import (
-        synthesize_transcripts)
-
-    df = synthesize_transcripts(spark, n_convs=60, turns_per_conv=5,
-                                defect_rate=0.0)
-    flat = conversation_text(df)
-    assert flat.count() == 60
-
-    pairs = conversation_near_duplicates(df, threshold=0.9, num_hashes=32)
-    drop = pairs.select(F.col(pairs.columns[1]).alias("conv_id")).distinct()
-    kept = flat.join(drop, "conv_id", "left_anti")
-    assert kept.count() + drop.count() == 60
-
-    packed = pack_sequences(kept, budget=512, id_col="conv_id")
-    rows = packed.collect()
-    assert {r["conv_id"] for r in rows} == \
-        {r["conv_id"] for r in kept.collect()}          # nothing lost
-    by_bin = {}
-    for r in rows:
-        by_bin.setdefault((r["bucket"], r["bin_id"]), []).append(r)
-    for members in by_bin.values():
-        # greedy guarantee: <= budget + the boundary-crossing document
-        total = sum(m["n_tokens"] for m in members)
-        assert total <= 512 + max(m["n_tokens"] for m in members)

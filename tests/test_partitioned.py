@@ -83,50 +83,3 @@ def test_turn_density_violations(spark):
     assert clean.count() == 0
     bad = synthesize_transcripts(spark, n_convs=100, turns_per_conv=5, defect_rate=0.3)
     assert convchecks.turn_density_violations(bad).count() > 0
-
-
-def test_non_monotonic_ts(spark):
-    df = synthesize_transcripts(spark, n_convs=50, turns_per_conv=5)
-    assert convchecks.non_monotonic_ts_count(df).first()[0] == 0
-
-
-def test_non_monotonic_join_matches_window(spark):
-    from pyspark.sql import functions as F
-    df = synthesize_transcripts(spark, n_convs=150, turns_per_conv=6)
-    # corrupt some timestamps so the count is non-trivial: swap ts ordering
-    # for turn 3 of every 5th conversation
-    corrupted = df.withColumn(
-        "ts",
-        F.when((F.col("turn_idx") == 3) &
-               (F.substring("conv_id", -1, 1) == "5"),
-               F.col("ts") - F.expr("INTERVAL 10 MINUTES")).otherwise(F.col("ts")),
-    )
-    vw = convchecks.non_monotonic_ts_count(corrupted).first()[0]
-    vj = convchecks.non_monotonic_ts_count_join(corrupted).first()[0]
-    assert vw == vj > 0
-
-
-def test_ordering_check_formulations_agree(spark):
-    """The skew-fragile window formulation and the skew-immune adjacency
-    join compute the same non-monotonic-turn count on dense turn indices
-    (synthesized transcripts are dense by construction; density itself is
-    checked independently by turn_density_violations)."""
-    import datetime as dt
-
-    from datacontract_cli_spark.operators import convchecks
-
-    base = dt.datetime(2026, 1, 1)
-    rows = []
-    for conv in range(300):
-        for turn in range(6):
-            ts = base + dt.timedelta(minutes=turn)
-            if conv % 5 == 0 and turn == 3:  # one out-of-order turn per 5th conv
-                ts = base - dt.timedelta(minutes=1)
-            rows.append((f"conv-{conv}", turn, ts))
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
-    win = convchecks.non_monotonic_ts_count(df).collect()[0][0]
-    adj = convchecks.non_monotonic_ts_count_join(df).collect()[0][0]
-    # each seeded conv: turn 3 is earlier than turn 2 AND turn 4 is later
-    # than turn 3? turn4.ts > turn3.ts (base+4min > base-1min, monotonic) —
-    # exactly ONE violation per seeded conversation
-    assert win == adj == 60

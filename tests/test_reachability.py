@@ -1,4 +1,5 @@
-"""Structural guard: every module of the package has a production caller.
+"""Structural guard: every module and every top-level definition of the
+package has a production caller.
 
 Walks the import graph from the production entry points (the CLI and
 its ``python -m`` shim, the REST API, the curation pipeline and the
@@ -8,9 +9,20 @@ imports included, and fails on any module under
 Such a module runs only from tests, benches or entry queries; give it a
 production caller or delete it. The package loads no module by name
 (no ``importlib`` / ``__import__``), so the static walk is complete.
+
+The second guard does the same for top-level ``def``/``class``es, as a
+name-based fixpoint. Roots: the import-time statements of every reached
+module, ``cli.main``, the public names of ``api`` and ``pipeline`` (the
+package ``__all__`` is an import-time statement), and every name
+``__spark_entry__.py`` (the oracle gate, the operator library's declared
+consumer) mentions. A definition is live when root code or a live
+definition names it: as an identifier, attribute, import alias or
+identifier-shaped string. Two definitions sharing a name keep each other
+alive, so a collision can hide dead code but never flags live code.
 """
 
 import ast
+import re
 from pathlib import Path
 
 PKG = "datacontract_cli_spark"
@@ -74,3 +86,92 @@ def test_every_module_is_reached_from_a_production_entry_point():
     assert not unreached, (
         f"{len(unreached)} modules no command, API or pipeline imports: "
         f"{sorted(unreached)}")
+
+
+# --- function level -------------------------------------------------------
+
+ENTRY = ROOT.parent / "__spark_entry__.py"
+IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# the only reasons a definition may stay with no production caller
+FIXTURE = ("lakehouse fixture writer the reader or tailer tests need "
+           "(pyiceberg and delta-rs are not dependencies)")
+SYNTHETIC = "synthetic data for the benches, tools and tests"
+SEAM = "test seam"
+TRACED = "patched by perfbench/trace.py LAYER_FUNCS"
+ALLOWED_UNREFERENCED = {
+    # a real replace / dataChange=false commit and a checkpointed or
+    # vacuumed log, which the tailer and the readers must handle
+    f"{PKG}.sources.delta_table.checkpoint_delta": FIXTURE,
+    f"{PKG}.sources.delta_table.compact_delta": FIXTURE,
+    f"{PKG}.sources.delta_table.vacuum_delta": FIXTURE,
+    f"{PKG}.sources.iceberg_write.compact_iceberg": FIXTURE,
+    f"{PKG}.sources.transcripts.synthesize_transcripts": SYNTHETIC,
+    f"{PKG}.model.definitions.clear_definition_cache": SEAM,
+}
+
+
+def _names(nodes) -> set[str]:
+    """Every identifier, attribute, import alias and identifier-shaped
+    string these nodes contain."""
+    out = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name.rpartition(".")[2])
+                if node.asname:
+                    out.add(node.asname)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if IDENT.fullmatch(node.value):
+                    out.add(node.value)
+    return out
+
+
+def _on_import(node) -> list:
+    """The parts of one top-level statement that run on import: all of a
+    plain statement; a def's decorators and defaults; a class's
+    decorators, bases and keywords."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        a = node.args
+        return [*node.decorator_list, *a.defaults,
+                *(d for d in a.kw_defaults if d is not None)]
+    if isinstance(node, ast.ClassDef):
+        return [*node.decorator_list, *node.bases, *node.keywords]
+    return [node]
+
+
+def dead_definitions() -> set[str]:
+    """Top-level defs and classes of the package that no production code
+    reaches, as ``module.name``."""
+    mods = _modules()
+    reached = set(mods) - unreached_modules()
+    defs = {}  # module.name -> def/class node
+    live = {"main"}
+    for name, path in mods.items():
+        public = name in (f"{PKG}.api", f"{PKG}.pipeline")
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if name in reached:
+                live |= _names(_on_import(node))
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{name}.{node.name}"] = node
+                if public and not node.name.startswith("_"):
+                    live.add(node.name)
+    live |= _names([ast.parse(ENTRY.read_text(), str(ENTRY))])
+    done: set[str] = set()
+    while grown := {q for q, node in defs.items() if node.name in live} - done:
+        live |= _names(defs[q] for q in grown)
+        done |= grown
+    return set(defs) - done
+
+
+def test_every_top_level_definition_is_reached_from_production():
+    dead, allowed = dead_definitions(), set(ALLOWED_UNREFERENCED)
+    assert not dead - allowed, (
+        f"{len(dead - allowed)} top-level definitions only tests, benches "
+        f"or tools reach: {sorted(dead - allowed)}")
+    # an exception that production now reaches, or that is gone, is stale
+    assert allowed <= dead, sorted(allowed - dead)
+    assert set(ALLOWED_UNREFERENCED.values()) <= {FIXTURE, SYNTHETIC, SEAM, TRACED}

@@ -1,14 +1,12 @@
 """Regression tests for the late-round-5 review findings: URI-encoded
-_metadata.file_path vs raw DV/delete paths, the column-mapping guard on
-the file-incremental lane, and maintain's flags-before-side-effects
-validation."""
+_metadata.file_path vs raw DV/delete paths and the column-mapping guard
+on the file-incremental lane."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.sources.delta_table import (
     delete_rows_delta,
-    plan_delta,
     read_delta,
     write_delta_table,
 )
@@ -121,26 +119,3 @@ def test_contract_engine_over_protocol3_delta_server(spark, tmp_path):
     assert run.result in (ResultEnum.passed, ResultEnum.warning), \
         [(c.key, c.result, c.reason) for c in run.checks
          if c.result is ResultEnum.failed]
-
-
-def test_maintain_rejects_bad_flag_combo_before_any_work(spark, tmp_path,
-                                                         capsys):
-    """`maintain --format delta --compact --expire-keep` must exit 1
-    WITHOUT committing the compaction first."""
-    from datacontract_cli_spark.cli import main
-
-    root = str(tmp_path / "dtbl")
-    df = spark.range(10).selectExpr("id", "id % 2 as grp")
-    write_delta_table(df, root)
-    state, _ = plan_delta(root)
-    v_before = state["version"]
-
-    assert main(["maintain", root, "--format", "delta", "--compact",
-                 "--expire-keep", "2"]) == 1
-    assert "iceberg-only" in capsys.readouterr().err
-    state, _ = plan_delta(root)
-    assert state["version"] == v_before  # no OPTIMIZE commit landed
-
-    assert main(["maintain", root, "--format", "iceberg",
-                 "--vacuum"]) == 1
-    assert "delta-only" in capsys.readouterr().err

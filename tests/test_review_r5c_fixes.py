@@ -337,9 +337,6 @@ def test_drift_empty_and_degenerate_inputs(spark):
     row = drift.chi2_df(obs, "v", {"a": 1.0, "forbidden": 0.0}).first()
     assert row["chi2"] > 1e6
 
-    # chi2_pvalue on df=0: nan, not a lgamma domain error
-    assert math.isnan(drift.chi2_pvalue(3.2, 0))
-
     # empty declarative baseline: clear ValueError
     import pytest as _pytest
     full = spark.createDataFrame([(1.0,), (2.0,)], "v double")

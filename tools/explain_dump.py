@@ -1,12 +1,17 @@
 """Dump formatted physical plans of the engine's key query shapes to
 PLANS.md — the artifact showing pushdown / pruning / broadcast / partial
-aggregation at a glance. Usage: python tools/explain_dump.py [sf_dir]"""
+aggregation at a glance. Usage: python tools/explain_dump.py [sf_dir]
+
+Only the ``## `` sections this tool generates are rewritten, matched by
+title (a new title is appended); every other section of PLANS.md stays
+as it is, in place."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -18,6 +23,25 @@ def formatted(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue().strip()
+
+
+def merge_sections(text: str, head: str, generated: dict[str, str]) -> str:
+    """``head``, then the ``## `` sections of ``text`` with each one whose
+    title is a key of ``generated`` replaced by that body; the other keys
+    are appended. Sections not in ``generated`` are kept byte for byte."""
+    _, *chunks = re.split(r"^(?=## )", text, flags=re.M)
+    out, done = [head], set()
+    for chunk in chunks:
+        title = chunk[3:].split("\n", 1)[0].strip()
+        if title in generated:
+            done.add(title)
+            trail = chunk[len(chunk.rstrip("\n")):]
+            chunk = generated[title].rstrip("\n") + trail
+        out.append(chunk)
+    new = [body for title, body in generated.items() if title not in done]
+    if not new:
+        return "".join(out)
+    return "".join(out).rstrip("\n") + "\n\n" + "\n".join(new)
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
@@ -119,14 +143,16 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
                      "broadcast-join against the (tiny) benchmark gram set; "
                      "8-byte xxhash64 join keys, no corpus-side shuffle", cont))
 
-    out = ["# PLANS — physical plans of the engine's core query shapes\n",
-           f"Generated by `python tools/explain_dump.py {sf_dir}` "
-           "(Spark " + spark.version + ").\n"]
-    for title, df in sections:
-        out.append(f"## {title}\n\n```\n{formatted(df)}\n```\n")
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+    head = ("# PLANS — physical plans of the engine's core query shapes\n\n"
+            f"Generated by `python tools/explain_dump.py {sf_dir}` "
+            f"(Spark {spark.version}).\n\n")
+    generated = {title: f"## {title}\n\n```\n{formatted(df)}\n```\n"
+                 for title, df in sections}
+    path = os.path.join(REPO, "PLANS.md")
+    old = open(path).read() if os.path.exists(path) else ""
+    with open(path, "w") as f:
+        f.write(merge_sections(old, head, generated))
+    print(f"wrote {len(generated)} sections of PLANS.md")
 
 
 if __name__ == "__main__":
