@@ -87,3 +87,341 @@ def _params_match(declared: List[int], actual: List[int]) -> bool:
     if not declared or not actual:
         return True  # a side without parameters accepts any parameterization
     return declared == actual
+
+
+# ===========================================================================
+# dialect-aware comparator (reference parity)
+# ===========================================================================
+#
+# The comparator above serves the Spark engine (actual side is always a Spark
+# catalog type). The reference additionally compares declared physicalType
+# strings against WAREHOUSE catalog types through sqlglot with per-dialect
+# alias collapse (engines/checks/physical_type_match.py:216-264). sqlglot is
+# absent here, so this is a self-contained re-implementation of the same
+# decision procedure: spelling -> token tables, per-dialect numeric renders,
+# the Snowflake/Trino alias families, the timestamp family, structured-type
+# recursion, raw-string fallback for unparseable types, and the
+# "parameters are enforced only when the contract declares them" rule.
+
+_TOKEN_SPELLINGS = {
+    "int": ("int", "integer", "int4"),
+    "bigint": ("bigint", "int8", "int64"),
+    "smallint": ("smallint", "int2"),
+    "tinyint": ("tinyint", "byteint", "int1"),
+    "decimal": ("decimal", "numeric", "number", "dec"),
+    "bigdecimal": ("bignumeric", "bigdecimal"),
+    "float": ("float", "float4", "real"),
+    "double": ("double", "double precision", "float8", "float64"),
+    "varchar": ("varchar", "character varying"),
+    "nvarchar": ("nvarchar",),
+    "text": ("text", "string"),
+    "char": ("char", "character", "bpchar"),
+    "nchar": ("nchar",),
+    "boolean": ("boolean", "bool"),
+    "timestamp": ("timestamp",),
+    "timestamptz": ("timestamptz", "timestamp with time zone", "timestamp_tz"),
+    "timestampntz": ("timestamp_ntz", "timestamp without time zone", "timestampntz"),
+    "timestampltz": ("timestamp_ltz", "timestampltz"),
+    "datetime": ("datetime",),
+    "datetime2": ("datetime2",),
+    "smalldatetime": ("smalldatetime",),
+    "date": ("date",),
+    "time": ("time", "time without time zone"),
+    "timetz": ("timetz", "time with time zone"),
+    "binary": ("binary",),
+    "varbinary": ("varbinary", "bytea", "bytes"),
+    "uuid": ("uuid",),
+    "json": ("json",),
+    "jsonb": ("jsonb",),
+    "variant": ("variant",),
+    "struct": ("struct", "record"),
+    "object": ("object",),
+    "array": ("array",),
+    "map": ("map",),
+    "bit": ("bit",),
+    "uniqueidentifier": ("uniqueidentifier",),
+}
+_SPELLING_TO_TOKEN = {s: tok for tok, ss in _TOKEN_SPELLINGS.items() for s in ss}
+
+# spellings only certain dialects can resolve (sqlglot parse failure elsewhere)
+_DIALECT_ONLY_SPELLINGS = {
+    "uniqueidentifier": {"tsql", "sqlserver", "mssql"},
+    "datetime2": {"tsql", "sqlserver", "mssql"},
+    "smalldatetime": {"tsql", "sqlserver", "mssql"},
+    "object": {"snowflake"},
+    "variant": {"snowflake"},
+}
+
+_NUMERIC_TOKENS = {"int", "bigint", "smallint", "tinyint", "decimal", "bigdecimal",
+                   "float", "double"}
+_TS_FAMILY = {"timestamp", "timestamptz", "timestampltz", "timestampntz"}
+_STRUCTURED_TOKENS = {"struct", "object", "array", "map"}
+_SNOWFLAKE_FAMILIES = (
+    {"varchar", "text", "nvarchar"},
+    {"decimal", "int", "bigint", "smallint", "tinyint"},
+    {"double", "float"},
+)
+_TRINO_DIALECTS = {"athena", "trino", "presto"}
+_TRINO_TEXT_FAMILY = {"varchar", "text"}
+
+_BIGQUERY_RENDER = {"int": "int64", "bigint": "int64", "smallint": "int64",
+                    "tinyint": "int64", "float": "float64", "double": "float64",
+                    "decimal": "numeric", "bigdecimal": "bignumeric"}
+
+
+class _DType:
+    __slots__ = ("token", "params", "children", "fields")
+
+    def __init__(self, token, params=None, children=None, fields=None):
+        self.token = token
+        self.params = params or []      # scalar length/precision strings
+        self.children = children or []  # array/map element types
+        self.fields = fields            # struct/object: {name: _DType}
+
+
+def _norm_raw(s: str) -> str:
+    return re.sub(r"\s+", " ", str(s).strip().lower())
+
+
+def _split_args(body: str) -> List[str]:
+    """Split a parenthesized/angled arg list at top-level commas."""
+    out, depth, cur = [], 0, []
+    for ch in body:
+        if ch in "(<":
+            depth += 1
+        elif ch in ")>":
+            depth -= 1
+        if ch == "," and depth == 0:
+            out.append("".join(cur).strip())
+            cur = []
+        else:
+            cur.append(ch)
+    tail = "".join(cur).strip()
+    if tail:
+        out.append(tail)
+    return out
+
+
+def _parse_dialect(type_str: str, dialect: Optional[str]):
+    """type string -> _DType, or None when the dialect cannot resolve it."""
+    if type_str is None:
+        return None
+    s = _norm_raw(type_str)
+    if not s:
+        return None
+    d = (dialect or "").lower()
+
+    # base ( args )  |  base < args >  |  base args-suffix (time zone words)
+    m = re.match(r"^([a-z_][a-z_0-9 ]*?)\s*([(<])(.*)([)>])\s*([a-z ]*)$", s)
+    if m and ((m.group(2), m.group(4)) in ((("("), (")")), (("<"), (">")))):
+        base, body, suffix = m.group(1).strip(), m.group(3), m.group(5).strip()
+        # postgres puts the tz words after the parens: timestamp(6) without time zone
+        spelled = f"{base} {suffix}".strip() if suffix else base
+        token = _SPELLING_TO_TOKEN.get(spelled)
+        if token is None:
+            return None
+        allowed = _DIALECT_ONLY_SPELLINGS.get(spelled)
+        if allowed is not None and d not in allowed:
+            return None
+        args = _split_args(body)
+        if token in _STRUCTURED_TOKENS:
+            if token in ("struct", "object"):
+                fields = {}
+                for a in args:
+                    fm = re.match(r"^([a-z_][a-z_0-9]*)\s+(.+)$", a)
+                    if not fm:
+                        return None
+                    sub = _parse_dialect(fm.group(2), dialect)
+                    if sub is None:
+                        return None
+                    fields[fm.group(1)] = sub
+                return _DType(token, fields=fields)
+            children = []
+            for a in args:
+                sub = _parse_dialect(a, dialect)
+                if sub is None:
+                    return None
+                children.append(sub)
+            return _DType(token, children=children)
+        if not all(re.match(r"^\d+$|^max$", a) for a in args):
+            return None
+        return _DType(token, params=args)
+
+    token = _SPELLING_TO_TOKEN.get(s)
+    if token is None:
+        return None
+    allowed = _DIALECT_ONLY_SPELLINGS.get(s)
+    if allowed is not None and d not in allowed:
+        return None
+    return _DType(token)
+
+
+def _base_render(token: str, dialect: Optional[str]) -> str:
+    if (dialect or "").lower() == "bigquery":
+        return _BIGQUERY_RENDER.get(token, token)
+    return token
+
+
+def _base_compatible_d(e: _DType, a: _DType, dialect: Optional[str]) -> bool:
+    d = (dialect or "").lower()
+    both = {e.token, a.token}
+    if e.token == a.token:
+        return True
+    if both <= _TS_FAMILY:
+        return True
+    if both <= _NUMERIC_TOKENS and _base_render(e.token, d) == _base_render(a.token, d):
+        return True
+    if d == "snowflake" and any(both <= fam for fam in _SNOWFLAKE_FAMILIES):
+        return True
+    if d in _TRINO_DIALECTS and both <= _TRINO_TEXT_FAMILY:
+        return True
+    return False
+
+
+def _scalar_params_equal_d(e: _DType, a: _DType) -> bool:
+    ep, ap = list(e.params), list(a.params)
+    if {e.token, a.token} <= _NUMERIC_TOKENS:
+        if len(ep) == 1:
+            ep = ep + ["0"]
+        if len(ap) == 1:
+            ap = ap + ["0"]
+    return ep == ap
+
+
+def _dtype_matches_d(e: _DType, a: _DType, dialect: Optional[str]) -> bool:
+    if not _base_compatible_d(e, a, dialect):
+        return False
+    e_has = bool(e.params or e.children or e.fields)
+    a_has = bool(a.params or a.children or a.fields)
+    if not e_has or not a_has:
+        return True
+    if e.token in ("struct", "object") or a.token in ("struct", "object"):
+        if e.fields is None or a.fields is None:
+            return e.params == a.params
+        if set(e.fields) != set(a.fields):
+            return False
+        return all(_dtype_matches_d(e.fields[n], a.fields[n], dialect) for n in e.fields)
+    if e.children and a.children:
+        if len(e.children) != len(a.children):
+            return False
+        return all(_dtype_matches_d(x, y, dialect) for x, y in zip(e.children, a.children))
+    return _scalar_params_equal_d(e, a)
+
+
+def _split_base_raw(s: str):
+    i = s.find("(")
+    if i == -1:
+        return s.strip(), ""
+    return s[:i].strip(), s[i:].strip()
+
+
+def _raw_match(expected: str, actual: str) -> bool:
+    e, a = _norm_raw(expected), _norm_raw(actual)
+    if e == a:
+        return True
+    e_base, e_params = _split_base_raw(e)
+    a_base, _ = _split_base_raw(a)
+    if e_base != a_base:
+        return False
+    return True if not e_params else e == a
+
+
+def physical_type_matches(
+    expected: Optional[str], actual: Optional[str], dialect: Optional[str]
+) -> Tuple[Optional[bool], str]:
+    """Reference-parity tri-state comparison with per-dialect aliasing
+    (engines/checks/physical_type_match.py:216-264). Returns (result, reason)."""
+    if not expected or not str(expected).strip() or not actual or not str(actual).strip():
+        return None, "no physical type to compare; skipping the physical type check"
+    e = _parse_dialect(expected, dialect)
+    a = _parse_dialect(actual, dialect)
+    if e is None and a is None:
+        if _raw_match(expected, actual):
+            return True, ""
+        return False, f"expected physical type '{expected}' but the column is '{actual}'"
+    if e is None or a is None:
+        return None, (
+            f"physicalType '{expected}' could not be interpreted in the '{dialect}' "
+            "dialect of the server under test; skipping the physical type check"
+        )
+    if not _base_compatible_d(e, a, dialect):
+        return False, f"expected physical type '{expected}' but the column is '{actual}'"
+    if e.token in _STRUCTURED_TOKENS or a.token in _STRUCTURED_TOKENS:
+        if _dtype_matches_d(e, a, dialect):
+            return True, ""
+        return False, f"expected physical type '{expected}' but the column is '{actual}'"
+    if _split_base_raw(_norm_raw(expected))[1] and not _scalar_params_equal_d(e, a):
+        return False, f"expected physical type '{expected}' but the column is '{actual}'"
+    return True, ""
+
+
+# ---------------------------------------------------------------------------
+# catalog-type reconstruction (reference engines/ibis/native_type.py)
+# ---------------------------------------------------------------------------
+
+_DECIMAL_TYPES = {"decimal", "numeric", "number", "dec", "bignumeric", "bigdecimal"}
+_DATETIME_PRECISION_TYPES = {"timestamp", "timestamptz", "timestamp_ntz", "timestamp_tz",
+                             "timestamp_ltz", "timestamp with time zone",
+                             "timestamp without time zone", "datetime2", "time",
+                             "time with time zone", "time without time zone"}
+
+
+def _split_time_zone_suffix(base: str):
+    low = base.lower()
+    for suffix in (" with time zone", " without time zone"):
+        if low.endswith(suffix):
+            return base[: len(base) - len(suffix)], base[len(base) - len(suffix):]
+    return base, ""
+
+
+def reconstruct_native_type(
+    data_type: Optional[str],
+    char_len=None,
+    num_precision=None,
+    num_scale=None,
+    datetime_precision=None,
+) -> Optional[str]:
+    """Rebuild a parameterized native type from catalog columns: varchar +
+    255 -> varchar(255) (-1 means SQL Server MAX); decimal + 10,2 ->
+    decimal(10,2) with a zero scale omitted; timestamp_ntz + 9 ->
+    timestamp_ntz(9) with postgres tz words kept after the parens. Precision
+    only attaches to types that declare one (never date(0))."""
+    if not data_type:
+        return None
+    base = str(data_type).strip()
+    if not base:
+        return None
+    if char_len is not None:
+        try:
+            length = int(char_len)
+        except (TypeError, ValueError):
+            return base
+        return f"{base}(max)" if length < 0 else f"{base}({length})"
+    if base.lower() in _DECIMAL_TYPES and num_precision is not None:
+        if num_scale:
+            return f"{base}({int(num_precision)},{int(num_scale)})"
+        return f"{base}({int(num_precision)})"
+    if datetime_precision is not None and "(" not in base:
+        head, time_zone = _split_time_zone_suffix(base)
+        if head.lower() in _DATETIME_PRECISION_TYPES:
+            try:
+                return f"{head}({int(datetime_precision)}){time_zone}"
+            except (TypeError, ValueError):
+                return base
+    return base
+
+
+def oracle_char_length(data_type: str, data_length, char_length=None):
+    """Oracle ALL_TAB_COLUMNS reports DATA_LENGTH in BYTES; CHAR_LENGTH is
+    the declared length (multibyte-safe). RAW is declared in bytes and
+    reports CHAR_LENGTH 0; DATE/NUMBER carry no length at all."""
+    dt = (data_type or "").upper()
+    if dt in ("DATE", "NUMBER", "FLOAT", "BINARY_FLOAT", "BINARY_DOUBLE", "TIMESTAMP"):
+        return None
+    if char_length is None:
+        return data_length
+    if int(char_length) > 0:
+        return int(char_length)
+    if dt == "RAW":
+        return data_length
+    return None
