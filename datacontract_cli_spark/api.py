@@ -11,7 +11,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from datacontract_cli_spark.engine.executor import SparkContractEngine
-from datacontract_cli_spark.model.contract import load_contract, load_contract_str
+from datacontract_cli_spark.model.contract import load_contract_str
 from datacontract_cli_spark.model.run import Run
 from datacontract_cli_spark.output import writers
 

@@ -16,9 +16,11 @@ Execution model (Spark-first, scale-aware):
 
 - **Schema checks never scan data** — they walk ``df.schema``.
 
-- **Duplicate counts** are dedicated two-phase jobs
-  (``groupBy(keys).count().filter(n>1).count()``), which Spark runs with
-  map-side partial aggregation; AQE handles skewed keys.
+- **Duplicate counts** come from one keys-only grouping per uniqueness
+  check (``duplicate_groups``, which the bucket lane shares): only the key
+  columns and a count cross the exchange, the duplicate-group fold and the
+  failed-sample top-k both read it, and Spark runs it with map-side
+  partial aggregation; AQE handles skewed keys.
 
 - **Custom SQL** runs through ``spark.sql`` against temp views registered
   for every bound model.
@@ -204,6 +206,28 @@ def compile_aggregates(df: DataFrame, specs: List[CheckSpec]
                 continue
             batch.add(spec, alias, aggs, F.round(ks, 6))
     return batch, unevaluated
+
+
+_DUP_ALIAS = "__dc_dup__"
+_SAMPLE_ALIAS = "__dc_sample__"
+
+
+def duplicate_groups(df: DataFrame, columns: Sequence[str],
+                     keys: Sequence[Any] = ()) -> Tuple[DataFrame, DataFrame]:
+    """The one uniqueness compiler: test() and the bucket lane. Returns
+    ``(groups, fold)``: ``groups`` has one row per distinct tuple of the
+    resolved ``columns`` with its row count (``_ROW_COUNT_ALIAS``);
+    ``fold`` counts the groups seen more than once (``_DUP_ALIAS``) in one
+    row, or with ``keys`` one row per key group, the keys first, as
+    :meth:`_AggBatch.frame` groups. Only the key columns and the count
+    cross the exchange: metric columns riding it would be shuffled once
+    per key group, so the flat aggregate stays a job of its own."""
+    groups = (df.groupBy(*keys, *[F.col(_q(c)) for c in columns])
+              .agg(F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)))
+    fold = groups.groupBy(*keys).agg(F.coalesce(
+        F.sum(F.when(F.col(_ROW_COUNT_ALIAS) > 1, 1).otherwise(0)),
+        F.lit(0)).alias(_DUP_ALIAS))
+    return groups, fold
 
 
 def _fail_result(spec: CheckSpec) -> ResultEnum:
@@ -740,14 +764,10 @@ class SparkContractEngine:
         for spec in other:
             run.set_result(spec.key, ResultEnum.warning, f"Unsupported metric {spec.metric}")
 
-        if agg_specs and dup_specs:
-            self._run_agg_with_duplicates(run, submit, agg_specs, dup_specs,
-                                          df, obj)
-        else:
-            if agg_specs:
-                submit(agg_specs, self._run_agg_batch, run, agg_specs, df, obj)
-            for spec in dup_specs:
-                submit([spec], self._check_duplicates, run, spec, df, obj)
+        if agg_specs:
+            submit(agg_specs, self._run_agg_batch, run, agg_specs, df, obj)
+        for spec in dup_specs:
+            submit([spec], self._check_uniqueness, run, spec, df, obj)
         for spec in sql_specs:
             submit([spec], self._check_custom_sql, run, spec)
         for spec in ri_specs:
@@ -760,102 +780,6 @@ class SparkContractEngine:
     # ------------------------------------------------------------------
     # the batched aggregation
     # ------------------------------------------------------------------
-    def _run_agg_with_duplicates(self, run: Run, submit: _Submit,
-                                 agg_specs: List[CheckSpec],
-                                 dup_specs: List[CheckSpec],
-                                 df: DataFrame,
-                                 obj: Optional[SchemaObject]) -> None:
-        """The agg batch and the first uniqueness check as two overlapped
-        submissions to the action pool: the flat exchange-free metric fold,
-        whose violation samples follow it in the same task without waiting
-        for the uniqueness job, and the keys-only uniqueness groupBy
-        (:meth:`_check_duplicates_keys_only`), kept apart so metric columns
-        never cross the uniqueness exchange. Each keeps its own fallback: a
-        failed batch aggregate retries check by check, a failed keys-only
-        job reruns its check on the two-phase path. The other uniqueness
-        checks are submissions of their own."""
-        lead = dup_specs[0]
-        lead_cols = lead.columns or ([lead.field] if lead.field else [])
-        resolved = [resolve_column(df, c) for c in lead_cols]
-        submit(agg_specs, self._run_agg_batch, run, agg_specs, df, obj)
-        rest = dup_specs
-        if resolved and all(c is not None for c in resolved):
-            submit([lead], self._check_duplicates_keys_only, run, lead, df,
-                   resolved, obj)
-            rest = dup_specs[1:]
-        for spec in rest:
-            submit([spec], self._check_duplicates, run, spec, df, obj)
-
-    def _check_duplicates_keys_only(self, run: Run, spec: CheckSpec,
-                                    df: DataFrame, resolved: List[str],
-                                    obj: Optional[SchemaObject]) -> None:
-        """Duplicate-group count from one keys-only groupBy. Pushing the
-        metric count-ifs THROUGH this exchange would force every aggregate
-        column across the wire per PK group (800 MB shuffled vs 240 MB for
-        the keys alone on the 8M-turn table), so the metric fold runs as
-        its own exchange-free job and this one shuffles ONLY (keys, count);
-        the dup-sample branch rides the same exchange via ReusedExchange.
-        Falls back to :meth:`_check_duplicates` (two-phase, with per-check
-        error isolation) if the job fails."""
-        dup_alias = "__dc_dup__"
-        kind_alias = "__dc_kind__"
-        skey_alias = "__dc_skey__"
-        sdup_alias = "__dc_sdup__"
-        sample_keys = (self._drop_sensitive(resolved, obj)
-                       if self.include_failed_samples else [])
-        try:
-            grouped = (df.groupBy(*[F.col(_q(c)) for c in resolved])
-                       .agg(F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)))
-            combined = (grouped.agg(F.coalesce(
-                F.sum(F.when(F.col(_ROW_COUNT_ALIAS) > 1, 1).otherwise(0)),
-                F.lit(0)).alias(dup_alias))
-                .withColumn(kind_alias, F.lit("fold")))
-            if sample_keys:
-                samples_branch = (
-                    grouped.filter(F.col(_ROW_COUNT_ALIAS) > 1)
-                    .orderBy(*[F.col(c) for c in resolved])
-                    .limit(self.sample_limit)
-                    .select(
-                        F.to_json(F.struct(
-                            *self._sample_struct_cols(df, sample_keys))
-                        ).alias(skey_alias),
-                        F.col(_ROW_COUNT_ALIAS).alias(sdup_alias),
-                        F.lit(None).cast("long").alias(dup_alias),
-                        F.lit("dup").alias(kind_alias),
-                    )
-                )
-                combined = combined.unionByName(samples_branch,
-                                                allowMissingColumns=True)
-            collected = combined.collect()
-        except Exception as e:  # noqa: BLE001
-            logger.warning("keys-only uniqueness job failed (%s); "
-                           "falling back to the separate check", e)
-            self._check_duplicates(run, spec, df, obj)
-            return
-        fold_row = next(r for r in collected if r[kind_alias] == "fold")
-        self._evaluate(run, spec, int(fold_row[dup_alias]), None)
-        check = run.check(spec.key)
-        if not (self.include_failed_samples and check is not None
-                and check.result in (ResultEnum.failed, ResultEnum.warning)):
-            return
-        if not sample_keys:
-            try:
-                self._collect_duplicate_samples(run, spec, df, resolved, obj)
-            except Exception as e:  # noqa: BLE001 — diagnostics only
-                logger.warning("duplicate-sample collection failed for "
-                               "%s: %s", spec.key, e)
-            return
-        # TakeOrdered emits one sorted partition; collect preserves
-        # intra-partition order, so the rows are already in stable
-        # (key-ascending) order
-        rows = []
-        for r in collected:
-            if r[kind_alias] == "dup":
-                rec = self._parse_sample(r[skey_alias], sample_keys)
-                rec["duplicate_count"] = r[sdup_alias]
-                rows.append(rec)
-        check.failedSamples = rows
-
     def _run_agg_batch(self, run: Run, specs: List[CheckSpec],
                        df: DataFrame, obj: Optional[SchemaObject]) -> None:
         batch, unevaluated = compile_aggregates(df, specs)
@@ -964,7 +888,7 @@ class SparkContractEngine:
             cols_by_key[spec.key] = cols
             branches.append(
                 df.filter(cond)
-                .orderBy(*[F.col(c) for c in (order or [column])])
+                .orderBy(*[F.col(_q(c)) for c in (order or [column])])
                 .limit(self.sample_limit)
                 .select(F.lit(spec.key).alias("__dc_tag__"),
                         F.to_json(F.struct(
@@ -987,8 +911,11 @@ class SparkContractEngine:
     # ------------------------------------------------------------------
     # dedicated jobs
     # ------------------------------------------------------------------
-    def _check_duplicates(self, run: Run, spec: CheckSpec, df: DataFrame,
+    def _check_uniqueness(self, run: Run, spec: CheckSpec, df: DataFrame,
                           obj: Optional[SchemaObject]) -> None:
+        """Number of duplicated key GROUPS (not duplicated rows), exact,
+        from :func:`duplicate_groups`; with failed samples on, the first
+        duplicated groups in key order come from the same query."""
         cols = spec.columns or ([spec.field] if spec.field else None)
         if not cols:
             run.set_result(spec.key, ResultEnum.error, "duplicate check has no columns")
@@ -1001,83 +928,50 @@ class SparkContractEngine:
                                f"Column '{c}' not found in model {spec.model}")
                 return
             resolved.append(r)
-        # number of duplicated key GROUPS (not duplicated rows), exact.
-        # Two-phase: (1) group by the 64-bit key hash — the shuffle carries
-        # 8-byte longs instead of full (string, ...) tuples; (2) re-verify
-        # ONLY rows whose hash collided, grouped by the real key, so hash
-        # collisions can never inflate the count. When data is mostly
-        # duplicate-free (the expected case for a uniqueness check), phase 2
-        # touches almost nothing.
+        sample_keys = (self._drop_sensitive(resolved, obj)
+                       if self.include_failed_samples else None)
         try:
-            value = self._duplicate_group_count(df, resolved)
-        except Exception as e:
-            # per-check error isolation, same as the agg batch / custom
-            # SQL: one failing Spark job must not abort the whole run
+            rows = self._uniqueness_query(df, resolved, sample_keys).collect()
+        except Exception as e:  # noqa: BLE001
+            # one failing Spark job errors only its own check
             run.set_result(spec.key, ResultEnum.error, str(e))
             return
-        self._evaluate(run, spec, int(value), None)
+        fold = next(r for r in rows if r[_DUP_ALIAS] is not None)
+        self._evaluate(run, spec, int(fold[_DUP_ALIAS]), None)
         check = run.check(spec.key)
-        if (self.include_failed_samples and check is not None
-                and check.result in (ResultEnum.failed, ResultEnum.warning)):
-            try:
-                self._collect_duplicate_samples(run, spec, df, resolved, obj)
-            except Exception as e:
-                # samples are diagnostics — their failure never changes
-                # the verdict
-                logger.warning("duplicate-sample collection failed for "
-                               "%s: %s", spec.key, e)
+        if (sample_keys is None or check is None
+                or check.result not in (ResultEnum.failed, ResultEnum.warning)):
+            return
+        samples = []
+        for r in rows:
+            if r[_DUP_ALIAS] is None:
+                rec = (self._parse_sample(r[_SAMPLE_ALIAS], sample_keys)
+                       if sample_keys else {})
+                rec["duplicate_count"] = r[_ROW_COUNT_ALIAS]
+                samples.append(rec)
+        check.failedSamples = samples
 
-    def _collect_duplicate_samples(self, run: Run, spec: CheckSpec,
-                                   df: DataFrame, resolved: List[str],
-                                   obj: Optional[SchemaObject]) -> None:
-        sample_df = (
-            df.groupBy(*[F.col(_q(c)) for c in resolved])
-            .agg(F.count(F.lit(1)).alias("duplicate_count"))
-            .filter(F.col("duplicate_count") > 1)
-            .orderBy(*[F.col(c) for c in resolved])
-            .limit(self.sample_limit)
-        )
-        keep = self._drop_sensitive(resolved + ["duplicate_count"], obj)
-        rows = [self._json_safe(r.asDict()) for r in sample_df.select(*keep).collect()]
-        check = run.check(spec.key)
-        if check is not None:
-            check.failedSamples = rows
-
-    @staticmethod
-    def _duplicate_group_count(df: DataFrame, cols: List[str],
-                               max_candidate_groups: int = 5_000_000) -> int:
-        h = F.xxhash64(*[F.col(c) for c in cols])
-        cand = (
-            df.select(h.alias("__dc_h__"))
-            .groupBy("__dc_h__").agg(F.count(F.lit(1)).alias("__dc_n__"))
-            .filter(F.col("__dc_n__") > 1)
-            .select("__dc_h__")
-        )
-        # persist scoped to this method: without it the broadcast join
-        # RECOMPUTES the candidate aggregation after count() already
-        # materialized it — a third full table scan on every uniqueness
-        # check that found at least one duplicate
-        cand = cand.persist()
-        try:
-            cand_n = cand.count()
-            if cand_n == 0:
-                return 0
-            if cand_n > max_candidate_groups:
-                # too many collided groups to broadcast — exact direct
-                # grouping
-                return (
-                    df.groupBy(*[F.col(_q(c)) for c in cols]).count()
-                    .filter(F.col("count") > 1).count()
-                )
-            return (
-                df.withColumn("__dc_h__", h)
-                .join(F.broadcast(cand), "__dc_h__")
-                .groupBy(*[F.col(_q(c)) for c in cols]).count()
-                .filter(F.col("count") > 1)
-                .count()
-            )
-        finally:
-            cand.unpersist()
+    def _uniqueness_query(self, df: DataFrame, resolved: List[str],
+                          sample_keys: Optional[List[str]]) -> DataFrame:
+        """The fold row of :func:`duplicate_groups`, then, unless
+        ``sample_keys`` is None, up to ``sample_limit`` duplicated groups
+        ordered by the key: ``sample_keys`` (the non-sensitive key
+        columns) as one JSON string and the group's row count. Both
+        branches read one grouped frame, so the scan and the shuffle
+        write run once; the sample branch reads the shuffle a second time
+        as a ReusedExchange. TakeOrdered emits one sorted partition and
+        collect keeps the union's branch order, so the sample rows arrive
+        in key order."""
+        groups, fold = duplicate_groups(df, resolved)
+        if sample_keys is None:
+            return fold
+        record = (F.to_json(F.struct(*self._sample_struct_cols(df, sample_keys)))
+                  if sample_keys else F.lit(None).cast("string"))
+        samples = (groups.filter(F.col(_ROW_COUNT_ALIAS) > 1)
+                   .orderBy(*[F.col(_q(c)) for c in resolved])
+                   .limit(self.sample_limit)
+                   .select(record.alias(_SAMPLE_ALIAS), _ROW_COUNT_ALIAS))
+        return fold.unionByName(samples, allowMissingColumns=True)
 
     def _check_custom_sql(self, run: Run, spec: CheckSpec) -> None:
         from datacontract_cli_spark.checks.dialect import to_spark_sql
@@ -1381,9 +1275,9 @@ class SparkContractEngine:
     def _sample_struct_cols(self, df: DataFrame, cols: List[str]) -> List[Any]:
         dtypes = dict(df.dtypes)
         return [
-            (F.col(c).cast("string").alias(c)
+            (F.col(_q(c)).cast("string")
              if dtypes.get(c, "").startswith(self._SAMPLE_STRINGIFY)
-             else F.col(c))
+             else F.col(_q(c))).alias(c)
             for c in cols
         ]
 

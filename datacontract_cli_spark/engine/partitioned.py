@@ -36,11 +36,13 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
 from datacontract_cli_spark.engine.executor import (
+    _DUP_ALIAS,
     _ROW_COUNT_ALIAS,
     _threshold_result,
     compile_aggregates,
+    duplicate_groups,
 )
-from datacontract_cli_spark.engine.predicates import _q as _qc, resolve_column
+from datacontract_cli_spark.engine.predicates import resolve_column
 
 _BUCKET = "__dc_bucket__"
 
@@ -163,7 +165,7 @@ class PartitionedValidator:
                 for b in sorted(todo)
             ]
 
-        # bucket-local duplicate counts (one job per distinct key tuple).
+        # bucket-local duplicate counts (one keys-only job per check).
         # Only computable when the duplicate key CONTAINS the partition
         # key (per-bucket group counts sum exactly then); everything else
         # is an honest error, never a silent zero-pass
@@ -189,12 +191,9 @@ class PartitionedValidator:
                 dup_errors[spec.key] = (
                     f"column(s) {missing} not found in model {model}")
                 continue
-            grouped = (
-                work.groupBy(_BUCKET, *[F.col(_qc(c)) for c in resolved])
-                .count().filter(F.col("count") > 1)
-                .groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("dups"))
-            )
-            dup_values[spec.key] = {r[_BUCKET]: r["dups"] for r in grouped.collect()}
+            _, fold = duplicate_groups(work, resolved, keys=(_BUCKET,))
+            dup_values[spec.key] = {r[_BUCKET]: r[_DUP_ALIAS]
+                                    for r in fold.collect()}
 
         now = datetime.now(timezone.utc).isoformat()
         new_verdicts: List[BucketVerdict] = []

@@ -13,7 +13,7 @@ codegen, no Python on the executor path.
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

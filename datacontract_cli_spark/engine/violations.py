@@ -11,7 +11,7 @@ check count, fully distributed, never collected.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -22,7 +22,7 @@ from typing import Any, Dict, List, Optional
 
 import yaml
 
-from datacontract_cli_spark.model.contract import DataContract, Property, SchemaObject
+from datacontract_cli_spark.model.contract import DataContract, Property
 
 
 def _opt(prop: Property, key: str) -> Any:

@@ -15,8 +15,6 @@ from __future__ import annotations
 import html as _html
 from typing import List, Optional
 
-import yaml
-
 from datacontract_cli_spark.model.contract import DataContract, Property, SchemaObject
 
 

@@ -33,12 +33,11 @@ from datacontract_cli_spark.checks.compile import (
     prepare_query,
     to_threshold,
 )
-from datacontract_cli_spark.checks.spec import Op, Threshold
+from datacontract_cli_spark.checks.spec import Op
 from datacontract_cli_spark.model.contract import (
     DataContract,
     Property,
     QualityRule,
-    SchemaObject,
 )
 
 logger = logging.getLogger(__name__)

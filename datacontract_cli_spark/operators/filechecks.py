@@ -26,7 +26,6 @@ from datacontract_cli_spark.model.contract import (
     DataContract,
     Property,
     QualityRule,
-    SchemaObject,
     Server,
 )
 from datacontract_cli_spark.model.run import Check, ResultEnum, Run

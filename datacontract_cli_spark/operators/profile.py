@@ -9,7 +9,7 @@ scanned once regardless of how many columns/stats are requested.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F

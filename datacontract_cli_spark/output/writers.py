@@ -9,7 +9,6 @@ Driver-side only — results are tiny.
 
 from __future__ import annotations
 
-import json
 from typing import Optional
 from xml.sax.saxutils import escape
 

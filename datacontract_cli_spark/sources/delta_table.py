@@ -38,7 +38,6 @@ compactions, and each DV is a compressed roaring bitmap).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re

@@ -54,7 +54,6 @@ import glob
 import json
 import os
 import struct
-import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Dict, List, Optional, Sequence, Tuple
 
@@ -62,7 +61,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacontract_cli_spark.sources.avro_ocf import read_ocf, write_ocf
+from datacontract_cli_spark.sources.avro_ocf import read_ocf
 
 STATUS_DELETED = 2
 CONTENT_DATA = 0

@@ -157,9 +157,10 @@ def test_junit_quotes_in_attributes():
 
 
 def test_merged_agg_dup_equivalent_to_separate(spark):
-    """The one-scan merged agg+uniqueness job must produce exactly the same
-    check results (values, diagnostics, samples) as the separate two-job
-    path, including freshness/retention refolds."""
+    """A model with both aggregate and uniqueness checks: the flat
+    aggregate (with its freshness/retention folds) and the keys-only
+    uniqueness job give the hand-computed values, diagnostics and
+    samples."""
     import datetime as dt
 
     contract = load_contract_str("""
@@ -211,9 +212,9 @@ slaProperties:
 
 
 def test_merged_path_falls_back_on_bad_constraint(spark):
-    """A bad regex inside the merged agg+dup job must fall back to the
-    separate path where error isolation fails only the affected check while
-    the duplicate check still evaluates."""
+    """A bad regex fails the batched aggregate, whose per-check retry
+    errors only the affected check; the uniqueness check, a job of its
+    own, still evaluates."""
     contract = load_contract_str("""
 id: mergederr
 version: 0.1.0
@@ -241,7 +242,8 @@ schema:
 
 def test_merged_path_empty_table(spark):
     """Empty input: counts are 0, SLAs report no timestamp — not a crash
-    (the merged fold's sums are NULL over zero groups, unlike plain count)."""
+    (the duplicate-group fold's sum is NULL over zero groups, unlike plain
+    count)."""
     contract = load_contract_str("""
 id: mergedempty
 version: 0.1.0

@@ -98,9 +98,9 @@ def test_missing_model_errors(spark, contract):
 
 
 def test_merged_dup_samples_match_direct_query(spark, contract):
-    """The dup samples riding the keys-only union query (executor.py
-    _check_duplicates_keys_only samples_branch) must equal the dedicated
-    groupBy/filter/orderBy/limit query they replaced."""
+    """The dup samples riding the uniqueness query (executor.py
+    _uniqueness_query, the sample branch on duplicate_groups' grouping)
+    must equal a direct groupBy/filter/orderBy/limit query."""
     from pyspark.sql import functions as F
 
     df = synthesize_transcripts(spark, n_convs=150, turns_per_conv=6,

@@ -71,6 +71,10 @@ schema:
       - type: library
         metric: rowCount
         mustBeGreaterThan: 0
+      - type: library
+        metric: duplicateValues
+        mustBe: 0
+        arguments: {properties: [k, src]}
 """
 
 _ROLES = ["user", "assistant", "tool", "bogus", None, "", "n/a"]
@@ -81,7 +85,7 @@ def _frame(spark):
     rows = []
     for i in range(90):
         rows.append((
-            None if i % 17 == 5 else f"k-{i}" if i % 11 else f"bad{i}",
+            None if i % 17 == 5 else f"k-{i % 45}" if i % 11 else f"bad{i}",
             _ROLES[i % len(_ROLES)],
             float((i * 7) % 60 - 5) if i % 13 else None,
             _TEXTS[i % len(_TEXTS)],
@@ -130,7 +134,9 @@ def test_buckets_match_test_on_each_bucket(spark, tmp_path):
     contract = load_contract_str(_CONTRACT)
     df = _frame(spark)
     specs = _specs(contract, (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
-                              MetricType.INVALID_COUNT))
+                              MetricType.INVALID_COUNT,
+                              MetricType.DUPLICATE_COUNT))
+    assert "t__model_duplicate_values" in [s.key for s in specs]
     pv = PartitionedValidator(spark, checkpoint_dir=str(tmp_path),
                               partition_key="k", n_buckets=3)
     verdicts = pv.run(df, specs, "t")
@@ -172,11 +178,12 @@ def test_files_match_test_on_each_file(spark, tmp_path):
 
 
 def test_inputs_violate_every_rule(spark):
-    """Every missing or invalid check finds a violating row in the frame
-    above, so the parity tests compare non-trivial counts."""
+    """Every missing, invalid or uniqueness check finds a violating row in
+    the frame above, so the parity tests compare non-trivial counts."""
     contract = load_contract_str(_CONTRACT)
     want = _test_values(spark, contract, _frame(spark))
     for spec in _specs(contract, (MetricType.MISSING_COUNT,
-                                  MetricType.INVALID_COUNT)):
+                                  MetricType.INVALID_COUNT,
+                                  MetricType.DUPLICATE_COUNT)):
         if spec.field != "ghost":
             assert want[spec.key] > 0, spec.key

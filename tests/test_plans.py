@@ -106,32 +106,27 @@ def test_window_topk_uses_take_ordered_or_window(spark):
 
 
 def test_merged_validation_union_reuses_exchange(spark):
-    """The merged agg+duplicates query with its samples branch must share
-    ONE wide shuffle between the metrics fold and the dup-sample top-k
-    (executor.py _run_agg_with_duplicates). The invariant that makes this
-    work: the samples branch keeps every aggregate column alive above its
-    limit — dropping them lets column pruning diverge the two scans and
-    the exchange is no longer reused (scan + shuffle run twice)."""
+    """The engine's own uniqueness query (executor.py _uniqueness_query):
+    the duplicate-group fold and the failed-sample top-k both read the
+    keys-only grouping of duplicate_groups, so its scan and shuffle run
+    once and the sample branch reads them as a ReusedExchange. With every
+    key column sensitive the sample branch still orders by the key, so it
+    shares the same exchange."""
+    from datacontract_cli_spark.engine.executor import (
+        _DUP_ALIAS,
+        SparkContractEngine,
+    )
     from datacontract_cli_spark.sources.transcripts import synthesize_transcripts
 
     df = synthesize_transcripts(spark, n_convs=300, turns_per_conv=4,
                                 defect_rate=0.2)
-    rc, m = "__rc__", "__m__"
-    exprs = [F.count(F.lit(1)).alias(rc),
-             F.count(F.when(F.col("role").isNull(), 1)).alias(m)]
-    grouped = df.groupBy("conv_id", "turn_idx").agg(*exprs)
-    fold = (grouped.agg(F.coalesce(F.sum(rc), F.lit(0)).alias(rc),
-                        F.coalesce(F.sum(m), F.lit(0)).alias(m),
-                        F.coalesce(F.sum(F.when(F.col(rc) > 1, 1)), F.lit(0))
-                        .alias("dup"))
-            .withColumn("__kind__", F.lit("fold")))
-    samples = (grouped.filter(F.col(rc) > 1)
-               .orderBy("conv_id", "turn_idx").limit(5)
-               .select(F.to_json(F.struct("conv_id", "turn_idx")).alias("__skey__"),
-                       F.col(rc).alias("__sdup__"),
-                       F.col(m),  # keeps pruning identical across branches
-                       F.lit("dup").alias("__kind__")))
-    combined = fold.unionByName(samples, allowMissingColumns=True)
-    combined.collect()
-    executed = combined._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in executed, executed
+    engine = SparkContractEngine(spark, include_failed_samples=True)
+    keys = ["conv_id", "turn_idx"]
+    for sample_keys in (keys, []):
+        query = engine._uniqueness_query(df, keys, sample_keys)
+        rows = query.collect()
+        fold = [r for r in rows if r[_DUP_ALIAS] is not None]
+        assert len(fold) == 1 and fold[0][_DUP_ALIAS] > 0
+        assert 0 < len(rows) - 1 <= engine.sample_limit
+        executed = query._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in executed, executed

@@ -184,3 +184,53 @@ def test_every_top_level_definition_is_reached_from_production():
     assert not stale, sorted(stale)
     assert set(ALLOWED_UNREFERENCED.values()) <= {
         FIXTURE, SYNTHETIC, SEAM, TRACED, PARITY}
+
+
+# --- imports --------------------------------------------------------------
+
+def unused_imports() -> set[str]:
+    """Names that a module of the package imports at module level (in its
+    body or a top-level ``if``/``try``) and never reads, as
+    ``module.name``. A read is a loaded identifier, which covers attribute
+    bases and annotations, a name in a quoted annotation, or an
+    ``__all__`` entry. Package ``__init__`` modules re-export what they
+    import and are exempt."""
+    out = set()
+    for name, path in _modules().items():
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        top, bound = list(tree.body), set()
+        while top:
+            node = top.pop()
+            if isinstance(node, (ast.If, ast.Try, ast.ExceptHandler)):
+                top.extend(ast.iter_child_nodes(node))
+            elif isinstance(node, ast.Import):
+                bound |= {a.asname or a.name.partition(".")[0]
+                          for a in node.names}
+            elif (isinstance(node, ast.ImportFrom)
+                  and node.module != "__future__"):
+                bound |= {a.asname or a.name for a in node.names}
+        read = set()
+        for node in ast.walk(tree):
+            note = (getattr(node, "returns", None)
+                    or getattr(node, "annotation", None))
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                read.add(node.id)
+            elif isinstance(note, ast.Constant) and isinstance(note.value, str):
+                read |= {n.id for n in ast.walk(ast.parse(note.value))
+                         if isinstance(n, ast.Name)}
+            elif (isinstance(node, ast.Assign)
+                  and any(getattr(t, "id", None) == "__all__"
+                          for t in node.targets)):
+                read |= {e.value for e in ast.walk(node.value)
+                         if isinstance(e, ast.Constant)}
+        out |= {f"{name}.{b}" for b in bound - read - {"*"}}
+    return out
+
+
+def test_every_module_level_import_is_used():
+    unused = unused_imports()
+    assert not unused, (
+        f"{len(unused)} module-level imports their module never uses: "
+        f"{sorted(unused)}")
