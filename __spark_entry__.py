@@ -160,21 +160,20 @@ def _q_invalid_max_length(spark, sf):
 
 
 def _q_duplicate_count(spark, sf):
-    orders = _t(spark, sf, "orders")
-    dup_groups = (
-        orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return dup_groups.agg(F.count(F.lit(1)).alias("duplicate_count"))
+    """Duplicate groups of one key, through the engine's one uniqueness
+    compiler (``duplicate_groups``)."""
+    return _duplicate_count(_t(spark, sf, "orders"), ["o_custkey"])
 
 
 def _q_duplicate_composite(spark, sf):
-    li = _t(spark, sf, "lineitem")
-    dup_groups = (
-        li.groupBy("l_orderkey", "l_linenumber").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return dup_groups.agg(F.count(F.lit(1)).alias("duplicate_count"))
+    return _duplicate_count(_t(spark, sf, "lineitem"),
+                            ["l_orderkey", "l_linenumber"])
+
+
+def _duplicate_count(df, columns):
+    from datacontract_cli_spark.engine.executor import _DUP_ALIAS, duplicate_groups
+    _, fold = duplicate_groups(df, columns)
+    return fold.select(F.col(_DUP_ALIAS).alias("duplicate_count"))
 
 
 def _q_freshness_retention(spark, sf):

@@ -512,7 +512,7 @@ def main(argv: list[str] | None = None) -> int:
         import time as _time
 
         from datacontract_cli_spark.engine.executor import SparkContractEngine
-        from datacontract_cli_spark.model.run import ResultEnum
+        from datacontract_cli_spark.output import writers
         from datacontract_cli_spark.session import get_spark
 
         try:
@@ -534,7 +534,9 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"error: {e}", file=sys.stderr)
                 return 1
             for sid, run, result in verdicts:
-                if run.result is ResultEnum.failed:
+                # an error Check (a rule the lane cannot evaluate, an
+                # unreadable version) fails closed like a failed one
+                if writers.exit_code(run):
                     any_failed = True
                 key = {"iceberg": "snapshot_id", "delta": "version",
                        "parquet": "poll"}[args.format]

@@ -34,6 +34,12 @@ Execution model (Spark-first, scale-aware):
   (``inheritable_thread_target``), and an exception escaping a submission
   turns only that submission's checks into ``error``.
 
+- **Folding lanes** (``test_partitioned``, ``test_incremental``,
+  ``tail``) build their Run through one method, ``_lane_run``: one Check
+  per compiled rule of the model, schema checks on the lane's schema,
+  folded counts evaluated as ``test()`` evaluates them, and every rule
+  that does not fold over buckets or files an error naming the lane.
+
 Only aggregated scalars and ≤ sample_limit violation rows ever reach the
 driver.
 """
@@ -98,6 +104,20 @@ _SCHEMA_METRICS = (
     MetricType.FIELD_PHYSICAL_TYPE,
     MetricType.FIELD_NESTED_TYPE,
 )
+
+# metrics whose values over disjoint row sets sum to the table's: the
+# bucket and file lanes fold them
+_COUNT_METRICS = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
+                  MetricType.INVALID_COUNT)
+
+# folding lane -> (the units it folds over, the metrics it folds). A
+# duplicate group lies in one bucket only when the bucket key is part of
+# the duplicate key; across files it never folds.
+_LANES = {
+    "partitioned": ("buckets", _COUNT_METRICS + (MetricType.DUPLICATE_COUNT,)),
+    "incremental": ("files", _COUNT_METRICS),
+    "tail": ("files", _COUNT_METRICS),
+}
 
 _ROW_COUNT_ALIAS = "__dc_row_count__"
 
@@ -230,6 +250,15 @@ def duplicate_groups(df: DataFrame, columns: Sequence[str],
     return groups, fold
 
 
+def _sort_key(df: DataFrame, column: str) -> Column:
+    """``column`` as a sample sort key: Spark cannot order a MAP, so a
+    column whose type holds one sorts by its JSON text."""
+    col = F.col(_q(column))
+    if "map<" in df.schema[column].dataType.simpleString():
+        return F.to_json(col)
+    return col
+
+
 def _fail_result(spec: CheckSpec) -> ResultEnum:
     severity = (spec.severity or "").strip().lower()
     return ResultEnum.warning if severity in _WARNING_SEVERITIES else ResultEnum.failed
@@ -242,14 +271,31 @@ def _threshold_result(spec: CheckSpec, value: Any,
 
 
 def _check_for(spec: CheckSpec) -> Check:
-    """The Check that reports ``spec``, before it has a result: test()
-    registers one per spec up front, the folding lanes one per verdict."""
+    """The Check that reports ``spec``, before it has a result: test() and
+    the folding lanes register one per spec up front."""
     return Check(key=spec.key, category=spec.category, type=spec.type,
                  name=spec.name, model=spec.model, field=spec.field,
                  language="introspection" if spec.metric in _SCHEMA_METRICS
                  else "spark-sql",
                  qualityId=spec.quality_id, tags=spec.tags,
                  dimension=spec.dimension)
+
+
+def _model_specs(contract: DataContract, model: str) -> List[CheckSpec]:
+    return [s for s in compile_checks(contract, None) if s.model == model]
+
+
+def _lane_value(values: Dict[str, Any], spec: CheckSpec) -> Any:
+    """A spec's folded value; the row count lives under ``row_count``."""
+    return values.get("row_count" if spec.metric is MetricType.ROW_COUNT
+                      else spec.key)
+
+
+def _evaluated(values: Dict[str, Any], unevaluated: List[str]) -> Dict[str, Any]:
+    """``values`` without the keys some live file could not evaluate: a
+    partial sum is an error, never a verdict."""
+    skip = set(unevaluated)
+    return {k: v for k, v in values.items() if k not in skip}
 
 
 def _fail_closed(run: Run, specs: List[CheckSpec], fn: Callable, *args) -> None:
@@ -433,81 +479,40 @@ class SparkContractEngine:
         source_path: Optional[str] = None,
     ):
         """Per-partition verdict mode (north rule): validate the model's
-        agg-able + duplicate checks per hash bucket of ``partition_key``
+        count and uniqueness checks per hash bucket of ``partition_key``
         with lineage + checkpoint/resume; returns (Run, bucket verdicts).
 
-        The Run's check results are the fold of the bucket verdicts, so the
-        result surface matches test() while the manifest records exactly
-        which buckets have been validated (crash-resume re-runs only the
-        rest)."""
+        The Run has one Check per rule of the model (:meth:`_lane_run`):
+        count and uniqueness results come from the metrics summed over the
+        buckets, while the manifest records exactly which buckets have
+        been validated (crash-resume re-runs only the rest)."""
         from datacontract_cli_spark.engine.partitioned import PartitionedValidator
 
-        specs = [s for s in compile_checks(contract, None) if s.model == model]
-        runnable = [s for s in specs if s.metric in
-                    (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
-                     MetricType.INVALID_COUNT, MetricType.DUPLICATE_COUNT)]
-        # per-bucket duplicate-group counts only SUM correctly when rows
-        # sharing the duplicate key land in one bucket — i.e. the
-        # partition key is part of the duplicate key. Anything else would
-        # silently under-count (two equal emails in different conv_id
-        # buckets each count zero), so it is an error here, not a pass.
-        unroutable = [
-            s for s in runnable if s.metric is MetricType.DUPLICATE_COUNT
-            and partition_key not in (s.columns or
-                                      ([s.field] if s.field else []))]
-        runnable = [s for s in runnable if s not in unroutable]
+        specs = _model_specs(contract, model)
         pv = PartitionedValidator(self.spark, checkpoint_dir=checkpoint_dir,
                                   partition_key=partition_key, n_buckets=n_buckets)
-        verdicts = pv.run(df, runnable, model, source_path=source_path)
-        folded = PartitionedValidator.fold(verdicts, specs=runnable)
+        verdicts = pv.run(df, specs, model, source_path=source_path)
+        folded = PartitionedValidator.fold(verdicts)
+        errors = {
+            s.key: (f"uniqueness on {s.columns or [s.field]} cannot be "
+                    f"folded per-bucket when the partition key "
+                    f"{partition_key!r} is not part of the duplicate key — "
+                    "run it through test() (the batched lane is exact)"
+                    if s.metric is MetricType.DUPLICATE_COUNT
+                    and not pv.routes(s)
+                    else "a validated bucket in the checkpoint recorded an "
+                         "error for this rule; a new checkpoint dir "
+                         "re-evaluates it")
+            for s in specs if s.key in folded["errors"]}
 
-        run = Run(dataContractId=contract.id, dataContractVersion=contract.version)
-        for spec in unroutable:
-            check = _check_for(spec)
-            check.result = ResultEnum.error
-            check.reason = (
-                f"uniqueness on {spec.columns or [spec.field]} cannot be "
-                f"folded per-bucket when the partition key "
-                f"{partition_key!r} is not part of the duplicate key — "
-                "run it through test() (the batched lane is exact)")
-            run.checks.append(check)
-        for spec in runnable:
-            check = _check_for(spec)
-            # global verdict from the folded metric (exact: counts sum across
-            # buckets); per-bucket verdicts stay in diagnostics/manifest
-            value = folded["metrics"].get(
-                spec.key, folded["metrics"].get("row_count")
-                if spec.metric is MetricType.ROW_COUNT else None)
-            if value is None:
-                # the spec never evaluated in any bucket (absent column):
-                # an honest error, same as the incremental lane — not a
-                # fail with a misleading '0 of N partitions' reason
-                check.result = ResultEnum.error
-                check.reason = (f"{spec.metric.value}({spec.field}) was "
-                                "not evaluated in any partition (column "
-                                "absent?)")
-                check.diagnostics = {"metric": spec.metric.value,
-                                     "value": None}
-                run.checks.append(check)
-                continue
-            if spec.threshold is not None:
-                check.result = _threshold_result(
-                    spec, value, folded["metrics"].get("row_count"))
-            check.diagnostics = {
-                "metric": spec.metric.value,
-                "value": value,
-                "n_buckets": folded["n_buckets_validated"],
-                "failed_buckets": sorted(
-                    b for b, v in verdicts.items()
-                    if v.results.get(spec.key) == "failed"
-                ),
-            }
-            if check.result is ResultEnum.failed:
-                check.reason = (f"{len(check.diagnostics['failed_buckets'])} of "
-                                f"{folded['n_buckets_validated']} partitions failed "
-                                f"{spec.metric.value}({spec.field or spec.model})")
-            run.checks.append(check)
-        return run.finish(), verdicts
+        def buckets(spec: CheckSpec) -> Dict[str, Any]:
+            return {"n_buckets": folded["n_buckets_validated"],
+                    "failed_buckets": sorted(
+                        b for b, v in verdicts.items()
+                        if v.results.get(spec.key) == "failed")}
+
+        return (self._lane_run(contract, specs, "partitioned", df,
+                               folded["metrics"], errors, buckets), verdicts)
 
     def test_incremental(
         self,
@@ -521,8 +526,10 @@ class SparkContractEngine:
         """File-level incremental mode: validate only files new or changed
         (by size/mtime fingerprint) since the last run, fold count metrics
         over the per-file manifest; returns (Run, result dict with files /
-        new_files / removed_files / folded). Count checks only — key
-        uniqueness needs test_partitioned (duplicates cross files).
+        new_files / removed_files / folded / schema). The Run has one Check
+        per rule of the model (:meth:`_lane_run`): presence and type checks
+        read the schema the files were read with, and a rule that does not
+        fold over files (uniqueness: duplicates cross files) is an error.
 
         ``table_format`` "iceberg"/"delta" plans the live file set from
         the table's own metadata (snapshot manifests / log replay) instead
@@ -531,48 +538,27 @@ class SparkContractEngine:
         Iceberg snapshot id or a Delta version)."""
         from datacontract_cli_spark.engine.incremental import IncrementalValidator
 
-        specs = [s for s in compile_checks(contract, None) if s.model == model
-                 and s.metric in (MetricType.ROW_COUNT,
-                                  MetricType.MISSING_COUNT,
-                                  MetricType.INVALID_COUNT)]
+        specs = _model_specs(contract, model)
+        counts = [s for s in specs if s.metric in _COUNT_METRICS]
         iv = IncrementalValidator(self.spark, checkpoint_dir)
         if table_format == "iceberg":
-            result = iv.run_iceberg(path, specs, model,
+            result = iv.run_iceberg(path, counts, model,
                                     snapshot_id=snapshot_id)
         elif table_format == "delta":
-            result = iv.run_delta(path, specs, model, version=snapshot_id)
+            result = iv.run_delta(path, counts, model, version=snapshot_id)
         else:
-            result = iv.run(path, specs, model)
-        run = Run(dataContractId=contract.id,
-                  dataContractVersion=contract.version)
-        unevaluated = set(result.get("unevaluated") or [])
-        for spec in specs:
-            check = _check_for(spec)
-            if spec.key in unevaluated:
-                # a column absent from the validated files is an ERROR,
-                # never a passing zero — the batch lane errors the same way
-                check.result = ResultEnum.error
-                check.reason = (f"column '{spec.field}' not present in the "
-                                "validated files")
-                check.diagnostics = {"metric": spec.metric.value,
-                                     "value": None,
-                                     "n_files": len(result["files"])}
-                run.checks.append(check)
-                continue
-            value = result["folded"].get(
-                spec.key, result["folded"]["row_count"]
-                if spec.metric is MetricType.ROW_COUNT else 0)
-            if spec.threshold is not None:
-                check.result = _threshold_result(
-                    spec, value, result["folded"].get("row_count"))
-            check.diagnostics = {
-                "metric": spec.metric.value, "value": value,
-                "n_files": len(result["files"]),
-                "n_new_files": len(result["new_files"]),
-                "n_removed_files": len(result["removed_files"]),
-            }
-            run.checks.append(check)
-        return run.finish(), result
+            result = iv.run(path, counts, model)
+
+        def files(spec: CheckSpec) -> Dict[str, Any]:
+            return {"n_files": len(result["files"]),
+                    "n_new_files": len(result["new_files"]),
+                    "n_removed_files": len(result["removed_files"])}
+
+        run = self._lane_run(
+            contract, specs, "incremental",
+            self.spark.createDataFrame([], result["schema"]),
+            _evaluated(result["folded"], result["unevaluated"]), extra=files)
+        return run, result
 
     def tail(
         self,
@@ -588,75 +574,102 @@ class SparkContractEngine:
         gates the newly arrived rows, not the cumulative table (one
         historical bad row would otherwise fail every future snapshot;
         the cumulative fold stays visible in diagnostics). Returns a
-        list of (snapshot_id_or_version, Run, result). Count checks
-        only, same contract subset as :meth:`test_incremental`."""
+        list of (snapshot_id_or_version, Run, result). Each Run has one
+        Check per rule of the model, as :meth:`test_incremental`'s; a
+        version that cannot be read errors every Check."""
         from datacontract_cli_spark.engine.incremental import SnapshotTailer
 
-        specs = [s for s in compile_checks(contract, None) if s.model == model
-                 and s.metric in (MetricType.ROW_COUNT,
-                                  MetricType.MISSING_COUNT,
-                                  MetricType.INVALID_COUNT)]
+        specs = _model_specs(contract, model)
+        counts = [s for s in specs if s.metric in _COUNT_METRICS]
         tailer = SnapshotTailer(self.spark, checkpoint_dir)
         if table_format == "delta":
-            polled = tailer.poll_delta(path, specs, model)
+            polled = tailer.poll_delta(path, counts, model)
         elif table_format == "parquet":
-            polled = tailer.poll_dir(path, specs, model)
+            polled = tailer.poll_dir(path, counts, model)
         else:
-            polled = tailer.poll(path, specs, model)
+            polled = tailer.poll(path, counts, model)
         out = []
         for result in polled:
             sid = result.get("snapshot_id",
                              result.get("delta_version",
                                         result.get("poll")))
-            run = Run(dataContractId=contract.id,
-                      dataContractVersion=contract.version)
             if result.get("error"):
                 # unreadable version (e.g. vacuumed history) — one error
                 # verdict, never a silent skip
-                for spec in specs:
-                    check = _check_for(spec)
-                    check.result = ResultEnum.error
-                    check.reason = result["error"]
-                    run.checks.append(check)
-                out.append((sid, run.finish(), result))
+                run = self._lane_run(contract, specs, "tail", None, {},
+                                     {s.key: result["error"] for s in specs})
+                out.append((sid, run, result))
                 continue
-            maintenance = result.get("data_change") is False
-            unevaluated = set(result.get("unevaluated") or [])
-            for spec in specs:
-                check = _check_for(spec)
-                if spec.key in unevaluated:
-                    check.result = ResultEnum.error
-                    check.reason = (f"column '{spec.field}' not present in "
-                                    "the validated files")
-                    check.diagnostics = {"metric": spec.metric.value,
-                                         "value": None, "snapshot_id": sid}
-                    run.checks.append(check)
-                    continue
-                value = result["delta"].get(
-                    spec.key, result["delta"]["row_count"]
-                    if spec.metric is MetricType.ROW_COUNT else 0)
+
+            def snapshot(spec: CheckSpec) -> Dict[str, Any]:
+                return {"cumulative": _lane_value(result["folded"], spec),
+                        "snapshot_id": sid,
+                        "n_new_files": len(result["new_files"])}
+
+            run = self._lane_run(
+                contract, specs, "tail",
+                self.spark.createDataFrame([], result["schema"]),
+                _evaluated(result["delta"], result["unevaluated"]),
+                extra=snapshot,
+                maintenance=result.get("data_change") is False)
+            out.append((sid, run, result))
+        return out
+
+    def _lane_run(self, contract: DataContract, specs: List[CheckSpec],
+                  lane: str, frame: Optional[DataFrame],
+                  values: Dict[str, Any],
+                  errors: Optional[Dict[str, str]] = None,
+                  extra: Optional[Callable[[CheckSpec], Dict[str, Any]]] = None,
+                  maintenance: bool = False) -> Run:
+        """The Run of a folding lane: one Check per spec, in test()'s
+        order. Presence and type checks run test()'s own checks against
+        ``frame``, whose schema is the one the lane read. A count (or, in
+        the bucket lane, uniqueness) spec is evaluated as test() evaluates
+        it on its folded value in ``values`` (which holds ``row_count``),
+        then gains the lane's ``extra(spec)`` diagnostics; with no value
+        its column was absent. ``errors`` maps a spec key to the reason
+        the lane could not evaluate it. Every other rule does not fold
+        over the lane's units and is an error that says so. A maintenance
+        commit (no data change) passes its count checks ungated."""
+        unit, folds = _LANES[lane]
+        errors = errors or {}
+        run = Run(dataContractId=contract.id,
+                  dataContractVersion=contract.version)
+        run.checks.extend(_check_for(spec) for spec in specs)
+        for spec in specs:
+            value = _lane_value(values, spec)
+            if spec.key in errors:
+                run.set_result(spec.key, ResultEnum.error, errors[spec.key])
+            elif spec.preset_result is not None:
+                run.set_result(spec.key, ResultEnum(spec.preset_result),
+                               spec.preset_reason)
+            elif spec.metric in _SCHEMA_METRICS:
+                self._check_schema(run, spec, frame, frame)
+            elif spec.metric not in folds:
+                run.set_result(spec.key, ResultEnum.error,
+                               f"{spec.metric.value} does not fold over "
+                               f"{unit} in the {lane} lane; run test()")
+            elif value is None:
+                column = (f"column '{spec.field}'" if spec.field
+                          else f"a column of {spec.columns}")
+                run.set_result(spec.key, ResultEnum.error,
+                               f"{column} not present in the validated "
+                               f"{unit}")
+            else:
+                self._evaluate(run, spec, value,
+                               None if spec.metric is MetricType.DUPLICATE_COUNT
+                               else values.get("row_count"))
                 if maintenance:
                     # compaction / OPTIMIZE rewrites files without
                     # changing rows: its delta is 0-or-negative by
                     # construction, so threshold-gating it would fail a
                     # CI tail on every routine maintenance commit
-                    check.result = ResultEnum.passed
-                    check.reason = ("maintenance commit (no data "
-                                    "change); thresholds not applied")
-                elif spec.threshold is not None:
-                    check.result = _threshold_result(
-                        spec, value, result["delta"].get("row_count"))
-                check.diagnostics = {
-                    "metric": spec.metric.value, "value": value,
-                    "cumulative": result["folded"].get(
-                        spec.key, result["folded"]["row_count"]
-                        if spec.metric is MetricType.ROW_COUNT else 0),
-                    "snapshot_id": sid,
-                    "n_new_files": len(result["new_files"]),
-                }
-                run.checks.append(check)
-            out.append((sid, run.finish(), result))
-        return out
+                    run.set_result(spec.key, ResultEnum.passed,
+                                   "maintenance commit (no data change); "
+                                   "thresholds not applied")
+                if extra is not None:
+                    run.check(spec.key).diagnostics.update(extra(spec))
+        return run.finish()
 
     # ------------------------------------------------------------------
     # filtering
@@ -727,14 +740,8 @@ class SparkContractEngine:
         # apply to schema checks — reference ibis_check_execute.py:1117-1130)
         scan_specs: List[CheckSpec] = []
         for spec in runnable:
-            if spec.metric is MetricType.FIELD_PRESENT:
-                self._check_present(run, spec, raw_df)
-            elif spec.metric is MetricType.FIELD_TYPE:
-                self._check_type(run, spec, df)
-            elif spec.metric is MetricType.FIELD_PHYSICAL_TYPE:
-                self._check_physical_type(run, spec, df)
-            elif spec.metric is MetricType.FIELD_NESTED_TYPE:
-                self._check_nested_type(run, spec, df)
+            if spec.metric in _SCHEMA_METRICS:
+                self._check_schema(run, spec, df, raw_df)
             else:
                 scan_specs.append(spec)
 
@@ -842,28 +849,31 @@ class SparkContractEngine:
                     and spec.key in sample_conds):
                 failed_sample_keys.append(spec)
 
-        if len(failed_sample_keys) > 1:
-            try:
-                self._collect_samples_batch(
-                    run, [(s, sample_conds[s.key]) for s in failed_sample_keys],
-                    df, obj)
-                return
-            except Exception as e:  # noqa: BLE001
-                logger.warning("batched sample collection failed (%s); "
-                               "isolating per-check", e)
-        for spec in failed_sample_keys:
-            column, cond = sample_conds[spec.key]
-            try:
-                self._collect_samples(run, spec, df, cond, column, obj)
-            except Exception as e:  # noqa: BLE001 — diagnostics only
-                logger.warning("sample collection failed for %s: %s",
-                               spec.key, e)
+        if not failed_sample_keys:
+            return
+        try:
+            self._collect_samples_batch(
+                run, [(s, sample_conds[s.key]) for s in failed_sample_keys],
+                df, obj)
+            return
+        except Exception as e:  # noqa: BLE001 — diagnostics only
+            logger.warning("sample collection failed for %s: %s",
+                           [s.key for s in failed_sample_keys], e)
+        if len(failed_sample_keys) > 1:  # isolate the check that raises
+            for spec in failed_sample_keys:
+                try:
+                    self._collect_samples_batch(
+                        run, [(spec, sample_conds[spec.key])], df, obj)
+                except Exception as e:  # noqa: BLE001
+                    logger.warning("sample collection failed for %s: %s",
+                                   spec.key, e)
 
     def _collect_samples_batch(self, run: Run,
                                specs_conds: List[Tuple[CheckSpec, Any]],
                                df: DataFrame,
                                obj: Optional[SchemaObject]) -> None:
-        """Violation samples for EVERY failed check in one Spark job.
+        """Violation samples for every failed check in one Spark job, the
+        only path samples of a missing or invalid check take.
 
         Each check's filter + orderBy + limit becomes a tagged union branch
         (planned as its own TakeOrderedAndProject), so a validation with k
@@ -888,7 +898,7 @@ class SparkContractEngine:
             cols_by_key[spec.key] = cols
             branches.append(
                 df.filter(cond)
-                .orderBy(*[F.col(_q(c)) for c in (order or [column])])
+                .orderBy(*[_sort_key(df, c) for c in (order or [column])])
                 .limit(self.sample_limit)
                 .select(F.lit(spec.key).alias("__dc_tag__"),
                         F.to_json(F.struct(
@@ -968,7 +978,7 @@ class SparkContractEngine:
         record = (F.to_json(F.struct(*self._sample_struct_cols(df, sample_keys)))
                   if sample_keys else F.lit(None).cast("string"))
         samples = (groups.filter(F.col(_ROW_COUNT_ALIAS) > 1)
-                   .orderBy(*[F.col(_q(c)) for c in resolved])
+                   .orderBy(*[_sort_key(df, c) for c in resolved])
                    .limit(self.sample_limit)
                    .select(record.alias(_SAMPLE_ALIAS), _ROW_COUNT_ALIAS))
         return fold.unionByName(samples, allowMissingColumns=True)
@@ -1055,6 +1065,19 @@ class SparkContractEngine:
     # ------------------------------------------------------------------
     # schema checks
     # ------------------------------------------------------------------
+    def _check_schema(self, run: Run, spec: CheckSpec, df: DataFrame,
+                      raw_df: DataFrame) -> None:
+        """One schema check: presence reads the un-projected ``raw_df``,
+        the type checks read ``df``."""
+        if spec.metric is MetricType.FIELD_PRESENT:
+            self._check_present(run, spec, raw_df)
+        elif spec.metric is MetricType.FIELD_TYPE:
+            self._check_type(run, spec, df)
+        elif spec.metric is MetricType.FIELD_PHYSICAL_TYPE:
+            self._check_physical_type(run, spec, df)
+        else:
+            self._check_nested_type(run, spec, df)
+
     def _check_present(self, run: Run, spec: CheckSpec, raw_df: DataFrame) -> None:
         present = resolve_column(raw_df, spec.field) is not None
         run.set_diagnostics(spec.key, {"metric": "field_present",
@@ -1248,28 +1271,10 @@ class SparkContractEngine:
         }
         return [c for c in columns if c.lower() not in sensitive]
 
-    def _collect_samples(self, run: Run, spec: CheckSpec, df: DataFrame, cond,
-                         column: str, obj: Optional[SchemaObject]) -> None:
-        ids = self._identifier_columns(df, obj)
-        cols: List[str] = []
-        for c in ids + [column]:
-            if c not in cols:
-                cols.append(c)
-        cols = self._drop_sensitive(cols, obj)
-        if not cols:
-            return
-        # deterministic sample order (north rule: stable ordering)
-        order = ids if ids else [column]
-        sample_df = df.filter(cond).select(*[F.col(_q(c)) for c in cols]) \
-            .orderBy(*[F.col(_q(c)) for c in order]).limit(self.sample_limit)
-        check = run.check(spec.key)
-        if check is not None:
-            check.failedSamples = [self._json_safe(r.asDict()) for r in sample_df.collect()]
-
-    # column types whose JSON rendering (via to_json) differs from the
-    # legacy Row.asDict + str() path — cast to string BEFORE the struct so
-    # every sample path renders values identically (Spark's cast-to-string
-    # of timestamp/date/decimal matches Python str() of the same value)
+    # column types whose JSON rendering (via to_json) differs from Python
+    # str() of the value — cast to string BEFORE the struct so samples
+    # render them as str() does (Spark's cast-to-string of
+    # timestamp/date/decimal matches Python str() of the same value)
     _SAMPLE_STRINGIFY = ("timestamp", "date", "decimal")
 
     def _sample_struct_cols(self, df: DataFrame, cols: List[str]) -> List[Any]:
@@ -1284,7 +1289,7 @@ class SparkContractEngine:
     def _parse_sample(self, json_str: str, cols: List[str]) -> Dict[str, Any]:
         """Decode one to_json'd sample row: restore NULL fields (to_json
         omits them — a missing-value sample's violating column IS null) in
-        declared column order, then legacy-normalize."""
+        declared column order, then :meth:`_json_safe` it."""
         rec = json.loads(json_str)
         return self._json_safe({c: rec.get(c) for c in cols})
 

@@ -15,6 +15,10 @@ whose fingerprints detect appends and rewrites. Count-style metrics
 (row_count / missing / invalid) fold exactly over files; key-uniqueness
 checks need the bucketed lane (duplicates cross file boundaries) — the
 two compose: incremental for the narrow counts, bucketed for uniqueness.
+``SparkContractEngine.test_incremental`` and ``tail`` still report every
+rule of the model: presence and type checks read the schema the files
+were read with (``run``'s ``schema``), and every rule that does not fold
+over files is an error that says so.
 
 Removed files are reported (their manifest rows are dropped from the fold
 and the removal is visible in the result), so a retention job shrinking
@@ -27,23 +31,20 @@ import json
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, List, Optional, Tuple
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
 from datacontract_cli_spark.engine.executor import (
+    _COUNT_METRICS,
     _ROW_COUNT_ALIAS,
     compile_aggregates,
 )
 
 _FILE = "__dc_file__"
-
-# metrics whose per-file values sum to the table's; duplicates cross file
-# boundaries (the bucketed lane)
-_FILE_METRICS = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
-                 MetricType.INVALID_COUNT)
 
 # Bumped when evaluation semantics change in a way that can turn a
 # previously-unevaluable spec evaluable (e.g. the basePath fix that
@@ -141,6 +142,23 @@ class IncrementalValidator:
     def _manifest_path(self, model: str) -> str:
         return os.path.join(self.checkpoint_dir, f"{model}.files.jsonl")
 
+    def _schema_path(self, model: str) -> str:
+        return os.path.join(self.checkpoint_dir, f"{model}.schema.json")
+
+    def _stored_schema(self, model: str) -> Optional[StructType]:
+        path = self._schema_path(model)
+        if not os.path.exists(path):
+            return None
+        with open(path, "r", encoding="utf-8") as f:
+            return StructType.fromJson(json.load(f))
+
+    def _store_schema(self, model: str, schema: StructType) -> None:
+        os.makedirs(self.checkpoint_dir, exist_ok=True)
+        tmp = self._schema_path(model) + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.write(schema.json())
+        os.replace(tmp, self._schema_path(model))
+
     def validated_files(self, model: str) -> Dict[str, FileVerdict]:
         path = self._manifest_path(model)
         out: Dict[str, FileVerdict] = {}
@@ -156,11 +174,14 @@ class IncrementalValidator:
             schema=None, listing: Optional[List[Tuple[str, int, float]]]
             = None, base_path: Optional[str] = "auto") -> Dict[str, Any]:
         """Validate new/changed files only; returns
-        ``{files, new_files, removed_files, folded, unevaluated}`` where
-        ``folded`` sums count metrics over every CURRENT file's manifest
-        row and ``unevaluated`` lists spec keys some live file could not
-        evaluate (absent column) — the caller must surface those as
-        errors, never as passing zeros.
+        ``{files, new_files, removed_files, folded, unevaluated, schema}``
+        where ``folded`` sums count metrics over every CURRENT file's
+        manifest row, ``unevaluated`` lists spec keys some live file could
+        not evaluate (absent column) — the caller must surface those as
+        errors, never as passing zeros — and ``schema`` is the schema the
+        files are read with: the given one, else the reader's (of the
+        new files; when none is new, the one stored at the last read, or
+        of one live file).
 
         ``listing`` overrides the Hadoop-FS walk with an explicit
         [(uri, size, mtime)] — the table-format lanes (run_iceberg /
@@ -200,27 +221,35 @@ class IncrementalValidator:
                 or abs(known[f].mtime - mtime) > 1e-6
                 or not _covers(known[f])]
 
+        # basePath preserves hive-partition directory columns even though
+        # we hand the reader leaf FILES — without it a check on a
+        # partition column would be unevaluable on every file. Only valid
+        # when the data path is a directory (a single-file table has no
+        # partition dirs and Spark rejects a file basePath)
+        reader = self.spark.read
+        if base_path == "auto":
+            jvm = self.spark._jvm
+            hp = jvm.org.apache.hadoop.fs.Path(path)
+            if hp.getFileSystem(self.spark._jsc.hadoopConfiguration()) \
+                    .getFileStatus(hp).isDirectory():
+                reader = reader.option("basePath", path)
+        elif base_path is not None:
+            reader = reader.option("basePath", base_path)
+        inferred, stored = schema is None, None
+        if not inferred:
+            reader = reader.schema(schema)
+        elif not todo and current:
+            # nothing to scan: a no-op poll stays listing-only by reusing
+            # the schema the files were last read with
+            stored = self._stored_schema(model)
+            schema = stored or reader.parquet(min(current)).schema
+
         new_verdicts: List[FileVerdict] = []
         if todo:
-            # basePath preserves hive-partition directory columns even
-            # though we hand the reader leaf FILES — without it a check on
-            # a partition column would be unevaluable on every file.
-            # Only valid when the data path is a directory (a single-file
-            # table has no partition dirs and Spark rejects a file basePath)
-            reader = self.spark.read
-            if base_path == "auto":
-                jvm = self.spark._jvm
-                hp = jvm.org.apache.hadoop.fs.Path(path)
-                if hp.getFileSystem(self.spark._jsc.hadoopConfiguration()) \
-                        .getFileStatus(hp).isDirectory():
-                    reader = reader.option("basePath", path)
-            elif base_path is not None:
-                reader = reader.option("basePath", base_path)
-            if schema is not None:
-                reader = reader.schema(schema)
             df = reader.parquet(*sorted(todo))
+            schema = df.schema
             batch, _ = compile_aggregates(
-                df, [s for s in specs if s.metric in _FILE_METRICS])
+                df, [s for s in specs if s.metric in _COUNT_METRICS])
             # a spec the batch does not evaluate (absent column, or outside
             # the count metrics) is recorded unevaluated on every file
             skipped = sorted(spec_keys - {s.key for s, _ in batch.evaluators})
@@ -246,6 +275,8 @@ class IncrementalValidator:
                 for v in new_verdicts:
                     fh.write(v.to_json() + "\n")
 
+        if inferred and schema is not None and schema != stored:
+            self._store_schema(model, schema)
         known.update({v.file: v for v in new_verdicts})
         live = {f: v for f, v in known.items() if f in current}
 
@@ -268,6 +299,7 @@ class IncrementalValidator:
             "removed_files": removed,
             "folded": folded,
             "unevaluated": sorted(unevaluated),
+            "schema": schema if schema is not None else StructType([]),
         }
 
     # ------------------------------------------------------------------
@@ -354,9 +386,10 @@ class IncrementalValidator:
 
 
 class SnapshotTailer:
-    """CDC-style validation of an append-mostly Iceberg table: each call
-    to :meth:`poll` validates every snapshot that landed since the last
-    validated one, IN ORDER, and emits a per-snapshot verdict whose
+    """CDC-style validation of an append-mostly Iceberg or Delta table:
+    each call to :meth:`poll` / :meth:`poll_delta` (one loop,
+    :meth:`_tail`) validates every snapshot or version that landed since
+    the last validated one, IN ORDER, and emits a per-snapshot verdict whose
     metric deltas cover exactly that snapshot's appended rows (count
     metrics fold linearly, so snapshot N's delta is fold(N) −
     fold(N−1) — no rescan of earlier data ever happens, the underlying
@@ -383,68 +416,85 @@ class SnapshotTailer:
                 return json.load(f)
         return {"validated": [], "last_fold": {}}
 
-    def poll(self, table_path: str, specs: List[CheckSpec],
-             model: str) -> List[Dict[str, Any]]:
-        """Validate all pending snapshots; returns one result per newly
-        validated snapshot: {snapshot_id, folded (cumulative), delta
-        (this snapshot's appended counts), new_files}."""
-        from datacontract_cli_spark.sources.iceberg_table import snapshots
+    def _save_state(self, model: str, state: Dict[str, Any]) -> None:
+        os.makedirs(self.checkpoint_dir, exist_ok=True)
+        tmp = self._state_path(model) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(state, f)
+        os.replace(tmp, self._state_path(model))
 
+    def _tail(self, model: str, id_key: str, versions: List[Any],
+              validate: Callable[[Any], Dict[str, Any]],
+              data_change: Callable[[Any], bool]) -> List[Dict[str, Any]]:
+        """Validate every version not yet validated, in log order; one
+        result per version: {``id_key``, folded (cumulative), delta (this
+        version's counts: fold − previous fold), new_files,
+        removed_files, unevaluated, schema, data_change}. The state is
+        saved after each version, so a crash resumes at the first
+        unvalidated one. A version that raises gets one error result; if
+        its files are gone for good it is marked validated, otherwise the
+        poll stops there and the version retries on the next one."""
         state = self._load_state(model)
         seen = set(state["validated"])
-        snaps = snapshots(table_path)
-        ops = {s["snapshot_id"]: s.get("operation") for s in snaps}
-        pending = [s["snapshot_id"] for s in snaps
-                   if s["snapshot_id"] not in seen]
-        out: List[Dict[str, Any]] = []
         prev_fold = dict(state["last_fold"])
-
-        def _save() -> None:
-            os.makedirs(self.checkpoint_dir, exist_ok=True)
-            tmp = self._state_path(model) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, self._state_path(model))
-
-        for sid in pending:  # snapshot log is already append-ordered
+        out: List[Dict[str, Any]] = []
+        for vid in versions:
+            if vid in seen:
+                continue
             try:
-                r = self.iv.run_iceberg(table_path, specs, model,
-                                        snapshot_id=sid)
+                r = validate(vid)
             except Exception as e:  # noqa: BLE001 — verdicts must surface
-                # snapshot expiry drops expired snapshots from the
-                # metadata this poll reads, so unlike Delta the normal
-                # maintenance path never lands here — but manually
-                # deleted files / races still must not lose the batch's
-                # completed verdicts or wedge the tailer
                 msg = str(e)
+                out.append({id_key: vid, "error": msg,
+                            "folded": dict(prev_fold), "delta": {},
+                            "new_files": [], "removed_files": [],
+                            "unevaluated": [], "data_change": False})
+                # permanent: vacuumed or manually deleted files never come
+                # back, and a DV / MoR-delete / column-mapping refusal holds
+                # for that version forever — marking it validated keeps a
+                # fresh checkpoint on a vacuumed table from re-failing the
+                # same version every poll. Anything else is transient:
+                # surface the verdicts already computed and retry later.
                 gone = (isinstance(e, (FileNotFoundError,
                                        NotImplementedError))
                         or "PATH_NOT_FOUND" in msg
                         or "does not exist" in msg)
-                out.append({"snapshot_id": sid, "error": msg,
-                            "folded": dict(prev_fold), "delta": {},
-                            "new_files": [], "unevaluated": [],
-                            "operation": ops.get(sid),
-                            "data_change": False})
-                if gone:
-                    state["validated"].append(sid)
-                    _save()
-                    continue
-                break
+                if not gone:
+                    break
+                state["validated"].append(vid)
+                self._save_state(model, state)
+                continue
             delta = {k: v - prev_fold.get(k, 0)
                      for k, v in r["folded"].items()
                      if isinstance(v, (int, float))}
-            out.append({"snapshot_id": sid, "folded": dict(r["folded"]),
+            out.append({id_key: vid, "folded": dict(r["folded"]),
                         "delta": delta, "new_files": r["new_files"],
+                        "removed_files": r["removed_files"],
                         "unevaluated": r["unevaluated"],
-                        "operation": ops.get(sid),
-                        # replace = compaction/rewrite: same rows, new
-                        # files — thresholds should not gate it
-                        "data_change": ops.get(sid) != "replace"})
+                        "schema": r["schema"],
+                        "data_change": data_change(vid)})
             prev_fold = dict(r["folded"])
-            state["validated"].append(sid)
+            state["validated"].append(vid)
             state["last_fold"] = prev_fold
-            _save()  # crash-safe per snapshot
+            self._save_state(model, state)  # crash-safe per version
+        return out
+
+    def poll(self, table_path: str, specs: List[CheckSpec],
+             model: str) -> List[Dict[str, Any]]:
+        """Validate all pending snapshots (:meth:`_tail`); each result
+        also carries the snapshot's ``operation``. A ``replace``
+        (compaction/rewrite: same rows, new files) is no data change."""
+        from datacontract_cli_spark.sources.iceberg_table import snapshots
+
+        ops = {s["snapshot_id"]: s.get("operation")
+               for s in snapshots(table_path)}
+        out = self._tail(
+            model, "snapshot_id", list(ops),
+            lambda sid: self.iv.run_iceberg(table_path, specs, model,
+                                            snapshot_id=sid),
+            lambda sid: ops[sid] != "replace")
+        for r in out:
+            r["operation"] = ops[r["snapshot_id"]]
         return out
 
     def poll_dir(self, path: str, specs: List[CheckSpec],
@@ -471,8 +521,8 @@ class SnapshotTailer:
         if not r["new_files"] and not r["removed_files"]:
             # crash recovery: the file manifest advanced but the tailer
             # state did not (died between iv.run's manifest append and
-            # our _save) — the fold mismatch re-emits the lost batch's
-            # verdict as a catch-up delta instead of dropping it
+            # our _save_state) — the fold mismatch re-emits the lost
+            # batch's verdict as a catch-up delta instead of dropping it
             caught_up = all(prev_fold.get(k, 0) == v
                             for k, v in numeric_fold.items())
             if caught_up or not r["files"]:
@@ -482,15 +532,11 @@ class SnapshotTailer:
         out = {"poll": poll_idx, "folded": dict(r["folded"]),
                "delta": delta, "new_files": r["new_files"],
                "removed_files": r["removed_files"],
-               "unevaluated": r["unevaluated"],
+               "unevaluated": r["unevaluated"], "schema": r["schema"],
                "data_change": True}
         state["validated"].append(poll_idx)
         state["last_fold"] = dict(numeric_fold)
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = self._state_path(model) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path(model))
+        self._save_state(model, state)
         return [out]
 
     def poll_delta(self, table_path: str, specs: List[CheckSpec],
@@ -506,55 +552,8 @@ class SnapshotTailer:
             delta_versions,
         )
 
-        state = self._load_state(model)
-        seen = set(state["validated"])
-        pending = [v for v in delta_versions(table_path) if v not in seen]
-        out: List[Dict[str, Any]] = []
-        prev_fold = dict(state["last_fold"])
-
-        def _save() -> None:
-            os.makedirs(self.checkpoint_dir, exist_ok=True)
-            tmp = self._state_path(model) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, self._state_path(model))
-
-        for ver in pending:  # version numbers are already append-ordered
-            try:
-                r = self.iv.run_delta(table_path, specs, model, version=ver)
-            except Exception as e:  # noqa: BLE001 — verdicts must surface
-                msg = str(e)
-                # permanent: vacuumed files never come back, and a DV /
-                # column-mapping refusal holds for that version forever
-                gone = (isinstance(e, (FileNotFoundError,
-                                       NotImplementedError))
-                        or "PATH_NOT_FOUND" in msg
-                        or "does not exist" in msg)
-                out.append({"delta_version": ver, "error": msg,
-                            "folded": dict(prev_fold), "delta": {},
-                            "new_files": [], "removed_files": [],
-                            "unevaluated": [], "data_change": False})
-                if gone:
-                    # vacuumed history: this version's files are gone
-                    # FOREVER — emit one error verdict, mark validated,
-                    # keep tailing (otherwise a fresh checkpoint dir on a
-                    # vacuumed table re-fails the same version every poll)
-                    state["validated"].append(ver)
-                    _save()
-                    continue
-                # transient failure: surface the verdicts already
-                # computed; this version retries on the next poll
-                break
-            delta = {k: v - prev_fold.get(k, 0)
-                     for k, v in r["folded"].items()
-                     if isinstance(v, (int, float))}
-            out.append({"delta_version": ver, "folded": dict(r["folded"]),
-                        "delta": delta, "new_files": r["new_files"],
-                        "removed_files": r["removed_files"],
-                        "unevaluated": r["unevaluated"],
-                        "data_change": commit_data_change(table_path, ver)})
-            prev_fold = dict(r["folded"])
-            state["validated"].append(ver)
-            state["last_fold"] = prev_fold
-            _save()
-        return out
+        return self._tail(
+            model, "delta_version", delta_versions(table_path),
+            lambda ver: self.iv.run_delta(table_path, specs, model,
+                                          version=ver),
+            lambda ver: commit_data_change(table_path, ver))

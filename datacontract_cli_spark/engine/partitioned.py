@@ -13,7 +13,12 @@ loads the manifest and re-validates ONLY the buckets that are missing
 (crash-resume) — the scan is filtered to those buckets before any work
 happens. Global metrics fold over bucket metrics (counts sum; a duplicate
 count on keys containing the partition key is bucket-local, so the sum is
-exact).
+exact). A uniqueness rule whose key lacks the partition key is an error
+in every bucket. ``SparkContractEngine.test_partitioned`` turns the fold
+into a Run with one Check per rule of the model: presence and type checks
+read the frame's schema, and every rule that does not fold over buckets
+(freshness, retention, quantiles, drift, referential integrity, custom
+SQL, maxRunLength) is an error that says so.
 
 Skew: a hot conv_id concentrates in one bucket, but bucket metrics are
 plain aggregations (no per-key state), so the only skew surface is the
@@ -36,6 +41,7 @@ from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
 from datacontract_cli_spark.engine.executor import (
+    _COUNT_METRICS,
     _DUP_ALIAS,
     _ROW_COUNT_ALIAS,
     _threshold_result,
@@ -46,10 +52,9 @@ from datacontract_cli_spark.engine.predicates import resolve_column
 
 _BUCKET = "__dc_bucket__"
 
-# metrics whose per-bucket values sum to the table's; duplicate counts are
-# bucket-local jobs of their own
-_BUCKET_METRICS = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
-                   MetricType.INVALID_COUNT)
+
+def _dup_columns(spec: CheckSpec) -> List[str]:
+    return spec.columns or ([spec.field] if spec.field else [])
 
 
 @dataclass
@@ -71,7 +76,8 @@ class BucketVerdict:
 
 
 class PartitionedValidator:
-    """Executes agg-style CheckSpecs per hash bucket of a partition key."""
+    """Executes count and uniqueness CheckSpecs per hash bucket of a
+    partition key."""
 
     def __init__(self, spark, checkpoint_dir: Optional[str] = None,
                  partition_key: str = "conv_id", n_buckets: int = 64):
@@ -114,8 +120,10 @@ class PartitionedValidator:
     def run(self, df: DataFrame, specs: List[CheckSpec], model: str,
             source_path: Optional[str] = None) -> Dict[int, BucketVerdict]:
         """Validate every (remaining) bucket; returns ALL bucket verdicts
-        (cached + newly computed). A spec whose column is absent gets no
-        bucket metric, so a fold reports it unevaluated."""
+        (cached + newly computed). Only count and uniqueness specs are
+        evaluated. A spec whose column is absent gets no bucket metric, so
+        a fold reports it unevaluated; a uniqueness spec whose key lacks
+        the partition key is an ``error`` result in every bucket."""
         done = self.completed_buckets(model)
         # a checkpoint built under a DIFFERENT bucketing cannot be merged:
         # changing n_buckets re-hashes rows into other buckets (double
@@ -146,7 +154,7 @@ class PartitionedValidator:
             work = work.filter(F.col(_BUCKET).isin(remaining))
 
         batch, _ = compile_aggregates(
-            df, [s for s in specs if s.metric in _BUCKET_METRICS])
+            df, [s for s in specs if s.metric in _COUNT_METRICS])
         gdf = batch.frame(work, [_BUCKET])
         rows = gdf.collect()
 
@@ -165,32 +173,19 @@ class PartitionedValidator:
                 for b in sorted(todo)
             ]
 
-        # bucket-local duplicate counts (one keys-only job per check).
-        # Only computable when the duplicate key CONTAINS the partition
-        # key (per-bucket group counts sum exactly then); everything else
-        # is an honest error, never a silent zero-pass
+        # bucket-local duplicate counts (one keys-only job per check); a
+        # spec that does not route (:meth:`routes`) is an honest error in
+        # every bucket, never a silent zero-pass
         dup_specs = [s for s in specs if s.metric is MetricType.DUPLICATE_COUNT]
         dup_values: Dict[str, Dict[int, int]] = {}
-        dup_errors: Dict[str, str] = {}
+        unroutable = set()
         for spec in dup_specs:
-            cols = spec.columns or ([spec.field] if spec.field else [])
-            if not cols:
-                dup_errors[spec.key] = "duplicate check has no columns"
+            if not self.routes(spec):
+                unroutable.add(spec.key)
                 continue
-            if self.partition_key not in cols:
-                dup_errors[spec.key] = (
-                    f"uniqueness on {cols} cannot be folded per-bucket "
-                    f"when the partition key {self.partition_key!r} is "
-                    "not part of the duplicate key — two equal keys in "
-                    "different buckets would each count zero; run it "
-                    "through the batch engine")
-                continue
-            resolved = [resolve_column(df, c) for c in cols]
-            if any(c is None for c in resolved):
-                missing = [c for c, r in zip(cols, resolved) if r is None]
-                dup_errors[spec.key] = (
-                    f"column(s) {missing} not found in model {model}")
-                continue
+            resolved = [resolve_column(df, c) for c in _dup_columns(spec)]
+            if None in resolved:
+                continue  # absent column: no bucket metric
             _, fold = duplicate_groups(work, resolved, keys=(_BUCKET,))
             dup_values[spec.key] = {r[_BUCKET]: r[_DUP_ALIAS]
                                     for r in fold.collect()}
@@ -213,10 +208,12 @@ class PartitionedValidator:
                     results[spec.key] = _threshold_result(
                         spec, value, row_count).value
             for spec in dup_specs:
-                if spec.key in dup_errors:
+                if spec.key in unroutable:
                     results[spec.key] = "error"
                     continue
-                value = dup_values.get(spec.key, {}).get(bucket, 0)
+                if spec.key not in dup_values:
+                    continue
+                value = dup_values[spec.key].get(bucket, 0)
                 metrics[spec.key] = value
                 if spec.threshold is not None:
                     results[spec.key] = _threshold_result(
@@ -231,38 +228,27 @@ class PartitionedValidator:
         done.update({v.bucket: v for v in new_verdicts})
         return done
 
+    def routes(self, spec: CheckSpec) -> bool:
+        """Whether a uniqueness spec folds over buckets: only when the
+        partition key is part of its duplicate key (two equal keys in
+        different buckets would each count zero otherwise)."""
+        return self.partition_key in _dup_columns(spec)
+
     # -- folding ---------------------------------------------------------------
     @staticmethod
-    def fold(verdicts: Dict[int, BucketVerdict],
-             specs: Optional[List[CheckSpec]] = None) -> Dict[str, Any]:
-        """Global metrics across buckets, plus global results.
-
-        With ``specs``, global results are RE-EVALUATED: each threshold
-        against its FOLDED metric (percent over the folded row_count).
-        That is the correct global verdict — the worst-case-of-buckets
-        fallback (no specs) compares bucket-LOCAL counts against GLOBAL
-        thresholds, which false-passes absolute budgets split across
-        buckets ('missing_count <= 10' with 1 per bucket × 64) and
-        false-fails lower bounds ('row_count >= 1000' in 64 slices).
-        Error verdicts always carry through either way."""
+    def fold(verdicts: Dict[int, BucketVerdict]) -> Dict[str, Any]:
+        """Metrics summed across buckets, the keys some bucket reports as
+        an ``error`` and the number of buckets validated. Global verdicts
+        are the threshold re-evaluated on the summed metric
+        (``SparkContractEngine.test_partitioned``), never the worst bucket
+        verdict: bucket-local counts against a global threshold
+        false-pass absolute budgets split across buckets and false-fail
+        lower bounds."""
         totals: Dict[str, Any] = {}
-        results: Dict[str, str] = {}
-        severity = {"failed": 0, "error": 1, "warning": 2, "passed": 3}
+        errors = set()
         for v in verdicts.values():
             for k, val in v.metrics.items():
                 totals[k] = totals.get(k, 0) + (val or 0)
-            for k, res in v.results.items():
-                cur = results.get(k)
-                if cur is None or severity.get(res, 3) < severity.get(cur, 3):
-                    results[k] = res
-        if specs is not None:
-            row_count = totals.get("row_count")
-            for spec in specs:
-                if results.get(spec.key) == "error":
-                    continue  # never upgrade an error
-                if spec.threshold is None or spec.key not in totals:
-                    continue
-                results[spec.key] = _threshold_result(
-                    spec, totals[spec.key], row_count).value
-        return {"metrics": totals, "results": results,
+            errors.update(k for k, res in v.results.items() if res == "error")
+        return {"metrics": totals, "errors": sorted(errors),
                 "n_buckets_validated": len(verdicts)}

@@ -162,8 +162,7 @@ def test_batched_violation_samples_match_per_check_query(spark, contract):
 
 def test_sample_rendering_is_path_independent_for_timestamps(spark):
     """Timestamp values in failedSamples must render identically whether
-    the samples come from the batched union job (2+ failed checks) or the
-    dedicated per-check query (1 failed check)."""
+    two checks fail or one, and as Python str() renders them."""
     import datetime as dt
 
     from pyspark.sql import Row
@@ -205,3 +204,40 @@ schema:
     assert a1 == a2
     # the legacy str(datetime) rendering, not ISO-T
     assert a1[0]["ts"] == "2026-01-01 12:00:00"
+
+
+def test_sample_rendering_is_independent_of_failure_count_for_structs(spark):
+    """A struct identifier column renders the same in a failing check's
+    samples whether one check fails or two: every failing check's samples
+    come from the one batched sample query."""
+    from datacontract_cli_spark.model.contract import load_contract_str
+
+    c_yaml = """
+id: t
+version: 0.1.0
+schema:
+  - name: ev
+    properties:
+      - name: meta
+        unique: true
+      - name: x
+        logicalType: integer
+        logicalTypeOptions:
+          minimum: 0
+      - name: y
+        logicalType: string
+        required: true
+"""
+    df = spark.createDataFrame(
+        [((1, "a"), -1, None), ((2, "b"), 3, "ok"), ((3, "c"), -2, "ok")],
+        "meta struct<k:int,v:string>, x int, y string")
+    engine = SparkContractEngine(spark, include_failed_samples=True)
+    two = engine.test(load_contract_str(c_yaml), tables={"ev": df})
+    assert two.check("ev__y__field_required").result is ResultEnum.failed
+    one = engine.test(load_contract_str(c_yaml.replace(
+        "        required: true\n", "")), tables={"ev": df})
+    assert one.check("ev__y__field_required") is None
+    samples = one.check("ev__x__field_minimum").failedSamples
+    assert samples == two.check("ev__x__field_minimum").failedSamples
+    assert samples == [{"meta": "{'k': 1, 'v': 'a'}", "x": -1},
+                       {"meta": "{'k': 3, 'v': 'c'}", "x": -2}]

@@ -132,8 +132,9 @@ schema:
     run, result = engine.test_incremental(contract, data, "m",
                                           str(tmp_path / "ckpt"))
     assert result["folded"]["row_count"] == 400
-    assert run.checks and all(c.diagnostics["n_files"] >= 1
-                              for c in run.checks)
+    counts = [c for c in run.checks if c.diagnostics["metric"]
+              in ("missing_count", "invalid_count")]
+    assert counts and all(c.diagnostics["n_files"] >= 1 for c in counts)
     # second run touches nothing but reports the same fold
     run2, result2 = engine.test_incremental(contract, data, "m",
                                             str(tmp_path / "ckpt"))
@@ -294,3 +295,25 @@ def test_incremental_edited_rule_revalidates_unchanged_files(spark, tmp_path):
     r3 = iv.run(data, tight, "m")
     assert r3["new_files"] == []
     assert r3["folded"]["invalid_v"] == r2["folded"]["invalid_v"]
+
+
+def test_incremental_noop_run_reads_no_file(spark, tmp_path, monkeypatch):
+    """With nothing new to scan, the schema comes from the checkpoint (the
+    one the files were last read with), so a no-op run or poll only lists
+    the directory."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    data = str(tmp_path / "data")
+    ckpt = str(tmp_path / "ckpt")
+    _write_batch(spark, data, 0, 100)
+    iv = IncrementalValidator(spark, ckpt)
+    first = iv.run(data, SPECS, "m")
+
+    def no_read(self, *paths, **kw):
+        raise AssertionError(f"no-op run read {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    again = iv.run(data, SPECS, "m")
+    assert again["new_files"] == []
+    assert again["schema"] == first["schema"]
+    assert again["folded"] == first["folded"]

@@ -217,41 +217,47 @@ def test_sliced_and_partitioned_honor_percent_thresholds(spark, tmp_path):
     verdicts = pv.run(df, specs, "transcripts")
     key = next(s.key for s in specs if "null_values" in s.key)
     assert all(v.results[key] == "passed" for v in verdicts.values())
-    folded = PartitionedValidator.fold(verdicts, specs=specs)
-    assert folded["results"][key] == "passed"
-    assert folded["metrics"][key] == 300
+    assert PartitionedValidator.fold(verdicts)["metrics"][key] == 300
+    # the global verdict re-evaluates the percent threshold on the fold
+    run, _ = SparkContractEngine(spark).test_partitioned(
+        contract, df, "transcripts", checkpoint_dir=str(tmp_path / "ck2"),
+        n_buckets=8)
+    chk = run.check(key)
+    assert chk.result is ResultEnum.passed
+    assert chk.diagnostics["value"] == 300
 
 
 def test_partitioned_fold_reevaluates_absolute_budgets(spark, tmp_path):
     """An absolute 'missing_count <= 10' budget split across buckets must
     FAIL globally even though every bucket is under 10 locally."""
-    from datacontract_cli_spark.checks.spec import (
-        CheckSpec,
-        MetricType,
-        Op,
-        Threshold,
-    )
-    from datacontract_cli_spark.engine.partitioned import (
-        PartitionedValidator,
-    )
-
     import pyspark.sql.functions as F
+    contract = load_contract_str("""
+id: budget
+version: 1.0.0
+schema:
+  - name: m
+    properties:
+      - name: conv_id
+        logicalType: string
+      - name: tool
+        logicalType: string
+        quality:
+          - metric: nullValues
+            mustBeLessOrEqualTo: 10
+""")
     df = spark.range(640).select(
         F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
         F.when(F.col("id") % 10 == 0, None)
          .otherwise(F.lit("x")).alias("tool"))  # 64 missing total
-    spec = CheckSpec(key="m", category="quality", type="t", name="m",
-                     model="m", field="tool",
-                     metric=MetricType.MISSING_COUNT,
-                     threshold=Threshold(Op.LE, 10))
-    pv = PartitionedValidator(spark, checkpoint_dir=str(tmp_path / "ck"),
-                              partition_key="conv_id", n_buckets=16)
-    verdicts = pv.run(df, [spec], "m")
-    # bucket-local counts are all <= 10 -> worst-case fold says passed
-    assert PartitionedValidator.fold(verdicts)["results"]["m"] == "passed"
-    # spec-aware fold evaluates the TOTAL: 64 > 10 -> failed
-    assert PartitionedValidator.fold(
-        verdicts, specs=[spec])["results"]["m"] == "failed"
+    run, verdicts = SparkContractEngine(spark).test_partitioned(
+        contract, df, "m", checkpoint_dir=str(tmp_path / "ck"),
+        partition_key="conv_id", n_buckets=16)
+    key = next(c.key for c in run.checks if "null_values" in c.key)
+    # bucket-local counts are all <= 10 -> every bucket passes locally
+    assert all(v.results[key] == "passed" for v in verdicts.values())
+    # the Run evaluates the TOTAL: 64 > 10 -> failed
+    assert run.check(key).diagnostics["value"] == 64
+    assert run.check(key).result is ResultEnum.failed
 
 
 def test_partitioned_dup_without_partition_key_errors(spark, tmp_path):
@@ -278,8 +284,7 @@ def test_partitioned_dup_without_partition_key_errors(spark, tmp_path):
     verdicts = pv.run(df, [spec], "m")
     # previously: every bucket counted ~0 local dup groups -> silent PASS
     assert all(v.results["u"] == "error" for v in verdicts.values())
-    assert PartitionedValidator.fold(
-        verdicts, specs=[spec])["results"]["u"] == "error"
+    assert PartitionedValidator.fold(verdicts)["errors"] == ["u"]
 
 
 def test_partitioned_resume_rejects_changed_bucketing(spark, tmp_path):

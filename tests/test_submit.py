@@ -93,7 +93,12 @@ def test_spark_submit_incremental(tmp_path, spark):
            "--incremental", "--checkpoint-dir", ckpt]
     p1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
                         env=env, cwd=str(tmp_path))
-    assert p1.returncode == 0, p1.stdout[-2000:] + p1.stderr[-2000:]
+    # the fixture's primary key is a uniqueness rule, which does not fold
+    # over files: its one error fails the job closed, every other rule
+    # passes on the clean data
+    assert p1.returncode == 1, p1.stdout[-2000:] + p1.stderr[-2000:]
+    assert "does not fold over files in the incremental lane" in p1.stdout
+    assert "Run result: error (21/22 checks passed)" in p1.stdout
     line1 = next(l for l in p1.stdout.splitlines() if l.startswith("{"))
     r1 = json.loads(line1)
     assert r1["folded"]["row_count"] == 200 and r1["new_files"]
@@ -101,6 +106,6 @@ def test_spark_submit_incremental(tmp_path, spark):
     # second run: nothing new, same fold
     p2 = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
                         env=env, cwd=str(tmp_path))
-    assert p2.returncode == 0
+    assert p2.returncode == 1
     r2 = json.loads(next(l for l in p2.stdout.splitlines() if l.startswith("{")))
     assert r2["new_files"] == [] and r2["folded"] == r1["folded"]

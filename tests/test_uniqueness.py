@@ -70,3 +70,31 @@ schema:
     assert pair.diagnostics["value"] == 2
     assert pair.failedSamples == [{"duplicate_count": 2},
                                   {"duplicate_count": 2}]
+
+
+def test_map_key_gets_a_verdict_with_samples_on(spark):
+    """Spark cannot order a MAP: the sample branch sorts a MAP-typed key by
+    its JSON text, so the check is decided with samples on as with them
+    off."""
+    contract = load_contract_str("""
+id: map-key
+version: 0.1.0
+schema:
+  - name: t
+    properties:
+      - name: m
+        unique: true
+      - name: r
+        logicalType: string
+        required: true
+""")
+    df = spark.createDataFrame([({"a": 1}, "x"), ({"a": 1}, "y"),
+                                ({"b": 2}, "z")],
+                               "m map<string,int>, r string")
+    for samples in (False, True):
+        run = SparkContractEngine(spark, include_failed_samples=samples).test(
+            contract, tables={"t": df})
+        check = run.check("t__m__field_unique")
+        assert check.result is ResultEnum.failed, (samples, check.reason)
+        assert check.diagnostics["value"] == 1
+    assert check.failedSamples == [{"m": "{'a': 1}", "duplicate_count": 2}]

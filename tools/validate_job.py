@@ -28,7 +28,8 @@ def main() -> int:
                    help="per-partition verdicts with resume (needs --checkpoint-dir)")
     p.add_argument("--incremental", action="store_true",
                    help="validate only files new/changed since the last run "
-                        "(needs --checkpoint-dir); count checks only")
+                        "(needs --checkpoint-dir); count checks fold over "
+                        "files, other rules report an error")
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--partition-key", default="conv_id")
     p.add_argument("--table-format", default="parquet",
