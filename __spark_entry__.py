@@ -28,6 +28,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _released(spark: SparkSession, frame: DataFrame,
+              cache: DataFrame) -> DataFrame:
+    """``frame``'s (small) rows as a plain frame, with ``cache`` — the
+    persisted frame an operator handed back — released, so the entry
+    leaves nothing in the session's cache."""
+    rows = frame.collect()
+    cache.unpersist()
+    return spark.createDataFrame(rows, frame.schema)
+
+
 def _spec(**kw) -> CheckSpec:
     base = dict(key="q", category="quality", type="q", name="q", model="m",
                 metric=MetricType.INVALID_COUNT)
@@ -519,12 +529,11 @@ def _q_minhash_near_dups(spark, sf):
     # candidates + signature agreement are reproduced bit-for-bit by the
     # DuckDB oracle (same one md5 per shingle + 64 affine permutations +
     # 16x4 banding)
-    return (
-        dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8, kernel="md5")
-        .select("id_a", "id_b",
-                F.round("est_jaccard", 4).alias("est_jaccard"))
-        .orderBy("id_a", "id_b")
-    )
+    pairs = dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8,
+                                          kernel="md5")
+    return _released(spark, pairs.select(
+        "id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard")),
+        pairs).orderBy("id_a", "id_b")
 
 
 def _q_ngram_jaccard_dups(spark, sf):
@@ -668,11 +677,12 @@ def _q_dedup_clusters(spark, sf):
     docs = _t(spark, sf, "documents")
     pairs = dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8,
                                           kernel="md5")
-    out = dedup.connected_components(pairs)
+    clusters = dedup.connected_components(pairs)
     pairs.unpersist()
-    return out.select(F.col("node").cast("long").alias("node"),
-                      F.col("cluster_id").cast("long").alias("cluster_id")) \
-              .orderBy("node")
+    return _released(spark, clusters.select(
+        F.col("node").cast("long").alias("node"),
+        F.col("cluster_id").cast("long").alias("cluster_id")),
+        clusters).orderBy("node")
 
 
 def _q_stratified_sample(spark, sf):

@@ -709,12 +709,15 @@ class SparkContractEngine:
         raw_df = raw_df if raw_df is not None else df
 
         # materialize contract-declared derived columns (engine extension:
-        # Property.expression) so checks can target computed metrics
+        # Property.expression) so checks can target computed metrics; one
+        # that materialized is present, though raw_df does not carry it
+        derived = set()
         if obj is not None:
             for prop in obj.properties:
                 if prop.expression and prop.column not in df.columns:
                     try:
                         df = df.withColumn(prop.column, F.expr(prop.expression))
+                        derived.add(prop.column)
                     except Exception as e:
                         for spec in specs:
                             if spec.field == prop.column:
@@ -741,7 +744,8 @@ class SparkContractEngine:
         scan_specs: List[CheckSpec] = []
         for spec in runnable:
             if spec.metric in _SCHEMA_METRICS:
-                self._check_schema(run, spec, df, raw_df)
+                self._check_schema(run, spec, df,
+                                   df if spec.field in derived else raw_df)
             else:
                 scan_specs.append(spec)
 

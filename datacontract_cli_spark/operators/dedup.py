@@ -4,7 +4,8 @@ The pipeline shapes follow the standard near-dup literature (MinHash/LSH:
 Broder 1997; SimHash: Charikar 2002; winnowing: Schleimer et al. 2003)
 re-expressed as DataFrame ops:
 
-- exact:    hash-groupBy on a normalization fingerprint (two-phase agg)
+- exact:    fingerprint shuffle to the core count → lowest id per
+            fingerprint (row_number window on that partitioning)
 - minhash:  shingle → K minhashes (per-row array math, no shuffle) →
             band buckets (one shuffle on (band, hash)) → candidate pairs
             within buckets (self-join co-partitioned by bucket) →
@@ -56,12 +57,21 @@ def text_fingerprint(col: Column) -> Column:
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Keep the lowest-id document of every exact-duplicate group."""
-    w = Window.partitionBy(text_fingerprint(F.col(text_col))).orderBy(F.col(id_col))
+    """Keep the lowest-id document of every exact-duplicate group.
+
+    Rows shuffle by fingerprint into ``defaultParallelism`` (core count)
+    partitions and the output keeps them; the window reuses that exchange.
+    The count is explicit because AQE merges small shuffles left at
+    ``spark.sql.shuffle.partitions``: a sub-MB corpus became one partition,
+    and every stage after it down to the final write ran as one task."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    w = Window.partitionBy("__fp__").orderBy(F.col(id_col))
     return (
-        df.withColumn("__rn__", F.row_number().over(w))
+        df.withColumn("__fp__", text_fingerprint(F.col(text_col)))
+        .repartition(n, "__fp__")
+        .withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
-        .drop("__rn__")
+        .drop("__fp__", "__rn__")
     )
 
 
@@ -233,17 +243,6 @@ def minhash_signatures_arrow(
     )
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Fan CPU-bound per-row signature work out to the full cluster when the
-    scan arrived as a handful of splits (small files → 1-2 partitions →
-    single-threaded hashing). Gated on the split count so a 100 TB table —
-    which already has thousands of splits — is never re-shuffled here."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 < target:
-        return df.repartition(target)
-    return df
-
-
 def minhash_candidates(
     df: DataFrame,
     id_col: str,
@@ -263,13 +262,15 @@ def minhash_candidates(
     (band keys are then the raw signature-slice strings, not a hash of
     them, so no engine-specific hash touches the result).
 
+    The kernel runs on ``df``'s partitioning as given: ``curate_corpus``
+    passes :func:`dedup_exact`'s, which is ``defaultParallelism`` wide.
+
     The returned frame is persisted and already materialized: the caller
     owns that cache and must ``unpersist()`` it when done."""
     if kernel not in ("arrow", "md5"):
         raise ValueError(f"unknown minhash kernel {kernel!r}; "
                          "expected 'arrow' or 'md5'")
     rows_per_band = num_hashes // bands
-    df = _ensure_parallelism(df)
     if kernel == "arrow":
         sig = minhash_signatures_arrow(df, id_col, text_col, shingle_size, num_hashes)
     else:
@@ -590,10 +591,9 @@ def simhash_near_duplicates(
     # prunes it from the JVM word functions, but a Python node's output
     # schema is opaque to pruning, so the flag does it at the source.
     if hash_family == "arrow":
-        words = _simhash_words_arrow(_ensure_parallelism(df), id_col,
-                                     text_col, with_bits=False)
+        words = _simhash_words_arrow(df, id_col, text_col, with_bits=False)
     else:
-        words = simhash_words_md5(_ensure_parallelism(df), id_col, text_col)
+        words = simhash_words_md5(df, id_col, text_col)
     s = words.select(
         "id", "w0", "w1", "w2", "w3", fp.alias("fp")).persist()
     # ONE banded self-join instead of four block joins (the minhash
@@ -752,10 +752,9 @@ def winnow_shared_pairs(
         raise ValueError(f"unknown winnow hash_family {hash_family!r}; "
                          "expected 'arrow' or 'md5'")
     if hash_family == "arrow":
-        fp = _winnow_fingerprints_arrow(_ensure_parallelism(df), id_col,
-                                        text_col, k, window)
+        fp = _winnow_fingerprints_arrow(df, id_col, text_col, k, window)
     else:
-        fp = _ensure_parallelism(df).select(
+        fp = df.select(
             F.col(id_col).alias("id"),
             winnow_fingerprints(F.col(text_col), k, window).alias("fp"),
         )

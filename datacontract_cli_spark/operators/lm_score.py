@@ -58,14 +58,14 @@ def score_documents(docs: DataFrame, lm: DataFrame, id_col: str = "doc_id",
     add-one-smoothed unigram model: p(w) = (c(w)+1) / (N+V+1), OOV words
     get c=0 — one smoothing bucket for everything outside the vocabulary.
 
-    Lower perplexity = more reference-like. The model is persisted on
-    first use (its plan embeds the reference-corpus aggregate + the
-    vocabulary sort — without caching, the N/V normalizer AND the
-    broadcast join would each recompute the full fit); call
-    ``lm.unpersist()`` when a scoring session ends. N and V collect as
-    two scalars and inline as literals; only (id, word) pairs shuffle."""
-    if not lm.is_cached:
-        lm.persist()
+    Lower perplexity = more reference-like. The model is local-checkpointed
+    first (its plan embeds the reference-corpus aggregate + the vocabulary
+    sort — without that, the N/V normalizer AND the broadcast join would
+    each recompute the full fit). A checkpoint, not ``persist()``: it
+    puts nothing in the session's cache, and its blocks belong to the
+    returned plan, so they are released with it. N and V collect as two
+    scalars and inline as literals; only (id, word) pairs shuffle."""
+    lm = lm.localCheckpoint(eager=True)
     row = lm.agg(F.sum("c").alias("N"), F.count(F.lit(1)).alias("V")) \
         .collect()[0]
     n_total, v_size = int(row["N"] or 0), int(row["V"])

@@ -11,6 +11,13 @@ jobs at build time (near-dup signatures persist for the band joins;
 connected components iterates to a fixpoint; the LM fit collects its
 normalizer); everything else stays lazy until the final write.
 
+Partitioning comes from the core count, set once: exact dedup shuffles
+into ``defaultParallelism`` partitions with an explicit count, which AQE
+does not coalesce (see ``dedup.dedup_exact``). The later stages keep them
+(the anti-joins broadcast, the filters are narrow), so the near-dup
+kernel, the filters and the final write run one task per core. The
+line-dedup join is the one later shuffle; it repartitions the same way.
+
 Stage order matters and mirrors production practice:
   1. exact dedup FIRST (cheapest, shrinks everything downstream),
   2. near-dedup on the survivors (LSH candidate pairs → connected
@@ -97,7 +104,12 @@ def curate_corpus(
     scoring. The params hash covers every scalar argument, so editing a
     threshold invalidates the affected checkpoints automatically;
     CHANGING THE INPUT DATA DOES NOT — clear the directory (or use a new
-    one) when docs/benchmark/lm_corpus change."""
+    one) when docs/benchmark/lm_corpus change.
+
+    The call leaves nothing in the session's cache. The returned plan
+    references two local checkpoints (the near-dup losers, and the LM
+    vocabulary when ``lm_corpus`` is set); the caller owns them through
+    the frame, and Spark releases their blocks when the frame is gone."""
     if (lm_corpus is None) != (max_perplexity is None):
         raise ValueError("lm_corpus and max_perplexity must be given "
                          "together (half-specifying them would silently "
@@ -211,7 +223,11 @@ def curate_corpus(
                                   hash_lines=True)
                        .filter(F.col("n_kept") > 0)
                        .select(id_col, F.col("text_clean").alias(text_col)))
-            out = out.drop(text_col).join(cleaned, id_col)
+            # the join's shuffle would be coalesced by AQE like any small
+            # one; repartition to the core count as exact dedup does, so
+            # the near-dup kernel below still runs on every core
+            out = out.drop(text_col).join(cleaned, id_col).repartition(
+                docs.sparkSession.sparkContext.defaultParallelism, id_col)
             out = _ckpt("line_dedup", out)
         _tick("line_dedup", out)
 
@@ -278,7 +294,7 @@ def curate_corpus(
     _tick("heuristic_quality", out)
 
     # 4b. LM perplexity filter against the reference corpus. EAGER stage
-    # (the fit collects its normalizer and persists the vocabulary) —
+    # (scoring checkpoints the vocabulary and collects its normalizer) —
     # on resume, skip the fit entirely.
     if lm_corpus is not None and max_perplexity is not None:
         if _has_ckpt("lm_quality"):

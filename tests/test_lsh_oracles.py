@@ -114,3 +114,24 @@ def test_minhash_md5_affine_actually_permutes():
     assert max(a) * h + max(b) < (1 << 63)
     wrapped = sum(1 for k in range(64) if (a[k] * h + b[k]) >= p)
     assert wrapped > 32  # most permutations wrap => not monotone in h
+
+
+@pytest.mark.parametrize("name", ["minhash_near_dups", "dedup_clusters"])
+def test_dedup_entries_leave_no_cache(spark, docs, name):
+    """The gate entries collect their small result and release the frame
+    the operator persisted: a gate run leaves nothing in the session's
+    cache, and the rows are the operator's own."""
+    import __spark_entry__ as entry
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = [tuple(r) for r in entry.queries()[name](spark, SF).collect()]
+    assert cache.isEmpty()
+    pairs = dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8,
+                                          kernel="md5")
+    if name == "minhash_near_dups":
+        direct = pairs.select("id_a", "id_b", F.round("est_jaccard", 4))
+    else:
+        direct = dedup.connected_components(pairs)
+    assert rows == sorted(tuple(r) for r in direct.collect())
+    assert rows
+    spark.catalog.clearCache()

@@ -195,6 +195,48 @@ def test_exact_dedup(spark):
     assert kept.filter("doc_id = 1").count() == 1  # keeps lowest id
 
 
+def _exact_dedup_reference(rows):
+    """Lowest id per normalized text, in plain Python: lowercase, every
+    run of Java ``\\s`` whitespace to one space, spaces trimmed; null texts
+    form one group."""
+    import re
+    kept = {}
+    for doc_id, text in rows:
+        key = (None if text is None
+               else re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" "))
+        if key not in kept or doc_id < kept[key][0]:
+            kept[key] = (doc_id, text)
+    return sorted(kept.values())
+
+
+@pytest.mark.parametrize("n_parts", [1, 5])
+def test_exact_dedup_matches_reference_across_partitions(spark, n_parts):
+    import random
+    rng = random.Random(7)
+    variants = [
+        "The quick brown fox", "the  quick brown fox", " THE quick\tbrown fox ",
+        "the quick\nbrown\r\nfox", "a lazy dog", "A LAZY   DOG", "",
+        "   ", "\t\n", None, "distinct text one", "distinct text two",
+    ]
+    ids = rng.sample(range(1, 1000), 90)
+    rows = [(i, variants[rng.randrange(len(variants))]) for i in ids]
+    # round-robin: the members of one duplicate group land in different
+    # input partitions
+    docs = spark.createDataFrame(rows, "doc_id long, text string") \
+        .repartition(n_parts)
+    assert docs.rdd.getNumPartitions() == n_parts
+    kept = dedup.dedup_exact(docs, "doc_id")
+    assert kept.columns == ["doc_id", "text"]
+    assert sorted(map(tuple, kept.collect())) == _exact_dedup_reference(rows)
+
+
+def test_exact_dedup_output_is_core_count_wide(spark):
+    # a sub-MB shuffle left at spark.sql.shuffle.partitions is coalesced
+    # to one partition by AQE; the explicit count keeps every core busy
+    kept = dedup.dedup_exact(_docs(spark).coalesce(1), "doc_id")
+    assert kept.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 def test_minhash_finds_near_dups(spark):
     pairs = dedup.minhash_near_duplicates(_docs(spark), "doc_id", threshold=0.5)
     found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}

@@ -2,6 +2,7 @@
 the canonical C4/CCNet order, on a corpus engineered to exercise each
 stage exactly once."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.pipeline import CurationReport, curate_corpus
@@ -79,17 +80,73 @@ def test_curate_corpus_lm_stage(spark):
     assert [r["doc_id"] for r in out.collect()] == [1]
 
 
+def test_curate_corpus_leaves_no_cache(spark, tmp_path):
+    # every stage that caches (LSH signatures and pairs, connected
+    # components, the LM vocabulary) releases it before the call returns;
+    # what the returned plan still needs is a local checkpoint
+    from datacontract_cli_spark.model.contract import load_contract_str
+    contract = load_contract_str("""
+id: docs
+version: 1.0.0
+schema:
+  - name: documents
+    properties:
+      - name: doc_id
+        logicalType: integer
+        required: true
+      - name: text
+        logicalType: string
+        required: true
+""")
+    bench = spark.createDataFrame(
+        [(100, "the secret eval answer is forty two exactly")],
+        "doc_id long, text string")
+    ref = spark.createDataFrame(
+        [(0, "large language models learn from curated text corpora")],
+        "doc_id long, text string")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    out = curate_corpus(_corpus(spark), contract=contract, benchmark=bench,
+                        lm_corpus=ref, max_perplexity=1e9,
+                        classifier_threshold=0.0, min_tokens=5,
+                        near_dup_threshold=0.7)
+    out.write.parquet(str(tmp_path / "curated"))
+    assert sorted(r["doc_id"] for r in
+                  spark.read.parquet(str(tmp_path / "curated")).collect()) \
+        == [1, 7, 8]
+    assert cache.isEmpty()
+
+
 def test_curate_corpus_report_optional_and_deterministic(spark):
     # without a report the same frame comes back (no per-stage counts),
-    # and re-running yields the identical curated set
+    # and re-running on any input partitioning yields the identical
+    # curated rows, split included
     docs = _corpus(spark)
-    a = sorted(r["doc_id"] for r in
-               curate_corpus(docs, min_tokens=5, near_dup_threshold=0.7)
-               .collect())
-    b = sorted(r["doc_id"] for r in
-               curate_corpus(docs.repartition(5), min_tokens=5,
-                             near_dup_threshold=0.7).collect())
-    assert a == b == [1, 4, 7, 8]  # no benchmark passed -> doc 4 stays
+    kw = dict(min_tokens=5, near_dup_threshold=0.7,
+              split_weights={"train": 0.8, "valid": 0.2})
+    a, b, c = (sorted(map(tuple, curate_corpus(d, **kw).collect()))
+               for d in (docs, docs.repartition(5), docs.coalesce(1)))
+    assert a == b == c
+    assert [r[0] for r in a] == [1, 4, 7, 8]  # no benchmark -> doc 4 stays
+
+
+@pytest.mark.parametrize("stages", [{}, {"line_dedup_min_len": 10}])
+def test_minhash_kernel_input_is_core_count_wide(spark, monkeypatch, stages):
+    # exact dedup shuffles to defaultParallelism partitions and the minhash
+    # kernel takes the partitioning it is given, so a one-partition input
+    # still hashes on every core, on the line-dedup join path too
+    from datacontract_cli_spark.operators import dedup
+    widths = []
+    kernel = dedup.minhash_signatures_arrow
+
+    def spy(df, *args, **kwargs):
+        widths.append(df.rdd.getNumPartitions())
+        return kernel(df, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_signatures_arrow", spy)
+    curate_corpus(_corpus(spark).coalesce(1), min_tokens=5,
+                  near_dup_threshold=0.7, **stages)
+    assert widths == [spark.sparkContext.defaultParallelism]
 
 
 def test_curate_corpus_new_stages(spark):

@@ -104,8 +104,35 @@ schema:
     assert ks.result in (ResultEnum.passed, ResultEnum.failed)
     assert ks.diagnostics["value"] is not None
 
-    # presence check on the derived column: the raw source doesn't have it —
-    # derived columns are checked against the derived frame, so is_present
-    # reflects the raw source (still failed there, by design honesty)
+    # the raw source has no text_len, but the contract declares how to
+    # compute it and it materialized, so it is present
     pres = run.check("transcripts__text_len__field_is_present")
-    assert pres.result is ResultEnum.failed
+    assert pres.result is ResultEnum.passed
+
+
+def test_derived_column_is_present(spark):
+    # presence, type and range of a derived column all read the column the
+    # contract's expression materialized
+    contract = load_contract_str("""
+id: derived
+version: 0.1.0
+schema:
+  - name: t
+    properties:
+      - name: id
+        logicalType: integer
+      - name: n
+        logicalType: integer
+      - name: n2
+        logicalType: integer
+        expression: "n * 2"
+        logicalTypeOptions:
+          maximum: 3
+""")
+    df = spark.createDataFrame([(1, 1), (2, 2)], "id long, n long")
+    run = SparkContractEngine(spark).test(contract, tables={"t": df})
+    assert run.check("t__n2__field_is_present").result is ResultEnum.passed
+    assert run.check("t__n2__field_type").result is ResultEnum.passed
+    maximum = run.check("t__n2__field_maximum")
+    assert maximum.result is ResultEnum.failed
+    assert maximum.diagnostics["value"] == 1
