@@ -672,17 +672,17 @@ def _q_pivot_status(spark, sf):
 def _q_dedup_clusters(spark, sf):
     """Connected components over the md5-family minhash near-dup pairs:
     cluster_id = min doc id of the component (the representative a dedup
-    pipeline keeps). Iterative min-label propagation; the oracle replays it
-    as a DuckDB recursive CTE over the SAME pair set."""
+    pipeline keeps). The oracle replays it as a DuckDB recursive CTE over
+    the SAME pair set. The clusters frame holds no cache, so releasing the
+    pairs leaves the session's cache empty."""
     docs = _t(spark, sf, "documents")
     pairs = dedup.minhash_near_duplicates(docs, "doc_id", threshold=0.8,
                                           kernel="md5")
     clusters = dedup.connected_components(pairs)
     pairs.unpersist()
-    return _released(spark, clusters.select(
+    return clusters.select(
         F.col("node").cast("long").alias("node"),
-        F.col("cluster_id").cast("long").alias("cluster_id")),
-        clusters).orderBy("node")
+        F.col("cluster_id").cast("long").alias("cluster_id")).orderBy("node")
 
 
 def _q_stratified_sample(spark, sf):

@@ -52,11 +52,12 @@ import logging
 import math
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from datacontract_cli_spark.checks.compile import compile_checks
 from datacontract_cli_spark.checks.physical import physical_types_match
@@ -285,6 +286,40 @@ def _model_specs(contract: DataContract, model: str) -> List[CheckSpec]:
     return [s for s in compile_checks(contract, None) if s.model == model]
 
 
+def _derive_columns(df: DataFrame, obj: Optional[SchemaObject],
+                    specs: List[CheckSpec]
+                    ) -> Tuple[DataFrame, Set[str], Dict[str, str]]:
+    """``df`` with the model's contract-declared derived columns
+    (engine extension: ``Property.expression``) materialized, so checks
+    can target computed metrics. Returns the frame, the derived column
+    names, and an error reason for each spec on a column whose
+    expression does not analyze: the caller drops those specs, since a
+    scan would bury the cause under a generic 'Column not found'."""
+    derived: Set[str] = set()
+    errors: Dict[str, str] = {}
+    for prop in (obj.properties if obj is not None else []):
+        if prop.expression and prop.column not in df.columns:
+            try:
+                df = df.withColumn(prop.column, F.expr(prop.expression))
+                derived.add(prop.column)
+            except Exception as e:
+                errors.update(
+                    (spec.key, f"Invalid expression for derived column "
+                               f"'{prop.column}': {e}")
+                    for spec in specs if spec.field == prop.column)
+    return df, derived, errors
+
+
+def _schema_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame with ``schema``: a local relation the JVM builds
+    from an empty row list, where ``createDataFrame([], schema)`` would
+    parallelize a Python RDD for no rows."""
+    jdf = spark._jsparkSession.createDataFrame(
+        spark._jvm.java.util.ArrayList(),
+        spark._jsparkSession.parseDataType(schema.json()))
+    return DataFrame(jdf, spark)
+
+
 def _lane_value(values: Dict[str, Any], spec: CheckSpec) -> Any:
     """A spec's folded value; the row count lives under ``row_count``."""
     return values.get("row_count" if spec.metric is MetricType.ROW_COUNT
@@ -489,11 +524,15 @@ class SparkContractEngine:
         from datacontract_cli_spark.engine.partitioned import PartitionedValidator
 
         specs = _model_specs(contract, model)
+        obj = next((o for o in contract.schema_objects
+                    if o.table.lower() == model.lower()), None)
+        df, _, derive_errors = _derive_columns(df, obj, specs)
         pv = PartitionedValidator(self.spark, checkpoint_dir=checkpoint_dir,
                                   partition_key=partition_key, n_buckets=n_buckets)
-        verdicts = pv.run(df, specs, model, source_path=source_path)
+        verdicts = pv.run(df, [s for s in specs if s.key not in derive_errors],
+                          model, source_path=source_path)
         folded = PartitionedValidator.fold(verdicts)
-        errors = {
+        errors = derive_errors | {
             s.key: (f"uniqueness on {s.columns or [s.field]} cannot be "
                     f"folded per-bucket when the partition key "
                     f"{partition_key!r} is not part of the duplicate key — "
@@ -556,7 +595,7 @@ class SparkContractEngine:
 
         run = self._lane_run(
             contract, specs, "incremental",
-            self.spark.createDataFrame([], result["schema"]),
+            _schema_frame(self.spark, result["schema"]),
             _evaluated(result["folded"], result["unevaluated"]), extra=files)
         return run, result
 
@@ -608,7 +647,7 @@ class SparkContractEngine:
 
             run = self._lane_run(
                 contract, specs, "tail",
-                self.spark.createDataFrame([], result["schema"]),
+                _schema_frame(self.spark, result["schema"]),
                 _evaluated(result["delta"], result["unevaluated"]),
                 extra=snapshot,
                 maintenance=result.get("data_change") is False)
@@ -708,28 +747,12 @@ class SparkContractEngine:
         # presence checks look at the un-projected source schema
         raw_df = raw_df if raw_df is not None else df
 
-        # materialize contract-declared derived columns (engine extension:
-        # Property.expression) so checks can target computed metrics; one
-        # that materialized is present, though raw_df does not carry it
-        derived = set()
-        if obj is not None:
-            for prop in obj.properties:
-                if prop.expression and prop.column not in df.columns:
-                    try:
-                        df = df.withColumn(prop.column, F.expr(prop.expression))
-                        derived.add(prop.column)
-                    except Exception as e:
-                        for spec in specs:
-                            if spec.field == prop.column:
-                                run.set_result(spec.key, ResultEnum.error,
-                                               f"Invalid expression for derived "
-                                               f"column '{prop.column}': {e}")
-                        # drop the affected specs NOW — letting them fall
-                        # through to the scan would overwrite this error
-                        # (and its root-cause reason) with a generic
-                        # 'Column not found' failure
-                        specs = [s for s in specs
-                                 if s.field != prop.column]
+        # a derived column that materialized is present, though raw_df
+        # does not carry it
+        df, derived, errors = _derive_columns(df, obj, specs)
+        for key, reason in errors.items():
+            run.set_result(key, ResultEnum.error, reason)
+        specs = [s for s in specs if s.key not in errors]
 
         # preset (unsupported) checks
         runnable: List[CheckSpec] = []

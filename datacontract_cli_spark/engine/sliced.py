@@ -22,19 +22,22 @@ like any other check, and freqDriftPsi baselines, which ``test()`` runs
 as a job of their own, expand here to per-category count-ifs added to
 the same batch (novel mass folded into one bucket — see
 ``_psi_value``), so per-slice drift verdicts cost zero extra passes.
-Checks whose thresholds aren't expressible as Column math (timestamp
-SLAs, custom SQL) are skipped — run the engine for those.
+Every sliceable check gets a row per slice: one with no threshold, a
+threshold that is not numeric, a column the frame lacks or an empty PSI
+baseline has a null ``metric_value`` and ``passed = false``. Other
+checks (timestamp SLAs, custom SQL, uniqueness) are not sliceable — run
+the engine for those.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
-from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
+from datacontract_cli_spark.checks.spec import MetricType, Op, Threshold
 from datacontract_cli_spark.engine.executor import (
     _ROW_COUNT_ALIAS,
     compile_aggregates,
@@ -119,25 +122,23 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
     """(slice…, check_key, metric_value, passed) — one row per
     (slice, agg-able check). ``min_slice_rows`` drops slices too small to
     judge (their verdicts would be noise at web scale)."""
-    specs: List[CheckSpec] = [
-        s for s in compile_checks(contract, None)
-        if s.model == model and s.metric in _SLICEABLE
-        and s.threshold is not None
-    ]
+    sliceable = [s for s in compile_checks(contract, None)
+                 if s.model == model and s.metric in _SLICEABLE]
+    # no threshold, a column lost to schema drift, a malformed or empty
+    # baseline, or a threshold that is not numeric: the check FAILS in
+    # every slice (null metric), never silently dropped — the batch
+    # engine fails or errors the same check
+    failing = [s for s in sliceable if s.threshold is None]
+    specs = [s for s in sliceable if s.threshold is not None]
     psi_specs = [s for s in specs if s.metric is MetricType.FREQ_DRIFT_PSI]
     batch, unevaluated = compile_aggregates(
         df, [s for s in specs if s.metric is not MetricType.FREQ_DRIFT_PSI])
-    # a column lost to schema drift or a malformed baseline: the check
-    # FAILS in every slice (null metric), never silently dropped — the
-    # batch engine fails or errors the same check
-    failing = [spec for spec, _, _ in unevaluated]
+    failing += [spec for spec, _, _ in unevaluated]
     for i, spec in enumerate(psi_specs):
         column = resolve_column(df, spec.field)
-        if column is None:
-            failing.append(spec)
-            continue
         baseline = spec.baseline or {}
-        if not baseline:
+        if column is None or not baseline:
+            failing.append(spec)
             continue
         alias = f"__dc_psi{i}__"
         # native-typed comparison (no string rendering — the bool 'True'
@@ -153,10 +154,7 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
     if min_slice_rows > 0:
         grouped = grouped.filter(F.col(_ROW_COUNT_ALIAS) >= min_slice_rows)
 
-    rows = [F.struct(F.lit(spec.key).alias("check_key"),
-                     F.lit(None).cast("double").alias("metric_value"),
-                     F.lit(False).alias("passed"))
-            for spec in failing]
+    rows = []
     for spec, alias in batch.evaluators:
         value = F.col(alias).cast("double")
         compare = value
@@ -172,12 +170,17 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
             ).otherwise(0.0)
         cond = _threshold_condition(spec.threshold, compare)
         if cond is None:
+            failing.append(spec)
             continue
         rows.append(F.struct(
             F.lit(spec.key).alias("check_key"),
             value.alias("metric_value"),
             cond.alias("passed"),
         ))
+    rows += [F.struct(F.lit(spec.key).alias("check_key"),
+                      F.lit(None).cast("double").alias("metric_value"),
+                      F.lit(False).alias("passed"))
+             for spec in failing]
     if not rows:
         return (grouped.select(*slice_cols)
                 .withColumn("check_key", F.lit(None).cast("string"))

@@ -34,12 +34,15 @@ is the only full-data movement and it carries only (id, band, hash64).
 """
 from __future__ import annotations
 
+import logging
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators._hof import bind
+
+logger = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -169,8 +172,10 @@ def minhash_signatures_arrow(
     text_col: str = "text",
     shingle_size: int = 3,
     num_hashes: int = 64,
+    bands: int = 16,
 ) -> DataFrame:
     """Arrow-batched signature kernel, fully vectorized — no per-row Python.
+    Returns ``(id, sig array<long>, bands array<long>)``.
 
     Per batch: tokenization via pandas ``.str`` ops, shingle construction via
     object-array slicing/concatenation over ONE flat token array (the
@@ -178,6 +183,12 @@ def minhash_signatures_arrow(
     (``pd.util.hash_array``), then the K permutation hashes as numpy affine
     maps ((a_k * h + b_k) mod p — the classic universal-hash MinHash family)
     with a segmented per-document min (``np.minimum.reduceat``).
+
+    ``bands[j]`` is the LSH bucket key of band ``j``: a 64-bit mix of the
+    band index and its ``r = num_hashes // bands`` signature values, built
+    in the same batch loop. It is a pure function of (j, slice), so equal
+    slices always share a key; a collision between unequal slices only
+    adds a candidate pair for the ``est_jaccard`` estimate to judge.
 
     Per-document shingle DEDUP is intentionally skipped: duplicates cannot
     change a minimum, so min-over-multiset == min-over-set and the signature
@@ -195,11 +206,26 @@ def minhash_signatures_arrow(
     A = rng.integers(1, P, size=num_hashes, dtype=np.uint64)
     B = rng.integers(0, P, size=num_hashes, dtype=np.uint64)
     k = shingle_size
+    r = num_hashes // bands
+
+    def band_keys(sig):
+        """(bands, docs) int64 keys: per band, a multiply-xorshift chain
+        over its r values from a band-index seed, then the splitmix64
+        finalizer. uint64 array arithmetic wraps mod 2^64."""
+        s = sig[:bands * r].astype(np.uint64).reshape(bands, r, -1)
+        h = (np.arange(1, bands + 1, dtype=np.uint64)[:, None]
+             * np.uint64(0x9E3779B97F4A7C15))  # broadcasts over docs
+        for i in range(r):
+            h = (h ^ s[:, i]) * np.uint64(0xFF51AFD7ED558CCD)
+            h ^= h >> np.uint64(32)
+        h = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+        h = (h ^ (h >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+        return (h ^ (h >> np.uint64(31))).view(np.int64)
 
     def kernel(batches):
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame({"id": pdf[id_col], "sig": []})
+                yield pd.DataFrame({"id": pdf[id_col], "sig": [], "bands": []})
                 continue
             toks = pdf[text_col].fillna("").astype(str).str.lower().str.split()
             lens = toks.str.len().to_numpy(dtype=np.int64)
@@ -236,10 +262,12 @@ def minhash_signatures_arrow(
             for ki in range(num_hashes):  # K seeds, each one C-speed pass
                 hk = (base * A[ki] + B[ki]) % P
                 sig[ki] = np.minimum.reduceat(hk, out_off).astype(np.int64)
-            yield pd.DataFrame({"id": pdf[id_col], "sig": list(sig.T)})
+            yield pd.DataFrame({"id": pdf[id_col], "sig": list(sig.T),
+                                "bands": list(band_keys(sig).T)})
 
     return df.select(F.col(id_col).alias(id_col), text_col).mapInPandas(
-        kernel, f"id {dict(df.dtypes)[id_col]}, sig array<long>"
+        kernel,
+        f"id {dict(df.dtypes)[id_col]}, sig array<long>, bands array<long>"
     )
 
 
@@ -257,28 +285,21 @@ def minhash_candidates(
     with the signature-agreement Jaccard estimate attached.
 
     kernel="arrow" (default): vectorized numpy signature kernel via
-    mapInPandas; kernel="md5": pure Column kernel on the shared md5 hash
-    family — output reproducible bit-for-bit by an external SQL oracle
-    (band keys are then the raw signature-slice strings, not a hash of
-    them, so no engine-specific hash touches the result).
+    mapInPandas, which also emits each band's 64-bit bucket key;
+    kernel="md5": pure Column kernel on the shared md5 hash family —
+    output reproducible bit-for-bit by an external SQL oracle (band keys
+    are then the raw signature-slice strings, not a hash of them, so no
+    engine-specific hash touches the result).
 
     The kernel runs on ``df``'s partitioning as given: ``curate_corpus``
     passes :func:`dedup_exact`'s, which is ``defaultParallelism`` wide.
 
-    The returned frame is persisted and already materialized: the caller
+    The signatures are persisted for the duration of the call only. The
+    returned frame is persisted and already materialized: the caller
     owns that cache and must ``unpersist()`` it when done."""
     if kernel not in ("arrow", "md5"):
         raise ValueError(f"unknown minhash kernel {kernel!r}; "
                          "expected 'arrow' or 'md5'")
-    rows_per_band = num_hashes // bands
-    if kernel == "arrow":
-        sig = minhash_signatures_arrow(df, id_col, text_col, shingle_size, num_hashes)
-    else:
-        sig = (
-            df.select(F.col(id_col).alias("id"),
-                      minhash_signature_md5(word_shingles(F.col(text_col), shingle_size),
-                                            num_hashes).alias("sig"))
-        )
     # Materialize signatures BEFORE banding: Catalyst's projection collapse
     # would otherwise inline the (shingles × K hashes) expression into every
     # band column AND both sides of the self-join — recomputing it 2×17 times
@@ -289,33 +310,41 @@ def minhash_candidates(
     # is what blocks projection collapse from inlining the kernel), and the
     # banded join's first shuffle-map stage fills the cache for the second
     # side — one fewer driver job and one fewer full pass per call.
-    sig = sig.persist()
-    # one row per (doc, band); the bucket is a hash of that band's signature
-    # slice — a single small expression, so the optimized plan stays compact
-    band_key = F.array_join(
-        F.transform(
-            F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band),
-            lambda h: h.cast("string"),
-        ),
-        ",",
-    )
-    banded = (
-        sig.select("id", "sig",
-                   F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"))
-        .withColumn(
-            # the arrow kernel compresses the shuffle key to 8 bytes with
-            # xxhash64; the md5 kernel keeps the raw slice string so the
-            # candidate set is a pure function of the shared hash family
-            "bucket",
-            band_key if kernel == "md5" else F.xxhash64(band_key, F.col("band")),
+    #
+    # One row per (doc, band), carrying ONLY (id, band, bucket): keeping
+    # the 64-long signature array out of the banded frame keeps the join
+    # and the dropDuplicates exchange payload-free (~16 B/row instead of
+    # ~0.5 KB); signatures re-attach from the CACHED sig table after the
+    # dedup, so agreement is computed once per unique pair.
+    if kernel == "arrow":
+        sig = minhash_signatures_arrow(df, id_col, text_col, shingle_size,
+                                       num_hashes, bands).persist()
+        # the kernel already hashed each band slice to 8 bytes, so both
+        # sides of the self-join read the keys from the cache
+        banded = sig.select(
+            "id", F.posexplode("bands").alias("band", "bucket"))
+    else:
+        sig = df.select(
+            F.col(id_col).alias("id"),
+            minhash_signature_md5(word_shingles(F.col(text_col), shingle_size),
+                                  num_hashes).alias("sig")).persist()
+        # the raw slice string keeps the candidate set a pure function of
+        # the shared hash family
+        rows_per_band = num_hashes // bands
+        band_key = F.array_join(
+            F.transform(
+                F.slice("sig", F.col("band") * rows_per_band + 1,
+                        rows_per_band),
+                lambda h: h.cast("string"),
+            ),
+            ",",
         )
-        # the self-join needs ONLY (id, band, bucket): keeping the 64-long
-        # signature array out of the banded frame keeps the join and the
-        # dropDuplicates exchange payload-free (~16 B/row instead of
-        # ~0.5 KB); signatures re-attach from the CACHED sig table after
-        # the dedup, so agreement is computed once per unique pair
-        .select("id", "band", "bucket")
-    )
+        banded = (
+            sig.select("id", "sig",
+                       F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
+                       .alias("band"))
+            .select("id", "band", band_key.alias("bucket"))
+        )
 
     left = banded.alias("a")
     right = banded.alias("b")
@@ -782,9 +811,54 @@ def winnow_shared_pairs(
 # connected components (dedup clusters)
 # ---------------------------------------------------------------------------
 
-# edge count up to which connected_components resolves the graph in one
-# task (union-find) instead of distributed label propagation
+# pair count up to which connected_components resolves the graph on the
+# driver (union-find over the collected pairs) instead of distributed label
+# propagation; it bounds the driver memory the small path may take
 _CC_LOCAL_EDGES = 5_000_000
+
+
+def _components_on_driver(edges: DataFrame) -> DataFrame:
+    """Union-find over the collected ``(a, b)`` edge columns: one Spark
+    job (the ``toArrow`` collect). Nodes are sorted by value, so a union
+    that keeps the smaller root makes every root its component's minimum
+    id. The result is built from a ``pyarrow.Table``, which the JVM
+    decodes (a local relation when small): no Python worker, no cache."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    table = edges.toArrow()
+    if pa.types.is_floating(table.schema.field("a").type):
+        # Spark's joins and aggregates take -0.0 for 0.0; adding +0.0
+        # folds the one into the other, as Arrow's hashing does not
+        table = pa.table({c: pc.add(table[c], 0.0) for c in ("a", "b")})
+    nodes = pc.unique(pa.chunked_array(table["a"].chunks + table["b"].chunks,
+                                       type=table.schema.field("a").type))
+    nodes = nodes.take(pc.sort_indices(nodes))
+    parent = list(range(len(nodes)))
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for x, y in zip(pc.index_in(table["a"], value_set=nodes).to_pylist(),
+                    pc.index_in(table["b"], value_set=nodes).to_pylist()):
+        rx, ry = find(x), find(y)
+        if rx < ry:
+            parent[ry] = rx
+        elif ry < rx:
+            parent[rx] = ry
+    roots = pa.array([find(x) for x in range(len(parent))],
+                     type=pa.int64())
+    id_type = edges.schema["a"].dataType
+    return edges.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "cluster_id": nodes.take(roots)}),
+        T.StructType([T.StructField("node", id_type),
+                      T.StructField("cluster_id", id_type)]))
 
 
 def connected_components(
@@ -797,18 +871,36 @@ def connected_components(
     is the minimum node id of the connected component (the canonical
     representative a dedup pipeline keeps).
 
-    Iterative min-label propagation with pointer jumping: each round every
-    node takes the min of its own label, its neighbors' labels, AND its
-    label's label (path compression) — O(log diameter) rounds instead of
-    O(diameter), the same doubling idea as the large-star/small-star
-    formulation (Kiveris et al., SoCC'14). Each round is two shuffle-by-key
-    joins + a groupBy; labels persist per round and the previous round
-    unpersists, so peak storage is two label tables.
+    The pair count picks the path, logged at INFO once per call. Up to
+    ``_CC_LOCAL_EDGES`` pairs, the driver collects the two id columns
+    and resolves them by union-find (:func:`_components_on_driver`): two
+    jobs, the count and the collect. ``pairs`` is read twice, so pass a
+    cached frame (:func:`minhash_candidates` returns one).
 
-    On both paths (single-task union-find and distributed rounds) the
-    returned frame is persisted and already materialized: the caller owns
-    that cache and must ``unpersist()`` it when done."""
+    Above the bound: iterative min-label propagation with pointer
+    jumping: each round every node takes the min of its own label, its
+    neighbors' labels, AND its label's label (path compression) —
+    O(log diameter) rounds instead of O(diameter), the same doubling
+    idea as the large-star/small-star formulation (Kiveris et al.,
+    SoCC'14). Each round is two shuffle-by-key joins + a groupBy; labels
+    persist per round and the previous round unpersists, so peak storage
+    is two label tables; the result is a local checkpoint of the last
+    round, and the call releases every label cache before it returns.
+
+    On both paths the returned frame holds no cache: the caller has
+    nothing to ``unpersist()``, and Spark releases the checkpoint blocks
+    of the distributed path when the frame is gone."""
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    # an RDD count is one narrow job; DataFrame.count() plans a partial
+    # aggregate and an exchange, which adaptive execution runs as two
+    n_edges = edges._jdf.queryExecution().toRdd().count()
+    if n_edges <= _CC_LOCAL_EDGES:
+        logger.info("connected_components: %d edges, driver union-find",
+                    n_edges)
+        return _components_on_driver(edges)
+    logger.info("connected_components: %d edges, distributed label "
+                "propagation", n_edges)
+
     edges = (
         edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -823,62 +915,6 @@ def connected_components(
         # checkpoints; for a dedup batch job a retry is the usual answer.
         .localCheckpoint()
     )
-
-    # Small-graph fast path: the edge count is KNOWN here (the checkpoint
-    # materialized it), so when the whole edge set fits one task
-    # comfortably, a single-task union-find resolves components exactly —
-    # 2 jobs instead of O(log d) rounds x (3 joins + an action) each.
-    # Output is identical by construction (cluster_id = min id of the
-    # component). LSH-blocked pair sets are doc-frequency-capped, so even
-    # petabyte corpora often land here; graphs above the bound take the
-    # distributed label-propagation path below, unchanged. The bound,
-    # _CC_LOCAL_EDGES: 5M edges ~ 100-200 MB + a dict-based union-find in
-    # one executor core, far below task memory.
-    if edges.count() <= _CC_LOCAL_EDGES:
-        id_type = edges.schema["a"].dataType.simpleString()
-
-        def _union_find(batches):
-            import pandas as pd
-
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
-
-            for pdf in batches:
-                for x, y in zip(pdf["a"], pdf["b"]):
-                    if x not in parent:
-                        parent[x] = x
-                    if y not in parent:
-                        parent[y] = y
-                    rx, ry = find(x), find(y)
-                    if rx != ry:
-                        parent[rx] = ry
-            comp_min: dict = {}
-            for node in parent:
-                r = find(node)
-                m = comp_min.get(r)
-                if m is None or node < m:
-                    comp_min[r] = node
-            nodes = list(parent)
-            yield pd.DataFrame({
-                "node": nodes,
-                "cluster_id": [comp_min[find(n)] for n in nodes],
-            })
-
-        result = (
-            edges.coalesce(1)
-            .mapInPandas(_union_find,
-                         f"node {id_type}, cluster_id {id_type}")
-            .persist()
-        )
-        result.count()
-        return result
 
     labels = (
         edges.select(F.col("a").alias("node")).distinct()
@@ -953,13 +989,12 @@ def connected_components(
         labels = new_labels
         if converged:
             break
-    # same scoped-persist discipline as minhash_candidates: the caller
-    # receives THE cached frame (their unpersist() actually releases
-    # storage); the edges checkpoint blocks are dropped by the context
-    # cleaner once unreferenced
+    # a checkpoint, not a cache, so the last label table is released
+    # here; the checkpoint blocks (and the edges') are dropped by the
+    # context cleaner once the frames are unreferenced
     result = labels.select(F.col("node"),
-                           F.col("label").alias("cluster_id")).persist()
-    result.count()
+                           F.col("label").alias("cluster_id")) \
+        .localCheckpoint(eager=True)
     if labels.is_cached:
         labels.unpersist()
     return result

@@ -106,10 +106,15 @@ def curate_corpus(
     CHANGING THE INPUT DATA DOES NOT — clear the directory (or use a new
     one) when docs/benchmark/lm_corpus change.
 
-    The call leaves nothing in the session's cache. The returned plan
-    references two local checkpoints (the near-dup losers, and the LM
-    vocabulary when ``lm_corpus`` is set); the caller owns them through
-    the frame, and Spark releases their blocks when the frame is gone."""
+    The call leaves nothing in the session's cache. The near-dup losers
+    come from :func:`dedup.connected_components`, which holds no cache
+    on either path: its driver path hands back a table built on the
+    driver, and its distributed path a local checkpoint of its last
+    label round, so no checkpoint of the losers is needed to release
+    label caches. The returned plan references that table or
+    checkpoint, and the LM vocabulary's local checkpoint when
+    ``lm_corpus`` is set; the caller owns them through the frame, and
+    Spark releases their blocks when the frame is gone."""
     if (lm_corpus is None) != (max_perplexity is None):
         raise ValueError("lm_corpus and max_perplexity must be given "
                          "together (half-specifying them would silently "
@@ -242,14 +247,12 @@ def curate_corpus(
                                               threshold=near_dup_threshold,
                                               kernel="arrow")
         clusters = dedup.connected_components(pairs)
-        # localCheckpoint truncates lineage so the (persisted) pairs and
-        # cluster tables can be RELEASED here — without this, every
-        # curate_corpus call would leak two cached frames into executor
-        # storage (the exact leak class behind the round-2 bench regression)
-        losers = clusters.filter(F.col("node") != F.col("cluster_id")) \
-            .select(F.col("node").alias(id_col)).localCheckpoint(eager=True)
+        # the clusters frame holds no cache (a driver-built table, or a
+        # checkpoint on the distributed path), so the pairs cache — read
+        # only by connected_components — is released right away
         pairs.unpersist()
-        clusters.unpersist()
+        losers = clusters.filter(F.col("node") != F.col("cluster_id")) \
+            .select(F.col("node").alias(id_col))
         out = out.join(losers, id_col, "left_anti")
         out = _ckpt("near_dedup", out)
     _tick("near_dedup", out)

@@ -191,3 +191,34 @@ def test_cli_tail_fails_closed_on_lane_errors(spark, tmp_path, capsys):
     assert line["result"] == "error"
     by_key = {c["key"]: c["result"] for c in line["checks"]}
     assert by_key["transcripts__ts__field_type"] == "failed"
+
+
+def test_bucket_lane_materializes_derived_columns(spark, tmp_path):
+    """A ``Property.expression`` column exists in the bucket lane as it
+    does in test(): presence and type pass, and its range rule reads the
+    derived values."""
+    contract = load_contract_str("""
+id: derived
+version: 0.1.0
+schema:
+  - name: t
+    properties:
+      - name: id
+        logicalType: integer
+      - name: n
+        logicalType: integer
+      - name: n2
+        logicalType: integer
+        expression: "n * 2"
+        logicalTypeOptions:
+          maximum: 3
+""")
+    df = spark.createDataFrame([(1, 1), (2, 2)], "id long, n long")
+    run, _ = SparkContractEngine(spark).test_partitioned(
+        contract, df, "t", checkpoint_dir=str(tmp_path / "ckpt"),
+        partition_key="id", n_buckets=4)
+    assert run.check("t__n2__field_is_present").result is ResultEnum.passed
+    assert run.check("t__n2__field_type").result is ResultEnum.passed
+    maximum = run.check("t__n2__field_maximum")
+    assert maximum.result is ResultEnum.failed
+    assert maximum.diagnostics["value"] == 1

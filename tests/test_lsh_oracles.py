@@ -135,3 +135,29 @@ def test_dedup_entries_leave_no_cache(spark, docs, name):
     assert rows == sorted(tuple(r) for r in direct.collect())
     assert rows
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("bands", [16, 32])
+def test_arrow_band_keys_match_slice_equality(spark, docs, bands):
+    """The arrow kernel's band keys lose no candidate and add none on
+    this data: its pairs are exactly the brute-force pairs with some
+    equal band slice of the two signatures, and each est_jaccard is the
+    signature agreement."""
+    r = 64 // bands
+    sig = {row["id"]: list(row["sig"]) for row in
+           dedup.minhash_signatures_arrow(docs, "doc_id", bands=bands)
+           .collect()}
+    ids = sorted(sig)
+    want = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            if any(sig[a][j * r:(j + 1) * r] == sig[b][j * r:(j + 1) * r]
+                   for j in range(bands)):
+                want[(a, b)] = sum(x == y for x, y in
+                                   zip(sig[a], sig[b])) / 64
+    pairs = dedup.minhash_candidates(docs, "doc_id", bands=bands)
+    got = {(row["id_a"], row["id_b"]): row["est_jaccard"]
+           for row in pairs.collect()}
+    pairs.unpersist()
+    assert got == want
+    assert len(want) > 20

@@ -1,7 +1,12 @@
 """Round-3 pipeline operators: connected components (dedup clusters),
 deterministic stratified sampling and hash splits."""
 
+import logging
+from unittest import mock
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.operators import dedup
@@ -12,9 +17,9 @@ from datacontract_cli_spark.operators.sampling import hash_split, stratified_sam
 # connected components
 # ---------------------------------------------------------------------------
 
-# both code paths must produce identical components: the single-task
-# union-find fast path (small edge sets) and the distributed label
-# propagation (forced by setting dedup._CC_LOCAL_EDGES to 0)
+# both code paths must produce identical components: the driver
+# union-find (small edge sets) and the distributed label propagation
+# (forced by setting dedup._CC_LOCAL_EDGES to 0)
 _CC_PATHS = ["local", "distributed"]
 
 
@@ -81,10 +86,90 @@ def test_connected_components_releases_caches(spark):
     out = dedup.connected_components(pairs)
     out.collect()
     after = len([r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()])
-    # the final labels frame may stay cached, plus the edges
-    # localCheckpoint blocks (lineage cut for expression-heavy pair
-    # producers; released by the context cleaner on GC, not on scope exit)
-    assert after - before <= 2
+    # a one-pair graph takes the driver path, which stores no blocks
+    assert after - before <= 0
+
+
+def _reference_components(edges):
+    """Plain-Python union-find: node -> minimum id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+# long, string and double ids over one small node space; the double map
+# sends 0 to -0.0 and 6 to 0.0, which Spark's joins and aggregates (and
+# Python) treat as one node
+_ID_TYPES = {
+    "long": (lambda i: i * 7 - 30, "long"),
+    "string": (lambda i: f"d{i}", "string"),
+    "double": (lambda i: -0.0 if i == 0 else (i - 6) / 4, "double"),
+}
+
+
+@pytest.mark.parametrize("id_type", sorted(_ID_TYPES))
+@settings(max_examples=3, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)),
+                min_size=1, max_size=25))
+def test_connected_components_paths_match_reference(spark, id_type, raw):
+    # raw edges include duplicates, both directions and self-loops
+    to_id, dtype = _ID_TYPES[id_type]
+    edges = [(to_id(a), to_id(b)) for a, b in raw]
+    pairs = spark.createDataFrame(edges, f"id_a {dtype}, id_b {dtype}")
+    want = _reference_components(edges)
+    for local_edges in (dedup._CC_LOCAL_EDGES, 0):  # driver, distributed
+        with mock.patch.object(dedup, "_CC_LOCAL_EDGES", local_edges):
+            rows = dedup.connected_components(pairs).collect()
+        got = {r["node"]: r["cluster_id"] for r in rows}
+        assert len(rows) == len(got) == len(want), (local_edges, rows)
+        assert got == want, local_edges
+
+
+def test_connected_components_small_path_jobs_and_cache(spark):
+    # the small path reads the (already materialized) pairs in two jobs,
+    # a count and the collect, and leaves nothing in the cache
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pairs = spark.range(200).select(F.col("id").alias("id_a"),
+                                    (F.col("id") + 1).alias("id_b")) \
+        .persist()
+    pairs.count()
+    sc.setJobGroup("cc-small-path", "connected components small path")
+    try:
+        out = dedup.connected_components(pairs)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-small-path")) <= 2
+    pairs.unpersist()
+    assert cache.isEmpty()
+    assert {r["cluster_id"] for r in out.collect()} == {0}
+
+
+@pytest.mark.parametrize("local_edges,path", [
+    (None, "driver union-find"), (0, "distributed label propagation")])
+def test_connected_components_logs_path(spark, caplog, monkeypatch,
+                                        local_edges, path):
+    if local_edges is not None:
+        monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES", local_edges)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
+                                  "id_a long, id_b long")
+    with caplog.at_level(logging.INFO, logger=dedup.__name__):
+        dedup.connected_components(pairs)
+    msgs = [r.getMessage() for r in caplog.records
+            if r.name == dedup.__name__]
+    assert msgs == [f"connected_components: 3 edges, {path}"]
 
 
 # ---------------------------------------------------------------------------

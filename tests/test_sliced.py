@@ -161,3 +161,62 @@ def test_sliced_drift_checks_match_scalar_lane(spark):
     assert got[("b", "transcripts__n_chars__quantile_drift_ks")][1] is False
     assert got[("a", "transcripts__n_words__quantile_drift_ks")] == (0.0, True)
     assert got[("b", "transcripts__n_words__quantile_drift_ks")][1] is False
+
+
+_UNJUDGED_CONTRACT = """
+id: docs
+version: 1.0.0
+schema:
+  - name: documents
+    properties:
+      - name: doc_id
+        logicalType: integer
+        required: true
+        quality:
+          - type: library
+            metric: nullValues
+            mustBe: none
+      - name: n_chars
+        logicalType: integer
+        logicalTypeOptions:
+          minimum: 0
+        quality:
+          - type: library
+            metric: invalidValues
+            mustBeBetween: [low, 3]
+            arguments: {validValues: [5, 10]}
+      - name: lang
+        logicalType: string
+        quality:
+          - type: library
+            metric: freqDriftPsi
+            mustBeLessThan: 0.25
+            arguments:
+              baseline: {en: 1.0}
+    quality:
+      - type: library
+        metric: rowCount
+        mustBeGreaterThan: 1
+"""
+
+
+def test_sliced_validation_reports_every_sliceable_check(spark):
+    """Every sliceable spec of the model has a row in every slice; the
+    ones no slice can judge (a non-numeric threshold, a column the frame
+    lacks) fail with a null metric instead of dropping out."""
+    from datacontract_cli_spark.checks.compile import compile_checks
+    from datacontract_cli_spark.engine.sliced import _SLICEABLE
+
+    contract = load_contract_str(_UNJUDGED_CONTRACT)
+    keys = {s.key for s in compile_checks(contract, None)
+            if s.model == "documents" and s.metric in _SLICEABLE}
+    out = sliced_validation(_df(spark), contract, "documents", ["src"])
+    got = {(r["src"], r["check_key"]): (r["metric_value"], r["passed"])
+           for r in out.collect()}
+    assert got.keys() == {(src, k) for src in "abc" for k in keys}
+    for src in "abc":
+        for key in ("documents__doc_id__field_null_values",
+                    "documents__n_chars__field_invalid_values",
+                    "documents__lang__freq_drift_psi"):
+            assert got[(src, key)] == (None, False), (src, key)
+    assert got[("a", "documents__row_count")] == (5.0, True)
